@@ -19,8 +19,8 @@ see /root/reference) as an idiomatic Spark engine:
   checkpoint manifest — reference: ``-running`` alias protocol in
   ``indexer/.../service/IndexerMetadataServiceImpl.java:476-523`` and
   ``ElasticSearchIndexService.java:108-207``;
-- generic relational operators + training-data pipeline operators
-  (dedup, similarity search, text quality) in ``operators/``.
+- training-data pipeline operators (dedup, similarity search, text
+  quality, sampling, packing) in ``ops/``.
 """
 
 __version__ = "0.1.0"

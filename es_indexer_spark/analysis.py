@@ -323,11 +323,6 @@ def doc_lengths(texts: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(T.IntegerType())
-def doc_length_udf(texts: pd.Series) -> pd.Series:
-    return doc_lengths(texts)
-
-
 # --------------------------------------------------------------------------
 # Term-frequency extraction (map-side combine in Python)
 # --------------------------------------------------------------------------

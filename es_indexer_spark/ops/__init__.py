@@ -14,7 +14,6 @@ DataFrame ops + Arrow-vectorized kernels — no per-row Python.
 from . import (  # noqa: F401
     clustering,
     dedup,
-    mapper,
     multimodal,
     packing,
     sampling,

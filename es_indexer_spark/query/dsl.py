@@ -825,7 +825,7 @@ class DslSearcher:
             r0 = dq.iloc[0]
             base = int(r0["base"])
             dl_of = np.frombuffer(r0["dl_bytes"], dtype="<i4").astype(np.int64)
-            pq = pq.sort_values(["term", "seg", "min_doc"])
+            pq = scoring.sort_chunks(pq)
             by_term = {
                 t: scoring.TermView(t, pq[pq["term"] == t], dfs[t], n_docs)
                 for t in uniq_terms

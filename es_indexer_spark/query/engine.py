@@ -207,7 +207,7 @@ class IndexSearcher:
             pdf = self._postings_ds.to_table(
                 columns=self._posting_cols(), filter=filt
             ).to_pandas()
-            pdf = pdf.sort_values(["term", "seg", "min_doc"]).reset_index(drop=True)
+            pdf = scoring.sort_chunks(pdf).reset_index(drop=True)
             grouped = {t: g for t, g in pdf.groupby("term", sort=False)}
             for t in missing:
                 self._chunk_cache[t] = grouped.get(t, pdf.iloc[0:0])
@@ -844,7 +844,7 @@ class IndexSearcher:
                     rlut[np.frombuffer(r0["role_bytes"], dtype="<i2")]
                     * tlut[np.frombuffer(r0["tool_bytes"], dtype="<i2")]
                 )
-            pq = pq.sort_values(["term", "seg", "min_doc"])
+            pq = scoring.sort_chunks(pq)
             by_term = {
                 t: scoring.TermView(
                     t, pq[pq["term"] == t], dfs[t], n_docs, boost=qb.get(t, 1.0)
@@ -982,7 +982,7 @@ class IndexSearcher:
             r0 = dq.iloc[0]
             base = int(r0["base"])
             dl_of = np.frombuffer(r0["dl_bytes"], dtype="<i4").astype(np.int64)
-            pq = pq.sort_values(["term", "seg", "min_doc"])
+            pq = scoring.sort_chunks(pq)
             views = [
                 scoring.TermView(
                     t, pq[pq["term"] == t], dfs[t], n_docs, boost=qb.get(t, 1.0)
@@ -1028,7 +1028,7 @@ class IndexSearcher:
         def count_seg(pdf: pd.DataFrame) -> pd.DataFrame:
             if len(pdf) == 0:
                 return pd.DataFrame({"n": []})
-            pdf = pdf.sort_values(["term", "seg", "min_doc"])
+            pdf = scoring.sort_chunks(pdf)
             sets = []
             for t in uniq_terms:
                 chunks = pdf[pdf["term"] == t]

@@ -41,11 +41,21 @@ import pandas as pd
 from .. import bm25, codec
 
 
+def sort_chunks(chunks: pd.DataFrame) -> pd.DataFrame:
+    """Posting-chunk rows in the order ``TermView`` binary-searches: by
+    term, then by doc range. Segments hold disjoint, consecutive ordinal
+    ranges (a merge only folds consecutive batches), so ``min_doc`` alone
+    orders a term's chunks globally. The segment label does not: a merge
+    labels its output after every batch, including newer unmerged ones
+    that hold higher ordinals."""
+    return chunks.sort_values(["term", "min_doc"])
+
+
 class TermView:
     """One query term's postings: chunk metadata up-front, lazy decode.
 
-    ``chunks`` is a pandas DataFrame of this term's posting-chunk rows
-    sorted by (seg, min_doc) — disjoint, ordered doc ranges (the salted
+    ``chunks`` is a pandas DataFrame of this term's posting-chunk rows in
+    ``sort_chunks`` order — disjoint, ordered doc ranges (the salted
     skew-split re-assembled by ordered concatenation).
     """
 

@@ -84,24 +84,10 @@ def append_batch(
     checkpoints and be silently dropped as replays (data loss). A
     mismatched stream_id on an existing epoch checkpoint fails loudly
     instead."""
-    import time as _time
-
     from pyspark.sql import types as T
 
     from ..analysis import doc_lengths, suggest_tokens_series
     from ..corpus import with_doc_ids
-
-    # optional per-stage wall clocks (ES_IDX_APPEND_TIMING=1): returned as
-    # result["timings"] so bench_extra can decompose the per-append constant
-    _tm: dict[str, float] = {}
-    _t0 = _time.time()
-
-    def _mark(stage: str) -> None:
-        nonlocal _t0
-        if os.environ.get("ES_IDX_APPEND_TIMING"):
-            now = _time.time()
-            _tm[stage] = round(_tm.get(stage, 0.0) + (now - _t0), 3)
-            _t0 = now
 
     vdir = catalog.current_version_dir(index_dir)
     if vdir is None:
@@ -114,7 +100,6 @@ def append_batch(
     from ..index.merge import recover_merges
 
     recover_merges(spark, index_dir)
-    _mark("recover")
     manifest = catalog.read_json(os.path.join(vdir, "manifest.json"))
     # ordinal base: one past the highest ordinal EVER allocated — after an
     # expunging merge (index/merge.py) live rows < ordinal span, and
@@ -204,7 +189,6 @@ def append_batch(
 
     docs = assign_doc_ordinals(batch, assume_sorted=True)
     assert docs._total_count == m, "ordinal count drifted from source count"
-    _mark("ordinals")
     # capture the persisted parent BEFORE rebinding `docs` — withColumn
     # returns a fresh DataFrame without the attribute, and losing the
     # handle leaks one MEMORY_AND_DISK dataset per micro-batch on a
@@ -223,7 +207,6 @@ def append_batch(
     # idempotent per-epoch append: distinct partition directory, overwrite
     ds_batch = os.path.join(vdir, "doc_stats", f"batch={bid}")
     doc_slice.write.mode("overwrite").parquet(ds_batch)
-    _mark("doc_stats_write")
     src.unpersist()
     if parent is not None:  # release the ordinal-assignment cache per epoch
         parent.unpersist()
@@ -252,7 +235,6 @@ def append_batch(
     enc.write.mode("overwrite").partitionBy("tbucket").parquet(
         os.path.join(postings_root, f"batch={bid}")
     )
-    _mark("postings_write")
 
     # global stats update is INCREMENTAL (n/total_tokens are associative
     # sums; avgdl = total/n exactly as build_index computes it): the
@@ -270,7 +252,6 @@ def append_batch(
     batch_tokens = int(pc.sum(dl_tbl.column("dl")).as_py() or 0)
     n_live = live_before + m
     total_tokens = int(manifest.get("total_tokens", 0)) + batch_tokens
-    _mark("global_stats")
     prev_ts_dir = manifest.get("term_stats_dir", "term_stats")
     # incremental dictionary: new batch aggregates merged into the
     # previous dictionary — O(vocab + batch), not O(all postings)
@@ -278,7 +259,6 @@ def append_batch(
         spark, vdir, n_buckets, bid, prev_ts_dir,
         os.path.join(postings_root, f"batch={bid}"),
     )
-    _mark("term_stats")
     # per-batch lineage metrics, same fields as the build checkpoints
     # (turns tokenized, postings emitted, bytes compressed) — read
     # streamed from the just-written batch's parquet, O(batch) not
@@ -295,7 +275,6 @@ def append_batch(
         postings_emitted += pc.sum(rb.column("df_chunk")).as_py() or 0
         for c in bcols[1:]:
             bytes_compressed += pc.sum(pc.binary_length(rb.column(c))).as_py() or 0
-    _mark("lineage")
 
     # checkpoint BEFORE the manifest flip (see the replay guard above)
     catalog.write_json(
@@ -333,11 +312,7 @@ def append_batch(
         for d in os.listdir(vdir):
             if (d == "term_stats" or d.startswith("term_stats_b")) and d not in keep:
                 shutil.rmtree(os.path.join(vdir, d), ignore_errors=True)
-    _mark("publish")
-    out = {"appended": m, "n_docs": n_live, "batch": bid}
-    if _tm:
-        out["timings"] = _tm
-    return out
+    return {"appended": m, "n_docs": n_live, "batch": bid}
 
 
 def _term_stats_agg(df: DataFrame) -> DataFrame:
@@ -381,7 +356,7 @@ def _write_term_stats(df: DataFrame, vdir: str, n_buckets: int, bid: int) -> str
 # instead of a multi-stage Spark job over dozens of tiny files (measured
 # ~0.7-1.0 s/append at bench scale); huge vocabularies (Heaps-law growth
 # at 10^12 turns) stay on the distributed path.
-DICT_DRIVER_MAX_ROWS = int(os.environ.get("ES_IDX_DICT_DRIVER_MAX", 2_000_000))
+DICT_DRIVER_MAX_ROWS = 2_000_000
 
 
 def _update_term_stats_local(
@@ -412,6 +387,13 @@ def _update_term_stats_local(
         import pyarrow.compute as _pc
 
         lens = _pc.list_value_length(bm).to_numpy(zero_copy_only=False)
+        if (lens == 0).any():
+            # reduceat would silently read the NEXT chunk's first block
+            # max into this chunk's max_tf, the bound block-max pruning
+            # trusts — every written chunk holds at least one block
+            raise ValueError(
+                f"posting chunk with an empty block_max_tf list in {delta_dir}"
+            )
         vals = _pc.list_flatten(bm).to_numpy(zero_copy_only=False)
         offs = np.concatenate(([0], np.cumsum(lens)[:-1])).astype(np.int64)
         parts.append(pd.DataFrame({
@@ -738,11 +720,13 @@ def upsert_docs(spark: SparkSession, df: DataFrame, index_dir: str) -> dict:
     versions, then append the new turns (``_id``-keyed update semantics of
     ``IndexerMetadataServiceImpl.java:429-435``).
 
-    Driver-free: the old versions' ordinals come from a broadcast
-    semi-join of doc_stats against the incoming batch's keys and land as
-    an executor-side parquet tombstone delta (the ``delete_where``
-    store) — no O(batch-ids) collect, so a giant bulk upsert never
-    routes ids through the driver (round-5 review item)."""
+    The old versions' ordinals come from a broadcast semi-join of
+    doc_stats against the incoming batch's distinct keys and land as an
+    executor-side parquet tombstone delta (the ``delete_where`` store),
+    so the matched ordinals never cross the driver. The broadcast does:
+    Spark collects the batch's distinct (conv_id, turn_idx) keys to the
+    driver to ship them, so driver memory grows with the batch's key
+    count (not with the corpus)."""
     vdir = catalog.current_version_dir(index_dir)
     if vdir is None:
         raise FileNotFoundError(f"no published index in {index_dir}")

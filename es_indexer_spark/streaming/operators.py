@@ -1,26 +1,17 @@
-"""Structured Streaming operators beyond the incremental-index sink:
-watermarked windowed aggregation and stateful streaming deduplication.
+"""Stateful streaming deduplication: the gate a transcript firehose
+passes before it reaches the incremental index.
 
-The reference has no stream processing (SURVEY §2.10) — these are the
-operators a transcript firehose needs in front of the indexer:
-
-- ``windowed_turn_counts``: event-time tumbling-window counts with a
-  watermark bounding late data — the canonical
-  readStream → withWatermark → window/groupBy shape. State is bounded:
-  Spark drops windows older than the watermark.
-- ``streaming_dedup``: exact-dedup across micro-batches via
-  ``applyInPandasWithState``: keyed by a fingerprint bucket, per-group
-  state holds the set of fingerprints already emitted, and only
-  first-seen documents pass through — FULL transcript rows, so the
-  gate composes directly with the incremental index sink (firehose →
-  dedup → append_batch, proven end-to-end in
-  tests/test_streaming.py::test_firehose_dedup_to_incremental_index_end_to_end).
-  This is the stateful front gate
-  that keeps re-crawled/replayed documents from re-entering the index
-  (batch analogue: ``ops/dedup.exact_duplicates``). Bucketing the key
-  space (crc32 % n_buckets) bounds per-group state and spreads it over
-  the cluster; at 10^9 docs/state too large for memory, the same
-  operator runs against RocksDB state store — the plumbing is identical.
+``streaming_dedup`` drops duplicates within and across micro-batches via
+``applyInPandasWithState``: keyed by a fingerprint bucket, per-group
+state holds the fingerprints already emitted, and only first-seen
+documents pass through — FULL transcript rows, so the gate composes
+directly with the incremental index sink (firehose → dedup →
+append_batch, proven end-to-end in
+tests/test_streaming.py::test_firehose_dedup_to_incremental_index_end_to_end;
+``incremental_index(dedup=N)`` wires it in). Bucketing the key space
+(crc32 % n_buckets) bounds per-group state and spreads it over the
+cluster; at 10^9 docs/state too large for memory, the same operator runs
+against the RocksDB state store — the plumbing is identical.
 """
 
 from __future__ import annotations
@@ -31,26 +22,6 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..index.build import term_bucket_col
-
-
-def windowed_turn_counts(
-    stream_df: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "5 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-(window, role) turn counts with event-time watermarking: rows
-    later than ``watermark`` behind the max seen event time are dropped
-    and completed windows are finalized (append-mode emittable)."""
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), F.col("role"))
-        .agg(F.count("*").alias("n_turns"), F.sum(F.length("text")).alias("chars"))
-        .select(
-            F.col("w.start").alias("w_start"), F.col("w.end").alias("w_end"),
-            "role", "n_turns", "chars",
-        )
-    )
 
 
 def _md5_half_to_long(col: str, start: int):
@@ -172,7 +143,7 @@ def streaming_dedup(
     ts_col: str = "ts",
 ) -> DataFrame:
     """First-seen-wins streaming dedup: content fingerprint (md5 over the
-    normalized token stream, the same key as the batch exact-dedup) →
+    normalized, lower-cased token stream) →
     bucketed ``applyInPandasWithState``; duplicates are filtered within
     AND across micro-batches (state persists in the streaming checkpoint,
     so replays stay exactly-once).
@@ -217,65 +188,3 @@ def streaming_dedup(
         timeoutConf=timeout,
     )
 
-
-def sessionize(
-    df: DataFrame,
-    gap: str = "30 minutes",
-    key_col: str = "conv_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Event-time sessionization: merge a key's events into sessions
-    separated by more than ``gap`` of inactivity, via Spark's native
-    ``session_window`` (dynamic-gap windows merged by the engine, not a
-    global sort). Works identically on batch DataFrames and on streams —
-    for a stream, ``withWatermark(ts_col, …)`` upstream bounds state and
-    finalizes sessions whose window end falls behind the watermark
-    (append-mode emittable).
-
-    Output: (key, n_events, t_start, t_end) per session; t_start/t_end
-    are the observed min/max event times (the session_window struct's
-    end is last_event + gap — an implementation detail not exposed)."""
-    return (
-        df.groupBy(
-            F.col(key_col), F.session_window(F.col(ts_col), gap).alias("w")
-        )
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.min(ts_col).alias("t_start"),
-            F.max(ts_col).alias("t_end"),
-        )
-        .select(key_col, "n_events", "t_start", "t_end")
-    )
-
-
-def sql_sessionize(
-    gap_minutes: int = 30,
-    table: str = "events",
-    key: str = "event_type",
-    ts: str = "ts",
-) -> str:
-    """DuckDB mirror: classic gaps-and-islands — break where the gap to
-    the previous event EXCEEDS the threshold (Spark's session_window
-    merges an event arriving exactly ``gap`` after the last one —
-    boundary pinned by pytest), cumulative-sum the breaks into session
-    ids."""
-    return f"""
-with o as (
-  select {key} as k, {ts} as ts,
-         lag({ts}) over (partition by {key} order by {ts}) as prev
-  from {table}
-), m as (
-  select k, ts,
-         case when prev is null or ts - prev > interval {gap_minutes} minute
-              then 1 else 0 end as brk
-  from o
-), s as (
-  select k, ts,
-         sum(brk) over (partition by k order by ts
-                        rows between unbounded preceding and current row) as sid
-  from m
-)
-select k as {key}, count(*)::bigint as n_events,
-       min(ts) as t_start, max(ts) as t_end
-from s group by k, sid
-"""

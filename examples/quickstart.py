@@ -2,7 +2,7 @@
 """End-to-end quickstart: everything a reference (es-indexer) user does,
 on the PySpark engine — build an inverted index over transcripts, query
 it (BM25 / phrase / suggest), ingest a deduplicated stream increment,
-and run the training-data curation pipeline.
+and delete + merge to reclaim the deleted turns.
 
     python examples/quickstart.py            # ~1 min on local[8]
 """
@@ -69,20 +69,6 @@ def main() -> None:
     print(f"merged {m['batches_merged']} segments, expunged "
           f"{m['docs_expunged']} deleted turns -> {s3.n_docs} live")
 
-    # 4. curation: dedup -> decontaminate -> quality floor -> sample over a
-    #    documents-shaped frame derived from the transcripts
-    from pyspark.sql import functions as F
-
-    from es_indexer_spark.ops import cleaning, sampling
-
-    docs = corpus.select(
-        F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string")).alias("doc_id"),
-        "text", F.lit("en").alias("lang"), F.col("role").alias("source"),
-    )
-    kept = cleaning.curate(
-        docs, sampling.hash_sample(docs, 0.02), quality_min=0.2, sample_rate=0.5
-    )
-    print(f"curated training set: {kept.count()} of {res.n_docs} docs retained")
     spark.stop()
 
 

@@ -5,14 +5,15 @@ sandbox stand-in for N vs 4N executors; no real cluster here), the
 throughput ratios between them, and a per-stage / per-kernel breakdown
 showing WHERE the curve bends.
 
-Each level runs in its own subprocess (own JVM) via ``bench.py
---build-only --cores C`` so the measurements don't share a Spark context.
-The corpus is the deterministic seeded synthetic transcript corpus, which
-is parallelism-invariant by construction (per-conversation seeding), so
-all levels index byte-identical input.
+Each level runs in its own subprocess (own JVM) via ``scaling_run.py
+--level C`` so the measurements don't share a Spark context. The corpus
+is the deterministic seeded synthetic transcript corpus, which is
+parallelism-invariant by construction (per-conversation seeding), so all
+levels index byte-identical input.
 
 Usage: python scripts/scaling_run.py [--n-convs 400000] [--levels 8,16,32]
-Writes BENCH.md and prints the summary JSON.
+Writes BENCH.md and prints the summary JSON. ``--level C`` runs one
+level in this process and prints its JSON line instead.
 """
 
 from __future__ import annotations
@@ -23,21 +24,93 @@ import os
 import shutil
 import subprocess
 import sys
+import tempfile
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def build_level(cores: int, n_convs: int) -> dict:
+    """Index the synthetic corpus at local[cores]: turns/s, the build's
+    per-stage walls from its checkpoints, and per-phase kernel wall and
+    true-CPU seconds summed over the workers."""
+    with tempfile.TemporaryDirectory(prefix="scaling_") as tmp:
+        # workers inherit the env through the JVM, so this must be set
+        # before the session starts
+        timing_dir = os.path.join(tmp, "phases")
+        os.makedirs(timing_dir)
+        os.environ["ES_IDX_PHASE_TIMING_DIR"] = timing_dir
+        sys.path.insert(0, REPO)
+        from pyspark.sql import functions as F
+
+        from es_indexer_spark import get_spark
+        from es_indexer_spark.analysis import doc_lengths
+        from es_indexer_spark.corpus import synth_transcripts
+        from es_indexer_spark.index.build import build_index
+
+        spark = get_spark(app_name="scaling", master=f"local[{cores}]",
+                          shuffle_partitions=cores)
+        # warm-up OUTSIDE the timed region: spawn every Python worker and
+        # JIT the scan/shuffle/pandas-UDF paths — a long-running cluster
+        # pays these once per executor lifetime, not per job
+        dl = F.pandas_udf(doc_lengths, "int")
+        (
+            spark.range(0, cores * 2000, 1, cores)
+            .select(dl(F.col("id").cast("string")).alias("d"))
+            .groupBy((F.col("d") % 8).alias("k"))
+            .count()
+            .count()
+        )
+        # generated in (conv_id, turn_idx) order → sorted-input fast path
+        # (the standard layout of the production transcript table)
+        corpus = synth_transcripts(spark, n_convs=n_convs, turns_per_conv=10, seed=42)
+        t0 = time.time()
+        res = build_index(spark, corpus, os.path.join(tmp, "idx"),
+                          n_buckets=64, input_sorted=True)
+        build_s = time.time() - t0
+
+        ck = os.path.join(res.version_dir, "checkpoints")
+
+        def _ck(name):
+            with open(os.path.join(ck, name)) as f:
+                return json.load(f)
+
+        batches = sorted(n for n in os.listdir(ck) if n.startswith("batch_"))
+        ds = _ck("doc_stats.json")
+        wall: dict[str, float] = {}
+        cpu: dict[str, float] = {}
+        for fn in os.listdir(timing_dir):
+            with open(os.path.join(timing_dir, fn)) as f:
+                for line in f:
+                    phase, w, c, _rows = line.strip().split(",")
+                    wall[phase] = wall.get(phase, 0.0) + float(w)
+                    cpu[phase] = cpu.get(phase, 0.0) + float(c)
+        spark.stop()
+        return {
+            "n_turns": res.n_docs,
+            "turns_per_sec": round(res.n_docs / build_s, 1),
+            "cores": cores,
+            "queries": {"index_build": round(build_s, 3)},
+            "stages": {
+                "ordinals_s": ds.get("ordinals_s"),
+                "doc_stats_s": ds["wall_s"],
+                "postings_s": round(sum(_ck(b)["wall_s"] for b in batches), 3),
+                "term_stats_s": _ck("term_stats.json").get("wall_s"),
+            },
+            "phase_wall_s": {k: round(v, 2) for k, v in sorted(wall.items())},
+            "phase_cpu_s": {k: round(v, 2) for k, v in sorted(cpu.items())},
+        }
+
+
 def run_level(cores: int, n_convs: int) -> dict:
-    env = dict(os.environ)
-    env["SPARK_GRAFT_SCALING_CONVS"] = str(n_convs)
-    cmd = [sys.executable, os.path.join(REPO, "bench.py"), "--build-only",
-           "--cores", str(cores), "--sf-dir", "/root/testdata/sf0.001"]
+    cmd = [sys.executable, os.path.abspath(__file__), "--level", str(cores),
+           "--n-convs", str(n_convs)]
     # pin the process tree to `cores` CPUs so the N-core level cannot
     # borrow the other cores for GC/IO/numpy threads — an honest
     # emulation of an N-core executor group
     if shutil.which("taskset"):
         cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
-    out = subprocess.run(cmd, capture_output=True, text=True, env=env,
+    out = subprocess.run(cmd, capture_output=True, text=True,
                          cwd=REPO, check=True)
     line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
     return json.loads(line)
@@ -49,90 +122,6 @@ def best_of(cores: int, n_convs: int, reps: int = 2) -> dict:
     that models steady-state cluster executors."""
     runs = [run_level(cores, n_convs) for _ in range(reps)]
     return max(runs, key=lambda r: r["turns_per_sec"])
-
-
-def _postings_decomp_section() -> str:
-    """Embed the postings-stage truncation-depth decomposition
-    (scripts/postings_decompose.py → POSTINGS_DECOMP.json) if measured."""
-    path = os.path.join(REPO, "POSTINGS_DECOMP.json")
-    if not os.path.exists(path):
-        return ""
-    with open(path) as f:
-        d = json.load(f)
-    windows = d.get("windows") or [d]
-    names = [
-        ("A", "A: tokenize→encode map only (noop sink — no shuffle, no disk)"),
-        ("B", "B: A + shuffle(tbucket,seg) + sort + byte-concat merge (noop)"),
-        ("C", "C: B + partitionBy(tbucket) parquet write = whole stage"),
-    ]
-    tables, full_sps, all_deltas = [], [], []
-    n_docs = 0
-    for w in windows:
-        levels = w["levels"]
-        res = {int(k): v for k, v in w["results"].items()}
-        lo, hi = levels[0], levels[-1]
-        n_docs = res[lo]["n_docs"]
-        # stored: map_s = A raw, shuffle_merge_s = B-A, parquet_write_s =
-        # C-B, full_s = C raw → reconstruct the raw truncation walls
-        raw = {
-            c: {
-                "A": res[c]["map_s"],
-                "B": round(res[c]["map_s"] + res[c]["shuffle_merge_s"], 3),
-                "C": res[c]["full_s"],
-            }
-            for c in levels
-        }
-        rows = []
-        for k, label in names:
-            a, b = raw[lo][k], raw[hi][k]
-            sp = f"{a / b:.2f}x" if b else "n/a"
-            rows.append(
-                f"| {label} | "
-                + " | ".join(f"{raw[c][k]}s" for c in levels)
-                + f" | {sp} |"
-            )
-        full_sps.append(raw[lo]["C"] / raw[hi]["C"])
-        all_deltas += [
-            abs(raw[c]["B"] - raw[c]["A"]) / raw[c]["C"] for c in levels
-        ] + [abs(raw[c]["C"] - raw[c]["B"]) / raw[c]["C"] for c in levels]
-        tables.append(
-            f"Window {w['recorded_at']} (best-of-{w.get('reps', '?')} "
-            f"interleaved reps):\n\n"
-            f"| truncation depth | "
-            + " | ".join(f"local[{c}]" for c in levels)
-            + f" | {lo}→{hi} speedup |\n"
-            + "|---|" + "---|" * (len(levels) + 1) + "\n"
-            + "\n".join(rows)
-        )
-    sps = " and ".join(f"{s:.2f}x" for s in full_sps)
-    return f"""
-## Postings-stage decomposition
-
-The round-2 open question — the postings stage measured SLOWER at 32
-cores than 8 (20.6s → 23.4s) — answered by truncating the same dataflow
-at three depths (`scripts/postings_decompose.py`: interleaved reps,
-best-of per action, own CPU-pinned JVM per level, {n_docs:,} turns).
-Raw wall per truncation depth, every measured window:
-
-{chr(10).join(t + chr(10) for t in tables)}
-Reading: **the whole stage scales {sps} at 8→32 in controlled
-same-window measurement** (vs the round-2 single-shot 0.88x) — the
-negative scaling was host-tenancy drift between separately-timed
-stages, not the program. The stage is MAP-BOUND: the B−A
-(shuffle+sort+merge) and C−B (parquet write) deltas are at most
-{max(all_deltas):.0%} of stage wall and swing sign between windows —
-shuffle-write overlaps the map, the byte-concat merge is O(bytes) with
-no re-encode, and the parquet write adds no measurable serial tail
-(second window: ~11-16% of stage, scaling 1.7x with cores). What limits
-the stage is the tokenize→encode kernel itself, which the Spark-free
-probe shows scaling at 0.91-0.985 when the host cooperates (the second
-window's map-only wall was SLOWER at 32 pinned cores than 8 — a pure
-kernel with no shuffle or disk cannot program-degrade with cores; that
-is the box, and it matches the probe's 0.46-efficiency windows). On a
-real cluster the map is embarrassingly parallel across executors and
-the shuffle carries compressed bytes (~4-5x smaller than raw
-postings), so no component here is a serial bottleneck at 4N executors.
-"""
 
 
 def _notes_section() -> str:
@@ -179,7 +168,12 @@ def main() -> None:
     ap.add_argument("--n-convs", type=int, default=400_000)
     ap.add_argument("--levels", default="8,16,32")
     ap.add_argument("--reps", type=int, default=2)
+    ap.add_argument("--level", type=int, default=None,
+                    help="run one level at local[LEVEL] and print its JSON line")
     args = ap.parse_args()
+    if args.level is not None:
+        print(json.dumps(build_level(args.level, args.n_convs)))
+        return
     levels = [int(c) for c in args.levels.split(",")]
 
     results = {c: best_of(c, args.n_convs, args.reps) for c in levels}
@@ -213,11 +207,9 @@ def main() -> None:
     # host tenancy; a log of every window is stronger (and more honest)
     # evidence than any single roll
     hist_path = os.path.join(REPO, "BENCH_HISTORY.jsonl")
-    import time as _time
-
     with open(hist_path, "a") as f:
         f.write(json.dumps({
-            "recorded_at": _time.strftime("%Y-%m-%d %H:%M UTC", _time.gmtime()),
+            "recorded_at": time.strftime("%Y-%m-%d %H:%M UTC", time.gmtime()),
             "levels": {str(c): results[c]["turns_per_sec"] for c in levels},
             "spark_efficiency": summary["scaling_efficiency"],
             "kernel_probe_efficiency": probe["efficiency"],
@@ -370,7 +362,6 @@ shared disk at both levels. These are exactly the resources a real
 4N-executor cluster multiplies (cores, memory channels, disks) but a
 single box shares.
 """
-    md += _postings_decomp_section()
     md += _notes_section()
     md += _positions_cost_section()
     md += f"""

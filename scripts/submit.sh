@@ -7,10 +7,10 @@
 # so nothing here changes with executor count.
 #
 # Usage:
-#   scripts/submit.sh [job.py] [args...]        # default job: bench.py
+#   scripts/submit.sh [job.py] [args...]        # default job: examples/quickstart.py
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
-JOB="${1:-$REPO/bench.py}"; shift || true
+JOB="${1:-$REPO/examples/quickstart.py}"; shift || true
 
 ZIP="$REPO/dist/es_indexer_spark.zip"
 mkdir -p "$REPO/dist"

@@ -27,6 +27,7 @@ from es_indexer_spark.index.merge import (
     recover_merges,
     select_merge_groups,
 )
+from es_indexer_spark.oracle import oracle_from_spark
 from es_indexer_spark.query.engine import IndexSearcher
 from es_indexer_spark.streaming.incremental import append_batch, delete_docs
 
@@ -85,6 +86,32 @@ def test_consolidation_identity(spark, appended_index, tmp_path):
     assert s1.n_docs == s0.n_docs and s1.avgdl == pytest.approx(s0.avgdl)
     assert _snapshot(s1) == before
     s0.close(); s1.close()
+
+
+def test_partial_merge_leaving_newer_batch_ranks_like_oracle(spark, tmp_path):
+    """Merging two older appends while the newest stays unmerged labels
+    the merged segment AFTER the newer batch, though it holds the lower
+    ordinals: the driver path must order chunks by doc range, not by
+    segment label."""
+    idx = str(tmp_path / "idx")
+    build_index(spark, _corpus(spark, 0, 30), idx, n_buckets=8, n_segments=2)
+    for lo, hi in ((30, 40), (40, 50), (50, 60)):
+        append_batch(spark, _corpus(spark, lo, hi), idx)
+    res = merge_segments(spark, idx, bids=[1, 2])
+    assert res["batches_merged"] == 2
+
+    s = IndexSearcher(spark, idx)
+    oracle = oracle_from_spark(s.doc_stats_df())
+    for q in QUERIES:
+        for mode in ("or", "and"):
+            want = oracle.topk(q, k=15, mode=mode)
+            for strategy in ("blockmax", "exhaustive"):
+                got = s.search(q, k=15, mode=mode, strategy=strategy)
+                assert got["doc_id"].tolist() == want["doc_id"].tolist(), (q, mode, strategy)
+                np.testing.assert_allclose(
+                    got["score"], want["score"], rtol=0, atol=1e-9
+                )
+    s.close()
 
 
 def test_tiered_policy_groups_consecutive_same_tier():

@@ -548,6 +548,28 @@ def test_dict_driver_and_spark_merge_paths_identical(spark, tmp_path, monkeypatc
     s.close()
 
 
+def test_dict_driver_merge_rejects_empty_block_list(tmp_path):
+    """A chunk with no blocks has no block maximum: the driver-side
+    dictionary merge must fail loudly instead of taking the next chunk's
+    first block max as this term's max_tf (the bound block-max pruning
+    relies on)."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from es_indexer_spark.streaming.incremental import _update_term_stats_local
+
+    delta = tmp_path / "delta"
+    delta.mkdir()
+    papq.write_table(pa.table({
+        "term": ["alpha", "beta"],
+        "df_chunk": [1, 2],
+        "sum_tf": [1, 5],
+        "block_max_tf": pa.array([[], [4]], pa.list_(pa.int32())),
+    }), str(delta / "part-0.parquet"))
+    with pytest.raises(ValueError, match="empty block_max_tf"):
+        _update_term_stats_local(str(tmp_path), 8, 1, "term_stats", str(delta))
+
+
 def test_append_checkpoint_carries_lineage_metrics(spark, tmp_path):
     """Append checkpoints record the same lineage metrics as build
     checkpoints (north-star parity: turns tokenized, postings emitted,

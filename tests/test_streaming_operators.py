@@ -1,5 +1,4 @@
-"""Streaming operators: watermarked windowed aggregation (late rows
-dropped, windows finalized) and stateful cross-micro-batch dedup via
+"""Streaming dedup: stateful cross-micro-batch dedup via
 applyInPandasWithState (first-seen-wins, state persisted per group)."""
 
 from __future__ import annotations
@@ -9,7 +8,7 @@ import os
 import pytest
 
 from es_indexer_spark.corpus import TRANSCRIPT_SCHEMA
-from es_indexer_spark.streaming.operators import streaming_dedup, windowed_turn_counts
+from es_indexer_spark.streaming.operators import streaming_dedup
 
 
 def _write_batch(spark, path, rows, order: int = 0):
@@ -49,36 +48,6 @@ def _run_stream(spark, src_dir, ckpt, transform, query_name, output_mode):
     )
     q.awaitTermination(120)
     return spark.sql(f"select * from {query_name}")
-
-
-def test_windowed_counts_with_watermark(spark, tmp_path):
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    # batch 1: two 10-min windows' worth of turns
-    _write_batch(spark, src, [
-        _row("c1", 0, "a b", 1), _row("c1", 1, "c", 3),      # window 10:00-10:10
-        _row("c2", 0, "d e f", 12),                           # window 10:10-10:20
-    ], order=1)
-    # batches 2+3: far-future rows advance the watermark past both windows
-    # (the watermark takes effect one batch after the data that moves it),
-    # finalizing and emitting them (append mode)
-    _write_batch(spark, src, [_row("c3", 0, "x", 120)], order=2)
-    _write_batch(spark, src, [_row("c4", 0, "y", 130)], order=3)
-    # batch 4: a LATE row for the already-finalized first window — its
-    # window end precedes the watermark, so Spark drops it on arrival
-    _write_batch(spark, src, [_row("c9", 9, "late late late", 2)], order=4)
-    out = _run_stream(
-        spark, src, str(tmp_path / "ck"),
-        lambda s: windowed_turn_counts(s, window="10 minutes", watermark="5 minutes"),
-        "win_counts", "append",
-    ).toPandas().sort_values("w_start").reset_index(drop=True)
-    # only the two finalized windows are emitted; the late row is absent
-    got = {
-        (str(r["w_start"]), r["n_turns"]) for _, r in out.iterrows()
-    }
-    assert ("2024-01-01 10:00:00", 2) in got   # c1 turns only — late row dropped
-    assert ("2024-01-01 10:10:00", 1) in got
-    assert not any(r["n_turns"] == 3 for _, r in out.iterrows())
 
 
 def test_streaming_dedup_across_microbatches(spark, tmp_path):
@@ -302,51 +271,3 @@ def test_streaming_dedup_on_rocksdb_state_store(spark, tmp_path):
         else:
             spark.conf.set(key, old)
 
-
-def test_sessionize_boundary_semantics(spark):
-    """Boundary semantics: a silence of EXACTLY the gap still merges
-    (Spark merges while ts <= last + gap); one second more breaks."""
-    from es_indexer_spark.streaming.operators import sessionize
-
-    import datetime as dt
-
-    base = dt.datetime(2024, 1, 1, 10, 0, 0)
-    data = [
-        ("a", 0, "user", "t", None, base),
-        ("a", 1, "user", "t", None, base + dt.timedelta(minutes=29, seconds=59)),
-        ("a", 2, "user", "t", None, base + dt.timedelta(minutes=59, seconds=59)),
-        # 30 min + 1 s after the previous -> NEW session (exactly 30 min
-        # would still merge)
-        ("a", 3, "user", "t", None, base + dt.timedelta(minutes=90, seconds=0)),
-        ("b", 0, "user", "t", None, base),
-    ]
-    df = spark.createDataFrame(data, TRANSCRIPT_SCHEMA)
-    got = sorted(
-        (r["conv_id"], r["n_events"]) for r in sessionize(df, "30 minutes").collect()
-    )
-    assert got == [("a", 1), ("a", 3), ("b", 1)]
-
-
-def test_sessionize_streaming_with_watermark(spark, tmp_path):
-    """The same operator on a stream: watermark finalizes sessions whose
-    window closed before it (append mode), exactly-once per session."""
-    from es_indexer_spark.streaming.operators import sessionize
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    _write_batch(spark, src, [
-        _row("s1", 0, "a", 0), _row("s1", 1, "b", 5), _row("s2", 0, "c", 2),
-    ], order=1)
-    # far-future rows push the watermark past session s1/s2's horizons
-    _write_batch(spark, src, [_row("s3", 0, "d", 600)], order=2)
-    _write_batch(spark, src, [_row("s4", 0, "e", 700)], order=3)
-    out = _run_stream(
-        spark, src, str(tmp_path / "ck"),
-        lambda s: sessionize(
-            s.withWatermark("ts", "10 minutes"), gap="30 minutes"
-        ),
-        "session_out", "append",
-    ).toPandas()
-    got = {(r["conv_id"], r["n_events"]) for _, r in out.iterrows()}
-    # the first two sessions are finalized once the watermark passes them
-    assert ("s1", 2) in got and ("s2", 1) in got
