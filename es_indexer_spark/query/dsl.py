@@ -1183,9 +1183,10 @@ class DslSearcher:
         return {"value": rd[f"{name} value"]}
 
     def _bucket_agg(self, df: DataFrame, kind: str, spec: dict, sub: dict | None) -> dict:
-        key = self._bucket_key_col(df, kind, spec).alias(" key")
+        parent_key = self._bucket_key_col(df, kind, spec)
+        key = parent_key.alias(" key")
         size = int(spec.get("size", 10)) if kind == "terms" else None
-        nn = df.filter(self._bucket_key_col(df, kind, spec).isNotNull())
+        nn = df.filter(parent_key.isNotNull())
         grouped = nn.groupBy(key)
         # sibling metric sub-aggs share this groupBy; bucket/filter
         # sub-aggs run as ONE grouped job each over (parent, child) keys
@@ -1210,10 +1211,13 @@ class DslSearcher:
             collected = self._collect_buckets(
                 rows.orderBy(F.asc(" key")), f"{kind} aggregation")
             meta = {}
+        # a terms parent keeps only its `size` buckets: group the children
+        # of those alone, not of every parent key (histograms keep all)
+        kept = (df.filter(parent_key.isin([r[" key"] for r in collected]))
+                if kind == "terms" else df)
         sub_by_parent: dict[str, dict] = {}
         for n, v in bucket_sub.items():
-            sub_by_parent[n] = self._grouped_child_agg(
-                df, self._bucket_key_col(df, kind, spec), n, v)
+            sub_by_parent[n] = self._grouped_child_agg(kept, parent_key, n, v)
         buckets = []
         for r in collected:
             rd = r.asDict()
@@ -1228,9 +1232,9 @@ class DslSearcher:
 
     def _grouped_child_agg(self, df: DataFrame, parent_key, name: str,
                            node: dict) -> dict:
-        """One nested bucket/filter sub-agg for ALL parent buckets in a
-        single ``groupBy(parent_key, child_key)`` job, pivoted into
-        per-parent result dicts (keyed by parent bucket key; the
+        """One nested bucket/filter sub-agg for every parent bucket in
+        ``df`` in a single ``groupBy(parent_key, child_key)`` job, pivoted
+        into per-parent result dicts (keyed by parent bucket key; the
         ``__empty__`` entry is the shape for parents with no child rows).
         Replaces the former one-filtered-Spark-job-per-parent-bucket loop
         (round-5 verdict perf-weak #1)."""

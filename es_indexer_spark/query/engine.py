@@ -673,7 +673,9 @@ class IndexSearcher:
         if self._doc_side_df is None:
             ds = self.doc_stats_df().select("seg", "doc_ord", "dl", "role", "tool")
 
-            def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            # unannotated: pyspark warns when it cannot infer an eval type
+            # from partial hints; bare functions get the grouped-map default
+            def pack(key, pdf):
                 pdf = pdf.sort_values("doc_ord")
                 ords = pdf["doc_ord"].to_numpy(np.int64)
                 base, n_rows = int(ords[0]), len(ords)

@@ -4,7 +4,10 @@
 # Builds es_indexer_spark.zip and submits a job script against it. On a real
 # cluster swap --master for yarn/k8s and size executors; the engine's only
 # driver-side state is O(partitions) ordinal counts and k-row query heaps,
-# so nothing here changes with executor count.
+# so nothing here changes with executor count. On such a master get_spark
+# keeps Spark's default Python daemon: es_indexer_spark._sparkdaemon starts
+# before --py-files reach sys.path, so it needs the package installed on
+# the executors (then pass spark.python.daemon.module via extra_conf).
 #
 # Usage:
 #   scripts/submit.sh [job.py] [args...]        # default job: examples/quickstart.py

@@ -509,6 +509,28 @@ def test_histogram_max_buckets_guard(dsl):
     assert DslSearcher.MAX_BUCKETS == 65536  # ES default untouched
 
 
+def test_nested_subagg_groups_only_the_collected_parents(dsl):
+    # a terms parent with size 2 over 100 conversations keeps 2 buckets:
+    # their children alone count toward max_buckets, not every parent's
+    meta = _live_meta(dsl)
+    assert meta.groupby(["conv_id", "role"]).ngroups > 10
+    old = DslSearcher.MAX_BUCKETS
+    dsl.MAX_BUCKETS = 10
+    try:
+        res = dsl.aggregate({"aggs": {
+            "convs": {"terms": {"field": "conv_id", "size": 2},
+                      "aggs": {"roles": {"terms": {"field": "role"}}}},
+        }})
+    finally:
+        dsl.MAX_BUCKETS = old
+    parents = res["aggregations"]["convs"]["buckets"]
+    assert len(parents) == 2
+    for pb in parents:
+        want = meta[meta["conv_id"] == pb["key"]]["role"].value_counts()
+        got = {rb["key"]: rb["doc_count"] for rb in pb["roles"]["buckets"]}
+        assert got == want.to_dict()
+
+
 def test_nested_bucket_subagg_is_one_grouped_job(dsl):
     # metric-under-bucket and bucket-under-bucket sub-aggs must run as ONE
     # groupBy(parent, child) job, never one filtered Spark job per parent

@@ -112,6 +112,25 @@ def test_prefix_and_fuzzy_expansion(built):
     assert searcher.expand_fuzzy("ab") == []  # len<3 → distance 0, absent
 
 
+def test_global_dfs_same_from_resident_dictionary(built, spark):
+    # the distributed path's df lookup: the resident dictionary must
+    # agree with the pruned term_stats read, absent terms included
+    _, _, searcher = built
+    vocab = searcher.term_dictionary()["term"].tolist()
+    terms = [vocab[0], vocab[len(vocab) // 2], vocab[-1],
+             "", "0absent", vocab[0] + "x", "~absent"]
+    resident = IndexSearcher(spark, searcher.index_dir)
+    resident.term_dictionary()
+    cold = IndexSearcher(spark, searcher.index_dir)
+    try:
+        got = resident._global_dfs(terms)
+        assert got == cold._global_dfs(terms)
+        assert got[vocab[-1]] > 0 and got["~absent"] == 0
+    finally:
+        resident.close()
+        cold.close()
+
+
 def test_point_lookup_and_pagination(built):
     _, oracle, searcher = built
     row = searcher.get("conv00000003:2")

@@ -1,6 +1,7 @@
 """Scripts and examples stay runnable: each one compiles, every
 ``es_indexer_spark`` module or name it imports exists, and
-``scripts/scaling_run.py`` parses its arguments."""
+``scripts/scaling_run.py`` parses its arguments; the Spark daemon module
+imports without writing to stdout."""
 
 from __future__ import annotations
 
@@ -51,3 +52,14 @@ def test_scaling_run_help_exits_zero():
         cwd=REPO, capture_output=True, text=True, timeout=120,
     )
     assert out.returncode == 0, out.stderr
+
+
+def test_spark_daemon_module_imports_silently():
+    # Spark reads the daemon's port from its stdout: importing the module
+    # must print nothing there
+    out = subprocess.run(
+        [sys.executable, "-c", "import es_indexer_spark._sparkdaemon"],
+        cwd=REPO, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout == ""
