@@ -825,9 +825,9 @@ class DslSearcher:
             r0 = dq.iloc[0]
             base = int(r0["base"])
             dl_of = np.frombuffer(r0["dl_bytes"], dtype="<i4").astype(np.int64)
-            pq = scoring.sort_chunks(pq)
+            chunks = scoring.pandas_chunks(pq)
             by_term = {
-                t: scoring.TermView(t, pq[pq["term"] == t], dfs[t], n_docs)
+                t: scoring.TermView(t, chunks.get(t, scoring.EMPTY_CHUNKS), dfs[t], n_docs)
                 for t in uniq_terms
             }
             if any(v.df == 0 for v in by_term.values()):

@@ -17,11 +17,12 @@ parquet index that ``index.build`` writes:
 Two execution paths with FULL feature parity (pytest rank-identity):
 
 - **driver path** (default below ``driver_max_docs``): posting chunks for
-  the query terms are read straight through pyarrow.dataset with
-  partition (tbucket) + row-group (term — files are term-sorted)
-  pruning, no Spark job — millisecond latency, the analogue of ES
-  answering a query from one coordinating node. Valid while per-corpus
-  norms fit the driver.
+  the query terms are read straight through pyarrow.dataset — only the
+  query's term-bucket fragments, whose footers are read once per
+  searcher, with row-group (term — files are term-sorted) pruning — and
+  kept as per-term numpy arrays in an LRU cache; no Spark job —
+  millisecond latency, the analogue of ES answering a query from one
+  coordinating node. Valid while per-corpus norms fit the driver.
 - **distributed path** (``search_df`` / ``count_df`` /
   ``phrase_search_df`` / ``suggest_df`` / ``scores_df``): posting rows
   for the query terms are cogrouped with doc_stats by segment; each Spark
@@ -84,11 +85,11 @@ def levenshtein_within(q: str, cands: np.ndarray, dmax: int) -> np.ndarray:
     n = len(cands)
     if n == 0:
         return np.zeros(0, dtype=bool)
-    lens = np.fromiter((len(c) for c in cands), dtype=np.int64, count=n)
-    maxlen = int(lens.max())
-    M = np.zeros((n, maxlen), dtype=np.uint32)
-    for i, c in enumerate(cands):  # one-time packing, not the DP loop
-        M[i, : len(c)] = np.frombuffer(c.encode("utf-32-le"), dtype=np.uint32)
+    lens = np.fromiter(map(len, cands), dtype=np.int64, count=n)
+    maxlen = max(int(lens.max()), 1)
+    # fixed-width UTF-32 code points, NUL-padded: terms are [\pL\pN]+
+    # runs (or spaced shingles of them), so a NUL never is a character
+    M = np.asarray(cands, dtype=f"U{maxlen}").view(np.uint32).reshape(n, maxlen)
     qa = np.frombuffer(q.encode("utf-32-le"), dtype=np.uint32)
     j_idx = np.arange(maxlen + 1, dtype=np.int32)
     prev = np.broadcast_to(j_idx, (n, maxlen + 1)).astype(np.int32).copy()
@@ -109,6 +110,16 @@ def auto_fuzziness(term: str) -> int:
     edit distance 0 for <3 chars, 1 for 3-5, 2 for >=6."""
     n = len(term)
     return 0 if n < 3 else (1 if n <= 5 else 2)
+
+
+def _boost_lut(names, boosts: dict[str, float] | None) -> np.ndarray:
+    """Boost lookup table indexed by value code: code 0 (null, or an
+    expunged hole) is 1.0, code i + 1 is ``names[i]``'s boost."""
+    lut = np.ones(len(names) + 1, dtype=np.float64)
+    if boosts:
+        for i, name in enumerate(names):
+            lut[i + 1] = boosts.get(name, 1.0)
+    return lut
 
 
 class IndexSearcher:
@@ -144,7 +155,13 @@ class IndexSearcher:
 
         self._snapshot_token = _uuid.uuid4().hex  # see _doc_side
         self._term_dict: pd.DataFrame | None = None
-        self._chunk_cache: dict[str, pd.DataFrame] = {}
+        # (terms sorted, df, term lengths) of the resident dictionary
+        self._dict_arrays: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
+        self._chunk_cache: dict[str, scoring.TermChunks] = {}
+        # tbucket -> postings fragments of self._postings_ds, grouped on
+        # the first fetch; a bucket's footers are read on its first use
+        self._bucket_frags: dict[int, list] | None = None
+        self._footers_read: set[int] = set()
         self._df_cache: dict[str, int] = {}
         self._doc_side_df: DataFrame | None = None
         # Spark-side source DataFrames are opened ONCE per searcher (the
@@ -192,25 +209,48 @@ class IndexSearcher:
 
     _CACHE_MAX_TERMS = 4096
 
-    def _postings_map(self, terms: list[str]) -> dict[str, pd.DataFrame]:
-        """Posting chunks PER TERM, via a per-term LRU cache (the
-        posting-list cache every IR engine keeps hot — repeated/hot query
-        terms skip the parquet read entirely). Misses are fetched in one
-        pruned pyarrow scan. Returning the per-term frames directly lets
-        ``_views`` skip the old concat-then-remask round trip (one
-        boolean scan of the concatenated frame per term per query)."""
+    def _fragments(self, buckets: list[int]) -> list:
+        """The postings fragments of the given term buckets. They come
+        from the dataset listed at open (the snapshot contract); each
+        bucket's parquet footers are read once, so later scans prune row
+        groups by term from the cached statistics."""
+        if self._bucket_frags is None:
+            by_bucket: dict[int, list] = {}
+            for f in self._postings_ds.get_fragments():
+                b = pads.get_partition_keys(f.partition_expression)["tbucket"]
+                by_bucket.setdefault(int(b), []).append(f)
+            self._bucket_frags = by_bucket
+        out = []
+        for b in buckets:
+            frags = self._bucket_frags.get(b, [])
+            if b not in self._footers_read:
+                for f in frags:
+                    f.ensure_complete_metadata()
+                self._footers_read.add(b)
+            out.extend(frags)
+        return out
+
+    def _postings_map(self, terms: list[str]) -> dict[str, scoring.TermChunks]:
+        """Posting chunks PER TERM as ``scoring.TermChunks`` arrays, via a
+        per-term LRU cache (the posting-list cache every IR engine keeps
+        hot — repeated/hot query terms skip the parquet read entirely).
+        Misses are fetched in one Arrow scan of their term buckets'
+        fragments with a ``term`` filter, sorted by
+        ``scoring.sort_chunks`` and split into compact per-term copies,
+        so evicting a term frees its memory."""
         uniq = list(dict.fromkeys(terms))
         missing = [t for t in uniq if t not in self._chunk_cache]
         if missing:
-            buckets = sorted({term_bucket(t, self.n_buckets) for t in missing})
-            filt = pc.field("tbucket").isin(buckets) & pc.field("term").isin(missing)
-            pdf = self._postings_ds.to_table(
-                columns=self._posting_cols(), filter=filt
-            ).to_pandas()
-            pdf = scoring.sort_chunks(pdf).reset_index(drop=True)
-            grouped = {t: g for t, g in pdf.groupby("term", sort=False)}
+            ds = self._postings_ds
+            frags = self._fragments(
+                sorted({term_bucket(t, self.n_buckets) for t in missing})
+            )
+            tbl = pads.FileSystemDataset(
+                frags, ds.schema, ds.format, ds.filesystem
+            ).to_table(columns=self._posting_cols(), filter=pc.field("term").isin(missing))
+            got = scoring.term_chunks(scoring.sort_chunks(tbl))
             for t in missing:
-                self._chunk_cache[t] = grouped.get(t, pdf.iloc[0:0])
+                self._chunk_cache[t] = got.get(t, scoring.EMPTY_CHUNKS)
         out = {}
         for t in uniq:
             got = self._chunk_cache.pop(t)  # re-insert → LRU recency order
@@ -222,14 +262,6 @@ class IndexSearcher:
         while len(self._chunk_cache) > self._CACHE_MAX_TERMS:
             self._chunk_cache.pop(next(iter(self._chunk_cache)))
         return out
-
-    def _postings_pdf(self, terms: list[str]) -> pd.DataFrame:
-        """Concatenated posting chunks for the terms (see _postings_map)."""
-        got = self._postings_map(terms)
-        parts = [g for g in got.values() if len(g)]
-        if not parts:
-            return next(iter(got.values())) if got else pd.DataFrame()
-        return pd.concat(parts, ignore_index=True)
 
     def _load_norms(self) -> dict:
         """Dense doc_ord-indexed arrays (dl, role, tool, conv_id, turn_idx).
@@ -272,6 +304,13 @@ class IndexSearcher:
                     a[ords] = pdf[col].to_numpy(object)
                     nm[col] = a
                 self._norms = nm
+            # role/tool as codes (0 = null or expunged hole) + names, so a
+            # boosted query builds its boost vector from O(#values) lookup
+            # tables instead of comparing objects over the whole corpus
+            for col in ("role", "tool"):
+                codes, names = pd.factorize(self._norms[col], use_na_sentinel=True)
+                self._norms[col + "_code"] = codes + 1
+                self._norms[col + "_names"] = names
         return self._norms
 
     def term_dictionary(self) -> pd.DataFrame:
@@ -286,39 +325,61 @@ class IndexSearcher:
             )
         return self._term_dict
 
+    def _dictionary(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(terms, df, term length) of the resident dictionary as arrays,
+        term-sorted; derived once from ``term_dictionary()``."""
+        if self._dict_arrays is None:
+            td = self.term_dictionary()
+            terms = td["term"].to_numpy(object)
+            self._dict_arrays = (
+                terms,
+                td["df"].to_numpy(np.int64),
+                np.fromiter(map(len, terms), dtype=np.int64, count=len(terms)),
+            )
+        return self._dict_arrays
+
+    def _prefix_range(self, prefix: str) -> tuple[int, int]:
+        """Dictionary positions [lo, hi) of the terms starting with prefix."""
+        terms = self._dictionary()[0]
+        # upper bound: append the max code point so supplementary-plane
+        # characters (> U+FFFF) starting with the prefix are included
+        return (
+            int(np.searchsorted(terms, prefix, side="left")),
+            int(np.searchsorted(terms, prefix + "\U0010FFFF", side="right")),
+        )
+
+    def _top_df(self, idx: np.ndarray, max_expansions: int) -> list[str]:
+        """The dictionary terms at ascending positions ``idx``, highest df
+        first, ties in term order (the ``_df`` paths' orderBy(df desc,
+        term asc)), cut at max_expansions."""
+        terms, df, _ = self._dictionary()
+        order = np.argsort(-df[idx], kind="stable")[:max_expansions]
+        return terms[idx[order]].tolist()
+
     def _views(
         self,
         terms: list[str],
-        pdf: pd.DataFrame | None = None,
         term_boosts: dict[str, float] | None = None,
     ) -> list[scoring.TermView]:
         tb = term_boosts or {}
-        if pdf is not None:
-            by_term = {t: pdf[pdf["term"] == t] for t in sorted(set(terms))}
-        else:
-            by_term = self._postings_map(sorted(set(terms)))
-        views = []
-        for t in sorted(set(terms)):
-            chunks = by_term[t]
-            views.append(
-                scoring.TermView(
-                    t, chunks, int(chunks["df_chunk"].sum()), self.n_docs,
-                    boost=tb.get(t, 1.0),
-                )
+        uniq = sorted(set(terms))
+        by_term = self._postings_map(uniq)
+        return [
+            scoring.TermView(
+                t, by_term[t], int(by_term[t].df_chunk.sum()), self.n_docs,
+                boost=tb.get(t, 1.0),
             )
-        return views
+            for t in uniq
+        ]
 
     def _boost_arrays(self, role_boosts, tool_boosts):
         if not role_boosts and not tool_boosts:
             return None, 1.0
         nm = self._load_norms()
-        boost = np.ones(self.ord_span, dtype=np.float64)
-        if role_boosts:
-            for r, w in role_boosts.items():
-                boost[nm["role"] == r] *= w
-        if tool_boosts:
-            for t, w in tool_boosts.items():
-                boost[nm["tool"] == t] *= w
+        boost = (
+            _boost_lut(nm["role_names"], role_boosts)[nm["role_code"]]
+            * _boost_lut(nm["tool_names"], tool_boosts)[nm["tool_code"]]
+        )
         return boost, float(boost.max()) if len(boost) else 1.0
 
     def _materialize(self, doc_ords: np.ndarray, scores: np.ndarray) -> pd.DataFrame:
@@ -418,6 +479,8 @@ class IndexSearcher:
         if self.n_docs > self.driver_max_docs:
             return self.phrase_search_df(phrase, k).toPandas()
         terms = tokenize_py(phrase) if isinstance(phrase, str) else list(phrase)
+        if not terms:
+            return self._materialize(np.zeros(0, np.int64), np.zeros(0, np.float64))
         self._require_positions(terms)
         views = self._views(terms)
         if any(v.df == 0 for v in views):
@@ -459,28 +522,22 @@ class IndexSearcher:
     def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
         """Term-dictionary range scan (search_as_you_type / bool_prefix
         analogue). Highest-df expansions first (ES default ordering)."""
-        d = self.term_dictionary()
-        terms = d["term"].to_numpy(object)
-        lo = np.searchsorted(terms, prefix, side="left")
-        # upper bound: append the max code point so supplementary-plane
-        # characters (> U+FFFF) starting with the prefix are included
-        hi = np.searchsorted(terms, prefix + "\U0010FFFF", side="right")
-        cand = d.iloc[lo:hi].nlargest(max_expansions, "df")
-        return cand["term"].tolist()
+        lo, hi = self._prefix_range(prefix)
+        return self._top_df(np.arange(lo, hi), max_expansions)
 
     def expand_fuzzy(self, term: str, max_edits: int | None = None, max_expansions: int = 50) -> list[str]:
         """AUTO-fuzziness expansion against the term dictionary. Driver-side
-        over the cached dictionary; the scale path is the same predicate as
-        a Spark filter (F.length + F.levenshtein) over term_stats."""
+        over the resident dictionary arrays; the scale path is the same
+        predicate as a Spark filter (F.length + F.levenshtein) over
+        term_stats."""
         d = auto_fuzziness(term) if max_edits is None else max_edits
-        td = self.term_dictionary()
+        terms, _, lens = self._dictionary()
         if d == 0:
-            return [term] if (td["term"] == term).any() else []
-        lens = td["term"].str.len()
-        cand = td[(lens >= len(term) - d) & (lens <= len(term) + d)]
-        ok = levenshtein_within(term, cand["term"].to_numpy(object), d)
-        hits = cand[ok]
-        return hits.nlargest(max_expansions, "df")["term"].tolist()
+            i = int(np.searchsorted(terms, term))
+            return [term] if i < len(terms) and terms[i] == term else []
+        idx = np.flatnonzero((lens >= len(term) - d) & (lens <= len(term) + d))
+        ok = levenshtein_within(term, terms[idx], d)
+        return self._top_df(idx[ok], max_expansions)
 
     @staticmethod
     def _wildcard_regex(pattern: str) -> str:
@@ -493,6 +550,15 @@ class IndexSearcher:
             for c in pattern
         )
 
+    def _fullmatch(self, rx, lo: int, hi: int, max_expansions: int) -> list[str]:
+        """Terms in dictionary positions [lo, hi) that ``rx`` matches
+        whole, highest df first."""
+        terms = self._dictionary()[0]
+        hit = np.fromiter(
+            (rx.fullmatch(t) is not None for t in terms[lo:hi]), dtype=bool, count=hi - lo
+        )
+        return self._top_df(lo + np.flatnonzero(hit), max_expansions)
+
     def expand_wildcard(self, pattern: str, max_expansions: int = 50) -> list[str]:
         """ES wildcard-query expansion over the term dictionary (anchored
         whole-term match). The literal prefix before the first wildcard
@@ -503,14 +569,8 @@ class IndexSearcher:
 
         lit = _re.match(r"[^*?]*", pattern).group(0)
         rx = _re.compile(self._wildcard_regex(pattern))
-        d = self.term_dictionary()
-        if lit:
-            terms = d["term"].to_numpy(object)
-            lo = np.searchsorted(terms, lit, side="left")
-            hi = np.searchsorted(terms, lit + "\U0010FFFF", side="right")
-            d = d.iloc[lo:hi]
-        hits = d[d["term"].str.fullmatch(rx)]
-        return hits.nlargest(max_expansions, "df")["term"].tolist()
+        lo, hi = self._prefix_range(lit) if lit else (0, len(self._dictionary()[0]))
+        return self._fullmatch(rx, lo, hi, max_expansions)
 
     def expand_regexp(self, pattern: str, max_expansions: int = 50) -> list[str]:
         """ES regexp-query expansion (anchored whole-term match) against
@@ -518,9 +578,11 @@ class IndexSearcher:
         Python ``re`` here and as Java regex on the distributed path
         (``expand_regexp_df``) — stick to the common subset (literals,
         classes, ``.|*+?()[]``), which also covers Lucene's dialect."""
-        d = self.term_dictionary()
-        hits = d[d["term"].str.fullmatch(pattern)]
-        return hits.nlargest(max_expansions, "df")["term"].tolist()
+        import re as _re
+
+        return self._fullmatch(
+            _re.compile(pattern), 0, len(self._dictionary()[0]), max_expansions
+        )
 
     def suggest(
         self,
@@ -832,24 +894,17 @@ class IndexSearcher:
             if rb or tb:
                 # boost dicts → O(#codes) lookup tables built from the
                 # row's SEGMENT-LOCAL dictionaries (code 0 = null → 1.0)
-                r_dict = list(r0["role_dict"])
-                t_dict = list(r0["tool_dict"])
-                rlut = np.ones(len(r_dict) + 1, dtype=np.float64)
-                for i, name in enumerate(r_dict):
-                    if name in rb:
-                        rlut[i + 1] = rb[name]
-                tlut = np.ones(len(t_dict) + 1, dtype=np.float64)
-                for i, name in enumerate(t_dict):
-                    if name in tb:
-                        tlut[i + 1] = tb[name]
                 boost_of = (
-                    rlut[np.frombuffer(r0["role_bytes"], dtype="<i2")]
-                    * tlut[np.frombuffer(r0["tool_bytes"], dtype="<i2")]
+                    _boost_lut(r0["role_dict"], rb)[
+                        np.frombuffer(r0["role_bytes"], dtype="<i2")]
+                    * _boost_lut(r0["tool_dict"], tb)[
+                        np.frombuffer(r0["tool_bytes"], dtype="<i2")]
                 )
-            pq = scoring.sort_chunks(pq)
+            chunks = scoring.pandas_chunks(pq)
             by_term = {
                 t: scoring.TermView(
-                    t, pq[pq["term"] == t], dfs[t], n_docs, boost=qb.get(t, 1.0)
+                    t, chunks.get(t, scoring.EMPTY_CHUNKS), dfs[t], n_docs,
+                    boost=qb.get(t, 1.0),
                 )
                 for t in uniq_terms
                 if dfs[t] > 0
@@ -984,10 +1039,11 @@ class IndexSearcher:
             r0 = dq.iloc[0]
             base = int(r0["base"])
             dl_of = np.frombuffer(r0["dl_bytes"], dtype="<i4").astype(np.int64)
-            pq = scoring.sort_chunks(pq)
+            chunks = scoring.pandas_chunks(pq)
             views = [
                 scoring.TermView(
-                    t, pq[pq["term"] == t], dfs[t], n_docs, boost=qb.get(t, 1.0)
+                    t, chunks.get(t, scoring.EMPTY_CHUNKS), dfs[t], n_docs,
+                    boost=qb.get(t, 1.0),
                 )
                 for t in uniq_terms
                 if dfs[t] > 0
@@ -1030,15 +1086,15 @@ class IndexSearcher:
         def count_seg(pdf: pd.DataFrame) -> pd.DataFrame:
             if len(pdf) == 0:
                 return pd.DataFrame({"n": []})
-            pdf = scoring.sort_chunks(pdf)
+            by_term = scoring.pandas_chunks(pdf)
             sets = []
             for t in uniq_terms:
-                chunks = pdf[pdf["term"] == t]
-                if len(chunks) == 0:
+                chunks = by_term.get(t)
+                if chunks is None:
                     if mode == "and":
                         return pd.DataFrame({"n": [0]})
                     continue
-                v = scoring.TermView(t, chunks, int(chunks["df_chunk"].sum()), n_docs)
+                v = scoring.TermView(t, chunks, int(chunks.df_chunk.sum()), n_docs)
                 sets.append(v.decode_all()[0])
             if not sets:
                 return pd.DataFrame({"n": [0]})

@@ -31,35 +31,148 @@ competitive impacts); the vectorized interval sweep follows the
 columnar/vectorized-inverted-index direction of ICDE 2025's "Columnar
 Formatted Inverted Index" (PAPERS.md) rather than a pointer-walking DAAT
 loop, because numpy rewards batch-at-a-time work.
+
+Postings reach the kernels as ``TermChunks``: one term's chunk rows as
+flat numpy arrays with per-chunk offsets, split from an Arrow table
+(``term_chunks``) — the driver's parquet fetch or one Spark task's rows.
+No pandas object sits between the fetch and the top-k.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from .. import bm25, codec
 
 
-def sort_chunks(chunks: pd.DataFrame) -> pd.DataFrame:
+def sort_chunks(chunks: pa.Table) -> pa.Table:
     """Posting-chunk rows in the order ``TermView`` binary-searches: by
     term, then by doc range. Segments hold disjoint, consecutive ordinal
     ranges (a merge only folds consecutive batches), so ``min_doc`` alone
     orders a term's chunks globally. The segment label does not: a merge
     labels its output after every batch, including newer unmerged ones
     that hold higher ordinals."""
-    return chunks.sort_values(["term", "min_doc"])
+    return chunks.take(
+        pc.sort_indices(chunks, [("term", "ascending"), ("min_doc", "ascending")])
+    )
+
+
+class TermChunks:
+    """One term's posting chunks in ``sort_chunks`` order as flat numpy
+    arrays. Per chunk: ``seg``, ``min_doc``, ``max_doc``, ``df_chunk``.
+    Each variable-length column is one contiguous array plus per-chunk
+    offsets (chunk i is ``x[x_off[i]:x_off[i + 1]]``): the doc/tf (and
+    positions) varint buffers, ``run_lens`` and the block metadata
+    ``block_last``/``block_max_tf``/``block_min_dl`` (``block_off``)."""
+
+    __slots__ = (
+        "seg", "min_doc", "max_doc", "df_chunk",
+        "doc_buf", "doc_off", "tf_buf", "tf_off", "pos_buf", "pos_off",
+        "run_lens", "run_off",
+        "block_last", "block_max_tf", "block_min_dl", "block_off",
+    )
+
+    def __len__(self) -> int:
+        return len(self.min_doc)
+
+
+def _empty_chunks() -> TermChunks:
+    c = TermChunks()
+    z, off = np.zeros(0, np.int64), np.zeros(1, np.int64)
+    c.seg = c.min_doc = c.max_doc = c.df_chunk = z
+    c.doc_buf = c.tf_buf = np.zeros(0, np.uint8)
+    c.doc_off = c.tf_off = c.run_off = c.block_off = off
+    c.pos_buf, c.pos_off = None, None
+    c.run_lens = c.block_last = z
+    c.block_max_tf = c.block_min_dl = np.zeros(0, np.float64)
+    return c
+
+
+EMPTY_CHUNKS = _empty_chunks()
+
+
+def _binary(col: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
+    """(data bytes, row offsets into them) of a binary column, zero-copy."""
+    arr = col.combine_chunks()
+    _, off_buf, data_buf = arr.buffers()
+    wide = pa.types.is_large_binary(arr.type)
+    off = np.frombuffer(off_buf, np.int64 if wide else np.int32)
+    off = off[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
+    data = np.frombuffer(data_buf, np.uint8) if data_buf is not None else np.zeros(0, np.uint8)
+    return data, off
+
+
+def _lists(col: pa.ChunkedArray, dtype) -> tuple[np.ndarray, np.ndarray]:
+    """(flat values, row offsets into them) of a list column."""
+    arr = col.combine_chunks()
+    return (
+        arr.values.to_numpy(zero_copy_only=False).astype(dtype, copy=False),
+        arr.offsets.to_numpy().astype(np.int64),
+    )
+
+
+def _rows(data: np.ndarray, off: np.ndarray, a: int, b: int) -> tuple[np.ndarray, np.ndarray]:
+    """Compact copy of rows [a, b) of a (flat values, row offsets) column,
+    with offsets rebased to 0."""
+    o = off[a : b + 1]
+    return data[o[0] : o[-1]].copy(), o - o[0]
+
+
+def term_chunks(table: pa.Table) -> dict[str, TermChunks]:
+    """Split a ``sort_chunks``-ordered posting-chunk table into per-term
+    ``TermChunks``. Columns convert to numpy once for the whole table;
+    each term then gets a compact copy of its rows, so it holds no
+    reference to the other terms' buffers."""
+    if table.num_rows == 0:
+        return {}
+    runs = pc.run_end_encode(table.column("term").combine_chunks())
+    ends = runs.run_ends.to_numpy().astype(np.int64)
+    starts = np.concatenate(([0], ends[:-1]))
+    seg, min_doc, max_doc, df_chunk = (
+        table.column(c).to_numpy().astype(np.int64, copy=False)
+        for c in ("seg", "min_doc", "max_doc", "df_chunk")
+    )
+    doc = _binary(table.column("doc_bytes"))
+    tf = _binary(table.column("tf_bytes"))
+    pos = _binary(table.column("pos_bytes")) if "pos_bytes" in table.column_names else None
+    run_lens = _lists(table.column("run_lens"), np.int64)
+    last = _lists(table.column("block_last"), np.int64)
+    max_tf, _ = _lists(table.column("block_max_tf"), np.float64)
+    min_dl, _ = _lists(table.column("block_min_dl"), np.float64)
+
+    out = {}
+    for term, a, b in zip(runs.values.to_pylist(), starts.tolist(), ends.tolist()):
+        c = TermChunks()
+        c.seg, c.min_doc = seg[a:b].copy(), min_doc[a:b].copy()
+        c.max_doc, c.df_chunk = max_doc[a:b].copy(), df_chunk[a:b].copy()
+        c.doc_buf, c.doc_off = _rows(*doc, a, b)
+        c.tf_buf, c.tf_off = _rows(*tf, a, b)
+        c.pos_buf, c.pos_off = _rows(*pos, a, b) if pos is not None else (None, None)
+        c.run_lens, c.run_off = _rows(*run_lens, a, b)
+        c.block_last, c.block_off = _rows(*last, a, b)
+        lo, hi = last[1][a], last[1][b]  # the block columns share offsets
+        c.block_max_tf, c.block_min_dl = max_tf[lo:hi].copy(), min_dl[lo:hi].copy()
+        out[term] = c
+    return out
+
+
+def pandas_chunks(pdf: pd.DataFrame) -> dict[str, TermChunks]:
+    """``term_chunks`` of one Spark task's posting rows (one Arrow
+    conversion per task, not per term)."""
+    return term_chunks(sort_chunks(pa.Table.from_pandas(pdf, preserve_index=False)))
 
 
 class TermView:
     """One query term's postings: chunk metadata up-front, lazy decode.
 
-    ``chunks`` is a pandas DataFrame of this term's posting-chunk rows in
-    ``sort_chunks`` order — disjoint, ordered doc ranges (the salted
-    skew-split re-assembled by ordered concatenation).
+    ``chunks`` is the term's ``TermChunks`` — disjoint, ordered doc
+    ranges (the salted skew-split re-assembled by ordered concatenation).
     """
 
-    def __init__(self, term: str, chunks: pd.DataFrame, df: int, n_docs: int,
+    def __init__(self, term: str, chunks: TermChunks, df: int, n_docs: int,
                  boost: float = 1.0):
         self.term = term
         self.df = int(df)
@@ -68,76 +181,61 @@ class TermView:
         # semantics: score contribution = boost * idf * tfn), so block
         # ceilings built from self.idf stay valid boost-inclusive
         self.idf = float(bm25.idf(self.df, n_docs)) * self.boost
-        self.chunks = chunks.reset_index(drop=True)
+        self.chunks = chunks
         self._decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         self._all_decoded: tuple[np.ndarray, np.ndarray] | None = None
-        self.chunk_min = chunks["min_doc"].to_numpy(np.int64)
-        self.chunk_max = chunks["max_doc"].to_numpy(np.int64)
+        self.chunk_min = chunks.min_doc
+        self.chunk_max = chunks.max_doc
 
     # ---- block metadata (no decode needed) --------------------------------
     def block_table(self, avgdl: float) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(start_doc, last_doc, ceiling) per block across all chunks.
         ceiling = idf * tf_norm_ceiling(max_tf, min_dl) — boost applied by
-        the caller."""
-        if len(self.chunks) == 0:
-            z = np.zeros(0, np.int64)
-            return z, z, np.zeros(0, np.float64)
-        starts, lasts, ceils = [], [], []
-        for i in range(len(self.chunks)):
-            row = self.chunks.iloc[i]
-            last = np.asarray(row["block_last"], dtype=np.int64)
-            mtf = np.asarray(row["block_max_tf"], dtype=np.float64)
-            mdl = np.asarray(row["block_min_dl"], dtype=np.float64)
-            start = np.empty_like(last)
-            start[0] = row["min_doc"]
+        the caller. A block starts one past its predecessor's last doc,
+        except a chunk's first block, which starts at the chunk's
+        ``min_doc``."""
+        c = self.chunks
+        last = c.block_last
+        start = np.empty_like(last)
+        if len(last):
             start[1:] = last[:-1] + 1
-            starts.append(start)
-            lasts.append(last)
-            ceils.append(self.idf * bm25.tf_norm_ceiling(mtf, np.maximum(mdl, 1.0), avgdl))
-        return (
-            np.concatenate(starts),
-            np.concatenate(lasts),
-            np.concatenate(ceils),
+            start[c.block_off[:-1]] = c.min_doc
+        ceil = self.idf * bm25.tf_norm_ceiling(
+            c.block_max_tf, np.maximum(c.block_min_dl, 1.0), avgdl
         )
+        return start, last, ceil
 
     # ---- decode ------------------------------------------------------------
     def _decode_chunk(self, i: int) -> tuple[np.ndarray, np.ndarray]:
         got = self._decoded.get(i)
         if got is None:
-            row = self.chunks.iloc[i]
-            gaps = codec.varint_decode(row["doc_bytes"])
-            run_lens = np.asarray(row["run_lens"], dtype=np.int64)
+            c = self.chunks
+            gaps = codec.varint_decode(c.doc_buf[c.doc_off[i] : c.doc_off[i + 1]])
+            run_lens = c.run_lens[c.run_off[i] : c.run_off[i + 1]]
             run_starts = np.concatenate(([0], np.cumsum(run_lens)[:-1]))
             docs = codec.delta_decode_multi(gaps, run_starts)
-            tfs = codec.varint_decode(row["tf_bytes"]).astype(np.int64)
+            tfs = codec.varint_decode(
+                c.tf_buf[c.tf_off[i] : c.tf_off[i + 1]]
+            ).astype(np.int64)
             got = (docs, tfs)
             self._decoded[i] = got
         return got
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
-        """All postings of the term in one decode pass: the byte buffers
-        of every chunk are joined and decoded with a SINGLE varint call
-        (chunk boundaries are run boundaries — each run's first gap is
-        absolute, and LEB128 is self-delimiting, so joint decode equals
-        per-chunk decode exactly). The per-chunk loop paid ~25 numpy
-        passes per chunk; a 50-term suggest expansion touches hundreds of
-        chunks per query (guide §1.2)."""
+        """All postings of the term in one decode pass over the term's
+        contiguous doc and tf buffers (chunk boundaries are run
+        boundaries — each run's first gap is absolute, and LEB128 is
+        self-delimiting, so joint decode equals per-chunk decode exactly).
+        A per-chunk loop paid ~25 numpy passes per chunk; a 50-term
+        suggest expansion touches hundreds of chunks per query."""
         got = self._all_decoded
         if got is None:
-            if len(self.chunks) == 0:
-                got = (np.zeros(0, np.int64), np.zeros(0, np.int64))
-            else:
-                doc_b = self.chunks["doc_bytes"].to_numpy(object)
-                tf_b = self.chunks["tf_bytes"].to_numpy(object)
-                rl = np.concatenate([
-                    np.asarray(x, dtype=np.int64)
-                    for x in self.chunks["run_lens"].to_numpy(object)
-                ])
-                run_starts = np.concatenate(([0], np.cumsum(rl)[:-1]))
-                gaps = codec.varint_decode(b"".join(doc_b))
-                docs = codec.delta_decode_multi(gaps, run_starts)
-                tfs = codec.varint_decode(b"".join(tf_b)).astype(np.int64)
-                got = (docs, tfs)
+            c = self.chunks
+            run_starts = np.concatenate(([0], np.cumsum(c.run_lens)[:-1]))
+            gaps = codec.varint_decode(c.doc_buf)
+            docs = codec.delta_decode_multi(gaps, run_starts)
+            tfs = codec.varint_decode(c.tf_buf).astype(np.int64)
+            got = (docs, tfs)
             self._all_decoded = got
         return got
 
@@ -159,17 +257,18 @@ class TermView:
 
     def positions_for(self, want_docs: np.ndarray) -> dict[int, np.ndarray]:
         """doc_ord -> positions array (requires with_positions index)."""
+        c = self.chunks
         out: dict[int, np.ndarray] = {}
-        for i in range(len(self.chunks)):
-            row = self.chunks.iloc[i]
-            buf = row.get("pos_bytes")
-            if buf is None:
+        for i in range(len(c)):
+            if c.pos_buf is None:
                 raise ValueError("index was built without positions")
             docs, _ = self._decode_chunk(i)
             mask = np.isin(docs, want_docs)
             if not mask.any():
                 continue
-            plists = codec.decode_positions(buf, len(docs))
+            plists = codec.decode_positions(
+                c.pos_buf[c.pos_off[i] : c.pos_off[i + 1]], len(docs)
+            )
             for j in np.flatnonzero(mask):
                 out[int(docs[j])] = plists[j]
         return out

@@ -87,6 +87,14 @@ def test_phrase_absent_parity(searcher):
     assert searcher.phrase_search_df("zzz absent phrase", k=10).count() == 0
 
 
+def test_empty_phrase_parity(searcher):
+    # a phrase with no terms (empty or punctuation only) matches nothing
+    for phrase in ("", "?!"):
+        drv = searcher.phrase_search(phrase, k=10)
+        dst = searcher.phrase_search_df(phrase, k=10).toPandas()
+        assert len(drv) == len(dst) == 0
+
+
 def test_count_parity(searcher):
     for terms, mode in [
         (["the"], "or"),            # stop-word-like: the scale hazard case
@@ -102,6 +110,20 @@ def test_expansion_parity(searcher):
     assert searcher.expand_prefix("ba") == searcher.expand_prefix_df("ba")
     assert searcher.expand_fuzzy("bacu") == searcher.expand_fuzzy_df("bacu")
     assert searcher.expand_fuzzy("ab") == searcher.expand_fuzzy_df("ab") == []
+    # caps that cut inside runs of equal df: ties go in term order on both
+    cases = [
+        (searcher.expand_prefix, searcher.expand_prefix_df, "b"),
+        (lambda t, n: searcher.expand_fuzzy(t, 2, n),
+         lambda t, n: searcher.expand_fuzzy_df(t, 2, n), "bacu"),
+        (searcher.expand_wildcard, searcher.expand_wildcard_df, "?a*"),
+        (searcher.expand_regexp, searcher.expand_regexp_df, "[bc][a-z]*o"),
+    ]
+    df = dict(zip(*(searcher.term_dictionary()[c] for c in ("term", "df"))))
+    for drv, dist, arg in cases:
+        full = drv(arg, 1000)
+        assert full == dist(arg, 1000)
+        cut = next(n for n in range(1, len(full)) if df[full[n - 1]] == df[full[n]])
+        assert drv(arg, cut) == dist(arg, cut) == full[:cut]
 
 
 def test_suggest_parity_standard_index(searcher):

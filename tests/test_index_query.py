@@ -82,6 +82,45 @@ def test_boosts_rank_identity(built):
     np.testing.assert_allclose(got["score"].to_numpy(), want["score"].to_numpy())
     got_bm = searcher.search(["baco", "cora"], k=10, role_boosts=rb, strategy="blockmax")
     assert got_bm["doc_id"].tolist() == want["doc_id"].tolist()
+    # tool boosts (tool is set on the tool-role turns only; null elsewhere)
+    terms, tb = ["the", "baco"], {"bash": 8.0, "search": 0.25}
+    want = oracle.topk(terms, k=10, role_boosts=rb, tool_boosts=tb)
+    plain = oracle.topk(terms, k=10, role_boosts=rb)
+    assert want["doc_id"].tolist() != plain["doc_id"].tolist()  # boost matters
+    for strategy in ("exhaustive", "blockmax"):
+        got = searcher.search(terms, k=10, role_boosts=rb, tool_boosts=tb,
+                              strategy=strategy)
+        assert got["doc_id"].tolist() == want["doc_id"].tolist(), strategy
+        np.testing.assert_allclose(got["score"].to_numpy(), want["score"].to_numpy())
+    dist = searcher.search_df(terms, k=10, role_boosts=rb, tool_boosts=tb).toPandas()
+    assert dist["doc_id"].tolist() == want["doc_id"].tolist()
+    np.testing.assert_allclose(dist["score"].to_numpy(), want["score"].to_numpy())
+
+
+def test_posting_cache_eviction_refetches(built, spark):
+    """A posting cache smaller than one query's terms evicts and re-fetches
+    on every query; results must not change and the bound must hold."""
+    _, oracle, searcher = built
+    small = IndexSearcher(spark, searcher.index_dir)
+    small._CACHE_MAX_TERMS = 2
+    try:
+        cycle = [
+            (["baco", "cora", "dala"], "or"),
+            (["the", "baco"], "and"),
+            (["quiel", "the", "42"], "or"),
+            (["baco", "cora", "dala"], "and"),
+        ]
+        for terms, mode in cycle * 2:
+            want = oracle.topk(terms, k=10, mode=mode)
+            for strategy in ("exhaustive", "blockmax"):
+                got = small.search(terms, k=10, mode=mode, strategy=strategy)
+                assert got["doc_id"].tolist() == want["doc_id"].tolist(), (terms, strategy)
+                np.testing.assert_allclose(
+                    got["score"].to_numpy(), want["score"].to_numpy(), rtol=1e-12
+                )
+                assert len(small._chunk_cache) <= 2
+    finally:
+        small.close()
 
 
 def test_count_matches_oracle(built):
@@ -162,8 +201,8 @@ def test_hot_term_skew_split_across_segments(built):
     split across segments (the doc-range salt), and chunks must tile the
     doc space disjointly in order."""
     _, oracle, searcher = built
-    pdf = searcher._postings_pdf(["the"]).sort_values(["seg", "min_doc"])
-    assert pdf["seg"].nunique() > 1  # hot term spread over multiple segments
-    assert int(pdf["df_chunk"].sum()) == oracle.df["the"]
+    chunks = searcher._postings_map(["the"])["the"]
+    assert len(np.unique(chunks.seg)) > 1  # hot term spread over multiple segments
+    assert int(chunks.df_chunk.sum()) == oracle.df["the"]
     # disjoint ordered ranges: every chunk starts after the previous ends
-    assert (pdf["min_doc"].to_numpy()[1:] > pdf["max_doc"].to_numpy()[:-1]).all()
+    assert (chunks.min_doc[1:] > chunks.max_doc[:-1]).all()
