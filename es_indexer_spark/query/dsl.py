@@ -13,7 +13,8 @@ issues is an Elasticsearch JSON body:
 
 ``DslSearcher`` compiles those bodies onto the engine: scored leaves
 (match / match_phrase / multi_match / prefix / fuzzy) evaluate through
-the same posting decode + BM25 kernels as ``IndexSearcher.search``;
+the same query kernel as ``IndexSearcher.search`` (``scoring.evaluate``,
+with no top-k cut);
 metadata leaves (term / terms / range / exists / ids on stored fields)
 evaluate as predicates over doc_stats; ``bool`` combines them with exact
 Lucene semantics (must = intersect + sum, should = optional score with
@@ -54,9 +55,7 @@ from pyspark.sql import functions as F
 
 from .. import bm25
 from ..analysis import tokenize_py
-from . import scoring
-from .engine import IndexSearcher
-from .multifield import TIER_BOOSTS, _tier_boosts
+from .engine import TIER_BOOSTS, IndexSearcher
 
 # stored-field (metadata) leaves evaluate as predicates, never postings
 _META_FIELDS = ("doc_id", "conv_id", "turn_idx", "role", "tool", "ts")
@@ -213,30 +212,6 @@ class DslSearcher:
             docs = docs[~np.isin(docs, self.s.tombstones)]
         return docs, np.full(len(docs), score, dtype=np.float64)
 
-    def _full_vector(
-        self,
-        fs: IndexSearcher,
-        terms: list[str],
-        mode: str = "or",
-        term_boosts: dict[str, float] | None = None,
-    ) -> Vec:
-        """FULL matching-doc BM25 vector (docs asc) — the scored-leaf
-        primitive; same decode + ``_score_gathered`` kernel as search."""
-        uniq = sorted(set(terms))
-        if not uniq:
-            return _empty()
-        views = fs._views(uniq, term_boosts=term_boosts)
-        if mode == "and" and any(v.df == 0 for v in views):
-            return _empty()
-        views = [v for v in views if v.df > 0]
-        if not views:
-            return _empty()
-        gathered = [v.decode_all() for v in views]
-        nm = fs._load_norms()
-        return scoring._score_gathered(
-            views, gathered, nm["dl"], 0, fs.avgdl, None, mode, fs.tombstones
-        )
-
     @staticmethod
     def _msm_default(q: dict) -> int:
         if "minimum_should_match" in q:
@@ -284,19 +259,9 @@ class DslSearcher:
             fs = self._field_searcher(name)
             fboost = float(name.split("^", 1)[1]) if "^" in name else 1.0
             if mm_type == "bool_prefix":
-                toks = tokenize_py(query)
-                if not toks:
+                terms, tb = fs._bool_prefix_terms(query, fuzzy, TIER_BOOSTS)
+                if not terms:
                     continue
-                terms: list[str] = []
-                for t in toks[:-1]:
-                    terms.extend(fs.expand_fuzzy(t) if fuzzy else [t])
-                terms.extend(fs.expand_prefix(toks[-1]) or [toks[-1]])
-                terms = list(dict.fromkeys(terms))
-                tb = (
-                    _tier_boosts(terms, TIER_BOOSTS)
-                    if fs.manifest.get("analyzer") == "suggest"
-                    else None
-                )
             else:
                 terms = fs.analyze_query(query)
                 tb = None
@@ -326,7 +291,7 @@ class DslSearcher:
         value = b["value"]
         if field in self.fields:
             # unanalyzed exact term against the field's postings (scored)
-            docs, sc = self._full_vector(self.fields[field], [str(value)])
+            docs, sc = self.fields[field]._evaluate([str(value)])
             return (docs, sc * float(b.get("boost", 1.0))) if scored else (docs, np.zeros(len(docs)))
         arr = self._meta_array(field)
         return self._mask_to_vec(arr == value, 1.0 if scored else 0.0)
@@ -334,7 +299,7 @@ class DslSearcher:
     def _q_terms(self, body, scored) -> Vec:
         field, values = _single_field(body, "terms")
         if field in self.fields:
-            docs, sc = self._full_vector(self.fields[field], [str(v) for v in values])
+            docs, sc = self.fields[field]._evaluate([str(v) for v in values])
             return (docs, sc) if scored else (docs, np.zeros(len(docs)))
         arr = self._meta_array(field)
         return self._mask_to_vec(np.isin(arr, list(values)), 1.0 if scored else 0.0)
@@ -353,7 +318,7 @@ class DslSearcher:
         fs = self._field_searcher(field)
         terms = fs.analyze_query(b["query"])
         mode = str(b.get("operator", "or")).lower()
-        docs, sc = self._full_vector(fs, terms, mode)
+        docs, sc = fs._evaluate(terms, mode=mode)
         boost = float(b.get("boost", 1.0))
         return (docs, sc * boost) if scored else (docs, np.zeros(len(docs)))
 
@@ -361,30 +326,20 @@ class DslSearcher:
         field, b = _field_and_body(body, "match_phrase")
         fs = self._field_searcher(field)
         terms = tokenize_py(b["query"])
-        if not terms:
-            return _empty()
-        fs._require_positions(terms)
-        docs, sc = self._full_vector(fs, terms, "and")
-        if len(terms) > 1 and len(docs):
-            views = {v.term: v for v in fs._views(sorted(set(terms)))}
-            hits = scoring.phrase_docs([views[t] for t in terms], docs)
-            keep = np.isin(docs, hits)
-            docs, sc = docs[keep], sc[keep]
+        docs, sc = fs._evaluate(terms, phrase=terms)
         boost = float(b.get("boost", 1.0))
         return (docs, sc * boost) if scored else (docs, np.zeros(len(docs)))
 
     def _q_prefix(self, body, scored) -> Vec:
         field, b = _field_and_body(body, "prefix")
         fs = self._field_searcher(field)
-        exps = fs.expand_prefix(str(b["value"]))
-        docs, sc = self._full_vector(fs, exps) if exps else _empty()
+        docs, sc = fs._evaluate(fs.expand_prefix(str(b["value"])))
         return (docs, sc * float(b.get("boost", 1.0))) if scored else (docs, np.zeros(len(docs)))
 
     def _q_fuzzy(self, body, scored) -> Vec:
         field, b = _field_and_body(body, "fuzzy")
         fs = self._field_searcher(field)
-        exps = fs.expand_fuzzy(str(b["value"]))
-        docs, sc = self._full_vector(fs, exps) if exps else _empty()
+        docs, sc = fs._evaluate(fs.expand_fuzzy(str(b["value"])))
         return (docs, sc * float(b.get("boost", 1.0))) if scored else (docs, np.zeros(len(docs)))
 
     def _q_match_phrase_prefix(self, body, scored) -> Vec:
@@ -403,19 +358,12 @@ class DslSearcher:
         if not exps:
             return _empty()
         head = toks[:-1]
-        fs._require_positions(list(dict.fromkeys(head + exps)))
-        hits_all = []
-        for e in exps:
-            terms = head + [e]
-            docs, _ = self._full_vector(fs, terms, "and")
-            if len(terms) > 1 and len(docs):
-                views = {v.term: v for v in fs._views(sorted(set(terms)))}
-                docs = scoring.phrase_docs([views[t] for t in terms], docs)
-            hits_all.append(docs)
-        cand = np.unique(np.concatenate(hits_all)) if hits_all else np.zeros(0, np.int64)
+        cand = np.unique(np.concatenate(
+            [fs._evaluate(head + [e], phrase=head + [e])[0] for e in exps]
+        ))
         if len(cand) == 0:
             return _empty()
-        docs, sc = self._full_vector(fs, list(dict.fromkeys(head + exps)), "or")
+        docs, sc = fs._evaluate(head + exps)
         keep = np.isin(docs, cand, assume_unique=True)
         boost = float(b.get("boost", 1.0))
         docs, sc = docs[keep], sc[keep]
@@ -449,8 +397,7 @@ class DslSearcher:
             return self._meta_pattern_vec(
                 field, IndexSearcher._wildcard_regex(pattern), boost, scored)
         fs = self._field_searcher(field)
-        exps = fs.expand_wildcard(pattern)
-        docs, sc = self._full_vector(fs, exps) if exps else _empty()
+        docs, sc = fs._evaluate(fs.expand_wildcard(pattern))
         return (docs, sc * boost) if scored else (docs, np.zeros(len(docs)))
 
     def _q_regexp(self, body, scored) -> Vec:
@@ -462,15 +409,14 @@ class DslSearcher:
         if field in _META_FIELDS:
             return self._meta_pattern_vec(field, pattern, boost, scored)
         fs = self._field_searcher(field)
-        exps = fs.expand_regexp(pattern)
-        docs, sc = self._full_vector(fs, exps) if exps else _empty()
+        docs, sc = fs._evaluate(fs.expand_regexp(pattern))
         return (docs, sc * boost) if scored else (docs, np.zeros(len(docs)))
 
     def _q_multi_match(self, body, scored) -> Vec:
         specs = self._mm_specs(body)
         mm_type = body.get("type", "best_fields")
         per_field = [
-            (self._full_vector(fs, terms, term_boosts=tb), fb)
+            (fs._evaluate(terms, term_boosts=tb), fb)
             for fs, fb, terms, tb in specs
         ]
         per_field = [((d, s * fb)) for (d, s), fb in per_field]
@@ -584,8 +530,8 @@ class DslSearcher:
         must — clauses compose); a bare top-k has no reason to, and at
         10^9 docs the difference is a per-segment pruned heap vs a
         corpus-length score column. Exactness is unaffected: both paths
-        share the decode + ``_score_gathered`` kernels (asserted
-        rank+score-identical in tests)."""
+        run the same query kernel (asserted rank+score-identical in
+        tests)."""
         if not (isinstance(q, dict) and len(q) == 1):
             return None
         kind, body = next(iter(q.items()))
@@ -776,89 +722,6 @@ class DslSearcher:
     def _scores_or_zero(self, df: DataFrame, scored: bool) -> DataFrame:
         return df if scored else df.select("doc_ord", F.lit(0.0).alias("score"))
 
-    def _match_df(self, fs: IndexSearcher, terms: list[str], mode: str,
-                  term_boosts: dict | None = None) -> DataFrame:
-        uniq = sorted(set(terms))
-        if not uniq:
-            return self.s.spark.createDataFrame([], "doc_ord long, score double")
-        if mode != "and" or len(uniq) == 1:
-            return fs.scores_df(uniq, term_boosts=term_boosts)
-        # conjunction: per-term vectors inner-joined on doc_ord (terms are
-        # few; each join is doc_ord-keyed and AQE-broadcastable when one
-        # side is a rare term)
-        parts = [
-            fs.scores_df([t], term_boosts=term_boosts)
-            .withColumnRenamed("score", f"s{i}")
-            for i, t in enumerate(uniq)
-        ]
-        joined = reduce(lambda a, b: a.join(b, "doc_ord"), parts)
-        total = reduce(lambda a, b: a + b, [F.col(f"s{i}") for i in range(len(uniq))])
-        return joined.select("doc_ord", total.alias("score"))
-
-    def _phrase_vec_df(self, fs: IndexSearcher, terms: list[str]) -> DataFrame:
-        """FULL phrase-hit score vector, segment-parallel — the bool-tree
-        phrase leaf. ``search_df(phrase_terms=…)`` returns a top-k and
-        collects it driver-side; inside a bool tree we need every hit
-        with NO O(hits) driver state, so this mirrors ``scores_df``'s
-        cogroup with the same AND-intersect + adjacency filter
-        ``search_df`` applies per segment (match_phrase in ``bool.filter``
-        is the reference's shape, GeoNetworkServiceImpl.java:118)."""
-        from pyspark.sql import types as T
-
-        empty = self.s.spark.createDataFrame([], "doc_ord long, score double")
-        if not terms:
-            return empty
-        fs._require_positions(terms)
-        uniq_terms = sorted(set(terms))
-        dfs = fs._global_dfs(uniq_terms)
-        if any(dfs[t] == 0 for t in uniq_terms):
-            return empty
-        postings = fs._postings_df(uniq_terms)
-        doc_side = fs._doc_side()
-        n_docs, avgdl, tombstones = fs.n_docs, fs.avgdl, fs.tombstones
-        qterms = list(terms)
-
-        def seg(pq: pd.DataFrame, dq: pd.DataFrame) -> pd.DataFrame:
-            out0 = pd.DataFrame({"doc_ord": [], "score": []})
-            if len(pq) == 0 or len(dq) == 0:
-                return out0
-            r0 = dq.iloc[0]
-            base = int(r0["base"])
-            dl_of = np.frombuffer(r0["dl_bytes"], dtype="<i4").astype(np.int64)
-            chunks = scoring.pandas_chunks(pq)
-            by_term = {
-                t: scoring.TermView(t, chunks.get(t, scoring.EMPTY_CHUNKS), dfs[t], n_docs)
-                for t in uniq_terms
-            }
-            if any(v.df == 0 for v in by_term.values()):
-                return out0
-            gathered = {t: by_term[t].decode_all() for t in uniq_terms}
-            inter = gathered[qterms[0]][0]
-            for t in qterms[1:]:
-                inter = np.intersect1d(inter, gathered[t][0])
-            ordered = [by_term[t] for t in qterms]
-            hits = scoring.phrase_docs(ordered, inter) if len(qterms) > 1 else inter
-            if len(tombstones):
-                hits = hits[~np.isin(hits, tombstones)]
-            if len(hits) == 0:
-                return out0
-            docs, scores = scoring._score_gathered(
-                [by_term[t] for t in uniq_terms],
-                [gathered[t] for t in uniq_terms],
-                dl_of, base, avgdl, None, "and", tombstones,
-            )
-            keep = np.isin(docs, hits)
-            return pd.DataFrame({"doc_ord": docs[keep], "score": scores[keep]})
-
-        out_schema = T.StructType(
-            [T.StructField("doc_ord", T.LongType()), T.StructField("score", T.DoubleType())]
-        )
-        return (
-            postings.groupBy("seg")
-            .cogroup(doc_side.groupBy("seg"))
-            .applyInPandas(lambda key, pq, dq: seg(pq, dq), out_schema)
-        )
-
     def _eval_df(self, q: dict, scored: bool) -> DataFrame:
         if not isinstance(q, dict) or len(q) != 1:
             raise EsDslError(f"a query clause is one {{type: body}} object: {q!r}")
@@ -872,13 +735,13 @@ class DslSearcher:
             field, tb = _field_and_body(body, "term")
             if field in self.fields:
                 return self._scores_or_zero(
-                    self._match_df(self.fields[field], [str(tb["value"])], "or"), scored)
+                    self.fields[field].scores_df([str(tb["value"])]), scored)
             return self._meta_vec_df(F.col(field) == tb["value"], scored)
         if kind == "terms":
             field, values = _single_field(body, "terms")
             if field in self.fields:
                 return self._scores_or_zero(
-                    self._match_df(self.fields[field], [str(v) for v in values], "or"), scored)
+                    self.fields[field].scores_df([str(v) for v in values]), scored)
             return self._meta_vec_df(F.col(field).isin(list(values)), scored)
         if kind == "range":
             field, ops = _single_field(body, "range")
@@ -889,7 +752,7 @@ class DslSearcher:
             field, b = _field_and_body(body, "match")
             fs = self._field_searcher(field)
             terms = fs.analyze_query(b["query"])
-            df = self._match_df(fs, terms, str(b.get("operator", "or")).lower())
+            df = fs.scores_df(terms, mode=str(b.get("operator", "or")).lower())
             boost = float(b.get("boost", 1.0))
             if scored and boost != 1.0:
                 df = df.select("doc_ord", (F.col("score") * boost).alias("score"))
@@ -898,17 +761,17 @@ class DslSearcher:
             field, b = _field_and_body(body, "match_phrase")
             fs = self._field_searcher(field)
             terms = tokenize_py(b["query"])
-            return self._scores_or_zero(self._phrase_vec_df(fs, terms), scored)
+            return self._scores_or_zero(fs.scores_df(terms, phrase_terms=terms), scored)
         if kind == "prefix":
             field, b = _field_and_body(body, "prefix")
             fs = self._field_searcher(field)
-            exps = fs.expand_prefix_df(str(b["value"]))
-            return self._scores_or_zero(self._match_df(fs, exps, "or"), scored)
+            return self._scores_or_zero(
+                fs.scores_df(fs.expand_prefix_df(str(b["value"]))), scored)
         if kind == "fuzzy":
             field, b = _field_and_body(body, "fuzzy")
             fs = self._field_searcher(field)
-            exps = fs.expand_fuzzy_df(str(b["value"]))
-            return self._scores_or_zero(self._match_df(fs, exps, "or"), scored)
+            return self._scores_or_zero(
+                fs.scores_df(fs.expand_fuzzy_df(str(b["value"]))), scored)
         if kind == "dis_max":
             clauses = body.get("queries")
             if not isinstance(clauses, list) or not clauses:
@@ -944,14 +807,14 @@ class DslSearcher:
             if not exps:
                 return self.s.spark.createDataFrame([], "doc_ord long, score double")
             head = toks[:-1]
-            allt = list(dict.fromkeys(head + exps))
             if not head:  # single-position phrase == prefix OR-group
-                return self._scores_or_zero(self._match_df(fs, exps, "or"), scored)
+                return self._scores_or_zero(fs.scores_df(exps), scored)
             cand = reduce(
                 lambda a, b2: a.unionByName(b2),
-                [self._phrase_vec_df(fs, head + [e]).select("doc_ord") for e in exps],
+                [fs.scores_df(head + [e], phrase_terms=head + [e]).select("doc_ord")
+                 for e in exps],
             ).distinct()
-            df = self._match_df(fs, allt, "or").join(cand, "doc_ord", "left_semi")
+            df = fs.scores_df(head + exps).join(cand, "doc_ord", "left_semi")
             boost = float(b.get("boost", 1.0))
             if scored and boost != 1.0:
                 df = df.select("doc_ord", (F.col("score") * boost).alias("score"))
@@ -971,7 +834,7 @@ class DslSearcher:
             fs = self._field_searcher(field)
             exps = (fs.expand_wildcard_df(pattern) if kind == "wildcard"
                     else fs.expand_regexp_df(pattern))
-            df = self._match_df(fs, exps, "or")
+            df = fs.scores_df(exps)
             if scored and boost != 1.0:
                 df = df.select("doc_ord", (F.col("score") * boost).alias("score"))
             return self._scores_or_zero(df, scored)
@@ -979,7 +842,7 @@ class DslSearcher:
             specs = self._mm_specs(body)
             mm_type = body.get("type", "best_fields")
             parts = [
-                self._match_df(fs, terms, "or", term_boosts=tb)
+                fs.scores_df(terms, term_boosts=tb)
                 .select("doc_ord", (F.col("score") * fb).alias("score"))
                 for fs, fb, terms, tb in specs
             ]
@@ -1379,13 +1242,7 @@ class DslSearcher:
             .limit(size + from_)
             .collect()[from_:]
         )
-        empty = self.s.spark.createDataFrame(
-            [],
-            "doc_ord long, doc_id string, conv_id string, turn_idx int, "
-            "role string, score double",
+        return self.s._enrich_topk(
+            [int(r["doc_ord"]) for r in top_rows],
+            {int(r["doc_ord"]): float(r["score"]) for r in top_rows},
         )
-        if not top_rows:
-            return empty
-        ords = [int(r["doc_ord"]) for r in top_rows]
-        scores = {int(r["doc_ord"]): float(r["score"]) for r in top_rows}
-        return self.s._enrich_topk(ords, scores, empty)

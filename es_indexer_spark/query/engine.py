@@ -14,26 +14,33 @@ parquet index that ``index.build`` writes:
          exhaustive referee path), deterministic (score desc, doc_ord asc)
 - Q9     ``_analyze``                            → ``analysis.analyze``
 
-Two execution paths with FULL feature parity (pytest rank-identity):
+One query kernel, two executors, with FULL feature parity (pytest
+rank-identity). Every operator builds a ``scoring.Plan`` — the sorted
+query terms with their global dfs, the mode, k, the strategy, the phrase
+and the term boosts — and ``scoring.evaluate`` / ``scoring.count`` run it:
 
-- **driver path** (default below ``driver_max_docs``): posting chunks for
-  the query terms are read straight through pyarrow.dataset — only the
-  query's term-bucket fragments, whose footers are read once per
-  searcher, with row-group (term — files are term-sorted) pruning — and
-  kept as per-term numpy arrays in an LRU cache; no Spark job —
-  millisecond latency, the analogue of ES answering a query from one
-  coordinating node. Valid while per-corpus norms fit the driver.
-- **distributed path** (``search_df`` / ``count_df`` /
+- **driver executor** (default below ``driver_max_docs``): the kernel
+  runs once over the whole corpus against the resident norms. Posting
+  chunks for the query terms are read straight through pyarrow.dataset —
+  only the query's term-bucket fragments, whose footers are read once per
+  searcher — and kept as per-term numpy arrays in an LRU cache; no Spark
+  job — millisecond latency, the analogue of ES answering a query from
+  one coordinating node. Each postings file is one row group today, so
+  the ``term`` filter runs after a bucket file is read, not as row-group
+  pruning (ROADMAP item 4(b) gives segments term-sorted row groups).
+  Valid while per-corpus norms fit the driver.
+- **distributed executor** (``search_df`` / ``count_df`` /
   ``phrase_search_df`` / ``suggest_df`` / ``scores_df``): posting rows
-  for the query terms are cogrouped with doc_stats by segment; each Spark
-  task runs the same numpy kernel over its segment (= shard) and emits a
-  local top-k; a global sort of the tiny union gathers the final top-k —
-  Lucene's shard fan-out/merge mapped 1:1 onto Spark partitions. Synonym
-  expansion, term/role/tool boosts, phrase adjacency, counts and suggest
-  expansions (pruned Spark filters over term_stats) all run here with NO
-  O(corpus) or O(dictionary) driver state, so every operator exists at
-  10^9+ docs. The public ``search``/``count``/``phrase_search``/
-  ``suggest`` auto-dispatch between paths on corpus size.
+  for the query terms are cogrouped with doc_stats by segment, and each
+  Spark task runs the same kernel over its segment (= shard), emitting a
+  local top-k or its full score vector; a global sort of the tiny union
+  gathers the final top-k — Lucene's shard fan-out/merge mapped 1:1 onto
+  Spark partitions. Synonym expansion, term/role/tool boosts, phrase
+  adjacency, counts and suggest expansions (pruned Spark filters over
+  term_stats) all run here with NO O(corpus) or O(dictionary) driver
+  state, so every operator exists at 10^9+ docs. The public
+  ``search``/``count``/``phrase_search``/``suggest`` auto-dispatch
+  between executors on corpus size.
 """
 
 from __future__ import annotations
@@ -54,14 +61,25 @@ from ..index import catalog
 from ..index.build import term_bucket
 from . import scoring
 
-codec_BLOCK = 128  # codec.BLOCK_SIZE — auto-strategy postings threshold
-
 _POSTING_COLS = [
     "term", "seg", "min_doc", "max_doc", "df_chunk",
     "doc_bytes", "tf_bytes", "block_last", "block_max_tf", "block_min_dl",
     "run_lens",
 ]
 _POS_COL = "pos_bytes"  # present only when the index was built with positions
+# result schemas as StructTypes, not DDL strings: parsing DDL costs a JVM
+# round trip (~6 ms) on every query
+_SCORES = T.StructType(
+    [T.StructField("doc_ord", T.LongType()), T.StructField("score", T.DoubleType())]
+)
+_HITS = T.StructType([
+    T.StructField("doc_ord", T.LongType()),
+    T.StructField("doc_id", T.StringType()),
+    T.StructField("conv_id", T.StringType()),
+    T.StructField("turn_idx", T.IntegerType()),
+    T.StructField("role", T.StringType()),
+    T.StructField("score", T.DoubleType()),
+])
 
 
 class SnapshotExpiredError(RuntimeError):
@@ -110,6 +128,10 @@ def auto_fuzziness(term: str) -> int:
     edit distance 0 for <3 chars, 1 for 3-5, 2 for >=6."""
     n = len(term)
     return 0 if n < 3 else (1 if n <= 5 else 2)
+
+
+# the reference's sub-field boosts: base^10, _2gram^5, _3gram^2
+TIER_BOOSTS = (10.0, 5.0, 2.0)
 
 
 def _boost_lut(names, boosts: dict[str, float] | None) -> np.ndarray:
@@ -212,8 +234,10 @@ class IndexSearcher:
     def _fragments(self, buckets: list[int]) -> list:
         """The postings fragments of the given term buckets. They come
         from the dataset listed at open (the snapshot contract); each
-        bucket's parquet footers are read once, so later scans prune row
-        groups by term from the cached statistics."""
+        bucket's parquet footers are read once per searcher. A bucket file
+        is written as one row group, so a scan reads the whole file and
+        the ``term`` filter runs after the read; term-sorted row groups
+        that statistics can prune are ROADMAP item 4(b)."""
         if self._bucket_frags is None:
             by_bucket: dict[int, list] = {}
             for f in self._postings_ds.get_fragments():
@@ -356,31 +380,39 @@ class IndexSearcher:
         order = np.argsort(-df[idx], kind="stable")[:max_expansions]
         return terms[idx[order]].tolist()
 
-    def _views(
-        self,
-        terms: list[str],
-        term_boosts: dict[str, float] | None = None,
-    ) -> list[scoring.TermView]:
-        tb = term_boosts or {}
-        uniq = sorted(set(terms))
-        by_term = self._postings_map(uniq)
-        return [
-            scoring.TermView(
-                t, by_term[t], int(by_term[t].df_chunk.sum()), self.n_docs,
-                boost=tb.get(t, 1.0),
-            )
-            for t in uniq
-        ]
+    def _local_plan(
+        self, terms: list[str], **plan_kw
+    ) -> tuple[scoring.Plan, dict[str, scoring.TermChunks]]:
+        """The driver executor's plan over the whole corpus, with the
+        posting chunks it runs on; dfs are the chunks' own (the whole
+        corpus is local)."""
+        if plan_kw.get("phrase"):
+            self._require_positions(plan_kw["phrase"])
+        chunks = self._postings_map(sorted(set(terms)))
+        dfs = {t: int(c.df_chunk.sum()) for t, c in chunks.items()}
+        return scoring.Plan.build(dfs, self.n_docs, self.avgdl, **plan_kw), chunks
 
-    def _boost_arrays(self, role_boosts, tool_boosts):
+    def _evaluate(
+        self, terms: list[str], *, boost_of: np.ndarray | None = None, **plan_kw
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """``scoring.evaluate`` once over the whole corpus: chunk order
+        already spans segments and the resident norms are ordinal-indexed
+        (``dl_base`` 0), so a loop over segments would only add work."""
+        plan, chunks = self._local_plan(terms, **plan_kw)
+        return scoring.evaluate(
+            plan, chunks, self._load_norms()["dl"],
+            boost_of=boost_of, deleted=self.tombstones,
+        )
+
+    def _boost_of(self, role_boosts, tool_boosts) -> np.ndarray | None:
+        """Per-doc role × tool boost over the corpus, or None unboosted."""
         if not role_boosts and not tool_boosts:
-            return None, 1.0
+            return None
         nm = self._load_norms()
-        boost = (
+        return (
             _boost_lut(nm["role_names"], role_boosts)[nm["role_code"]]
             * _boost_lut(nm["tool_names"], tool_boosts)[nm["tool_code"]]
         )
-        return boost, float(boost.max()) if len(boost) else 1.0
 
     def _materialize(self, doc_ords: np.ndarray, scores: np.ndarray) -> pd.DataFrame:
         nm = self._load_norms()
@@ -419,12 +451,8 @@ class IndexSearcher:
         turn_idx, role, score) sorted (score desc, doc_ord asc).
         ``term_boosts`` carries ES ^boost weights (e.g. per-field /
         per-expansion-group multipliers) folded into each term's idf.
-
-        ``strategy="auto"`` picks block-max pruning for few-term queries
-        over long postings (where skipping pays) and exhaustive scoring
-        for many-term expansions or short postings (where the sweep's
-        bookkeeping costs more than scoring everything) — the same
-        query-shape dispatch Lucene applies to WAND. Both are exact.
+        ``strategy`` is "exhaustive", "blockmax" or "auto" (see
+        ``scoring.Plan.build``); all are exact.
 
         Above ``driver_max_docs`` the query auto-dispatches to the
         distributed path (identical results — pytest rank-identity)."""
@@ -435,22 +463,11 @@ class IndexSearcher:
                 role_boosts=role_boosts, tool_boosts=tool_boosts,
                 term_boosts=term_boosts, expand_synonyms=expand_synonyms,
             ).toPandas()
-        terms = self.analyze_query(query, expand_synonyms)
-        views = self._views(terms, term_boosts=term_boosts)
-        if strategy == "auto":
-            total_postings = sum(v.df for v in views)
-            strategy = (
-                "blockmax"
-                if len(views) <= 8 and total_postings > 16 * codec_BLOCK
-                else "exhaustive"
-            )
-        nm = self._load_norms()
-        boost_of, max_boost = self._boost_arrays(role_boosts, tool_boosts)
-        kern = scoring.blockmax_topk if strategy == "blockmax" else scoring.exhaustive_topk
-        kwargs = dict(dl_base=0, boost_of=boost_of, mode=mode, deleted=self.tombstones)
-        if strategy == "blockmax":
-            kwargs["max_boost"] = max_boost
-        docs, scores = kern(views, nm["dl"], self.avgdl, k, **kwargs)
+        docs, scores = self._evaluate(
+            self.analyze_query(query, expand_synonyms),
+            k=k, mode=mode, strategy=strategy, term_boosts=term_boosts,
+            boost_of=self._boost_of(role_boosts, tool_boosts),
+        )
         return self._materialize(docs, scores)
 
     def count(self, query: str | list[str], mode: str = "or") -> int:
@@ -459,19 +476,8 @@ class IndexSearcher:
         at 10^9 docs)."""
         if self.n_docs > self.driver_max_docs:
             return self.count_df(query, mode)
-        terms = self.analyze_query(query)
-        views = [v for v in self._views(terms) if v.df > 0]
-        if not views:
-            return 0
-        if mode == "and" and len(views) < len(set(terms)):
-            return 0
-        sets = [v.decode_all()[0] for v in views]
-        acc = sets[0]
-        for s in sets[1:]:
-            acc = np.intersect1d(acc, s) if mode == "and" else np.union1d(acc, s)
-        if len(self.tombstones):
-            acc = acc[~np.isin(acc, self.tombstones)]
-        return int(len(acc))
+        plan, chunks = self._local_plan(self.analyze_query(query), mode=mode)
+        return scoring.count(plan, chunks, self.tombstones)
 
     def phrase_search(self, phrase: str, k: int = 10) -> pd.DataFrame:
         """match_phrase: adjacent in-order terms (unscored filter in the
@@ -479,31 +485,7 @@ class IndexSearcher:
         if self.n_docs > self.driver_max_docs:
             return self.phrase_search_df(phrase, k).toPandas()
         terms = tokenize_py(phrase) if isinstance(phrase, str) else list(phrase)
-        if not terms:
-            return self._materialize(np.zeros(0, np.int64), np.zeros(0, np.float64))
-        self._require_positions(terms)
-        views = self._views(terms)
-        if any(v.df == 0 for v in views):
-            return self._materialize(np.zeros(0, np.int64), np.zeros(0, np.float64))
-        sets = [v.decode_all()[0] for v in views]
-        inter = sets[0]
-        for s in sets[1:]:
-            inter = np.intersect1d(inter, s)
-        # adjacency check needs views in QUERY order (term i at position p+i),
-        # not the sorted order _views returns
-        by_term = {v.term: v for v in views}
-        ordered = [by_term[t] for t in terms]
-        hits = scoring.phrase_docs(ordered, inter) if len(terms) > 1 else inter
-        if len(self.tombstones):
-            hits = hits[~np.isin(hits, self.tombstones)]
-        nm = self._load_norms()
-        # score every AND-matching doc, keep the phrase hits, then top-k
-        docs, scores = scoring.exhaustive_topk(
-            views, nm["dl"], self.avgdl, k=max(1, len(inter)), mode="and"
-        )
-        keep = np.isin(docs, hits)
-        docs, scores = docs[keep][:k], scores[keep][:k]
-        return self._materialize(docs, scores)
+        return self._materialize(*self._evaluate(terms, k=k, phrase=terms))
 
     def _require_positions(self, terms: list[str]) -> None:
         """Multi-term phrase queries need positional postings; an index
@@ -591,7 +573,7 @@ class IndexSearcher:
         *,
         fuzzy: bool = True,
         role_boosts: dict[str, float] | None = None,
-        boosts: tuple[float, float, float] = (10.0, 5.0, 2.0),
+        boosts: tuple[float, float, float] = TIER_BOOSTS,
     ) -> pd.DataFrame:
         """Search-as-you-type: ``multi_match bool_prefix`` analogue
         (IndexerServiceIT.java:219-238) — all tokens but the last as terms
@@ -606,25 +588,39 @@ class IndexSearcher:
             return self.suggest_df(
                 query, k, fuzzy=fuzzy, role_boosts=role_boosts, boosts=boosts
             ).toPandas()
+        terms, term_boosts = self._bool_prefix_terms(query, fuzzy, boosts)
+        return self.search(
+            terms, k, role_boosts=role_boosts, term_boosts=term_boosts
+        )
+
+    def _bool_prefix_terms(
+        self,
+        query: str,
+        fuzzy: bool,
+        tier_boosts: tuple[float, float, float],
+        distributed: bool = False,
+    ) -> tuple[list[str], dict[str, float] | None]:
+        """The terms of a ``multi_match bool_prefix`` query over this
+        field (IndexerServiceIT.java:219-238): every token but the last
+        (fuzzy-AUTO-expanded when ``fuzzy``), then the last token's prefix
+        expansion (the token itself when nothing expands). On a
+        suggest-analyzed index the terms carry the tier boost of their
+        shingle width. ``distributed`` expands with the Spark filters
+        over term_stats instead of the resident dictionary."""
+        fz, pf = (
+            (self.expand_fuzzy_df, self.expand_prefix_df) if distributed
+            else (self.expand_fuzzy, self.expand_prefix)
+        )
         toks = tokenize_py(query)
-        if not toks:
-            return self._materialize(np.zeros(0, np.int64), np.zeros(0, np.float64))
         terms: list[str] = []
         for t in toks[:-1]:
-            terms.extend(self.expand_fuzzy(t) if fuzzy else [t])
-        expansions = self.expand_prefix(toks[-1]) or [toks[-1]]
-        terms.extend(expansions)
-        term_boosts = None
-        if self.manifest.get("analyzer") == "suggest":
-            b1, b2, b3 = boosts
-            term_boosts = {
-                t: (b1 if t.count(" ") == 0 else b2 if t.count(" ") == 1 else b3)
-                for t in terms
-            }
-        return self.search(
-            list(dict.fromkeys(terms)), k,
-            role_boosts=role_boosts, term_boosts=term_boosts,
-        )
+            terms.extend(fz(t) if fuzzy else [t])
+        if toks:
+            terms.extend(pf(toks[-1]) or [toks[-1]])
+        terms = list(dict.fromkeys(terms))
+        if self.manifest.get("analyzer") != "suggest":
+            return terms, None
+        return terms, {t: tier_boosts[min(t.count(" "), 2)] for t in terms}
 
     # ------------------------------------------------------ scan/point ops
     def doc_stats_df(self) -> DataFrame:
@@ -860,113 +856,24 @@ class IndexSearcher:
         terms occur adjacently in order (match_phrase); requires a
         with_positions index. The adjacency test is segment-local because a
         doc lives in exactly one segment."""
-        if phrase_terms:
-            self._require_positions(phrase_terms)
-        terms = self.analyze_query(query, expand_synonyms)
-        uniq_terms = sorted(set(terms))
-        dfs = self._global_dfs(uniq_terms)
-        empty = self.spark.createDataFrame(
-            [],
-            "doc_ord long, doc_id string, conv_id string, turn_idx int, "
-            "role string, score double",
+        plan = self._dist_plan(
+            query, expand_synonyms=expand_synonyms, phrase_terms=phrase_terms,
+            mode=mode, k=k, strategy=strategy, term_boosts=term_boosts,
         )
-        if not uniq_terms or (
-            (mode == "and" or phrase_terms) and any(dfs[t] == 0 for t in uniq_terms)
-        ):
-            return empty
-        postings = self._postings_df(uniq_terms)
-        doc_side = self._doc_side()
-        n_docs, avgdl = self.n_docs, self.avgdl
-        rb, tb = role_boosts or {}, tool_boosts or {}
-        qb = term_boosts or {}
-        max_boost = max([1.0] + list(rb.values()) + list(tb.values()))
-        tombstones = self.tombstones  # small; broadcast-join a DF if huge
-        if phrase_terms:
-            mode = "and"
-
-        def score_seg(pq: pd.DataFrame, dq: pd.DataFrame) -> pd.DataFrame:
-            if len(pq) == 0 or len(dq) == 0:
-                return pd.DataFrame({"doc_ord": [], "score": []})
-            r0 = dq.iloc[0]
-            base = int(r0["base"])
-            dl_of = np.frombuffer(r0["dl_bytes"], dtype="<i4").astype(np.int64)
-            boost_of = None
-            if rb or tb:
-                # boost dicts → O(#codes) lookup tables built from the
-                # row's SEGMENT-LOCAL dictionaries (code 0 = null → 1.0)
-                boost_of = (
-                    _boost_lut(r0["role_dict"], rb)[
-                        np.frombuffer(r0["role_bytes"], dtype="<i2")]
-                    * _boost_lut(r0["tool_dict"], tb)[
-                        np.frombuffer(r0["tool_bytes"], dtype="<i2")]
-                )
-            chunks = scoring.pandas_chunks(pq)
-            by_term = {
-                t: scoring.TermView(
-                    t, chunks.get(t, scoring.EMPTY_CHUNKS), dfs[t], n_docs,
-                    boost=qb.get(t, 1.0),
-                )
-                for t in uniq_terms
-                if dfs[t] > 0
-            }
-            views = list(by_term.values())
-            if phrase_terms:
-                # phrase filter first: AND-intersect, then adjacency
-                ordered = [by_term[t] for t in phrase_terms]
-                sets = [v.decode_all()[0] for v in ordered]
-                inter = sets[0]
-                for s in sets[1:]:
-                    inter = np.intersect1d(inter, s)
-                hits = (
-                    scoring.phrase_docs(ordered, inter)
-                    if len(phrase_terms) > 1
-                    else inter
-                )
-                if len(tombstones):
-                    hits = hits[~np.isin(hits, tombstones)]
-                if len(hits) == 0:
-                    return pd.DataFrame({"doc_ord": [], "score": []})
-                docs, scores = scoring.exhaustive_topk(
-                    views, dl_of, avgdl, k=max(1, len(inter)),
-                    dl_base=base, boost_of=boost_of, mode="and",
-                    deleted=tombstones,
-                )
-                keep = np.isin(docs, hits)
-                docs, scores = docs[keep][:k], scores[keep][:k]
-                return pd.DataFrame({"doc_ord": docs, "score": scores})
-            kern = (
-                scoring.blockmax_topk if strategy == "blockmax" else scoring.exhaustive_topk
-            )
-            kw = dict(dl_base=base, boost_of=boost_of, mode=mode, deleted=tombstones)
-            if strategy == "blockmax":
-                kw["max_boost"] = max_boost
-            docs, scores = kern(views, dl_of, avgdl, k, **kw)
-            return pd.DataFrame({"doc_ord": docs, "score": scores})
-
-        out_schema = T.StructType(
-            [
-                T.StructField("doc_ord", T.LongType()),
-                T.StructField("score", T.DoubleType()),
-            ]
-        )
-        local = (
-            postings.groupBy("seg")
-            .cogroup(doc_side.groupBy("seg"))
-            .applyInPandas(lambda key, pq, dq: score_seg(pq, dq), out_schema)
-        )
+        if plan.matches_nothing():
+            return self._enrich_topk([], {})
+        local = self._segment_scores(plan, role_boosts, tool_boosts)
         # The scored top-k is k rows — collect it, then attach the stored
         # fields with a point-read. A lazy join here would full-scan
         # doc_stats per query (at 10^9 docs: the whole stored-fields
         # table for k rows).
         top_rows = local.orderBy(F.desc("score"), F.asc("doc_ord")).limit(k).collect()
-        if not top_rows:
-            return empty
-        ords = [int(r["doc_ord"]) for r in top_rows]
-        scores = {int(r["doc_ord"]): float(r["score"]) for r in top_rows}
-        return self._enrich_topk(ords, scores, empty)
+        return self._enrich_topk(
+            [int(r["doc_ord"]) for r in top_rows],
+            {int(r["doc_ord"]): float(r["score"]) for r in top_rows},
+        )
 
-    def _enrich_topk(self, ords: list[int], scores: dict[int, float],
-                     empty: DataFrame) -> DataFrame:
+    def _enrich_topk(self, ords: list[int], scores: dict[int, float]) -> DataFrame:
         """Stored-fields point-read for k scored ordinals — the fetch
         phase after scoring. Below the shared plan-bloat threshold this
         is a DRIVER-side pyarrow read (doc_stats is written doc_ord-
@@ -978,6 +885,8 @@ class IndexSearcher:
         IN-literal."""
         from ..planlimits import IN_LITERAL_MAX
 
+        if not ords:
+            return self.spark.createDataFrame([], _HITS)
         if len(ords) <= IN_LITERAL_MAX:
             import pyarrow.compute as pc2
 
@@ -992,7 +901,7 @@ class IndexSearcher:
             return self.spark.createDataFrame(
                 pdf[["doc_ord", "doc_id", "conv_id", "turn_idx", "role",
                      "score"]],
-                schema=empty.schema,
+                schema=_HITS,
             )
         score_df = self.spark.createDataFrame(
             pd.DataFrame(
@@ -1014,101 +923,106 @@ class IndexSearcher:
         self,
         query: str | list[str],
         *,
+        mode: str = "or",
         term_boosts: dict[str, float] | None = None,
         expand_synonyms: bool = False,
+        phrase_terms: list[str] | None = None,
     ) -> DataFrame:
         """FULL matching-doc score vector (doc_ord, score) — no top-k cut.
-        The distributed building block for multi-field merges, where
-        per-field vectors must sum BEFORE any heap (a doc mid-rank in every
-        field can be top overall). Output size is bounded by the docs
-        matching the query terms, partitioned by segment."""
-        terms = self.analyze_query(query, expand_synonyms)
-        uniq_terms = sorted(set(terms))
-        dfs = self._global_dfs(uniq_terms)
-        if not uniq_terms or all(dfs[t] == 0 for t in uniq_terms):
-            return self.spark.createDataFrame([], "doc_ord long, score double")
-        postings = self._postings_df(uniq_terms)
-        doc_side = self._doc_side()  # extra role/tool cols are harmless
-        n_docs, avgdl = self.n_docs, self.avgdl
-        qb = term_boosts or {}
-        tombstones = self.tombstones
+        The distributed building block for multi-field merges and DSL
+        leaves, where per-field or per-clause vectors must combine BEFORE
+        any heap (a doc mid-rank in every field can be top overall).
+        ``mode`` and ``phrase_terms`` as in ``search_df``. Output size is
+        bounded by the docs matching the query terms, partitioned by
+        segment."""
+        plan = self._dist_plan(
+            query, expand_synonyms=expand_synonyms, phrase_terms=phrase_terms,
+            mode=mode, term_boosts=term_boosts,
+        )
+        if plan.matches_nothing():
+            return self.spark.createDataFrame([], _SCORES)
+        return self._segment_scores(plan)
 
-        def score_seg(pq: pd.DataFrame, dq: pd.DataFrame) -> pd.DataFrame:
+    def _dist_plan(
+        self,
+        query: str | list[str],
+        *,
+        expand_synonyms: bool = False,
+        phrase_terms: list[str] | None = None,
+        **plan_kw,
+    ) -> scoring.Plan:
+        """The distributed executor's plan: the query terms' dfs come from
+        the term dictionary (idf is a global statistic), not from any one
+        segment's chunks."""
+        if phrase_terms:
+            self._require_positions(phrase_terms)
+        terms = sorted(set(self.analyze_query(query, expand_synonyms)))
+        return scoring.Plan.build(
+            self._global_dfs(terms), self.n_docs, self.avgdl,
+            phrase=phrase_terms, **plan_kw,
+        )
+
+    def _segment_scores(
+        self,
+        plan: scoring.Plan,
+        role_boosts: dict[str, float] | None = None,
+        tool_boosts: dict[str, float] | None = None,
+    ) -> DataFrame:
+        """(doc_ord, score) rows of ``scoring.evaluate``, run once per
+        segment task: the plan terms' posting rows are cogrouped by
+        segment with the packed doc side, whose base ordinal, doc lengths
+        and role/tool codes each task unpacks."""
+        rb, tb = role_boosts or {}, tool_boosts or {}
+        tombstones = self.tombstones  # small; broadcast-join a DF if huge
+
+        def task(key, pq: pd.DataFrame, dq: pd.DataFrame) -> pd.DataFrame:
             if len(pq) == 0 or len(dq) == 0:
                 return pd.DataFrame({"doc_ord": [], "score": []})
             r0 = dq.iloc[0]
-            base = int(r0["base"])
-            dl_of = np.frombuffer(r0["dl_bytes"], dtype="<i4").astype(np.int64)
-            chunks = scoring.pandas_chunks(pq)
-            views = [
-                scoring.TermView(
-                    t, chunks.get(t, scoring.EMPTY_CHUNKS), dfs[t], n_docs,
-                    boost=qb.get(t, 1.0),
+            boost_of = None
+            if rb or tb:
+                # boost dicts → O(#codes) lookup tables built from the
+                # row's SEGMENT-LOCAL dictionaries (code 0 = null → 1.0)
+                boost_of = (
+                    _boost_lut(r0["role_dict"], rb)[
+                        np.frombuffer(r0["role_bytes"], dtype="<i2")]
+                    * _boost_lut(r0["tool_dict"], tb)[
+                        np.frombuffer(r0["tool_bytes"], dtype="<i2")]
                 )
-                for t in uniq_terms
-                if dfs[t] > 0
-            ]
-            docs, scores = scoring.exhaustive_topk(
-                views, dl_of, avgdl, k=len(dl_of), dl_base=base,
-                mode="or", deleted=tombstones,
+            docs, scores = scoring.evaluate(
+                plan, scoring.pandas_chunks(pq),
+                np.frombuffer(r0["dl_bytes"], dtype="<i4").astype(np.int64),
+                dl_base=int(r0["base"]), boost_of=boost_of, deleted=tombstones,
             )
             return pd.DataFrame({"doc_ord": docs, "score": scores})
 
-        out_schema = T.StructType(
-            [
-                T.StructField("doc_ord", T.LongType()),
-                T.StructField("score", T.DoubleType()),
-            ]
-        )
         return (
-            postings.groupBy("seg")
-            .cogroup(doc_side.groupBy("seg"))
-            .applyInPandas(lambda key, pq, dq: score_seg(pq, dq), out_schema)
+            self._postings_df(list(plan.terms)).groupBy("seg")
+            .cogroup(self._doc_side().groupBy("seg"))
+            .applyInPandas(task, _SCORES)
         )
 
     def count_df(self, query: str | list[str], mode: str = "or") -> int:
-        """Q7 count, distributed: per-segment set algebra over the pruned
-        posting chunks (each doc lives in exactly one segment, so segment
-        counts sum exactly). Single-term, tombstone-free counts short-cut
-        to the term dictionary row — no postings decoded at all."""
-        terms = self.analyze_query(query)
-        uniq_terms = sorted(set(terms))
-        if not uniq_terms:
+        """Q7 count, distributed: ``scoring.count`` per segment over the
+        pruned posting chunks (each doc lives in exactly one segment, so
+        segment counts sum exactly; a count needs no doc side).
+        Single-term, tombstone-free counts short-cut to the term
+        dictionary row — no postings decoded at all."""
+        plan = self._dist_plan(query, mode=mode)
+        if plan.matches_nothing():
             return 0
-        dfs = self._global_dfs(uniq_terms)
-        if mode == "and" and any(dfs[t] == 0 for t in uniq_terms):
-            return 0
-        if len(uniq_terms) == 1 and not len(self.tombstones):
-            return dfs[uniq_terms[0]]
+        if len(plan.terms) == 1 and not len(self.tombstones):
+            return plan.dfs[0]
         tombstones = self.tombstones
-        n_docs = self.n_docs
-
-        def count_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) == 0:
-                return pd.DataFrame({"n": []})
-            by_term = scoring.pandas_chunks(pdf)
-            sets = []
-            for t in uniq_terms:
-                chunks = by_term.get(t)
-                if chunks is None:
-                    if mode == "and":
-                        return pd.DataFrame({"n": [0]})
-                    continue
-                v = scoring.TermView(t, chunks, int(chunks.df_chunk.sum()), n_docs)
-                sets.append(v.decode_all()[0])
-            if not sets:
-                return pd.DataFrame({"n": [0]})
-            acc = sets[0]
-            for s in sets[1:]:
-                acc = np.intersect1d(acc, s) if mode == "and" else np.union1d(acc, s)
-            if len(tombstones):
-                acc = acc[~np.isin(acc, tombstones)]
-            return pd.DataFrame({"n": [len(acc)]})
-
         per_seg = (
-            self._postings_df(uniq_terms)
+            self._postings_df(list(plan.terms))
             .groupBy("seg")
-            .applyInPandas(lambda key, pdf: count_seg(pdf), "n long")
+            .applyInPandas(
+                lambda pdf: pd.DataFrame(
+                    {"n": [scoring.count(plan, scoring.pandas_chunks(pdf), tombstones)]}
+                ),
+                "n long",
+            )
         )
         row = per_seg.agg(F.sum("n").alias("total")).collect()[0]
         return int(row["total"] or 0)
@@ -1239,28 +1153,13 @@ class IndexSearcher:
         *,
         fuzzy: bool = True,
         role_boosts: dict[str, float] | None = None,
-        boosts: tuple[float, float, float] = (10.0, 5.0, 2.0),
+        boosts: tuple[float, float, float] = TIER_BOOSTS,
     ) -> DataFrame:
         """Q6 search-as-you-type, distributed end to end: expansions come
         from Spark filters on term_stats (tiny collect: <= max_expansions
         terms), scoring from the segment cogroup — no O(corpus|dictionary)
         driver state."""
-        toks = tokenize_py(query)
-        if not toks:
-            return self.search_df([], k)
-        terms: list[str] = []
-        for t in toks[:-1]:
-            terms.extend(self.expand_fuzzy_df(t) if fuzzy else [t])
-        expansions = self.expand_prefix_df(toks[-1]) or [toks[-1]]
-        terms.extend(expansions)
-        term_boosts = None
-        if self.manifest.get("analyzer") == "suggest":
-            b1, b2, b3 = boosts
-            term_boosts = {
-                t: (b1 if t.count(" ") == 0 else b2 if t.count(" ") == 1 else b3)
-                for t in terms
-            }
+        terms, term_boosts = self._bool_prefix_terms(query, fuzzy, boosts, True)
         return self.search_df(
-            list(dict.fromkeys(terms)), k,
-            role_boosts=role_boosts, term_boosts=term_boosts,
+            terms, k, role_boosts=role_boosts, term_boosts=term_boosts
         )

@@ -27,18 +27,7 @@ import pandas as pd
 
 from .. import bm25
 from ..analysis import tokenize_py
-from .engine import IndexSearcher
-
-# the reference's sub-field boosts: base^10, _2gram^5, _3gram^2
-TIER_BOOSTS = (10.0, 5.0, 2.0)
-
-
-def _tier_boosts(terms: list[str], boosts=TIER_BOOSTS) -> dict[str, float]:
-    b1, b2, b3 = boosts
-    return {
-        t: (b1 if t.count(" ") == 0 else b2 if t.count(" ") == 1 else b3)
-        for t in terms
-    }
+from .engine import TIER_BOOSTS, IndexSearcher
 
 
 class MultiFieldSearcher:
@@ -63,14 +52,15 @@ class MultiFieldSearcher:
     ) -> pd.DataFrame:
         """Exact merge: every (field, terms) spec contributes its FULL
         matching-doc score vector (field boost × term boost × BM25), summed
-        per doc before the single global heap."""
+        per doc before the single global heap; tombstoned docs never enter
+        the heap."""
         base = self.fields[0][0]
         tid = {t: i for i, t in enumerate(sorted(set(all_terms or [])))} or None
         doc_parts, contrib_parts, pair_parts = [], [], []
         for searcher, fboost, terms, term_boosts in specs:
-            views = searcher._views(terms, term_boosts=term_boosts)
+            plan, chunks = searcher._local_plan(terms, term_boosts=term_boosts)
             nm = searcher._load_norms()
-            for v in views:  # term-sorted — fixed float summation order
+            for v in plan.views(chunks):  # term-sorted — fixed float summation order
                 if v.df == 0:
                     continue
                 docs, tfs = v.decode_all()
@@ -96,6 +86,10 @@ class MultiFieldSearcher:
                 np.searchsorted(uniq, pairs // len(tid)), minlength=len(uniq)
             )
             keep = cnt == len(tid)
+            uniq, scores = uniq[keep], scores[keep]
+        dead = [s.tombstones for s, _ in self.fields if len(s.tombstones)]
+        if dead:  # a doc deleted from any field index is deleted
+            keep = ~np.isin(uniq, np.concatenate(dead))
             uniq, scores = uniq[keep], scores[keep]
         top_docs, top_scores = bm25.topk_desc(scores, uniq, k)
         return base._materialize(top_docs, top_scores)
@@ -126,23 +120,10 @@ class MultiFieldSearcher:
         suggest-analyzed fields weighted base^10/_2gram^5/_3gram^2 by the
         matched shingle's width. Exact global merge (full per-field score
         vectors, one heap)."""
-        toks = tokenize_py(query)
-        base = self.fields[0][0]
-        if not toks:
-            return base._materialize(np.zeros(0, np.int64), np.zeros(0, np.float64))
-        specs = []
-        for searcher, fboost in self.fields:
-            terms: list[str] = []
-            for t in toks[:-1]:
-                terms.extend(searcher.expand_fuzzy(t) if fuzzy else [t])
-            terms.extend(searcher.expand_prefix(toks[-1]) or [toks[-1]])
-            terms = list(dict.fromkeys(terms))
-            tb = (
-                _tier_boosts(terms, tier_boosts)
-                if searcher.manifest.get("analyzer") == "suggest"
-                else None
-            )
-            specs.append((searcher, fboost, terms, tb))
+        specs = [
+            (searcher, fboost, *searcher._bool_prefix_terms(query, fuzzy, tier_boosts))
+            for searcher, fboost in self.fields
+        ]
         return self._sum_fields(specs, k)
 
     def suggest(self, query: str, k: int = 10, *, fuzzy: bool = True) -> pd.DataFrame:
@@ -178,16 +159,7 @@ class MultiFieldSearcher:
             return base.search_df([], k)
         parts = []
         for searcher, fboost in self.fields:
-            terms: list[str] = []
-            for t in toks[:-1]:
-                terms.extend(searcher.expand_fuzzy_df(t) if fuzzy else [t])
-            terms.extend(searcher.expand_prefix_df(toks[-1]) or [toks[-1]])
-            terms = list(dict.fromkeys(terms))
-            tb = (
-                _tier_boosts(terms, tier_boosts)
-                if searcher.manifest.get("analyzer") == "suggest"
-                else None
-            )
+            terms, tb = searcher._bool_prefix_terms(query, fuzzy, tier_boosts, True)
             parts.append(
                 searcher.scores_df(terms, term_boosts=tb)
                 .withColumn("score", F.col("score") * fboost)

@@ -36,9 +36,19 @@ Postings reach the kernels as ``TermChunks``: one term's chunk rows as
 flat numpy arrays with per-chunk offsets, split from an Arrow table
 (``term_chunks``) — the driver's parquet fetch or one Spark task's rows.
 No pandas object sits between the fetch and the top-k.
+
+Every query operator runs through one kernel: ``evaluate`` (top-k, or
+the full matching-doc vector, with or without a phrase filter) and
+``count``, both driven by a ``Plan``. The driver calls them once over
+the whole corpus; the distributed path calls them once per segment task
+— the shard-local evaluation of Lucene's
+``Weight.scorer(LeafReaderContext)``.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -459,3 +469,143 @@ def phrase_docs(views: list[TermView], mode_docs: np.ndarray) -> np.ndarray:
         if ok and len(cand):
             hits.append(int(d))
     return np.array(hits, dtype=np.int64)
+
+
+def _no_docs() -> tuple[np.ndarray, np.ndarray]:
+    return np.zeros(0, np.int64), np.zeros(0, np.float64)
+
+
+@dataclass(frozen=True)
+class Plan:
+    """One query, as every executor evaluates it. ``terms`` are sorted and
+    unique (the fixed float64 summation order); ``dfs`` are their
+    corpus-wide document frequencies. ``k`` None asks for the full
+    matching-doc vector, docs ascending. ``phrase`` holds the phrase terms
+    in query order and forces ``mode`` "and"; ``boosts`` are the term
+    boosts, aligned with ``terms``."""
+
+    terms: tuple[str, ...]
+    dfs: tuple[int, ...]
+    n_docs: int
+    avgdl: float
+    mode: str
+    k: int | None
+    strategy: str
+    phrase: tuple[str, ...] | None
+    boosts: tuple[float, ...]
+
+    @classmethod
+    def build(
+        cls,
+        dfs: dict[str, int],
+        n_docs: int,
+        avgdl: float,
+        *,
+        mode: str = "or",
+        k: int | None = None,
+        strategy: str = "exhaustive",
+        phrase: list[str] | None = None,
+        term_boosts: dict[str, float] | None = None,
+    ) -> "Plan":
+        """The plan over the terms of ``dfs`` (term → df).
+        ``strategy="auto"`` picks block-max pruning for few-term queries
+        over long postings (where skipping pays) and exhaustive scoring for
+        many-term expansions or short postings (where the sweep's
+        bookkeeping costs more than scoring everything) — the same
+        query-shape dispatch Lucene applies to WAND. Both are exact."""
+        terms = tuple(sorted(dfs))
+        counts = tuple(int(dfs[t]) for t in terms)
+        if strategy == "auto":
+            many = sum(counts) > 16 * codec.BLOCK_SIZE
+            strategy = "blockmax" if len(terms) <= 8 and many else "exhaustive"
+        tb = term_boosts or {}
+        return cls(
+            terms, counts, int(n_docs), float(avgdl),
+            mode="and" if phrase else mode,
+            k=k,
+            strategy=strategy,
+            phrase=tuple(phrase) if phrase else None,
+            boosts=tuple(float(tb.get(t, 1.0)) for t in terms),
+        )
+
+    def matches_nothing(self) -> bool:
+        """True when no doc can match: no terms, no term with postings, or
+        a conjunction with a term that has none."""
+        if self.mode == "and":
+            return not self.terms or 0 in self.dfs
+        return not any(self.dfs)
+
+    def views(self, chunks: dict[str, TermChunks]) -> list[TermView]:
+        """One ``TermView`` per plan term over the given chunks (a term
+        with no chunks there gets an empty view), in term order."""
+        return [
+            TermView(t, chunks.get(t, EMPTY_CHUNKS), df, self.n_docs, boost=b)
+            for t, df, b in zip(self.terms, self.dfs, self.boosts)
+        ]
+
+
+def evaluate(
+    plan: Plan,
+    chunks: dict[str, TermChunks],
+    dl_of: np.ndarray,
+    *,
+    dl_base: int = 0,
+    boost_of: np.ndarray | None = None,
+    deleted: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The query kernel over one ordinal range: ``chunks`` are its posting
+    chunks per term, ``dl_of[doc_ord - dl_base]`` its doc lengths and
+    ``boost_of`` (same indexing) its role/tool boosts. Tombstoned
+    ``deleted`` docs never match. Returns (doc_ords, scores): the top
+    ``plan.k`` in (score desc, doc_ord asc) order, or every matching doc
+    ascending when ``plan.k`` is None.
+
+    A phrase plan first narrows the conjunction to the docs where the
+    phrase terms occur adjacently in order, then scores those hits. The
+    block-max ceiling takes the largest boost of ``boost_of``, which
+    bounds every doc's role × tool product."""
+    if plan.matches_nothing():
+        return _no_docs()
+    views = plan.views(chunks)
+    if plan.phrase is None and plan.k is not None:
+        kw = dict(dl_base=dl_base, boost_of=boost_of, mode=plan.mode, deleted=deleted)
+        if plan.strategy == "blockmax":
+            if boost_of is not None and len(boost_of):
+                kw["max_boost"] = float(boost_of.max())
+            return blockmax_topk(views, dl_of, plan.avgdl, plan.k, **kw)
+        return exhaustive_topk(views, dl_of, plan.avgdl, plan.k, **kw)
+    views = [v for v in views if v.df > 0]
+    hits = None
+    if plan.phrase is not None:
+        by_term = {v.term: v for v in views}
+        ordered = [by_term[t] for t in plan.phrase]
+        inter = reduce(np.intersect1d, [v.decode_all()[0] for v in ordered])
+        hits = phrase_docs(ordered, inter) if len(ordered) > 1 else inter
+        if deleted is not None and len(deleted):
+            hits = hits[~np.isin(hits, deleted)]
+        if len(hits) == 0:
+            return _no_docs()
+    docs, scores = _score_gathered(
+        views, [v.decode_all() for v in views], dl_of, dl_base, plan.avgdl,
+        boost_of, plan.mode, deleted,
+    )
+    if hits is not None:
+        keep = np.isin(docs, hits)
+        docs, scores = docs[keep], scores[keep]
+        if plan.k is not None:
+            docs, scores = bm25.topk_desc(scores, docs, plan.k)
+    return docs, scores
+
+
+def count(
+    plan: Plan, chunks: dict[str, TermChunks], deleted: np.ndarray | None = None
+) -> int:
+    """Docs matching the plan's terms (``mode`` "or": any, "and": all)
+    among ``chunks``, tombstoned ``deleted`` docs excluded."""
+    sets = [v.decode_all()[0] for v in plan.views(chunks) if len(v.chunks)]
+    if not sets or (plan.mode == "and" and len(sets) < len(plan.terms)):
+        return 0
+    acc = reduce(np.intersect1d if plan.mode == "and" else np.union1d, sets)
+    if deleted is not None and len(deleted):
+        acc = acc[~np.isin(acc, deleted)]
+    return int(len(acc))

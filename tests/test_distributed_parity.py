@@ -13,8 +13,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from es_indexer_spark.corpus import synth_transcripts
+from es_indexer_spark.corpus import assign_doc_ordinals, synth_transcripts, with_doc_ids
 from es_indexer_spark.index.build import build_index
+from es_indexer_spark.oracle import oracle_from_spark
 from es_indexer_spark.query.engine import IndexSearcher
 
 N_CONVS, TURNS, SEED = 100, 8, 11
@@ -71,6 +72,30 @@ def test_role_and_term_boosts_parity_blockmax(searcher):
     dst = searcher.search_df(["the", "baco"], k=10, role_boosts=rb,
                              term_boosts=tb).toPandas()
     _assert_same(drv, dst)
+
+
+def test_blockmax_bounds_role_times_tool_boost(spark, tmp_path):
+    """A doc's boost is its role boost times its tool boost, so the
+    block-max ceiling of every executor must bound the product. Needs
+    blocks long enough to be skipped: one segment of 2,000 turns."""
+    idx = str(tmp_path / "idx")
+    build_index(spark, synth_transcripts(spark, 250, 8, seed=7), idx,
+                n_buckets=8, n_segments=1)
+    oracle = oracle_from_spark(
+        assign_doc_ordinals(with_doc_ids(synth_transcripts(spark, 250, 8, seed=7))))
+    s = IndexSearcher(spark, idx)
+    rb, tb = {"tool": 20.0}, {"bash": 20.0}
+    try:
+        for terms in (["baba", "coba"], ["the", "baco"]):
+            want = oracle.topk(terms, k=10, role_boosts=rb, tool_boosts=tb)
+            for got in (
+                s.search(terms, k=10, role_boosts=rb, tool_boosts=tb, strategy="blockmax"),
+                s.search_df(terms, k=10, role_boosts=rb, tool_boosts=tb).toPandas(),
+            ):
+                assert got["doc_id"].tolist() == want["doc_id"].tolist(), terms
+                np.testing.assert_allclose(got["score"], want["score"], rtol=1e-12)
+    finally:
+        s.close()
 
 
 def test_phrase_parity(searcher):

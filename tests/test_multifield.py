@@ -5,12 +5,14 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from es_indexer_spark.corpus import assign_doc_ordinals, synth_transcripts, with_doc_ids
 from es_indexer_spark.index.build import build_index
 from es_indexer_spark.oracle import oracle_from_spark
 from es_indexer_spark.query.engine import IndexSearcher
 from es_indexer_spark.query.multifield import MultiFieldSearcher
+from es_indexer_spark.streaming.incremental import delete_where
 
 
 @pytest.fixture(scope="module")
@@ -121,6 +123,31 @@ def test_bool_prefix_distributed_parity(multi):
     np.testing.assert_allclose(
         drv["score"].to_numpy(), dst["score"].to_numpy(), rtol=1e-12
     )
+
+
+def test_deleted_docs_leave_multifield_results(spark, tmp_path):
+    """Docs deleted from the field indexes never enter the driver merge's
+    heap; the survivors keep their ranks and scores."""
+    df = synth_transcripts(spark, n_convs=50, turns_per_conv=4, seed=31)
+    dirs = [str(tmp_path / "text"), str(tmp_path / "sugg")]
+    build_index(spark, df, dirs[0], n_buckets=8, n_segments=2)
+    build_index(spark, df, dirs[1], n_buckets=8, n_segments=2, analyzer="suggest")
+
+    def searcher():
+        return MultiFieldSearcher(
+            [(IndexSearcher(spark, dirs[0]), 10.0), (IndexSearcher(spark, dirs[1]), 2.0)])
+
+    terms = ["baco", "cora"]
+    before = searcher().search(terms, k=1000)
+    gone = before["conv_id"].iloc[0]
+    for d in dirs:
+        assert delete_where(spark, d, F.col("conv_id") == gone) > 0
+    after = searcher()
+    got = after.search(terms, k=10)
+    want = before[before["conv_id"] != gone].head(10)
+    assert got["doc_id"].tolist() == want["doc_id"].tolist()
+    np.testing.assert_array_equal(got["score"].to_numpy(), want["score"].to_numpy())
+    assert gone not in set(after.bool_prefix("baco co", k=1000)["conv_id"])
 
 
 def test_mismatched_corpora_rejected(multi, spark, tmp_path):

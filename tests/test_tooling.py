@@ -1,7 +1,7 @@
 """Scripts and examples stay runnable: each one compiles, every
 ``es_indexer_spark`` module or name it imports exists, and
 ``scripts/scaling_run.py`` parses its arguments; the Spark daemon module
-imports without writing to stdout."""
+imports without writing to stdout; the query kernel has one home."""
 
 from __future__ import annotations
 
@@ -63,3 +63,21 @@ def test_spark_daemon_module_imports_silently():
     )
     assert out.returncode == 0, out.stderr
     assert out.stdout == ""
+
+
+def test_one_query_kernel():
+    """Grep guard: the scoring kernels and ``TermView`` construction live
+    only in ``query/scoring.py``, which both executors call, and the
+    package builds its segment cogroup in one place — a second copy of an
+    operator's scoring logic breaks this."""
+    pkg = REPO / "es_indexer_spark"
+    kernel = pkg / "query" / "scoring.py"
+    names = ("phrase_docs", "_score_gathered", "exhaustive_topk", "blockmax_topk", "TermView(")
+    cogroups = 0
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text()
+        cogroups += src.count(".cogroup(")
+        if path != kernel:
+            found = [n for n in names if n in src]
+            assert not found, (str(path.relative_to(REPO)), found)
+    assert cogroups == 1
