@@ -39,6 +39,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # make the package importable when the driver imports this file from /root/repo
 import sys
@@ -83,6 +84,7 @@ def _index_for(spark: SparkSession, sf_dir: str) -> "object":
         build_index(spark, tx, idx_dir, n_buckets=16, n_segments=4)
         _INDEX_CACHE[sf_dir] = idx_dir
         _SEARCHER_CACHE.pop(sf_dir, None)
+        _SEARCHER_CACHE.pop(f"scan:{sf_dir}", None)
     return _searcher_for(spark, sf_dir, idx_dir)
 
 
@@ -223,9 +225,10 @@ where len(t) >= 2 and list_contains(
 
 # ---- dictionary-expansion entries ----------------------------------------
 #
-# The Spark-side halves of Q6 suggest that ARE SQL-expressible: prefix
-# expansion (StringStartsWith pushed into the term_stats scan) and
-# fuzzy-AUTO expansion (length band + levenshtein, both JVM-side).
+# The Q6 suggest expansions, read the way a searcher above
+# ``driver_max_docs`` reads them: a pyarrow scan of term_stats pruned to
+# the prefix's term range and length partitions (prefix) or the length
+# band (fuzzy-AUTO; Python edit distance decides), with no Spark job.
 # Entries return (term, df) for the expansion set, so the hash checks
 # selection, document frequencies, and the df-desc/term-asc cutoff
 # ordering against DuckDB's identical levenshtein/like semantics. Only
@@ -233,26 +236,33 @@ where len(t) >= 2 and list_contains(
 
 _PREFIX_Q = "s"
 _FUZZY_Q = "scann"  # not in the vocabulary; AUTO(5 chars) = 1 edit
+_EXPANSION = T.StructType(
+    [T.StructField("term", T.StringType()), T.StructField("df", T.LongType())]
+)
+
+
+def _dictionary_scan_for(spark: SparkSession, sf_dir: str) -> "object":
+    """A searcher over ``_index_for``'s index that reads the term
+    dictionary by the pruned term_stats scan, not the resident arrays."""
+    idx_dir = _index_for(spark, sf_dir).index_dir
+    s = _searcher_for(spark, f"scan:{sf_dir}", idx_dir)
+    s.driver_max_docs = 0
+    return s
 
 
 def _expansion_df(spark, s, terms: list[str]) -> DataFrame:
-    if not terms:  # explicit schema: inference can't see an empty frame
-        return spark.createDataFrame([], "term string, df long")
-    return (
-        s._term_stats_sdf()
-        .filter(F.col("term").isin(terms))
-        .select("term", F.col("df").cast("long").alias("df"))
-    )
+    dfs = s._global_dfs(terms)
+    return spark.createDataFrame([(t, dfs[t]) for t in terms], _EXPANSION)
 
 
 def _ft_prefix_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _index_for(spark, sf_dir)
-    return _expansion_df(spark, s, s.expand_prefix_df(_PREFIX_Q, max_expansions=50))
+    s = _dictionary_scan_for(spark, sf_dir)
+    return _expansion_df(spark, s, s.expand_prefix(_PREFIX_Q, max_expansions=50))
 
 
 def _ft_fuzzy_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _index_for(spark, sf_dir)
-    return _expansion_df(spark, s, s.expand_fuzzy_df(_FUZZY_Q, max_expansions=50))
+    s = _dictionary_scan_for(spark, sf_dir)
+    return _expansion_df(spark, s, s.expand_fuzzy(_FUZZY_Q, max_expansions=50))
 
 
 _WILDCARD_Q = "s?a*"  # {scan, small, spark} in the testdata vocabulary
@@ -260,15 +270,15 @@ _REGEXP_Q = "(ba|da)[a-z]+"  # {batch, data}
 
 
 def _ft_wildcard_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ES wildcard-query term expansion (round 5, query/dsl.py leaf):
-    literal-prefix-pruned term_stats scan + anchored JVM rlike."""
-    s = _index_for(spark, sf_dir)
-    return _expansion_df(spark, s, s.expand_wildcard_df(_WILDCARD_Q, max_expansions=50))
+    """ES wildcard-query term expansion (query/dsl.py leaf): the literal
+    prefix's term_stats scan + an anchored Python ``re`` full match."""
+    s = _dictionary_scan_for(spark, sf_dir)
+    return _expansion_df(spark, s, s.expand_wildcard(_WILDCARD_Q, max_expansions=50))
 
 
 def _ft_regexp_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _index_for(spark, sf_dir)
-    return _expansion_df(spark, s, s.expand_regexp_df(_REGEXP_Q, max_expansions=50))
+    s = _dictionary_scan_for(spark, sf_dir)
+    return _expansion_df(spark, s, s.expand_regexp(_REGEXP_Q, max_expansions=50))
 
 
 def _ft_dsl_wildcard_hits(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -46,7 +46,8 @@ Documented deviations from Elasticsearch (each asserted in
 
 from __future__ import annotations
 
-from functools import reduce
+import re
+from functools import partialmethod, reduce
 
 import numpy as np
 import pandas as pd
@@ -55,7 +56,7 @@ from pyspark.sql import functions as F
 
 from .. import bm25
 from ..analysis import tokenize_py
-from .engine import TIER_BOOSTS, IndexSearcher
+from .engine import _SCORES, TIER_BOOSTS, IndexSearcher
 
 # stored-field (metadata) leaves evaluate as predicates, never postings
 _META_FIELDS = ("doc_id", "conv_id", "turn_idx", "role", "tool", "ts")
@@ -65,6 +66,32 @@ _RANGE_OPS = {"gte": "__ge__", "gt": "__gt__", "lte": "__le__", "lt": "__lt__"}
 
 class EsDslError(ValueError):
     """Malformed or unsupported query body."""
+
+
+def _pattern_regex(kind: str, pattern: str) -> str:
+    """The regex source of a ``wildcard`` or ``regexp`` leaf, compiled
+    with Python ``re`` first, so an invalid pattern raises EsDslError on
+    both executors before any expansion or Spark plan."""
+    regex = IndexSearcher._wildcard_regex(pattern) if kind == "wildcard" else pattern
+    try:
+        re.compile(regex)
+    except re.error as e:
+        raise EsDslError(f"{kind}: invalid pattern {pattern!r}: {e}") from None
+    return regex
+
+
+_PATTERN_LEAVES = ("wildcard", "regexp")
+_EXPANSION_LEAVES = ("prefix", "fuzzy", *_PATTERN_LEAVES)
+
+
+def _expansion_leaf(kind: str, body: dict) -> tuple[str, str, float]:
+    """(field, value, boost) of a prefix / fuzzy / wildcard / regexp leaf;
+    a wildcard or regexp pattern must compile (``_pattern_regex``)."""
+    field, b = _field_and_body(body, kind)
+    value = str(b.get("value", b.get(kind, "")))
+    if kind in _PATTERN_LEAVES:
+        _pattern_regex(kind, value)
+    return field, value, float(b.get("boost", 1.0))
 
 
 Vec = tuple[np.ndarray, np.ndarray]  # (doc_ord asc, score aligned)
@@ -111,7 +138,7 @@ def _field_and_body(q: dict, leaf: str) -> tuple[str, dict]:
         raise EsDslError(f"{leaf} must name exactly one field: {q}")
     field, body = next(iter(q.items()))
     if not isinstance(body, dict):
-        key = {"fuzzy": "value", "prefix": "value", "term": "value"}.get(leaf, "query")
+        key = "value" if leaf in ("term", *_EXPANSION_LEAVES) else "query"
         body = {key: body}
     return field, body
 
@@ -330,18 +357,6 @@ class DslSearcher:
         boost = float(b.get("boost", 1.0))
         return (docs, sc * boost) if scored else (docs, np.zeros(len(docs)))
 
-    def _q_prefix(self, body, scored) -> Vec:
-        field, b = _field_and_body(body, "prefix")
-        fs = self._field_searcher(field)
-        docs, sc = fs._evaluate(fs.expand_prefix(str(b["value"])))
-        return (docs, sc * float(b.get("boost", 1.0))) if scored else (docs, np.zeros(len(docs)))
-
-    def _q_fuzzy(self, body, scored) -> Vec:
-        field, b = _field_and_body(body, "fuzzy")
-        fs = self._field_searcher(field)
-        docs, sc = fs._evaluate(fs.expand_fuzzy(str(b["value"])))
-        return (docs, sc * float(b.get("boost", 1.0))) if scored else (docs, np.zeros(len(docs)))
-
     def _q_match_phrase_prefix(self, body, scored) -> Vec:
         """ES match_phrase_prefix: the last position matches any dictionary
         term with that prefix (capped expansion), earlier positions are the
@@ -369,48 +384,30 @@ class DslSearcher:
         docs, sc = docs[keep], sc[keep]
         return (docs, sc * boost) if scored else (docs, np.zeros(len(docs)))
 
-    def _meta_pattern_vec(self, field: str, regex: str, boost: float, scored: bool) -> Vec:
-        """Anchored pattern predicate on a stored/metadata field (the ES
-        wildcard/regexp-on-keyword case): regex over the doc_ord-indexed
-        column, constant score (ES scores these 1.0 x boost)."""
-        import re as _re
-
-        rx = _re.compile(regex)
-        arr = self._meta_array(field)
-        mask = np.array(
-            [v is not None and rx.fullmatch(str(v)) is not None for v in arr],
-            dtype=bool,
-        )
-        return self._mask_to_vec(mask, boost if scored else 0.0)
-
-    def _q_wildcard(self, body, scored) -> Vec:
-        """ES wildcard query. On the text field: dictionary expansion
-        (literal-prefix-pruned) then the usual scored OR over expansions —
-        the scoring_boolean rewrite, consistent with this DSL's prefix and
-        fuzzy leaves (ES's default rewrite is constant_score; the scored
-        form is a superset and rank-stable under it). On metadata fields:
-        anchored pattern predicate, constant score (exact ES behaviour)."""
-        field, b = _field_and_body(body, "wildcard")
-        pattern = str(b.get("value", b.get("wildcard", "")))
-        boost = float(b.get("boost", 1.0))
-        if field in _META_FIELDS:
-            return self._meta_pattern_vec(
-                field, IndexSearcher._wildcard_regex(pattern), boost, scored)
+    def _expansion_vec(self, kind: str, body, scored) -> Vec:
+        """prefix / fuzzy / wildcard / regexp: the field's dictionary
+        expansion, scored as a BM25 OR — the scoring_boolean rewrite (ES's
+        default rewrite is constant_score; the scored form is a superset
+        and rank-stable under it). A wildcard or regexp on a metadata
+        field is an anchored pattern predicate, constant score (exact ES
+        behaviour)."""
+        field, value, boost = _expansion_leaf(kind, body)
+        if kind in _PATTERN_LEAVES and field in _META_FIELDS:
+            rx = re.compile(_pattern_regex(kind, value))
+            mask = np.array(
+                [v is not None and rx.fullmatch(str(v)) is not None
+                 for v in self._meta_array(field)],
+                dtype=bool,
+            )
+            return self._mask_to_vec(mask, boost if scored else 0.0)
         fs = self._field_searcher(field)
-        docs, sc = fs._evaluate(fs.expand_wildcard(pattern))
+        docs, sc = fs._evaluate(getattr(fs, f"expand_{kind}")(value))
         return (docs, sc * boost) if scored else (docs, np.zeros(len(docs)))
 
-    def _q_regexp(self, body, scored) -> Vec:
-        """ES regexp query — same shape as wildcard (see dialect note on
-        IndexSearcher.expand_regexp)."""
-        field, b = _field_and_body(body, "regexp")
-        pattern = str(b.get("value", ""))
-        boost = float(b.get("boost", 1.0))
-        if field in _META_FIELDS:
-            return self._meta_pattern_vec(field, pattern, boost, scored)
-        fs = self._field_searcher(field)
-        docs, sc = fs._evaluate(fs.expand_regexp(pattern))
-        return (docs, sc * boost) if scored else (docs, np.zeros(len(docs)))
+    _q_prefix = partialmethod(_expansion_vec, "prefix")
+    _q_fuzzy = partialmethod(_expansion_vec, "fuzzy")
+    _q_wildcard = partialmethod(_expansion_vec, "wildcard")
+    _q_regexp = partialmethod(_expansion_vec, "regexp")
 
     def _q_multi_match(self, body, scored) -> Vec:
         specs = self._mm_specs(body)
@@ -762,16 +759,16 @@ class DslSearcher:
             fs = self._field_searcher(field)
             terms = tokenize_py(b["query"])
             return self._scores_or_zero(fs.scores_df(terms, phrase_terms=terms), scored)
-        if kind == "prefix":
-            field, b = _field_and_body(body, "prefix")
+        if kind in _EXPANSION_LEAVES:
+            field, value, boost = _expansion_leaf(kind, body)
+            if kind in _PATTERN_LEAVES and field in _META_FIELDS:
+                cond = F.col(field).rlike(f"^(?:{_pattern_regex(kind, value)})$")
+                return self._meta_vec_df(cond, scored, boost=boost)
             fs = self._field_searcher(field)
-            return self._scores_or_zero(
-                fs.scores_df(fs.expand_prefix_df(str(b["value"]))), scored)
-        if kind == "fuzzy":
-            field, b = _field_and_body(body, "fuzzy")
-            fs = self._field_searcher(field)
-            return self._scores_or_zero(
-                fs.scores_df(fs.expand_fuzzy_df(str(b["value"]))), scored)
+            df = fs.scores_df(getattr(fs, f"expand_{kind}")(value))
+            if scored and boost != 1.0:
+                df = df.select("doc_ord", (F.col("score") * boost).alias("score"))
+            return self._scores_or_zero(df, scored)
         if kind == "dis_max":
             clauses = body.get("queries")
             if not isinstance(clauses, list) or not clauses:
@@ -802,10 +799,10 @@ class DslSearcher:
             field, b = _field_and_body(body, kind)
             fs = self._field_searcher(field)
             toks = tokenize_py(b["query"])
-            exps = (fs.expand_prefix_df(toks[-1], int(b.get("max_expansions", 50)))
+            exps = (fs.expand_prefix(toks[-1], int(b.get("max_expansions", 50)))
                     if toks else [])
             if not exps:
-                return self.s.spark.createDataFrame([], "doc_ord long, score double")
+                return self.s.spark.createDataFrame([], _SCORES)
             head = toks[:-1]
             if not head:  # single-position phrase == prefix OR-group
                 return self._scores_or_zero(fs.scores_df(exps), scored)
@@ -819,25 +816,6 @@ class DslSearcher:
             if scored and boost != 1.0:
                 df = df.select("doc_ord", (F.col("score") * boost).alias("score"))
             return self._scores_or_zero(df, scored)
-        if kind in ("wildcard", "regexp"):
-            field, b = _field_and_body(body, kind)
-            pattern = str(b.get("value", b.get(kind, "")))
-            boost = float(b.get("boost", 1.0))
-            regex = (IndexSearcher._wildcard_regex(pattern)
-                     if kind == "wildcard" else pattern)
-            if field in _META_FIELDS:
-                cond = F.col(field).rlike(f"^(?:{regex})$")
-                df = self._meta_vec_df(cond, scored)
-                if scored and boost != 1.0:
-                    df = df.select("doc_ord", (F.col("score") * boost).alias("score"))
-                return df
-            fs = self._field_searcher(field)
-            exps = (fs.expand_wildcard_df(pattern) if kind == "wildcard"
-                    else fs.expand_regexp_df(pattern))
-            df = fs.scores_df(exps)
-            if scored and boost != 1.0:
-                df = df.select("doc_ord", (F.col("score") * boost).alias("score"))
-            return self._scores_or_zero(df, scored)
         if kind == "multi_match":
             specs = self._mm_specs(body)
             mm_type = body.get("type", "best_fields")
@@ -847,7 +825,7 @@ class DslSearcher:
                 for fs, fb, terms, tb in specs
             ]
             if not parts:
-                return self.s.spark.createDataFrame([], "doc_ord long, score double")
+                return self.s.spark.createDataFrame([], _SCORES)
             u = reduce(lambda a, b: a.unionByName(b), parts)
             if mm_type == "best_fields":
                 tie = float(body.get("tie_breaker", 0.0))

@@ -36,16 +36,29 @@ and the term boosts — and ``scoring.evaluate`` / ``scoring.count`` run it:
   local top-k or its full score vector; a global sort of the tiny union
   gathers the final top-k — Lucene's shard fan-out/merge mapped 1:1 onto
   Spark partitions. Synonym expansion, term/role/tool boosts, phrase
-  adjacency, counts and suggest expansions (pruned Spark filters over
-  term_stats) all run here with NO O(corpus) or O(dictionary) driver
-  state, so every operator exists at 10^9+ docs. The public
-  ``search``/``count``/``phrase_search``/``suggest`` auto-dispatch
+  adjacency and counts run here with no O(corpus) driver state. The
+  public ``search``/``count``/``phrase_search``/``suggest`` auto-dispatch
   between executors on corpus size.
+
+The term dictionary is read one way for both executors
+(``_dictionary_slices``), and the same dispatch picks its source: the
+resident sorted arrays below ``driver_max_docs``, above it a pyarrow scan
+of term_stats pruned by its ``tlen`` partitions and term row-group
+statistics — no Spark job either way. Prefix, fuzzy, wildcard and regexp
+expansion and the global dfs are each written once over it. On the scan
+source driver memory is O(one record batch + max_expansions); driver CPU
+is O(scanned tlen/term range), so a regexp with no literal prefix scans
+the whole dictionary on the driver. Python ``re`` is the one pattern
+dialect of term expansion.
 """
 
 from __future__ import annotations
 
+import operator
 import os
+import re
+from collections.abc import Callable, Iterable, Iterator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -58,7 +71,7 @@ from pyspark.sql import types as T
 
 from ..analysis import SynonymSet, tokenize_py
 from ..index import catalog
-from ..index.build import term_bucket
+from ..index.build import TLEN_CAP, term_bucket, term_len_band
 from . import scoring
 
 _POSTING_COLS = [
@@ -80,6 +93,20 @@ _HITS = T.StructType([
     T.StructField("role", T.StringType()),
     T.StructField("score", T.DoubleType()),
 ])
+_COUNT = T.StructType([T.StructField("n", T.LongType())])
+# one packed row of doc norms per segment (see IndexSearcher._doc_side)
+_DOC_SIDE = T.StructType([
+    T.StructField("seg", T.IntegerType()),
+    T.StructField("base", T.LongType()),
+    T.StructField("n_docs", T.IntegerType()),
+    T.StructField("dl_bytes", T.BinaryType()),
+    T.StructField("role_bytes", T.BinaryType()),
+    T.StructField("tool_bytes", T.BinaryType()),
+    T.StructField("role_dict", T.ArrayType(T.StringType())),
+    T.StructField("tool_dict", T.ArrayType(T.StringType())),
+])
+# the top code point: a prefix's terms all sort at or below prefix + this
+_MAX_CHAR = "\U0010FFFF"
 
 
 class SnapshotExpiredError(RuntimeError):
@@ -89,9 +116,7 @@ class SnapshotExpiredError(RuntimeError):
     batch directories), but append_batch retains only the current and
     previous term-stats dictionary (Iceberg snapshot-expiry style), so a
     searcher older than one append horizon loses its dictionary files.
-    Without this guard the failure surfaced as a raw FileNotFoundException
-    from a lazily-executed scan (review finding). Call ``refresh()`` (or
-    open a new IndexSearcher) to continue."""
+    Call ``refresh()`` (or open a new IndexSearcher) to continue."""
 
 
 def levenshtein_within(q: str, cands: np.ndarray, dmax: int) -> np.ndarray:
@@ -179,6 +204,9 @@ class IndexSearcher:
         self._term_dict: pd.DataFrame | None = None
         # (terms sorted, df, term lengths) of the resident dictionary
         self._dict_arrays: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
+        # term_stats as a pyarrow dataset, listed on the first scan (the
+        # directory is versioned, so the listing cannot go stale)
+        self._term_stats_ds: pads.FileSystemDataset | None = None
         self._chunk_cache: dict[str, scoring.TermChunks] = {}
         # tbucket -> postings fragments of self._postings_ds, grouped on
         # the first fetch; a bucket's footers are read on its first use
@@ -186,36 +214,25 @@ class IndexSearcher:
         self._footers_read: set[int] = set()
         self._df_cache: dict[str, int] = {}
         self._doc_side_df: DataFrame | None = None
-        # Spark-side source DataFrames are opened ONCE per searcher (the
-        # analogue of Lucene's long-lived segment readers): re-calling
-        # spark.read.parquet per query re-lists the index's files and
-        # re-reads footers — ~40% of warm distributed-query latency at
-        # 500k docs, and unbounded listing cost on a 10^5-file index.
-        # SNAPSHOT CONTRACT (Lucene point-in-time reader semantics): a
-        # searcher sees the version AS OF OPEN. Appends only ADD files
-        # (new batch dirs) and write a fresh versioned term_stats dir —
-        # nothing a cached file index references is replaced in place.
-        # Postings/doc_stats snapshots stay valid indefinitely (appends
-        # only ADD batch dirs); the term dictionary is retained for the
-        # current + previous append (older copies are expired,
-        # Iceberg-snapshot style), so refresh() within one append — or
-        # open a new searcher — to stay inside the retention horizon.
-        # Compaction publishes a whole new version dir.
-        # built EAGERLY so the snapshot is taken at open — a lazy first
-        # use would list files at whatever later moment the source is
-        # first touched, splicing a mid-append state into a searcher
-        # whose stats/tombstones are as-of-open (review finding)
+        # Spark-side sources are opened ONCE per searcher, and EAGERLY (the
+        # analogue of Lucene's long-lived segment readers): re-reading them
+        # per query re-lists files and footers (~40% of warm distributed-
+        # query latency at 500k docs), and a lazy first use would list the
+        # files at some later moment, splicing a mid-append state into a
+        # searcher whose stats and tombstones are as of open. SNAPSHOT
+        # CONTRACT (Lucene point-in-time readers): appends only ADD batch
+        # dirs and write a new versioned term_stats dir, and compaction
+        # publishes a new version dir; the term dictionary of the current
+        # and previous append is kept (SnapshotExpiredError).
         self._postings_src: DataFrame = self.spark.read.parquet(
             os.path.join(vdir, "postings")
         )
         self._doc_stats_src: DataFrame = self.spark.read.parquet(
             os.path.join(vdir, "doc_stats")
         )
-        self._term_stats_src: DataFrame = self.spark.read.parquet(
-            self.term_stats_path
-        )
         # corpora larger than this auto-dispatch search/count/phrase/suggest
-        # to the distributed path (driver path holds O(corpus) norms)
+        # to the distributed path (driver path holds O(corpus) norms) and
+        # read the term dictionary by scan, not from resident arrays
         self.driver_max_docs = int(os.environ.get("ES_IDX_DRIVER_MAX_DOCS", 20_000_000))
         self.synonyms = SynonymSet()
         from ..streaming.incremental import load_tombstones
@@ -362,23 +379,106 @@ class IndexSearcher:
             )
         return self._dict_arrays
 
-    def _prefix_range(self, prefix: str) -> tuple[int, int]:
-        """Dictionary positions [lo, hi) of the terms starting with prefix."""
-        terms = self._dictionary()[0]
-        # upper bound: append the max code point so supplementary-plane
-        # characters (> U+FFFF) starting with the prefix are included
-        return (
-            int(np.searchsorted(terms, prefix, side="left")),
-            int(np.searchsorted(terms, prefix + "\U0010FFFF", side="right")),
-        )
+    def _check_dictionary_snapshot(self) -> None:
+        """Raise SnapshotExpiredError (not a FileNotFoundError mid-scan)
+        when this searcher's term-stats directory was expired by the
+        current+previous retention of later appends. Cheap local-stat;
+        resident caches (term_dictionary already loaded) keep working."""
+        if not os.path.isdir(self.term_stats_path):
+            raise SnapshotExpiredError(
+                f"term-stats snapshot {self.term_stats_path} was expired by "
+                "later appends (retention keeps the current + previous "
+                "dictionary). Call refresh() or open a new IndexSearcher."
+            )
 
-    def _top_df(self, idx: np.ndarray, max_expansions: int) -> list[str]:
-        """The dictionary terms at ascending positions ``idx``, highest df
-        first, ties in term order (the ``_df`` paths' orderBy(df desc,
-        term asc)), cut at max_expansions."""
-        terms, df, _ = self._dictionary()
-        order = np.argsort(-df[idx], kind="stable")[:max_expansions]
-        return terms[idx[order]].tolist()
+    def _term_stats_fragments(self, filt: pc.Expression | None) -> list:
+        """The term_stats files a scan with filter ``filt`` opens: the
+        ``tlen`` partitions the filter leaves."""
+        if self._term_stats_ds is None:
+            self._term_stats_ds = pads.dataset(
+                self.term_stats_path, partitioning="hive", format="parquet"
+            )
+        return list(self._term_stats_ds.get_fragments(filter=filt))
+
+    def _dictionary_slices(
+        self,
+        tlens: Iterable[int] | None = None,
+        ranges: list[tuple[str, str]] | None = None,
+    ) -> Iterator[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+        """(terms, df, term length) slices of the term dictionary: the
+        terms whose capped length (term_stats' ``tlen``) is in ``tlens``
+        and that lie in one of the inclusive ``(lo, hi)`` term ``ranges``
+        (None: no bound). Below ``driver_max_docs`` the slices are cut
+        from the resident sorted arrays with ``searchsorted``. Above it
+        they are the record batches of a pyarrow scan of term_stats: the
+        ``tlen`` filter prunes partitions and the term ranges prune row
+        groups by their min/max statistics, and the driver holds one
+        batch at a time."""
+        if self.n_docs <= self.driver_max_docs:
+            terms, df, lens = self._dictionary()
+            if ranges is None:
+                spans = [(0, len(terms))]
+            else:
+                lo, hi = (np.array(b, dtype=object) for b in zip(*ranges))
+                spans = zip(np.searchsorted(terms, lo).tolist(),
+                            np.searchsorted(terms, hi, "right").tolist())
+            for a, b in spans:
+                t, d, n = terms[a:b], df[a:b], lens[a:b]
+                if tlens is not None:
+                    ok = np.isin(np.minimum(n, TLEN_CAP), list(tlens))
+                    t, d, n = t[ok], d[ok], n[ok]
+                yield t, d, n
+            return
+        self._check_dictionary_snapshot()
+        conds = []
+        if tlens is not None:
+            conds.append(pc.field("tlen").isin(list(tlens)))
+        if ranges is not None:
+            term = pc.field("term")
+            spans = [(term >= lo) & (term <= hi) for lo, hi in ranges if lo != hi]
+            points = [lo for lo, hi in ranges if lo == hi]
+            if points:  # exact terms: one hash lookup, not a range per term
+                spans.append(term.isin(points))
+            conds.append(reduce(operator.or_, spans))
+        filt = reduce(operator.and_, conds) if conds else None
+        ds = pads.FileSystemDataset(
+            self._term_stats_fragments(filt), self._term_stats_ds.schema,
+            self._term_stats_ds.format, self._term_stats_ds.filesystem,
+        )
+        for rb in ds.to_batches(columns=["term", "df"], filter=filt):
+            t = rb.column("term")
+            yield (
+                t.to_numpy(zero_copy_only=False),
+                rb.column("df").to_numpy(),
+                pc.utf8_length(t).to_numpy(),
+            )
+
+    @staticmethod
+    def _top_df(
+        slices: Iterable[tuple[np.ndarray, np.ndarray, np.ndarray]],
+        keep: Callable[[np.ndarray, np.ndarray], np.ndarray] | None,
+        max_expansions: int,
+    ) -> list[str]:
+        """The ``max_expansions`` highest-df terms of ``slices`` that
+        ``keep(terms, lengths)`` accepts (None: all), ties in term order.
+        One running selection across the slices, so it holds one slice
+        plus the selection at a time."""
+        top_t, top_d = np.empty(0, dtype=object), np.empty(0, dtype=np.int64)
+        for terms, df, lens in slices:
+            if keep is not None:
+                ok = keep(terms, lens)
+                terms, df = terms[ok], df[ok]
+            if not len(terms):
+                continue
+            t, d = np.concatenate([top_t, terms]), np.concatenate([top_d, df])
+            if 0 < max_expansions < len(d):
+                # only dfs at or above the max_expansions-th largest can
+                # be selected: sort just those
+                cut = np.partition(d, len(d) - max_expansions)[len(d) - max_expansions]
+                t, d = t[d >= cut], d[d >= cut]
+            order = np.lexsort((t, -d))[:max_expansions]
+            top_t, top_d = t[order], d[order]
+        return top_t.tolist()
 
     def _local_plan(
         self, terms: list[str], **plan_kw
@@ -501,70 +601,79 @@ class IndexSearcher:
             )
 
     # ------------------------------------------------- dictionary expansion
+    #
+    # Each expansion is a dictionary read (``_dictionary_slices``) and a
+    # predicate, selected by ``_top_df``: highest df first (ES default
+    # ordering), ties in term order.
+
+    def _prefix_slices(self, prefix: str):
+        """Dictionary slices of the terms starting with ``prefix``: a term
+        range, and the tlens no shorter than the prefix — Lucene seeking
+        its TermsEnum to the prefix."""
+        return self._dictionary_slices(
+            range(min(len(prefix), TLEN_CAP), TLEN_CAP + 1),
+            [(prefix, prefix + _MAX_CHAR)],
+        )
+
     def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
         """Term-dictionary range scan (search_as_you_type / bool_prefix
-        analogue). Highest-df expansions first (ES default ordering)."""
-        lo, hi = self._prefix_range(prefix)
-        return self._top_df(np.arange(lo, hi), max_expansions)
+        analogue)."""
+        return self._top_df(self._prefix_slices(prefix), None, max_expansions)
 
     def expand_fuzzy(self, term: str, max_edits: int | None = None, max_expansions: int = 50) -> list[str]:
-        """AUTO-fuzziness expansion against the term dictionary. Driver-side
-        over the resident dictionary arrays; the scale path is the same
-        predicate as a Spark filter (F.length + F.levenshtein) over
-        term_stats."""
+        """AUTO-fuzziness expansion: the tlen band ``|len(t) - len(q)| <=
+        d`` (a necessary edit-distance condition, so on the scan source
+        only ~2d+1 length partitions are read), then the exact length band
+        and ``levenshtein_within`` decide."""
         d = auto_fuzziness(term) if max_edits is None else max_edits
-        terms, _, lens = self._dictionary()
-        if d == 0:
-            i = int(np.searchsorted(terms, term))
-            return [term] if i < len(terms) and terms[i] == term else []
-        idx = np.flatnonzero((lens >= len(term) - d) & (lens <= len(term) + d))
-        ok = levenshtein_within(term, terms[idx], d)
-        return self._top_df(idx[ok], max_expansions)
+        lo, hi = term_len_band(len(term), d)
+
+        def keep(cands: np.ndarray, lens: np.ndarray) -> np.ndarray:
+            ok = np.abs(lens - len(term)) <= d  # the cap's tlen holds longer terms
+            ok[ok] = levenshtein_within(term, cands[ok], d)
+            return ok
+
+        slices = self._dictionary_slices(
+            range(lo, hi + 1), [(term, term)] if d == 0 else None
+        )
+        return self._top_df(slices, keep, max_expansions)
 
     @staticmethod
     def _wildcard_regex(pattern: str) -> str:
         """ES wildcard syntax → regex source: ``*`` any sequence, ``?``
         one char, everything else literal; anchored by the caller."""
-        import re as _re
-
         return "".join(
-            ".*" if c == "*" else "." if c == "?" else _re.escape(c)
+            ".*" if c == "*" else "." if c == "?" else re.escape(c)
             for c in pattern
         )
 
-    def _fullmatch(self, rx, lo: int, hi: int, max_expansions: int) -> list[str]:
-        """Terms in dictionary positions [lo, hi) that ``rx`` matches
-        whole, highest df first."""
-        terms = self._dictionary()[0]
-        hit = np.fromiter(
-            (rx.fullmatch(t) is not None for t in terms[lo:hi]), dtype=bool, count=hi - lo
+    @staticmethod
+    def _fullmatch(regex: str, pattern: str) -> Callable[[np.ndarray, np.ndarray], np.ndarray]:
+        """The predicate "``regex`` matches the whole term" (Python ``re``);
+        a pattern that does not compile raises ValueError naming it."""
+        try:
+            rx = re.compile(regex)
+        except re.error as e:
+            raise ValueError(f"invalid pattern {pattern!r}: {e}") from None
+        return lambda terms, _: np.fromiter(
+            (rx.fullmatch(t) is not None for t in terms), dtype=bool, count=len(terms)
         )
-        return self._top_df(lo + np.flatnonzero(hit), max_expansions)
 
     def expand_wildcard(self, pattern: str, max_expansions: int = 50) -> list[str]:
-        """ES wildcard-query expansion over the term dictionary (anchored
-        whole-term match). The literal prefix before the first wildcard
-        prunes the sorted dictionary to a range first — the analogue of
-        Lucene seeking the TermsEnum to the pattern's common prefix.
-        Highest-df expansions first (same selection as expand_prefix)."""
-        import re as _re
-
-        lit = _re.match(r"[^*?]*", pattern).group(0)
-        rx = _re.compile(self._wildcard_regex(pattern))
-        lo, hi = self._prefix_range(lit) if lit else (0, len(self._dictionary()[0]))
-        return self._fullmatch(rx, lo, hi, max_expansions)
+        """ES wildcard-query expansion (anchored whole-term match). The
+        literal prefix before the first wildcard bounds the read to its
+        prefix range first."""
+        lit = re.match(r"[^*?]*", pattern).group(0)
+        keep = self._fullmatch(self._wildcard_regex(pattern), pattern)
+        return self._top_df(self._prefix_slices(lit), keep, max_expansions)
 
     def expand_regexp(self, pattern: str, max_expansions: int = 50) -> list[str]:
-        """ES regexp-query expansion (anchored whole-term match) against
-        the driver-resident dictionary. Dialect note: patterns execute as
-        Python ``re`` here and as Java regex on the distributed path
-        (``expand_regexp_df``) — stick to the common subset (literals,
-        classes, ``.|*+?()[]``), which also covers Lucene's dialect."""
-        import re as _re
-
-        return self._fullmatch(
-            _re.compile(pattern), 0, len(self._dictionary()[0]), max_expansions
-        )
+        """ES regexp-query expansion (anchored whole-term match, Python
+        ``re`` dialect — use the subset Lucene shares: literals, classes,
+        ``.|*+?()[]``). With no literal prefix to seek, it reads the whole
+        dictionary."""
+        keep = self._fullmatch(pattern, pattern)
+        return self._top_df(self._dictionary_slices(), keep, max_expansions)
 
     def suggest(
         self,
@@ -598,25 +707,19 @@ class IndexSearcher:
         query: str,
         fuzzy: bool,
         tier_boosts: tuple[float, float, float],
-        distributed: bool = False,
     ) -> tuple[list[str], dict[str, float] | None]:
         """The terms of a ``multi_match bool_prefix`` query over this
         field (IndexerServiceIT.java:219-238): every token but the last
         (fuzzy-AUTO-expanded when ``fuzzy``), then the last token's prefix
         expansion (the token itself when nothing expands). On a
         suggest-analyzed index the terms carry the tier boost of their
-        shingle width. ``distributed`` expands with the Spark filters
-        over term_stats instead of the resident dictionary."""
-        fz, pf = (
-            (self.expand_fuzzy_df, self.expand_prefix_df) if distributed
-            else (self.expand_fuzzy, self.expand_prefix)
-        )
+        shingle width."""
         toks = tokenize_py(query)
         terms: list[str] = []
         for t in toks[:-1]:
-            terms.extend(fz(t) if fuzzy else [t])
+            terms.extend(self.expand_fuzzy(t) if fuzzy else [t])
         if toks:
-            terms.extend(pf(toks[-1]) or [toks[-1]])
+            terms.extend(self.expand_prefix(toks[-1]) or [toks[-1]])
         terms = list(dict.fromkeys(terms))
         if self.manifest.get("analyzer") != "suggest":
             return terms, None
@@ -661,52 +764,23 @@ class IndexSearcher:
     # Full feature parity with the driver path (synonyms, term/role/tool
     # boosts, phrase, suggest, count): any query answerable at sf0.1 on the
     # driver is answerable at 10^9 docs here, with NO O(corpus) driver state
-    # — global term stats come from a pruned parquet filter (rows = query
+    # — global term stats come from the dictionary read (rows = query
     # terms), everything else rides the segment cogroup.
 
     def _global_dfs(self, terms: list[str]) -> dict[str, int]:
-        """Corpus-wide df per query term (idf is a global statistic). A
-        pruned driver-side pyarrow read of term_stats (tlen partition
-        pruning + term filter) returning len(terms) rows — never the full
-        dictionary, and no Spark job: the former pruned-Spark-filter
-        collect cost a whole job's scheduling per cold term set (the
-        ~0.12 s df-lookup leg of the per-query floor decomposed in
-        BENCH_NOTES round 5). Driver state stays O(query terms), the same
-        bound as the stored-fields point-read."""
+        """Corpus-wide df per query term (idf is a global statistic): a
+        point lookup per term in the dictionary read — ``searchsorted`` on
+        the resident arrays, or one pyarrow scan pruned to the terms'
+        tlen partitions — with no Spark job (a collect cost a whole job's
+        scheduling per cold term set, BENCH_NOTES round 5)."""
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            got = {t: 0 for t in missing}
-            if self._term_dict is not None:  # driver dict already resident
-                td = self._term_dict
-                sub = td[td["term"].isin(missing)]
-                got.update(dict(zip(sub["term"], sub["df"].astype(int))))
-            else:
-                from ..index.build import TLEN_CAP
-
-                self._check_dictionary_snapshot()
-                ds = pads.dataset(
-                    self.term_stats_path, partitioning="hive",
-                    format="parquet",
-                )
-                filt = pc.field("term").isin(missing)
-                if "tlen" in ds.schema.names:  # partition-prune to lengths
-                    lens = sorted({min(len(t), TLEN_CAP) for t in missing})
-                    filt = filt & pc.field("tlen").isin(lens)
-                tbl = ds.to_table(columns=["term", "df"], filter=filt)
-                got.update({
-                    t: int(d) for t, d in zip(
-                        tbl.column("term").to_pylist(),
-                        tbl.column("df").to_pylist(),
-                    )
-                })
-            self._df_cache.update(got)
+            self._df_cache.update(dict.fromkeys(missing, 0))
+            for got, df, _ in self._dictionary_slices(
+                {min(len(t), TLEN_CAP) for t in missing}, [(t, t) for t in missing]
+            ):
+                self._df_cache.update(zip(got.tolist(), df.tolist()))
         return {t: self._df_cache[t] for t in terms}
-
-    _DOC_SIDE_SCHEMA = (
-        "seg int, base long, n_docs int, dl_bytes binary, "
-        "role_bytes binary, tool_bytes binary, "
-        "role_dict array<string>, tool_dict array<string>"
-    )
 
     def _doc_side(self) -> DataFrame:
         """Seg-partitioned, persisted doc norms for the distributed path —
@@ -786,7 +860,7 @@ class IndexSearcher:
             n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
             self._doc_side_df = (
                 ds.groupBy("seg")
-                .applyInPandas(pack, self._DOC_SIDE_SCHEMA)
+                .applyInPandas(pack, _DOC_SIDE)
                 # explicit repartition: the packed rows are tiny, so AQE
                 # would coalesce the pack's shuffle to 1-2 partitions and
                 # the cached partitioning would serialize the scoring
@@ -888,11 +962,9 @@ class IndexSearcher:
         if not ords:
             return self.spark.createDataFrame([], _HITS)
         if len(ords) <= IN_LITERAL_MAX:
-            import pyarrow.compute as pc2
-
             pdf = self._doc_ds.to_table(
                 columns=["doc_ord", "doc_id", "conv_id", "turn_idx", "role"],
-                filter=pc2.field("doc_ord").isin(ords),
+                filter=pc.field("doc_ord").isin(ords),
             ).to_pandas()
             pdf["score"] = pdf["doc_ord"].map(scores)
             pdf = pdf.sort_values(
@@ -1021,7 +1093,7 @@ class IndexSearcher:
                 lambda pdf: pd.DataFrame(
                     {"n": [scoring.count(plan, scoring.pandas_chunks(pdf), tombstones)]}
                 ),
-                "n long",
+                _COUNT,
             )
         )
         row = per_seg.agg(F.sum("n").alias("total")).collect()[0]
@@ -1033,119 +1105,6 @@ class IndexSearcher:
         terms = tokenize_py(phrase) if isinstance(phrase, str) else list(phrase)
         return self.search_df(terms, k, mode="and", phrase_terms=terms)
 
-    # ---------------------------------------- distributed dictionary expansion
-    def _check_dictionary_snapshot(self) -> None:
-        """Raise SnapshotExpiredError (not a lazy FileNotFoundException)
-        when this searcher's term-stats directory was expired by the
-        current+previous retention of later appends. Cheap local-stat;
-        resident caches (term_dictionary already loaded) keep working."""
-        if not os.path.isdir(self.term_stats_path):
-            raise SnapshotExpiredError(
-                f"term-stats snapshot {self.term_stats_path} was expired by "
-                "later appends (retention keeps the current + previous "
-                "dictionary). Call refresh() or open a new IndexSearcher."
-            )
-
-    def _term_stats_sdf(self) -> DataFrame:
-        self._check_dictionary_snapshot()
-        return self._term_stats_src
-
-    def _tlen_prune(self, td: DataFrame, lo: int, hi: int) -> DataFrame:
-        """Partition-prune the dictionary scan to length buckets [lo, hi]
-        (term_stats is hive-partitioned by capped term length — build.py
-        ``term_len_col``). No-op on a pre-tlen index layout."""
-        if "tlen" not in td.columns:
-            return td
-        return td.filter((F.col("tlen") >= lo) & (F.col("tlen") <= hi))
-
-    def expand_prefix_df(self, prefix: str, max_expansions: int = 50) -> list[str]:
-        """Prefix expansion as a pruned Spark filter over the term-sorted
-        term_stats parquet (StringStartsWith pushes to the scan; row groups
-        outside the prefix range never load, and length partitions shorter
-        than the prefix are never listed). Highest-df first, term-order
-        tie-break — identical selection to the driver ``expand_prefix``."""
-        from ..index.build import TLEN_CAP
-
-        td = self._tlen_prune(
-            self._term_stats_sdf(), min(len(prefix), TLEN_CAP), TLEN_CAP
-        )
-        rows = (
-            td.filter(F.col("term").startswith(prefix))
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(max_expansions)
-            .select("term")
-            .collect()
-        )
-        return [r["term"] for r in rows]
-
-    def expand_fuzzy_df(
-        self, term: str, max_edits: int | None = None, max_expansions: int = 50
-    ) -> list[str]:
-        """AUTO-fuzziness expansion over term_stats: the tlen PARTITION
-        filter (``|len(t) - len(q)| <= d`` is a necessary edit-distance
-        condition) prunes the scan to ~(2d+1) length directories before a
-        file is opened — the columnar analogue of Lucene's Levenshtein-
-        automaton FST walk bounding the TermsEnum — then the exact
-        F.length band + F.levenshtein bound (both JVM-side) decide.
-        tests/test_plan_guards.py asserts the pruned scan reads a strict
-        subset of the dictionary's files."""
-        from ..index.build import term_len_band
-
-        d = auto_fuzziness(term) if max_edits is None else max_edits
-        lo, hi = term_len_band(len(term), d)
-        td = self._tlen_prune(self._term_stats_sdf(), lo, hi)
-        if d == 0:
-            rows = td.filter(F.col("term") == term).limit(1).collect()
-            return [term] if rows else []
-        rows = (
-            td.filter(
-                (F.length("term") >= len(term) - d)
-                & (F.length("term") <= len(term) + d)
-                & (F.levenshtein(F.lit(term), F.col("term")) <= d)
-            )
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(max_expansions)
-            .select("term")
-            .collect()
-        )
-        return [r["term"] for r in rows]
-
-    def expand_wildcard_df(self, pattern: str, max_expansions: int = 50) -> list[str]:
-        """Wildcard expansion as a pruned Spark filter over term_stats:
-        the literal prefix pushes as StringStartsWith (plus the tlen
-        length-partition floor), then an anchored JVM ``rlike`` decides —
-        same selection as the driver ``expand_wildcard``."""
-        import re as _re
-
-        from ..index.build import TLEN_CAP
-
-        lit = _re.match(r"[^*?]*", pattern).group(0)
-        td = self._term_stats_sdf()
-        if lit:
-            td = self._tlen_prune(td, min(len(lit), TLEN_CAP), TLEN_CAP)
-            td = td.filter(F.col("term").startswith(lit))
-        rows = (
-            td.filter(F.col("term").rlike(f"^(?:{self._wildcard_regex(pattern)})$"))
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(max_expansions)
-            .select("term")
-            .collect()
-        )
-        return [r["term"] for r in rows]
-
-    def expand_regexp_df(self, pattern: str, max_expansions: int = 50) -> list[str]:
-        """Regexp expansion over term_stats via anchored JVM ``rlike``
-        (see expand_regexp's dialect note)."""
-        rows = (
-            self._term_stats_sdf()
-            .filter(F.col("term").rlike(f"^(?:{pattern})$"))
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(max_expansions)
-            .select("term")
-            .collect()
-        )
-        return [r["term"] for r in rows]
-
     def suggest_df(
         self,
         query: str,
@@ -1155,11 +1114,10 @@ class IndexSearcher:
         role_boosts: dict[str, float] | None = None,
         boosts: tuple[float, float, float] = TIER_BOOSTS,
     ) -> DataFrame:
-        """Q6 search-as-you-type, distributed end to end: expansions come
-        from Spark filters on term_stats (tiny collect: <= max_expansions
-        terms), scoring from the segment cogroup — no O(corpus|dictionary)
-        driver state."""
-        terms, term_boosts = self._bool_prefix_terms(query, fuzzy, boosts, True)
+        """Q6 search-as-you-type, distributed scoring: the expansions come
+        from the dictionary read (see the module docstring for its driver
+        bounds), scoring from the segment cogroup."""
+        terms, term_boosts = self._bool_prefix_terms(query, fuzzy, boosts)
         return self.search_df(
             terms, k, role_boosts=role_boosts, term_boosts=term_boosts
         )

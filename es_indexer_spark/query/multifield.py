@@ -140,11 +140,12 @@ class MultiFieldSearcher:
         fuzzy: bool = True,
         tier_boosts: tuple[float, float, float] = TIER_BOOSTS,
     ):
-        """``bool_prefix`` distributed end to end: expansions come from
-        Spark filters over each field's term_stats, every field emits its
-        FULL per-segment score vector (``IndexSearcher.scores_df``), and
-        the cross-field sum + top-k is plain DataFrame algebra — no
-        O(corpus|dictionary) driver state, any number of fields.
+        """``bool_prefix`` with distributed scoring: the expansions come
+        from each field's dictionary read (``IndexSearcher._bool_prefix_terms``,
+        the same terms as ``bool_prefix``), every field emits its FULL
+        per-segment score vector (``IndexSearcher.scores_df``), and the
+        cross-field sum + top-k is plain DataFrame algebra — no O(corpus)
+        driver state, any number of fields.
 
         Scores can differ from the driver path by float re-association
         (per-field partials summed by the aggregate instead of one fixed
@@ -159,7 +160,7 @@ class MultiFieldSearcher:
             return base.search_df([], k)
         parts = []
         for searcher, fboost in self.fields:
-            terms, tb = searcher._bool_prefix_terms(query, fuzzy, tier_boosts, True)
+            terms, tb = searcher._bool_prefix_terms(query, fuzzy, tier_boosts)
             parts.append(
                 searcher.scores_df(terms, term_boosts=tb)
                 .withColumn("score", F.col("score") * fboost)

@@ -37,6 +37,16 @@ def sayt(spark, tmp_path_factory):
     return IndexSearcher(spark, idx)
 
 
+@pytest.fixture(scope="module")
+def scan(spark, searcher):
+    """The same index read by a searcher whose term dictionary source is
+    the pruned term_stats scan (the source above ``driver_max_docs``)."""
+    s = IndexSearcher(spark, searcher.index_dir)
+    s.driver_max_docs = 0
+    yield s
+    s.close()
+
+
 def _assert_same(driver: pd.DataFrame, dist: pd.DataFrame):
     assert driver["doc_id"].tolist() == dist["doc_id"].tolist()
     np.testing.assert_allclose(
@@ -131,17 +141,17 @@ def test_count_parity(searcher):
         assert searcher.count(terms, mode=mode) == searcher.count_df(terms, mode=mode)
 
 
-def test_expansion_parity(searcher):
-    assert searcher.expand_prefix("ba") == searcher.expand_prefix_df("ba")
-    assert searcher.expand_fuzzy("bacu") == searcher.expand_fuzzy_df("bacu")
-    assert searcher.expand_fuzzy("ab") == searcher.expand_fuzzy_df("ab") == []
+def test_expansion_parity(searcher, scan):
+    assert searcher.expand_prefix("ba") == scan.expand_prefix("ba")
+    assert searcher.expand_fuzzy("bacu") == scan.expand_fuzzy("bacu")
+    assert searcher.expand_fuzzy("ab") == scan.expand_fuzzy("ab") == []
     # caps that cut inside runs of equal df: ties go in term order on both
     cases = [
-        (searcher.expand_prefix, searcher.expand_prefix_df, "b"),
+        (searcher.expand_prefix, scan.expand_prefix, "b"),
         (lambda t, n: searcher.expand_fuzzy(t, 2, n),
-         lambda t, n: searcher.expand_fuzzy_df(t, 2, n), "bacu"),
-        (searcher.expand_wildcard, searcher.expand_wildcard_df, "?a*"),
-        (searcher.expand_regexp, searcher.expand_regexp_df, "[bc][a-z]*o"),
+         lambda t, n: scan.expand_fuzzy(t, 2, n), "bacu"),
+        (searcher.expand_wildcard, scan.expand_wildcard, "?a*"),
+        (searcher.expand_regexp, scan.expand_regexp, "[bc][a-z]*o"),
     ]
     df = dict(zip(*(searcher.term_dictionary()[c] for c in ("term", "df"))))
     for drv, dist, arg in cases:

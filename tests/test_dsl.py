@@ -30,6 +30,14 @@ def _ids(pdf):
     return pdf["doc_id"].tolist()
 
 
+def _scan(dsl):
+    """A searcher over the DSL's index that reads the term dictionary by
+    the pruned term_stats scan (the source above ``driver_max_docs``)."""
+    s = IndexSearcher(dsl.s.spark, dsl.s.index_dir)
+    s.driver_max_docs = 0
+    return s
+
+
 # ---------------------------------------------------------------- leaves
 
 def test_match_equals_engine_search(dsl):
@@ -248,6 +256,8 @@ def test_distributed_parity_on_leaves(dsl):
         {"match_phrase": {"text": "baco cora"}},
         {"terms": {"role": ["user", "assistant"]}},
         {"prefix": {"text": "bac"}},
+        {"fuzzy": {"text": {"value": "bacp", "boost": 3.0}}},
+        {"wildcard": {"text": "ba*"}},
         {"multi_match": {"query": "baco cor", "fields": ["text"],
                          "type": "bool_prefix", "fuzziness": "AUTO"}},
     ):
@@ -256,6 +266,10 @@ def test_distributed_parity_on_leaves(dsl):
         assert _ids(got_dist) == _ids(got_driver), body
         np.testing.assert_allclose(
             got_dist["score"], got_driver["score"], rtol=0, atol=1e-9)
+    # a wildcard leaf's short form {field: pattern} is {field: {"value": pattern}}
+    short = dsl.search({"wildcard": {"text": "ba*"}}, k=10)
+    assert len(short) and _ids(short) == _ids(
+        dsl.search({"wildcard": {"text": {"value": "ba*"}}}, k=10))
 
 
 # ------------------------------------------------------------------ errors
@@ -634,7 +648,7 @@ def test_wildcard_expansion_matches_dictionary(dsl):
         if re.fullmatch(re.escape(term[0]) + ".*" + re.escape(term[-1]), t)
     )
     assert sorted(dsl.s.expand_wildcard(pattern, max_expansions=10_000)) == want
-    assert sorted(dsl.s.expand_wildcard_df(pattern, max_expansions=10_000)) == want
+    assert sorted(_scan(dsl).expand_wildcard(pattern, max_expansions=10_000)) == want
 
 
 def test_wildcard_query_scores_like_expanded_or(dsl):
@@ -656,13 +670,28 @@ def test_wildcard_query_scores_like_expanded_or(dsl):
         got_df["score"].to_numpy(), drv["score"].to_numpy(), rtol=0, atol=1e-9)
 
 
+def test_invalid_pattern_fails_alike_on_both_paths(dsl):
+    """A pattern Python ``re`` cannot compile is an EsDslError naming it on
+    the driver and the distributed path, on the text field and on a
+    metadata field (where the distributed path filters with ``rlike``),
+    and a ValueError naming it from the expansion itself."""
+    for field in ("text", "role"):
+        body = {"regexp": {field: {"value": "(ba"}}}
+        for run in (dsl.search, dsl.search_df):
+            with pytest.raises(EsDslError, match=r"invalid pattern '\(ba'"):
+                run(body, k=5)
+    for s in (dsl.s, _scan(dsl)):
+        with pytest.raises(ValueError, match=r"invalid pattern '\(ba'"):
+            s.expand_regexp("(ba")
+
+
 def test_regexp_query_and_meta_wildcard(dsl):
     td = dsl.s.term_dictionary()
     term = td.nlargest(4, "df")["term"].iloc[-1]
     pattern = term[:1] + "[a-z]*"
     exps = dsl.s.expand_regexp(pattern)  # default cap, same as the leaf
     assert term in exps
-    assert sorted(exps) == sorted(dsl.s.expand_regexp_df(pattern))
+    assert sorted(exps) == sorted(_scan(dsl).expand_regexp(pattern))
     got = dsl.search({"regexp": {"text": {"value": pattern}}}, k=15)
     want = dsl.s.search(exps, k=15)
     assert _ids(got) == _ids(want)

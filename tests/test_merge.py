@@ -13,6 +13,7 @@ Invariants:
 from __future__ import annotations
 
 import os
+import re
 
 import numpy as np
 import pytest
@@ -29,7 +30,7 @@ from es_indexer_spark.index.merge import (
 )
 from es_indexer_spark.oracle import oracle_from_spark
 from es_indexer_spark.query.engine import IndexSearcher
-from es_indexer_spark.streaming.incremental import append_batch, delete_docs
+from es_indexer_spark.streaming.incremental import append_batch, delete_docs, delete_where
 
 
 def _corpus(spark, lo, hi, seed=21):
@@ -491,3 +492,55 @@ def test_append_recovers_interrupted_merge(spark, tmp_path, monkeypatch):
     got = s.search(["baco"], k=1000)
     assert (got["conv_id"] >= "conv00000024").any()
     s.close()
+
+
+def _edit_distance(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def test_dictionary_read_same_on_every_lifecycle_step(spark, tmp_path):
+    """After each write — build, append, delete, expunging merge — both
+    term-dictionary sources (the resident arrays, and the pruned
+    term_stats scan a searcher above ``driver_max_docs`` reads) give the
+    prefix, fuzzy and wildcard expansions and the global dfs of a
+    brute-force filter over ``term_dictionary()``."""
+    idx = str(tmp_path / "idx")
+    steps = [
+        lambda: build_index(spark, _corpus(spark, 0, 12), idx, n_buckets=8, n_segments=2),
+        lambda: append_batch(spark, _corpus(spark, 12, 16), idx),
+        lambda: delete_where(spark, idx, F.col("conv_id") < "conv00000004"),
+        lambda: merge_segments(spark, idx, min_inputs=2),
+    ]
+    cases = [  # (method, args, the predicate it expands, max_expansions)
+        ("expand_prefix", ("b", 7), lambda t: t.startswith("b"), 7),
+        ("expand_prefix", ("ba", 1000), lambda t: t.startswith("ba"), 1000),
+        ("expand_fuzzy", ("bacu", 1, 1000), lambda t: _edit_distance("bacu", t) <= 1, 1000),
+        ("expand_fuzzy", ("bacuz", 2, 9), lambda t: _edit_distance("bacuz", t) <= 2, 9),
+        ("expand_wildcard", ("?a*o", 1000), lambda t: re.fullmatch(".a.*o", t), 1000),
+    ]
+    dfs_seen = []
+    for step in steps:
+        step()
+        resident = IndexSearcher(spark, idx)
+        scan = IndexSearcher(spark, idx)
+        scan.driver_max_docs = 0
+        td = resident.term_dictionary()
+        df = dict(zip(td["term"], td["df"].astype(int)))
+        for name, args, pred, n in cases:
+            want = [t for _, t in sorted((-d, t) for t, d in df.items() if pred(t))][:n]
+            assert want, name
+            assert getattr(resident, name)(*args) == want, (name, args)
+            assert getattr(scan, name)(*args) == want, (name, args)
+        vocab = td["term"].tolist()
+        terms = [vocab[0], vocab[len(vocab) // 2], vocab[-1], "the", "zz_absent"]
+        want = {t: df.get(t, 0) for t in terms}
+        assert resident._global_dfs(terms) == scan._global_dfs(terms) == want
+        dfs_seen.append(want["the"])
+    # the writes changed the statistics the reads were checked on
+    assert dfs_seen[1] > dfs_seen[0] and dfs_seen[3] < dfs_seen[2]

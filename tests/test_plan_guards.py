@@ -1,7 +1,8 @@
 """Plan-shape regression guards: the properties that make the engine scale
 must be visible in the optimized plan, not just asserted in prose —
 partition pruning to the term's tbucket directory, predicate pushdown into
-the parquet scan, and broadcast joins for small sides."""
+the parquet scan, broadcast joins for small sides — and in the files the
+term-dictionary scan opens."""
 
 from __future__ import annotations
 
@@ -47,12 +48,6 @@ def test_keyset_pagination_pushes_cursor_predicate(searcher):
     df = searcher.scan_after(("conv00000010", 2), page_size=5)
     plan = _plan(df)
     assert "PushedFilters" in plan and "conv_id" in plan
-
-
-def test_term_stats_prefix_scan_pushes_startswith(searcher):
-    td = searcher._term_stats_sdf()
-    plan = _plan(td.filter(td["term"].startswith("ba")))
-    assert "StringStartsWith" in plan or "StartsWith" in plan
 
 
 def test_decontaminate_broadcasts_benchmark_grams(spark, sf_dir):
@@ -144,59 +139,66 @@ def test_search_df_enrichment_is_bounded_pointread(searcher):
         pl.IN_LITERAL_MAX = old
 
 
-def _scan_num_files(df) -> int:
-    """numFiles metric of the (single) parquet scan leaf after execution."""
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan()
-    leaves = plan.collectLeaves()
-    n = 0
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        m = leaf.metrics()
-        if m.contains("numFiles"):
-            n += int(m.apply("numFiles").value())
-    return n
+@pytest.fixture(scope="module")
+def scan(spark, searcher):
+    """The same index with its term dictionary read by the pruned
+    term_stats scan (the source above ``driver_max_docs``)."""
+    s = IndexSearcher(spark, searcher.index_dir)
+    s.driver_max_docs = 0
+    return s
 
 
-def test_fuzzy_expansion_prunes_length_partitions(searcher):
-    """The round-4 perf-weak: fuzzy-AUTO expansion used to scan the WHOLE
-    term dictionary (the length band could not prune row groups).
-    term_stats is now hive-partitioned by capped term length, so the
-    band is a PartitionFilter — the executed scan must read strictly
-    fewer files than the full dictionary, and the expansion itself must
-    be unchanged."""
-    import os
+def _read(scan, monkeypatch, expand) -> tuple[list[str], set[str]]:
+    """(the expansion, the term_stats files its dictionary read opened)."""
+    opened: set[str] = set()
+    fragments = scan._term_stats_fragments
 
-    from pyspark.sql import functions as F
+    def spy(filt):
+        frags = fragments(filt)
+        opened.update(f.path for f in frags)
+        return frags
 
-    from es_indexer_spark.index.build import term_len_band
+    monkeypatch.setattr(scan, "_term_stats_fragments", spy)
+    return expand(), opened
 
-    td = searcher._term_stats_sdf()
-    assert "tlen" in td.columns  # layout present
-    # multiple length partitions exist, else pruning is vacuous
-    tdirs = [d for d in os.listdir(searcher.term_stats_path) if d.startswith("tlen=")]
-    assert len(tdirs) > 2
 
+def _edit_distance(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def _by_df(td, pred) -> list[str]:
+    """Every dictionary term ``pred`` accepts, highest df first, ties in
+    term order."""
+    return [t for _, t in sorted((-d, t) for t, d in zip(td["term"], td["df"]) if pred(t))]
+
+
+def test_prefix_expansion_reads_pruned_term_stats(searcher, scan, monkeypatch):
+    """A prefix expansion on the scan source opens only the length
+    partitions no shorter than the prefix — a strict, non-empty subset
+    of the term_stats files — and selects what the unpruned predicate
+    selects over the whole dictionary."""
+    all_files = {f.path for f in scan._term_stats_fragments(None)}
+    got, opened = _read(scan, monkeypatch, lambda: scan.expand_prefix("baco", 10_000))
+    assert 0 < len(opened) < len(all_files), (opened, all_files)
+    assert got and got == _by_df(
+        searcher.term_dictionary(), lambda t: t.startswith("baco"))
+
+
+def test_fuzzy_expansion_prunes_length_partitions(searcher, scan, monkeypatch):
+    """Fuzzy-AUTO expansion on the scan source opens only the tlen
+    partitions of its length band (term_stats is hive-partitioned by
+    capped term length), and its selection equals the unpruned
+    edit-distance predicate over the whole dictionary."""
+    all_files = {f.path for f in scan._term_stats_fragments(None)}
+    assert len(all_files) > 2  # else pruning is vacuous
     q = "bacoz"  # AUTO(5) = 1 edit
-    lo, hi = term_len_band(len(q), 1)
-    pruned = searcher._tlen_prune(td, lo, hi).filter(
-        (F.length("term") >= len(q) - 1)
-        & (F.length("term") <= len(q) + 1)
-        & (F.levenshtein(F.lit(q), F.col("term")) <= 1)
-    )
-    plan = _plan(pruned)
-    assert "PartitionFilters" in plan and "tlen" in plan.split("PartitionFilters", 1)[1][:200]
-
-    full_files = _scan_num_files(td.select("term"))
-    pruned_files = _scan_num_files(pruned.select("term"))
-    assert 0 < pruned_files < full_files, (pruned_files, full_files)
-
-    # selection identical to the unpruned predicate (band is a superset
-    # of the exact filters)
-    got = searcher.expand_fuzzy_df(q)
-    want = sorted(
-        r["term"]
-        for r in td.filter(F.levenshtein(F.lit(q), F.col("term")) <= 1)
-        .select("term").collect()
-    )
-    assert sorted(got) == want
+    got, opened = _read(scan, monkeypatch, lambda: scan.expand_fuzzy(q, max_expansions=10_000))
+    assert 0 < len(opened) < len(all_files), (opened, all_files)
+    assert got and got == _by_df(
+        searcher.term_dictionary(), lambda t: _edit_distance(q, t) <= 1)

@@ -383,19 +383,21 @@ def test_expired_dictionary_snapshot_raises_clear_error(spark, tmp_path):
     idx = str(tmp_path / "idx")
     build_index(spark, _corpus(spark, 0, 10), idx, n_buckets=8, n_segments=2)
     old = IndexSearcher(spark, idx)
-    assert old.expand_prefix_df("turn") is not None  # dictionary alive
+    old.driver_max_docs = 0  # read the dictionary by scan, not resident
+    assert old.expand_prefix("turn") is not None  # dictionary alive
     # two appends push the open searcher's dictionary out of retention
     append_batch(spark, _corpus(spark, 10, 11), idx, epoch_id=0)
     append_batch(spark, _corpus(spark, 11, 12), idx, epoch_id=1)
     assert not os.path.isdir(old.term_stats_path)
     with pytest.raises(SnapshotExpiredError, match="refresh"):
-        old.expand_fuzzy_df("turn")
+        old.expand_fuzzy("turn")
     with pytest.raises(SnapshotExpiredError):
-        old.expand_prefix_df("tu")
+        old.expand_prefix("tu")
     with pytest.raises(SnapshotExpiredError):
         old.term_dictionary()
     fresh = old.refresh()
-    assert fresh.expand_prefix_df("tu") is not None
+    fresh.driver_max_docs = 0
+    assert fresh.expand_prefix("tu") is not None
     assert fresh.n_docs == 12 * 4
     fresh.close()
 

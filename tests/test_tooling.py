@@ -1,7 +1,8 @@
 """Scripts and examples stay runnable: each one compiles, every
 ``es_indexer_spark`` module or name it imports exists, and
 ``scripts/scaling_run.py`` parses its arguments; the Spark daemon module
-imports without writing to stdout; the query kernel has one home."""
+imports without writing to stdout; the query kernel and the term-dictionary
+read each have one home; query result schemas are StructTypes."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import importlib
 import importlib.util
 import pathlib
 import py_compile
+import re
 import subprocess
 import sys
 
@@ -81,3 +83,54 @@ def test_one_query_kernel():
             found = [n for n in names if n in src]
             assert not found, (str(path.relative_to(REPO)), found)
     assert cogroups == 1
+
+
+def test_one_term_dictionary_read():
+    """Grep guard: both executors expand terms over one dictionary read
+    (``IndexSearcher._dictionary_slices``). The Spark-side expansion
+    copies, their term_stats DataFrame, its tlen filter and the JVM edit
+    distance stay gone from the package, the entry module and the tests
+    (this guard excepted), and the package computes edit distance at one
+    call site."""
+    this = pathlib.Path(__file__).resolve()
+    gone = re.compile(
+        r"expand_(prefix|fuzzy|wildcard|regexp)_df|_term_stats_sdf|_tlen_prune|F\.levenshtein"
+    )
+    pkg = sorted((REPO / "es_indexer_spark").rglob("*.py"))
+    paths = [*pkg, REPO / "__spark_entry__.py", *sorted((REPO / "tests").rglob("*.py"))]
+    found = [
+        (str(p.relative_to(REPO)), m.group(0))
+        for p in paths if p.resolve() != this
+        for m in gone.finditer(p.read_text())
+    ]
+    assert not found, found
+    calls = sum(
+        len(re.findall(r"(?<!def )levenshtein_within\(", p.read_text())) for p in pkg
+    )
+    assert calls == 1
+
+
+def _literal_schemas(path: pathlib.Path):
+    """(line, method) of each ``applyInPandas`` / ``createDataFrame`` call
+    that passes a string literal as its schema."""
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("applyInPandas", "createDataFrame")):
+            continue
+        schema = node.args[1:2] + [k.value for k in node.keywords if k.arg == "schema"]
+        if any(isinstance(a, ast.JoinedStr)
+               or (isinstance(a, ast.Constant) and isinstance(a.value, str))
+               for a in schema):
+            yield node.lineno, node.func.attr
+
+
+def test_query_schemas_are_structtypes():
+    """The query path passes Spark schemas as module-level StructTypes:
+    a DDL string costs a parse (~6 ms, a JVM round trip) on every call,
+    and an empty frame built from DDL ~49 ms."""
+    found = [
+        (path.name, *hit)
+        for path in sorted((REPO / "es_indexer_spark" / "query").glob("*.py"))
+        for hit in _literal_schemas(path)
+    ]
+    assert not found, found
