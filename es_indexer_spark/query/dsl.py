@@ -11,19 +11,20 @@ issues is an Elasticsearch JSON body:
 - ``term`` / ``size(0)`` counts            ElasticSearchIndexService.java:54-78,
                                            GeoNetworkServiceImpl.java:395-410
 
-``DslSearcher`` compiles those bodies onto the engine: scored leaves
-(match / match_phrase / multi_match / prefix / fuzzy) evaluate through
-the same query kernel as ``IndexSearcher.search`` (``scoring.evaluate``,
-with no top-k cut);
+``DslSearcher`` compiles those bodies onto the engine with one tree walk,
+the ``_q_<kind>`` methods: each parses its body once and combines its
+children through an executor. Scored leaves (match / match_phrase /
+multi_match / prefix / fuzzy / …) evaluate through the same query kernel
+as ``IndexSearcher.search`` (``scoring.evaluate``, with no top-k cut);
 metadata leaves (term / terms / range / exists / ids on stored fields)
-evaluate as predicates over doc_stats; ``bool`` combines them with exact
-Lucene semantics (must = intersect + sum, should = optional score with
-``minimum_should_match``, filter / must_not = unscored). Both execution
-paths are provided: a driver path over dense numpy vectors (small-corpus
-/ interactive) and a distributed path where every leaf is a
-``(doc_ord, score)`` DataFrame and boolean structure is join algebra —
-the scale path at 10^9 docs, auto-dispatched above
-``driver_max_docs`` exactly like ``IndexSearcher.search``.
+are predicates over doc_stats; ``bool`` combines them with exact Lucene
+semantics (must = intersect + sum, should = optional score with
+``minimum_should_match``, filter / must_not = unscored). Two executors
+hold a ``(doc_ord, score)`` match set: ``_Driver`` as dense numpy vectors
+(small-corpus / interactive), ``_Spark`` as a DataFrame whose boolean
+structure is join algebra — the scale path at 10^9 docs, auto-dispatched
+above ``driver_max_docs`` exactly like ``IndexSearcher.search``. Both add
+clause scores in clause order, so their scores are bit-identical.
 
 Documented deviations from Elasticsearch (each asserted in
 ``tests/test_dsl.py``):
@@ -48,6 +49,7 @@ from __future__ import annotations
 
 import re
 from functools import partialmethod, reduce
+from operator import add, and_
 
 import numpy as np
 import pandas as pd
@@ -68,61 +70,21 @@ class EsDslError(ValueError):
     """Malformed or unsupported query body."""
 
 
-def _pattern_regex(kind: str, pattern: str) -> str:
-    """The regex source of a ``wildcard`` or ``regexp`` leaf, compiled
-    with Python ``re`` first, so an invalid pattern raises EsDslError on
-    both executors before any expansion or Spark plan."""
-    regex = IndexSearcher._wildcard_regex(pattern) if kind == "wildcard" else pattern
-    try:
-        re.compile(regex)
-    except re.error as e:
-        raise EsDslError(f"{kind}: invalid pattern {pattern!r}: {e}") from None
-    return regex
+def _need(body, key: str, leaf: str):
+    """``body[key]`` of a leaf's body; a missing key is an EsDslError
+    naming the leaf and the key."""
+    if not isinstance(body, dict) or key not in body:
+        raise EsDslError(f"{leaf}: missing {key!r} in {body!r}")
+    return body[key]
 
 
-_PATTERN_LEAVES = ("wildcard", "regexp")
-_EXPANSION_LEAVES = ("prefix", "fuzzy", *_PATTERN_LEAVES)
+def _boost(b: dict) -> float:
+    return float(b.get("boost", 1.0))
 
 
-def _expansion_leaf(kind: str, body: dict) -> tuple[str, str, float]:
-    """(field, value, boost) of a prefix / fuzzy / wildcard / regexp leaf;
-    a wildcard or regexp pattern must compile (``_pattern_regex``)."""
-    field, b = _field_and_body(body, kind)
-    value = str(b.get("value", b.get(kind, "")))
-    if kind in _PATTERN_LEAVES:
-        _pattern_regex(kind, value)
-    return field, value, float(b.get("boost", 1.0))
-
-
-Vec = tuple[np.ndarray, np.ndarray]  # (doc_ord asc, score aligned)
-
-
-def _empty() -> Vec:
-    return np.zeros(0, np.int64), np.zeros(0, np.float64)
-
-
-def _and2(a: Vec, b: Vec) -> Vec:
-    docs, ia, ib = np.intersect1d(a[0], b[0], assume_unique=True, return_indices=True)
-    return docs, a[1][ia] + b[1][ib]
-
-
-def _or2(a: Vec, b: Vec) -> Vec:
-    docs = np.union1d(a[0], b[0])
-    sc = np.zeros(len(docs), dtype=np.float64)
-    sc[np.searchsorted(docs, a[0])] += a[1]
-    sc[np.searchsorted(docs, b[0])] += b[1]
-    return docs, sc
-
-
-def _andnot(a: Vec, b: Vec) -> Vec:
-    keep = ~np.isin(a[0], b[0], assume_unique=True)
-    return a[0][keep], a[1][keep]
-
-
-def _semi(a: Vec, b: Vec) -> Vec:
-    """a restricted to b's docs; a's scores (filter never contributes)."""
-    keep = np.isin(a[0], b[0], assume_unique=True)
-    return a[0][keep], a[1][keep]
+def _weight(b: dict, scored: bool) -> float:
+    """A node's score factor: its boost, or 0.0 in filter context."""
+    return _boost(b) if scored else 0.0
 
 
 def _single(clause) -> list:
@@ -132,15 +94,13 @@ def _single(clause) -> list:
     return clause if isinstance(clause, list) else [clause]
 
 
-def _field_and_body(q: dict, leaf: str) -> tuple[str, dict]:
-    """``{"match": {"text": "q"}}`` or ``{"match": {"text": {...}}}``."""
-    if len(q) != 1:
+def _field_and_body(q, leaf: str, key: str) -> tuple[str, dict]:
+    """``{"match": {"text": "q"}}`` or ``{"match": {"text": {...}}}``; the
+    short form's value is the body's ``key``."""
+    if not isinstance(q, dict) or len(q) != 1:
         raise EsDslError(f"{leaf} must name exactly one field: {q}")
     field, body = next(iter(q.items()))
-    if not isinstance(body, dict):
-        key = "value" if leaf in ("term", *_EXPANSION_LEAVES) else "query"
-        body = {key: body}
-    return field, body
+    return field, body if isinstance(body, dict) else {key: body}
 
 
 # ES-legal option keys that may ride alongside the field entry in leaves
@@ -156,6 +116,305 @@ def _single_field(body: dict, leaf: str):
     if len(keys) != 1:
         raise EsDslError(f"{leaf} must name exactly one field: {body}")
     return keys[0], body[keys[0]]
+
+
+Vec = tuple[np.ndarray, np.ndarray]  # (doc_ord asc, score aligned)
+
+
+class _Driver:
+    """The driver executor: a match set is a ``Vec`` over the searcher's
+    resident norms."""
+
+    def __init__(self, s: IndexSearcher):
+        self.s = s
+        self._meta_cache: dict[str, np.ndarray] = {}
+
+    # --------------------------------------------------------- leaves
+    @staticmethod
+    def empty() -> Vec:
+        return np.zeros(0, np.int64), np.zeros(0, np.float64)
+
+    @staticmethod
+    def scores(fs: IndexSearcher, terms: list[str], **plan_kw) -> Vec:
+        return fs._evaluate(terms, strategy="auto", **plan_kw)
+
+    def all_docs(self, score: float) -> Vec:
+        return self._where(np.ones(self.s.ord_span, dtype=bool), score)
+
+    def _column(self, field: str) -> np.ndarray:
+        """Dense doc_ord-indexed stored-field column."""
+        nm = self.s._load_norms()
+        if field in nm:
+            return nm[field]
+        if field not in self._meta_cache:  # ts is not in the norms pack
+            pdf = (
+                self.s._doc_ds.to_table(columns=["doc_ord", field])
+                .to_pandas()
+                .sort_values("doc_ord")
+            )
+            vals = pdf[field].to_numpy()
+            if len(pdf) != self.s.ord_span:
+                # expunged holes: scatter by doc_ord so position == ord.
+                # NaT/None fills compare False everywhere, and the live
+                # mask in _where excludes holes regardless.
+                if np.issubdtype(vals.dtype, np.datetime64):
+                    a = np.full(self.s.ord_span, np.datetime64("NaT"),
+                                dtype=vals.dtype)
+                else:
+                    a = np.full(self.s.ord_span, None, dtype=object)
+                a[pdf["doc_ord"].to_numpy(np.int64)] = vals
+                vals = a
+            self._meta_cache[field] = vals
+        return self._meta_cache[field]
+
+    def _where(self, mask: np.ndarray, score: float) -> Vec:
+        live = self.s._load_norms()["live"]
+        if live is not None:  # expunged holes: fill values must not match
+            mask = mask & live
+        docs = np.flatnonzero(mask).astype(np.int64)
+        if len(self.s.tombstones):
+            docs = docs[~np.isin(docs, self.s.tombstones)]
+        return docs, np.full(len(docs), score, dtype=np.float64)
+
+    @staticmethod
+    def _value(col: np.ndarray, v):
+        """``v`` as Spark compares it with ``col``: a string cast to the type."""
+        if np.issubdtype(col.dtype, np.datetime64):
+            return np.datetime64(pd.Timestamp(v))
+        numeric = isinstance(v, str) and np.issubdtype(col.dtype, np.number)
+        return col.dtype.type(v) if numeric else v
+
+    def isin(self, field: str, values: list, score: float) -> Vec:
+        col = self._column(field)
+        hits = [col == self._value(col, v) for v in values]
+        return self._where(reduce(np.logical_or, hits, np.zeros(len(col), dtype=bool)), score)
+
+    def range(self, field: str, bounds: list[tuple[str, object]], score: float) -> Vec:
+        col = self._column(field)
+        mask = reduce(and_, [getattr(col, op)(self._value(col, v)) for op, v in bounds])
+        return self._where(np.asarray(mask, dtype=bool), score)
+
+    def exists(self, field: str, score: float) -> Vec:
+        return self._where(pd.notna(self._column(field)), score)
+
+    def fullmatch(self, field: str, regex: str, score: float) -> Vec:
+        rx = re.compile(regex)
+        hit = [v is not None and rx.fullmatch(str(v)) is not None for v in self._column(field)]
+        return self._where(np.array(hit, dtype=bool), score)
+
+    # ---------------------------------------------------- combinators
+    @staticmethod
+    def scale(v: Vec, factor: float) -> Vec:
+        return v[0], v[1] * factor
+
+    @staticmethod
+    def const(v: Vec, score: float) -> Vec:
+        return v[0], np.full(len(v[0]), score, dtype=np.float64)
+
+    @staticmethod
+    def semi(a: Vec, b: Vec) -> Vec:
+        """a restricted to b's docs; a's scores (filter never contributes)."""
+        keep = np.isin(a[0], b[0], assume_unique=True)
+        return a[0][keep], a[1][keep]
+
+    @staticmethod
+    def andnot(a: Vec, b: Vec) -> Vec:
+        keep = ~np.isin(a[0], b[0], assume_unique=True)
+        return a[0][keep], a[1][keep]
+
+    @staticmethod
+    def union(vs: list[Vec]) -> Vec:
+        docs = reduce(np.union1d, [v[0] for v in vs])
+        return docs, np.zeros(len(docs))
+
+    @staticmethod
+    def _folded(vs: list[Vec]) -> tuple[np.ndarray, ...]:
+        """(docs, tot, best, n) over the docs of any clause: ``tot``, a
+        doc's clause scores added in clause order from 0.0; ``best``, their
+        max against 0.0; ``n``, how many clauses it matches."""
+        docs = reduce(np.union1d, [v[0] for v in vs])
+        tot, best = np.zeros(len(docs)), np.zeros(len(docs))
+        n = np.zeros(len(docs), dtype=np.int64)
+        for d, s in vs:
+            ix = np.searchsorted(docs, d)
+            tot[ix] += s
+            np.maximum.at(best, ix, s)
+            n[ix] += 1
+        return docs, tot, best, n
+
+    def sum(self, vs: list[Vec]) -> Vec:
+        return self._folded(vs)[:2]
+
+    def dis_max(self, vs: list[Vec], tie: float) -> Vec:
+        """Per doc, the best clause's score plus ``tie`` times the rest
+        (max + tie * (sum - max))."""
+        docs, tot, best, _ = self._folded(vs)
+        return docs, best + tie * (tot - best)
+
+    @staticmethod
+    def boosting(pos: Vec, neg: Vec, negative_boost: float) -> Vec:
+        hit = np.isin(pos[0], neg[0], assume_unique=True)
+        return pos[0], np.where(hit, pos[1] * negative_boost, pos[1])
+
+    @staticmethod
+    def must(vs: list[Vec]) -> Vec:
+        """Docs in every clause, their scores added in clause order."""
+        def and2(a: Vec, b: Vec) -> Vec:
+            docs, ia, ib = np.intersect1d(a[0], b[0], assume_unique=True, return_indices=True)
+            return docs, a[1][ia] + b[1][ib]
+
+        return reduce(and2, vs)
+
+    def should(self, base: Vec | None, shoulds: list[Vec], msm: int) -> Vec:
+        """``base`` plus the should clauses' summed scores, restricted to
+        docs matching at least ``msm`` of them; with no base, the docs
+        matching at least max(msm, 1)."""
+        uniq, ssum, _, cnt = self._folded(shoulds)
+        if base is None:
+            keep = cnt >= max(msm, 1)
+            return uniq[keep], ssum[keep]
+        if len(uniq) == 0:
+            return self.empty() if msm > 0 else base
+        if msm > 0:
+            ok = uniq[cnt >= msm]
+            keep = np.isin(base[0], ok, assume_unique=True)
+            base = base[0][keep], base[1][keep]
+        sl = np.minimum(np.searchsorted(uniq, base[0]), len(uniq) - 1)
+        hit = uniq[sl] == base[0]
+        return base[0], base[1] + np.where(hit, ssum[sl], 0.0)
+
+    # ------------------------------------------------------- results
+    @staticmethod
+    def top(v: Vec, n: int) -> Vec:
+        return bm25.topk_desc(v[1], v[0], n)
+
+    @staticmethod
+    def count(v: Vec) -> int:
+        return int(len(v[0]))
+
+
+class _Spark:
+    """The distributed executor: a match set is a ``(doc_ord, score)``
+    DataFrame and boolean structure is join algebra. A sum over clauses
+    folds each doc's clause scores in clause order from 0.0, the order the
+    driver adds them in, so both executors' scores are bit-identical."""
+
+    def __init__(self, s: IndexSearcher):
+        self.s = s
+
+    # --------------------------------------------------------- leaves
+    def empty(self) -> DataFrame:
+        return self.s.spark.createDataFrame([], _SCORES)
+
+    def scores(self, fs: IndexSearcher, terms: list[str], *,
+               phrase: list[str] | None = None, **plan_kw) -> DataFrame:
+        plan = fs._dist_plan(terms, phrase_terms=phrase, strategy="blockmax", **plan_kw)
+        return self.empty() if plan.matches_nothing() else fs._segment_scores(plan)
+
+    def live(self) -> DataFrame:
+        """The live doc_stats rows."""
+        from ..streaming.incremental import mask_tombstones
+
+        return mask_tombstones(self.s.doc_stats_df(), self.s.tombstones)
+
+    def _where(self, cond, score: float) -> DataFrame:
+        return self.live().filter(cond).select("doc_ord", F.lit(score).alias("score"))
+
+    def all_docs(self, score: float) -> DataFrame:
+        return self._where(F.lit(True), score)
+
+    def isin(self, field: str, values: list, score: float) -> DataFrame:
+        return self._where(F.col(field).isin(values), score)
+
+    def range(self, field: str, bounds: list[tuple[str, object]], score: float) -> DataFrame:
+        return self._where(reduce(and_, [getattr(F.col(field), op)(v) for op, v in bounds]), score)
+
+    def exists(self, field: str, score: float) -> DataFrame:
+        return self._where(F.col(field).isNotNull(), score)
+
+    def fullmatch(self, field: str, regex: str, score: float) -> DataFrame:
+        return self._where(F.col(field).rlike(f"^(?:{regex})$"), score)
+
+    # ---------------------------------------------------- combinators
+    @staticmethod
+    def scale(v: DataFrame, factor: float) -> DataFrame:
+        return v.select("doc_ord", (F.col("score") * factor).alias("score"))
+
+    @staticmethod
+    def const(v: DataFrame, score: float) -> DataFrame:
+        return v.select("doc_ord", F.lit(score).alias("score"))
+
+    @staticmethod
+    def semi(a: DataFrame, b: DataFrame) -> DataFrame:
+        return a.join(b.select("doc_ord"), "doc_ord", "left_semi")
+
+    @staticmethod
+    def union(vs: list[DataFrame]) -> DataFrame:
+        docs = reduce(DataFrame.unionByName, [v.select("doc_ord") for v in vs]).distinct()
+        return docs.select("doc_ord", F.lit(0.0).alias("score"))
+
+    @staticmethod
+    def _folded(vs: list[DataFrame]) -> DataFrame:
+        """Per doc of any clause: ``tot``, its clause scores added in clause
+        order from 0.0; ``best``, their max against 0.0; ``n``, how many
+        clauses it matches."""
+        tagged = [v.withColumn("cid", F.lit(i)) for i, v in enumerate(vs)]
+        per_doc = reduce(DataFrame.unionByName, tagged).groupBy("doc_ord").agg(
+            F.array_sort(F.collect_list(F.struct("cid", "score"))).alias("s"))
+        zero = F.lit(0.0)
+        return per_doc.select(
+            "doc_ord",
+            F.aggregate("s", zero, lambda acc, e: acc + e["score"]).alias("tot"),
+            F.aggregate("s", zero, lambda acc, e: F.greatest(acc, e["score"])).alias("best"),
+            F.size("s").alias("n"),
+        )
+
+    def sum(self, vs: list[DataFrame]) -> DataFrame:
+        if len(vs) == 1:
+            return vs[0]
+        return self._folded(vs).select("doc_ord", F.col("tot").alias("score"))
+
+    def dis_max(self, vs: list[DataFrame], tie: float) -> DataFrame:
+        best, tot = F.col("best"), F.col("tot")
+        return self._folded(vs).select(
+            "doc_ord", (best + F.lit(tie) * (tot - best)).alias("score"))
+
+    def boosting(self, pos: DataFrame, neg: DataFrame, negative_boost: float) -> DataFrame:
+        hit = self.scale(self.semi(pos, neg), negative_boost)
+        return self.andnot(pos, neg).unionByName(hit)
+
+    @staticmethod
+    def must(vs: list[DataFrame]) -> DataFrame:
+        parts = [m.withColumnRenamed("score", f"m{i}") for i, m in enumerate(vs)]
+        total = reduce(add, [F.col(f"m{i}") for i in range(len(vs))])
+        return reduce(lambda a, b: a.join(b, "doc_ord"), parts).select(
+            "doc_ord", total.alias("score"))
+
+    @staticmethod
+    def andnot(a: DataFrame, b: DataFrame) -> DataFrame:
+        return a.join(b.select("doc_ord"), "doc_ord", "left_anti")
+
+    def should(self, base: DataFrame | None, shoulds: list[DataFrame], msm: int) -> DataFrame:
+        folded = self._folded(shoulds)
+        if base is None:
+            return folded.filter(F.col("n") >= max(msm, 1)).select(
+                "doc_ord", F.col("tot").alias("score"))
+        base = base.join(folded, "doc_ord", "left")
+        if msm > 0:
+            base = base.filter(F.coalesce(F.col("n"), F.lit(0)) >= msm)
+        return base.select(
+            "doc_ord", (F.col("score") + F.coalesce(F.col("tot"), F.lit(0.0))).alias("score"))
+
+    # ------------------------------------------------------- results
+    @staticmethod
+    def top(v: DataFrame, n: int) -> tuple[np.ndarray, np.ndarray]:
+        rows = v.orderBy(F.desc("score"), F.asc("doc_ord")).limit(n).collect()
+        return (np.array([r["doc_ord"] for r in rows], dtype=np.int64),
+                np.array([r["score"] for r in rows], dtype=np.float64))
+
+    @staticmethod
+    def count(v: DataFrame) -> int:
+        return v.count()
 
 
 class DslSearcher:
@@ -180,7 +439,8 @@ class DslSearcher:
             if fs.n_docs != searcher.n_docs:
                 raise EsDslError(f"field {name!r} covers a different corpus")
             self.fields[name] = fs
-        self._meta_cache: dict[str, np.ndarray] = {}
+        self._driver = _Driver(searcher)
+        self._spark = _Spark(searcher)
 
     # ------------------------------------------------------------ helpers
     def _field_searcher(self, name: str) -> IndexSearcher:
@@ -192,52 +452,11 @@ class DslSearcher:
                 f"unknown text field {base!r}; registered: {sorted(self.fields)}"
             ) from None
 
-    def _meta_array(self, field: str) -> np.ndarray:
-        """Dense doc_ord-indexed stored-field column (driver path)."""
+    @staticmethod
+    def _meta(field: str) -> str:
         if field not in _META_FIELDS:
             raise EsDslError(f"unknown metadata field {field!r}")
-        nm = self.s._load_norms()
-        if field in nm:
-            return nm[field]
-        if field not in self._meta_cache:  # ts is not in the norms pack
-            pdf = (
-                self.s._doc_ds.to_table(columns=["doc_ord", field])
-                .to_pandas()
-                .sort_values("doc_ord")
-            )
-            vals = pdf[field].to_numpy()
-            if len(pdf) != self.s.ord_span:
-                # expunged holes: scatter by doc_ord so position == ord.
-                # NaT/None fills compare False everywhere, and the live
-                # mask in _mask_to_vec excludes holes regardless.
-                if np.issubdtype(vals.dtype, np.datetime64):
-                    a = np.full(self.s.ord_span, np.datetime64("NaT"),
-                                dtype=vals.dtype)
-                else:
-                    a = np.full(self.s.ord_span, None, dtype=object)
-                a[pdf["doc_ord"].to_numpy(np.int64)] = vals
-                vals = a
-            self._meta_cache[field] = vals
-        return self._meta_cache[field]
-
-    def _mask_to_vec(self, mask: np.ndarray, score: float) -> Vec:
-        live = self.s._load_norms()["live"]
-        if live is not None:  # expunged holes: fill values must not match
-            mask = mask & live
-        docs = np.flatnonzero(mask).astype(np.int64)
-        if len(self.s.tombstones):
-            docs = docs[~np.isin(docs, self.s.tombstones)]
-        return docs, np.full(len(docs), score, dtype=np.float64)
-
-    def _all_docs(self, score: float) -> Vec:
-        live = self.s._load_norms()["live"]
-        if live is None:
-            docs = np.arange(self.s.ord_span, dtype=np.int64)
-        else:
-            docs = np.flatnonzero(live).astype(np.int64)
-        if len(self.s.tombstones):
-            docs = docs[~np.isin(docs, self.s.tombstones)]
-        return docs, np.full(len(docs), score, dtype=np.float64)
+        return field
 
     @staticmethod
     def _msm_default(q: dict) -> int:
@@ -249,282 +468,221 @@ class DslSearcher:
         has_base = bool(q.get("must")) or bool(q.get("filter"))
         return 0 if has_base else (1 if q.get("should") else 0)
 
-    def _range_cmp(self, field: str, ops: dict, arr_or_col, is_df: bool):
-        """Build the conjunction of range bounds over a numpy array
-        (driver) or a Column (distributed)."""
-        conds = []
-        for op, val in ops.items():
-            if op not in _RANGE_OPS:
-                raise EsDslError(f"range: unknown operator {op!r}")
-            if field == "ts" and not is_df:
-                val = np.datetime64(pd.Timestamp(val))
-            if is_df:
-                col = arr_or_col
-                cond = {"gte": col >= val, "gt": col > val,
-                        "lte": col <= val, "lt": col < val}[op]
-            else:
-                cond = getattr(arr_or_col, _RANGE_OPS[op])(val)
-            conds.append(cond)
-        if not conds:
-            raise EsDslError("range: need at least one of gte/gt/lte/lt")
-        return reduce(lambda a, b: a & b, conds)
+    # ---------------------------------------------------------- tree walk
+    #
+    # One method per query type, ``_q_<kind>(body, scored, x)``: it parses
+    # its body once and builds its match set with executor ``x``
+    # (``_Driver`` or ``_Spark``). ``scored`` is False in filter context,
+    # where every score is 0.0.
 
-    def _mm_specs(self, body: dict) -> list[tuple[IndexSearcher, float, list[str], dict | None]]:
-        """Resolve a multi_match body to per-field (searcher, boost,
-        terms, term_boosts) specs — bool_prefix expansion mirrors
-        ``MultiFieldSearcher.bool_prefix`` (IndexerServiceIT.java:219-238:
-        all tokens but the last fuzzy-AUTO, last token prefix, shingle
-        fields tier-boosted 10/5/2)."""
-        query = body.get("query")
-        if not isinstance(query, str):
-            raise EsDslError("multi_match: needs a string 'query'")
-        names = body.get("fields") or [next(iter(self.fields))]
-        mm_type = body.get("type", "best_fields")
-        fuzzy = str(body.get("fuzziness", "")).upper() == "AUTO"
-        specs = []
-        for name in names:
-            fs = self._field_searcher(name)
-            fboost = float(name.split("^", 1)[1]) if "^" in name else 1.0
-            if mm_type == "bool_prefix":
-                terms, tb = fs._bool_prefix_terms(query, fuzzy, TIER_BOOSTS)
-                if not terms:
-                    continue
-            else:
-                terms = fs.analyze_query(query)
-                tb = None
-            specs.append((fs, fboost, terms, tb))
-        return specs
-
-    # ------------------------------------------------------- driver path
-    def _eval(self, q: dict, scored: bool) -> Vec:
+    def _clause(self, q) -> tuple:
+        """(``_q_<kind>`` method, body) of a ``{kind: body}`` clause."""
         if not isinstance(q, dict) or len(q) != 1:
             raise EsDslError(f"a query clause is one {{type: body}} object: {q!r}")
         kind, body = next(iter(q.items()))
         fn = getattr(self, f"_q_{kind}", None)
         if fn is None:
             raise EsDslError(f"unsupported query type {kind!r}")
-        return fn(body, scored)
+        return fn, body
 
-    def _q_match_all(self, body, scored) -> Vec:
-        return self._all_docs(float(body.get("boost", 1.0)) if scored else 0.0)
+    def _eval(self, q: dict, scored: bool, x):
+        fn, body = self._clause(q)
+        return fn(body, scored, x)
 
-    def _q_ids(self, body, scored) -> Vec:
-        values = list(body.get("values", []))
-        mask = np.isin(self._meta_array("doc_id"), np.asarray(values, object))
-        return self._mask_to_vec(mask, 1.0 if scored else 0.0)
+    @staticmethod
+    def _text(x, fs: IndexSearcher, terms: list[str], plan_kw: dict, boost: float,
+              scored: bool):
+        """A scored leaf: the query kernel over ``fs``, times ``boost``."""
+        return x.scale(x.scores(fs, terms, **plan_kw), boost if scored else 0.0)
 
-    def _q_term(self, body, scored) -> Vec:
-        field, b = _field_and_body(body, "term")
-        value = b["value"]
-        if field in self.fields:
-            # unanalyzed exact term against the field's postings (scored)
-            docs, sc = self.fields[field]._evaluate([str(value)])
-            return (docs, sc * float(b.get("boost", 1.0))) if scored else (docs, np.zeros(len(docs)))
-        arr = self._meta_array(field)
-        return self._mask_to_vec(arr == value, 1.0 if scored else 0.0)
+    def _q_match_all(self, body, scored, x):
+        return x.all_docs(_weight(body, scored))
 
-    def _q_terms(self, body, scored) -> Vec:
+    def _q_ids(self, body, scored, x):
+        return x.isin("doc_id", list(body.get("values", [])), _weight(body, scored))
+
+    def _q_term(self, body, scored, x):
+        field, b = _field_and_body(body, "term", "value")
+        return self._terms(x, field, [_need(b, "value", "term")], b, scored)
+
+    def _q_terms(self, body, scored, x):
         field, values = _single_field(body, "terms")
+        return self._terms(x, field, list(values), body, scored)
+
+    def _terms(self, x, field: str, values: list, b: dict, scored: bool):
+        """Exact unanalyzed values: scored against a text field's postings,
+        a constant-score predicate on a stored field."""
         if field in self.fields:
-            docs, sc = self.fields[field]._evaluate([str(v) for v in values])
-            return (docs, sc) if scored else (docs, np.zeros(len(docs)))
-        arr = self._meta_array(field)
-        return self._mask_to_vec(np.isin(arr, list(values)), 1.0 if scored else 0.0)
+            return self._text(x, self.fields[field], [str(v) for v in values], {},
+                              _boost(b), scored)
+        return x.isin(self._meta(field), values, _weight(b, scored))
 
-    def _q_range(self, body, scored) -> Vec:
-        field, ops = _single_field(body, "range")
-        mask = self._range_cmp(field, ops, self._meta_array(field), is_df=False)
-        return self._mask_to_vec(np.asarray(mask, dtype=bool), 1.0 if scored else 0.0)
+    def _q_range(self, body, scored, x):
+        field, spec = _single_field(body, "range")
+        ops = [op for op in spec if op not in _LEAF_OPTION_KEYS] if isinstance(spec, dict) else []
+        if not ops or not set(ops) <= _RANGE_OPS.keys():
+            raise EsDslError(f"range: bounds are gte/gt/lte/lt, got {spec!r}")
+        bounds = [(_RANGE_OPS[op], spec[op]) for op in ops]
+        return x.range(self._meta(field), bounds, _weight(spec, scored))
 
-    def _q_exists(self, body, scored) -> Vec:
-        arr = self._meta_array(body["field"])
-        return self._mask_to_vec(pd.notna(arr), 1.0 if scored else 0.0)
+    def _q_exists(self, body, scored, x):
+        return x.exists(self._meta(_need(body, "field", "exists")), _weight(body, scored))
 
-    def _q_match(self, body, scored) -> Vec:
-        field, b = _field_and_body(body, "match")
+    def _match(self, body) -> tuple[IndexSearcher, list[str], dict, float]:
+        """(field searcher, terms, plan options, boost) of a match leaf."""
+        field, b = _field_and_body(body, "match", "query")
         fs = self._field_searcher(field)
-        terms = fs.analyze_query(b["query"])
-        mode = str(b.get("operator", "or")).lower()
-        docs, sc = fs._evaluate(terms, mode=mode)
-        boost = float(b.get("boost", 1.0))
-        return (docs, sc * boost) if scored else (docs, np.zeros(len(docs)))
+        terms = fs.analyze_query(_need(b, "query", "match"))
+        return fs, terms, {"mode": str(b.get("operator", "or")).lower()}, _boost(b)
 
-    def _q_match_phrase(self, body, scored) -> Vec:
-        field, b = _field_and_body(body, "match_phrase")
+    def _match_phrase(self, body) -> tuple[IndexSearcher, list[str], dict, float]:
+        """(field searcher, terms, plan options, boost) of a match_phrase leaf."""
+        field, b = _field_and_body(body, "match_phrase", "query")
         fs = self._field_searcher(field)
-        terms = tokenize_py(b["query"])
-        docs, sc = fs._evaluate(terms, phrase=terms)
-        boost = float(b.get("boost", 1.0))
-        return (docs, sc * boost) if scored else (docs, np.zeros(len(docs)))
+        terms = tokenize_py(_need(b, "query", "match_phrase"))
+        return fs, terms, {"phrase": terms}, _boost(b)
 
-    def _q_match_phrase_prefix(self, body, scored) -> Vec:
+    def _q_match(self, body, scored, x):
+        return self._text(x, *self._match(body), scored)
+
+    def _q_match_phrase(self, body, scored, x):
+        return self._text(x, *self._match_phrase(body), scored)
+
+    def _q_match_phrase_prefix(self, body, scored, x):
         """ES match_phrase_prefix: the last position matches any dictionary
         term with that prefix (capped expansion), earlier positions are the
         exact phrase. Scoring: BM25 over the phrase terms + the matched
         expansions, restricted to phrase-matching docs (ES's scoring here
         is likewise expansion-dependent; rank parity with ES is not claimed
-        for this leaf, membership is exact)."""
-        field, b = _field_and_body(body, "match_phrase_prefix")
+        for this leaf, membership is exact). A one-token query is the
+        prefix OR-group."""
+        field, b = _field_and_body(body, "match_phrase_prefix", "query")
         fs = self._field_searcher(field)
-        toks = tokenize_py(b["query"])
-        if not toks:
-            return _empty()
-        exps = fs.expand_prefix(toks[-1], int(b.get("max_expansions", 50)))
+        toks = tokenize_py(_need(b, "query", "match_phrase_prefix"))
+        exps = fs.expand_prefix(toks[-1], int(b.get("max_expansions", 50))) if toks else []
         if not exps:
-            return _empty()
+            return x.empty()
         head = toks[:-1]
-        cand = np.unique(np.concatenate(
-            [fs._evaluate(head + [e], phrase=head + [e])[0] for e in exps]
-        ))
-        if len(cand) == 0:
-            return _empty()
-        docs, sc = fs._evaluate(head + exps)
-        keep = np.isin(docs, cand, assume_unique=True)
-        boost = float(b.get("boost", 1.0))
-        docs, sc = docs[keep], sc[keep]
-        return (docs, sc * boost) if scored else (docs, np.zeros(len(docs)))
+        v = x.scores(fs, head + exps)
+        if head:
+            v = x.semi(v, x.union([x.scores(fs, head + [e], phrase=head + [e])
+                                   for e in exps]))
+        return x.scale(v, _weight(b, scored))
 
-    def _expansion_vec(self, kind: str, body, scored) -> Vec:
+    def _expansion(self, kind: str, body, scored, x, *, regex=None):
         """prefix / fuzzy / wildcard / regexp: the field's dictionary
         expansion, scored as a BM25 OR — the scoring_boolean rewrite (ES's
         default rewrite is constant_score; the scored form is a superset
-        and rank-stable under it). A wildcard or regexp on a metadata
-        field is an anchored pattern predicate, constant score (exact ES
-        behaviour)."""
-        field, value, boost = _expansion_leaf(kind, body)
-        if kind in _PATTERN_LEAVES and field in _META_FIELDS:
-            rx = re.compile(_pattern_regex(kind, value))
-            mask = np.array(
-                [v is not None and rx.fullmatch(str(v)) is not None
-                 for v in self._meta_array(field)],
-                dtype=bool,
-            )
-            return self._mask_to_vec(mask, boost if scored else 0.0)
+        and rank-stable under it). ``regex`` maps a wildcard or regexp
+        pattern to its regex, which must compile with Python ``re`` before
+        any expansion or Spark plan. On a metadata field such a leaf is an
+        anchored pattern predicate, constant score (exact ES behaviour)."""
+        field, b = _field_and_body(body, kind, "value")
+        value = str(b.get("value", b.get(kind, "")))
+        if regex is not None:
+            pattern = regex(value)
+            try:
+                re.compile(pattern)
+            except re.error as e:
+                raise EsDslError(f"{kind}: invalid pattern {value!r}: {e}") from None
+            if field in _META_FIELDS:
+                return x.fullmatch(field, pattern, _weight(b, scored))
         fs = self._field_searcher(field)
-        docs, sc = fs._evaluate(getattr(fs, f"expand_{kind}")(value))
-        return (docs, sc * boost) if scored else (docs, np.zeros(len(docs)))
+        return self._text(x, fs, getattr(fs, f"expand_{kind}")(value), {}, _boost(b), scored)
 
-    _q_prefix = partialmethod(_expansion_vec, "prefix")
-    _q_fuzzy = partialmethod(_expansion_vec, "fuzzy")
-    _q_wildcard = partialmethod(_expansion_vec, "wildcard")
-    _q_regexp = partialmethod(_expansion_vec, "regexp")
+    _q_prefix = partialmethod(_expansion, "prefix")
+    _q_fuzzy = partialmethod(_expansion, "fuzzy")
+    _q_wildcard = partialmethod(_expansion, "wildcard", regex=IndexSearcher._wildcard_regex)
+    _q_regexp = partialmethod(_expansion, "regexp", regex=str)
 
-    def _q_multi_match(self, body, scored) -> Vec:
-        specs = self._mm_specs(body)
+    def _q_multi_match(self, body, scored, x):
+        """Each field (``name^boost``) scores the query; best_fields takes
+        their dis_max, most_fields and bool_prefix their sum. bool_prefix
+        expansion mirrors ``MultiFieldSearcher.bool_prefix``
+        (IndexerServiceIT.java:219-238: all tokens but the last fuzzy-AUTO,
+        last token prefix, shingle fields tier-boosted 10/5/2)."""
+        query = body.get("query")
+        if not isinstance(query, str):
+            raise EsDslError("multi_match: needs a string 'query'")
         mm_type = body.get("type", "best_fields")
-        per_field = [
-            (fs._evaluate(terms, term_boosts=tb), fb)
-            for fs, fb, terms, tb in specs
-        ]
-        per_field = [((d, s * fb)) for (d, s), fb in per_field]
-        if not per_field:
-            return _empty()
+        fuzzy = str(body.get("fuzziness", "")).upper() == "AUTO"
+        parts = []
+        for name in body.get("fields") or [next(iter(self.fields))]:
+            fs = self._field_searcher(name)
+            if mm_type == "bool_prefix":
+                terms, tb = fs._bool_prefix_terms(query, fuzzy, TIER_BOOSTS)
+                if not terms:
+                    continue
+            else:
+                terms, tb = fs.analyze_query(query), None
+            fboost = float(name.split("^", 1)[1]) if "^" in name else 1.0
+            parts.append(x.scale(x.scores(fs, terms, term_boosts=tb), fboost))
+        if not parts:
+            return x.empty()
+        if not scored:
+            return x.union(parts)
         if mm_type == "best_fields":
-            tie = float(body.get("tie_breaker", 0.0))
-            docs = reduce(np.union1d, [v[0] for v in per_field])
-            best = np.zeros(len(docs))
-            total = np.zeros(len(docs))
-            for d, s in per_field:
-                sl = np.searchsorted(docs, d)
-                np.maximum.at(best, sl, s)
-                total[sl] += s
-            sc = best + tie * (total - best)
-        else:  # most_fields / bool_prefix: cross-field sum
-            docs, sc = reduce(_or2, per_field)
-        return (docs, sc) if scored else (docs, np.zeros(len(docs)))
+            v = x.dis_max(parts, float(body.get("tie_breaker", 0.0)))
+        else:
+            v = x.sum(parts)
+        return x.scale(v, _boost(body))
 
-    def _q_dis_max(self, body, scored) -> Vec:
+    def _q_dis_max(self, body, scored, x):
         """ES dis_max: per doc, the best clause's score plus tie_breaker
         times the rest (max + tie * (sum - max))."""
         clauses = body.get("queries")
         if not isinstance(clauses, list) or not clauses:
             raise EsDslError("dis_max needs a non-empty queries list")
-        tie = float(body.get("tie_breaker", 0.0))
-        vecs = [self._eval(c, scored) for c in clauses]
-        docs = vecs[0][0]
-        for v in vecs[1:]:
-            docs = np.union1d(docs, v[0])
-        if not scored or len(docs) == 0:
-            return docs, np.zeros(len(docs))
-        best = np.zeros(len(docs))
-        tot = np.zeros(len(docs))
-        for d, s in vecs:
-            ix = np.searchsorted(docs, d)
-            np.maximum.at(best, ix, s)
-            tot[ix] += s
-        return docs, best + tie * (tot - best)
+        vs = [self._eval(c, scored, x) for c in clauses]
+        if not scored:
+            return x.union(vs)
+        return x.scale(x.dis_max(vs, float(body.get("tie_breaker", 0.0))), _boost(body))
 
-    def _q_boosting(self, body, scored) -> Vec:
+    def _q_boosting(self, body, scored, x):
         """ES boosting: positive clause's matches; docs also matching the
         negative clause keep their score scaled by negative_boost."""
-        pos = self._eval(body["positive"], scored)
-        neg_docs = self._eval(body["negative"], False)[0]
+        pos = self._eval(_need(body, "positive", "boosting"), scored, x)
+        neg = self._eval(_need(body, "negative", "boosting"), False, x)
+        if not scored:
+            return pos
         nb = float(body.get("negative_boost", 0.5))
-        docs, sc = pos
-        if scored and len(docs):
-            hit = np.isin(docs, neg_docs, assume_unique=True)
-            sc = np.where(hit, sc * nb, sc)
-        return docs, sc
+        return x.scale(x.boosting(pos, neg, nb), _boost(body))
 
-    def _q_constant_score(self, body, scored) -> Vec:
-        docs, _ = self._eval(body["filter"], scored=False)
-        return docs, np.full(len(docs), float(body.get("boost", 1.0)) if scored else 0.0)
+    def _q_constant_score(self, body, scored, x):
+        inner = self._eval(_need(body, "filter", "constant_score"), False, x)
+        return x.const(inner, _weight(body, scored))
 
-    def _q_nested(self, body, scored) -> Vec:
+    def _q_nested(self, body, scored, x):
         # flat corpus: the reference's one nested use targets a flattened
         # sub-object (IndexerServiceIT.java:219-238) — unwrap
-        return self._eval(body["query"], scored)
+        inner = self._eval(_need(body, "query", "nested"), scored, x)
+        return x.scale(inner, _weight(body, scored))
 
-    def _q_bool(self, body, scored) -> Vec:
-        musts = [self._eval(c, scored) for c in _single(body.get("must"))]
-        filters = [self._eval(c, False) for c in _single(body.get("filter"))]
-        nots = [self._eval(c, False) for c in _single(body.get("must_not"))]
-        shoulds = [self._eval(c, scored) for c in _single(body.get("should"))]
-        msm = self._msm_default(body)
+    def _q_bool(self, body, scored, x):
+        def clauses(key: str, clause_scored: bool) -> list:
+            return [self._eval(c, clause_scored, x) for c in _single(body.get(key))]
 
-        base: Vec | None = None
-        if musts:
-            base = reduce(_and2, musts)
-        for f in filters:
-            base = (f[0], np.zeros(len(f[0]))) if base is None else _semi(base, f)
-
+        musts = clauses("must", scored)
+        base = x.must(musts) if musts else None
+        for f in clauses("filter", False):
+            base = x.const(f, 0.0) if base is None else x.semi(base, f)
+        shoulds = clauses("should", scored)
         if shoulds:
-            docs_all = np.concatenate([s[0] for s in shoulds])
-            sc_all = np.concatenate([s[1] for s in shoulds])
-            uniq, inv = np.unique(docs_all, return_inverse=True)
-            ssum = np.zeros(len(uniq))
-            cnt = np.zeros(len(uniq), dtype=np.int64)
-            np.add.at(ssum, inv, sc_all)
-            np.add.at(cnt, inv, 1)
-            if base is None:
-                keep = cnt >= max(msm, 1)
-                base = uniq[keep], ssum[keep]
-            elif len(uniq) == 0:
-                if msm > 0:
-                    base = _empty()
-            else:
-                if msm > 0:
-                    ok = uniq[cnt >= msm]
-                    keep = np.isin(base[0], ok, assume_unique=True)
-                    base = base[0][keep], base[1][keep]
-                sl = np.minimum(np.searchsorted(uniq, base[0]), len(uniq) - 1)
-                hit = uniq[sl] == base[0]
-                base = base[0], base[1] + np.where(hit, ssum[sl], 0.0)
+            base = x.should(base, shoulds, self._msm_default(body))
         if base is None:
-            base = self._all_docs(0.0)  # pure-negative bool: ES implicit match_all
-        for n in nots:
-            base = _andnot(base, n)
-        boost = float(body.get("boost", 1.0))
-        return (base[0], base[1] * boost) if scored else (base[0], np.zeros(len(base[0])))
+            base = x.all_docs(0.0)  # pure-negative bool: ES implicit match_all
+        for n in clauses("must_not", False):
+            base = x.andnot(base, n)
+        return x.scale(base, _weight(body, scored))
 
     # ----------------------------------------------------- WAND fast path
     def _fastpath_spec(self, q):
         """Detect request trees the engine's block-max-WAND top-k can
         answer directly: a bare ``match`` / ``match_phrase`` on a text
-        field, possibly wrapped in ``nested`` or a single-``must`` bool.
-        Returns ``(kind, fs, terms, mode, boost)`` or None. The full
-        bool-algebra evaluator materializes complete score vectors (it
-        must — clauses compose); a bare top-k has no reason to, and at
+        field, possibly wrapped in an unboosted ``nested`` or single-``must``
+        bool. Returns the leaf's ``(field searcher, terms, plan options,
+        boost)`` or None. The tree walk materializes complete match sets
+        (it must — clauses compose); a bare top-k has no reason to, and at
         10^9 docs the difference is a per-segment pruned heap vs a
         corpus-length score column. Exactness is unaffected: both paths
         run the same query kernel (asserted rank+score-identical in
@@ -532,36 +690,23 @@ class DslSearcher:
         if not (isinstance(q, dict) and len(q) == 1):
             return None
         kind, body = next(iter(q.items()))
-        if kind == "nested":
-            return self._fastpath_spec(body.get("query"))
-        if kind == "bool":
-            present = {c for c in ("must", "should", "filter", "must_not")
-                       if _single(body.get(c))}
-            if (
-                present == {"must"}
-                and "minimum_should_match" not in body
-                and float(body.get("boost", 1.0)) == 1.0
-            ):
-                musts = _single(body["must"])
-                if len(musts) == 1:
-                    return self._fastpath_spec(musts[0])
-            return None
-        if kind not in ("match", "match_phrase"):
-            return None
-        field, b = _field_and_body(body, kind)
-        if field not in self.fields:
-            return None
-        fs = self.fields[field]
-        if kind == "match_phrase":
-            terms = tokenize_py(b["query"])
-            if not terms:
-                return None  # slow path owns the empty-query edge
-            return ("phrase", fs, terms, "and", float(b.get("boost", 1.0)))
-        mode = str(b.get("operator", "or")).lower()
-        terms = fs.analyze_query(b["query"])
-        if not terms:
-            return None
-        return ("match", fs, terms, mode, float(b.get("boost", 1.0)))
+        fast = getattr(self, f"_fast_{kind}", None)
+        spec = None if fast is None else fast(body)
+        return spec if spec is not None and spec[1] else None  # no terms: tree walk
+
+    _fast_match = _match
+    _fast_match_phrase = _match_phrase
+
+    def _fast_nested(self, body):
+        return self._fastpath_spec(body.get("query")) if _boost(body) == 1.0 else None
+
+    def _fast_bool(self, body):
+        musts = _single(body.get("must"))
+        alone = not any(_single(body.get(c)) for c in ("should", "filter", "must_not"))
+        if (len(musts) == 1 and alone and "minimum_should_match" not in body
+                and _boost(body) == 1.0):
+            return self._fastpath_spec(musts[0])
+        return None
 
     # ----------------------------------------------------- sorted scan path
     def _parse_sort(self, sort) -> list[tuple[str, bool]]:
@@ -604,22 +749,24 @@ class DslSearcher:
             cond = edge if cond is None else edge | ((col == val) & cond)
         return cond
 
+    def _restrict(self, df: DataFrame, q, scored: bool) -> DataFrame:
+        """``df`` (live doc_stats rows) restricted to the docs matching
+        ``q``, with their ``score`` when ``scored``. An unscored bare
+        match_all never touches postings: it is ``df`` itself."""
+        fn, _ = self._clause(q)
+        if fn == self._q_match_all and not scored:
+            return df
+        v = self._eval(q, scored, self._spark)
+        return df.join(v, "doc_ord") if scored else self._spark.semi(df, v)
+
     def _sorted_scan_df(self, body: dict, q: dict, size: int, from_: int) -> DataFrame:
         """Q4 generalized: any query + stable sort + search_after keyset
-        pagination, distributed. match_all (the reference's pager) never
-        touches postings — it is a pushed-predicate scan of doc_stats;
-        other queries semi-join their match vector first."""
+        pagination, distributed. match_all (the reference's pager) is a
+        pushed-predicate scan of doc_stats; other queries semi-join their
+        match set first."""
         keys = self._parse_sort(body["sort"])
         scored = any(f == "_score" for f, _ in keys)
-        df = self._live_meta_df()
-        kind = next(iter(q)) if isinstance(q, dict) and len(q) == 1 else None
-        if kind == "match_all" and not scored:
-            pass  # pure scan; no posting work at all
-        elif scored:
-            df = df.join(self._eval_df(q, scored=True), "doc_ord")
-        else:
-            df = df.join(self._eval_df(q, scored=False).select("doc_ord"),
-                         "doc_ord", "left_semi")
+        df = self._restrict(self._spark.live(), q, scored)
         cols = [F.col("score") if f == "_score" else F.col(f) for f, _ in keys]
         after = body.get("search_after")
         if after is not None:
@@ -652,7 +799,7 @@ class DslSearcher:
             out = out.offset(from_)
         return out.limit(size).select(*sel)
 
-    # ------------------------------------------------------- public (driver)
+    # ------------------------------------------------------------ requests
     @staticmethod
     def _parse_body(body: dict, k: int | None) -> tuple[dict, int, int, float | None]:
         envelope = ("query", "size", "from", "sort", "search_after",
@@ -666,6 +813,23 @@ class DslSearcher:
             q, size, from_, min_score = body, (10 if k is None else k), 0, None
         return q, size, from_, (float(min_score) if min_score is not None else None)
 
+    def _hits(self, body: dict, k: int | None, x) -> tuple[np.ndarray, np.ndarray]:
+        """The request's hits on executor ``x``, (score desc, doc_ord asc):
+        the fast path's top-k or the tree walk's match set, then
+        ``min_score``, then the ``size + from`` cut."""
+        q, size, from_, min_score = self._parse_body(body, k)
+        spec = self._fastpath_spec(q)
+        if spec is None:
+            docs, scores = x.top(self._eval(q, True, x), size + from_)
+        else:
+            fs, terms, plan_kw, boost = spec
+            docs, scores = x.top(x.scores(fs, terms, k=size + from_, **plan_kw), size + from_)
+            scores = scores * boost
+        if min_score is not None:
+            keep = scores >= min_score
+            docs, scores = docs[keep], scores[keep]
+        return docs[from_:], scores[from_:]
+
     def search(self, body: dict, k: int | None = None) -> pd.DataFrame:
         """Execute a request body; returns the engine's standard hit frame
         (doc_ord, doc_id, conv_id, turn_idx, role, score), (score desc,
@@ -675,230 +839,24 @@ class DslSearcher:
         distributed scan path — pagination is a scan, not a top-k."""
         if "sort" in body or self.s.n_docs > self.s.driver_max_docs:
             return self.search_df(body, k).toPandas()
-        q, size, from_, min_score = self._parse_body(body, k)
-        spec = self._fastpath_spec(q)
-        if spec is not None:
-            kind, fs, terms, mode, boost = spec
-            out = (
-                fs.phrase_search(terms, k=size + from_)
-                if kind == "phrase"
-                else fs.search(terms, k=size + from_, mode=mode)
-            )
-            if boost != 1.0:
-                out = out.assign(score=out["score"] * boost)
-            if min_score is not None:
-                out = out[out["score"] >= min_score]
-            return out.iloc[from_:].reset_index(drop=True)
-        docs, sc = self._eval(q, scored=True)
-        if min_score is not None:
-            keep = sc >= min_score
-            docs, sc = docs[keep], sc[keep]
-        top_docs, top_sc = bm25.topk_desc(sc, docs, size + from_)
-        return self.s._materialize(top_docs[from_:], top_sc[from_:])
+        return self.s._materialize(*self._hits(body, k, self._driver))
+
+    def search_df(self, body: dict, k: int | None = None) -> DataFrame:
+        """Distributed execution: the same request path as ``search`` on
+        the Spark executor — the global cut is one orderBy/limit, and the
+        k winners are enriched with the same pushed-ordinal stored-fields
+        point-read as ``IndexSearcher.search_df``."""
+        if "sort" in body:
+            return self._sorted_scan_df(body, *self._parse_body(body, k)[:3])
+        docs, scores = self._hits(body, k, self._spark)
+        ords = docs.tolist()
+        return self.s._enrich_topk(ords, dict(zip(ords, scores.tolist())))
 
     def count(self, body: dict) -> int:
         """size(0) total-hits count (GeoNetworkServiceImpl.java:395-410)."""
-        q, _, _, _ = self._parse_body(body, None)
-        if self.s.n_docs > self.s.driver_max_docs:
-            return self._eval_df(q, scored=False).count()
-        return int(len(self._eval(q, scored=False)[0]))
-
-    # -------------------------------------------------- distributed path
-    def _live_meta_df(self) -> DataFrame:
-        from ..streaming.incremental import mask_tombstones
-
-        return mask_tombstones(self.s.doc_stats_df(), self.s.tombstones)
-
-    def _meta_vec_df(self, cond, scored: bool, boost: float = 1.0) -> DataFrame:
-        score = F.lit(boost if scored else 0.0).alias("score")
-        df = self._live_meta_df()
-        if cond is not None:
-            df = df.filter(cond)
-        return df.select("doc_ord", score)
-
-    def _scores_or_zero(self, df: DataFrame, scored: bool) -> DataFrame:
-        return df if scored else df.select("doc_ord", F.lit(0.0).alias("score"))
-
-    def _eval_df(self, q: dict, scored: bool) -> DataFrame:
-        if not isinstance(q, dict) or len(q) != 1:
-            raise EsDslError(f"a query clause is one {{type: body}} object: {q!r}")
-        kind, body = next(iter(q.items()))
-        if kind == "match_all":
-            return self._meta_vec_df(None, scored,
-                                     boost=float(body.get("boost", 1.0)))
-        if kind == "ids":
-            return self._meta_vec_df(F.col("doc_id").isin(list(body.get("values", []))), scored)
-        if kind == "term":
-            field, tb = _field_and_body(body, "term")
-            if field in self.fields:
-                return self._scores_or_zero(
-                    self.fields[field].scores_df([str(tb["value"])]), scored)
-            return self._meta_vec_df(F.col(field) == tb["value"], scored)
-        if kind == "terms":
-            field, values = _single_field(body, "terms")
-            if field in self.fields:
-                return self._scores_or_zero(
-                    self.fields[field].scores_df([str(v) for v in values]), scored)
-            return self._meta_vec_df(F.col(field).isin(list(values)), scored)
-        if kind == "range":
-            field, ops = _single_field(body, "range")
-            return self._meta_vec_df(self._range_cmp(field, ops, F.col(field), is_df=True), scored)
-        if kind == "exists":
-            return self._meta_vec_df(F.col(body["field"]).isNotNull(), scored)
-        if kind == "match":
-            field, b = _field_and_body(body, "match")
-            fs = self._field_searcher(field)
-            terms = fs.analyze_query(b["query"])
-            df = fs.scores_df(terms, mode=str(b.get("operator", "or")).lower())
-            boost = float(b.get("boost", 1.0))
-            if scored and boost != 1.0:
-                df = df.select("doc_ord", (F.col("score") * boost).alias("score"))
-            return self._scores_or_zero(df, scored)
-        if kind == "match_phrase":
-            field, b = _field_and_body(body, "match_phrase")
-            fs = self._field_searcher(field)
-            terms = tokenize_py(b["query"])
-            return self._scores_or_zero(fs.scores_df(terms, phrase_terms=terms), scored)
-        if kind in _EXPANSION_LEAVES:
-            field, value, boost = _expansion_leaf(kind, body)
-            if kind in _PATTERN_LEAVES and field in _META_FIELDS:
-                cond = F.col(field).rlike(f"^(?:{_pattern_regex(kind, value)})$")
-                return self._meta_vec_df(cond, scored, boost=boost)
-            fs = self._field_searcher(field)
-            df = fs.scores_df(getattr(fs, f"expand_{kind}")(value))
-            if scored and boost != 1.0:
-                df = df.select("doc_ord", (F.col("score") * boost).alias("score"))
-            return self._scores_or_zero(df, scored)
-        if kind == "dis_max":
-            clauses = body.get("queries")
-            if not isinstance(clauses, list) or not clauses:
-                raise EsDslError("dis_max needs a non-empty queries list")
-            tie = float(body.get("tie_breaker", 0.0))
-            parts = [self._eval_df(c, scored) for c in clauses]
-            u = reduce(lambda a, b2: a.unionByName(b2), parts)
-            if not scored:
-                return u.select("doc_ord").distinct().withColumn(
-                    "score", F.lit(0.0))
-            agg = u.groupBy("doc_ord").agg(
-                F.max("score").alias("best"), F.sum("score").alias("tot"))
-            return agg.select(
-                "doc_ord",
-                (F.col("best") + F.lit(tie) * (F.col("tot") - F.col("best"))
-                 ).alias("score"))
-        if kind == "boosting":
-            pos = self._eval_df(body["positive"], scored)
-            neg = self._eval_df(body["negative"], False).select("doc_ord")
-            nb = float(body.get("negative_boost", 0.5))
-            if not scored:
-                return pos
-            hit = pos.join(neg, "doc_ord", "left_semi").select(
-                "doc_ord", (F.col("score") * nb).alias("score"))
-            miss = pos.join(neg, "doc_ord", "left_anti")
-            return miss.unionByName(hit)
-        if kind == "match_phrase_prefix":
-            field, b = _field_and_body(body, kind)
-            fs = self._field_searcher(field)
-            toks = tokenize_py(b["query"])
-            exps = (fs.expand_prefix(toks[-1], int(b.get("max_expansions", 50)))
-                    if toks else [])
-            if not exps:
-                return self.s.spark.createDataFrame([], _SCORES)
-            head = toks[:-1]
-            if not head:  # single-position phrase == prefix OR-group
-                return self._scores_or_zero(fs.scores_df(exps), scored)
-            cand = reduce(
-                lambda a, b2: a.unionByName(b2),
-                [fs.scores_df(head + [e], phrase_terms=head + [e]).select("doc_ord")
-                 for e in exps],
-            ).distinct()
-            df = fs.scores_df(head + exps).join(cand, "doc_ord", "left_semi")
-            boost = float(b.get("boost", 1.0))
-            if scored and boost != 1.0:
-                df = df.select("doc_ord", (F.col("score") * boost).alias("score"))
-            return self._scores_or_zero(df, scored)
-        if kind == "multi_match":
-            specs = self._mm_specs(body)
-            mm_type = body.get("type", "best_fields")
-            parts = [
-                fs.scores_df(terms, term_boosts=tb)
-                .select("doc_ord", (F.col("score") * fb).alias("score"))
-                for fs, fb, terms, tb in specs
-            ]
-            if not parts:
-                return self.s.spark.createDataFrame([], _SCORES)
-            u = reduce(lambda a, b: a.unionByName(b), parts)
-            if mm_type == "best_fields":
-                tie = float(body.get("tie_breaker", 0.0))
-                agg = u.groupBy("doc_ord").agg(
-                    F.max("score").alias("best"), F.sum("score").alias("tot"))
-                df = agg.select(
-                    "doc_ord",
-                    (F.col("best") + F.lit(tie) * (F.col("tot") - F.col("best"))).alias("score"),
-                )
-            else:
-                df = u.groupBy("doc_ord").agg(F.sum("score").alias("score"))
-            return self._scores_or_zero(df, scored)
-        if kind == "constant_score":
-            inner = self._eval_df(body["filter"], scored=False)
-            return inner.select(
-                "doc_ord", F.lit(float(body.get("boost", 1.0)) if scored else 0.0).alias("score"))
-        if kind == "nested":
-            return self._eval_df(body["query"], scored)
-        if kind == "bool":
-            return self._bool_df(body, scored)
-        raise EsDslError(f"unsupported query type {kind!r}")
-
-    def _bool_df(self, body: dict, scored: bool) -> DataFrame:
-        musts = [self._eval_df(c, scored) for c in _single(body.get("must"))]
-        filters = [self._eval_df(c, False) for c in _single(body.get("filter"))]
-        nots = [self._eval_df(c, False) for c in _single(body.get("must_not"))]
-        should_clauses = _single(body.get("should"))
-        msm = self._msm_default(body)
-
-        base: DataFrame | None = None
-        if musts:
-            parts = [m.withColumnRenamed("score", f"m{i}") for i, m in enumerate(musts)]
-            base = reduce(lambda a, b: a.join(b, "doc_ord"), parts)
-            total = reduce(lambda a, b: a + b, [F.col(f"m{i}") for i in range(len(musts))])
-            base = base.select("doc_ord", total.alias("score"))
-        for f in filters:
-            fd = f.select("doc_ord")
-            base = (
-                fd.withColumn("score", F.lit(0.0))
-                if base is None
-                else base.join(fd, "doc_ord", "left_semi")
-            )
-        if should_clauses:
-            tagged = [
-                self._eval_df(c, scored).withColumn("cid", F.lit(i))
-                for i, c in enumerate(should_clauses)
-            ]
-            sagg = (
-                reduce(lambda a, b: a.unionByName(b), tagged)
-                .groupBy("doc_ord")
-                .agg(F.sum("score").alias("s_add"), F.countDistinct("cid").alias("s_n"))
-            )
-            if base is None:
-                base = sagg.filter(F.col("s_n") >= max(msm, 1)).select(
-                    "doc_ord", F.col("s_add").alias("score"))
-            else:
-                base = base.join(sagg, "doc_ord", "left")
-                if msm > 0:
-                    base = base.filter(F.coalesce(F.col("s_n"), F.lit(0)) >= msm)
-                base = base.select(
-                    "doc_ord",
-                    (F.col("score") + F.coalesce(F.col("s_add"), F.lit(0.0))).alias("score"),
-                )
-        if base is None:
-            base = self._meta_vec_df(None, scored=False)  # implicit match_all
-        for n in nots:
-            base = base.join(n.select("doc_ord"), "doc_ord", "left_anti")
-        boost = float(body.get("boost", 1.0))
-        if scored and boost != 1.0:
-            base = base.select("doc_ord", (F.col("score") * boost).alias("score"))
-        if not scored:
-            base = base.select("doc_ord", F.lit(0.0).alias("score"))
-        return base
+        q = self._parse_body(body, None)[0]
+        x = self._spark if self.s.n_docs > self.s.driver_max_docs else self._driver
+        return x.count(self._eval(q, False, x))
 
     # ------------------------------------------------------- aggregations
     #
@@ -975,8 +933,7 @@ class DslSearcher:
                 metric_exprs += self._metric_exprs(df, name, kind, spec)
                 metric_names.append((name, kind))
             elif kind == "filter":
-                fdf = df.join(self._eval_df(spec, scored=False).select("doc_ord"),
-                              "doc_ord", "left_semi")
+                fdf = self._restrict(df, spec, False)
                 node_out = {"doc_count": fdf.count()}
                 if sub:
                     node_out.update(self._run_aggs(fdf, sub))
@@ -1098,9 +1055,7 @@ class DslSearcher:
                 df.filter(F.lit(False)), {name: node})[name]
             return out
         if kind2 == "filter":
-            fdf = df.filter(parent_key.isNotNull()).join(
-                self._eval_df(spec2, scored=False).select("doc_ord"),
-                "doc_ord", "left_semi")
+            fdf = self._restrict(df.filter(parent_key.isNotNull()), spec2, False)
             exprs = [F.count(F.lit(1)).alias(" doc_count")]
             for n2, v2 in metric_sub2.items():
                 k3 = next(k for k in v2 if k != "aggs")
@@ -1173,14 +1128,10 @@ class DslSearcher:
         returns ``{"hits": {"total": n}, "aggregations": {...}}`` shaped
         like the ES response. The query clause (default match_all) first
         restricts doc_stats via an unscored semi-join."""
-        q = body.get("query", {"match_all": {}})
         # stored text never participates in an agg — drop it before the
         # persist so the cache holds only the narrow metadata columns
-        df = self._live_meta_df().drop("text")
-        kind = next(iter(q)) if isinstance(q, dict) and len(q) == 1 else None
-        if kind != "match_all":
-            df = df.join(self._eval_df(q, scored=False).select("doc_ord"),
-                         "doc_ord", "left_semi")
+        df = self._restrict(self._spark.live().drop("text"),
+                            body.get("query", {"match_all": {}}), False)
         df = df.persist()
         try:
             total = df.count()
@@ -1189,38 +1140,3 @@ class DslSearcher:
             df.unpersist()
         return {"hits": {"total": {"value": total, "relation": "eq"}},
                 "aggregations": aggs}
-
-    def search_df(self, body: dict, k: int | None = None) -> DataFrame:
-        """Distributed execution: every leaf is a (doc_ord, score) frame,
-        boolean structure is join algebra, the global cut is one
-        orderBy/limit, and the k winners are enriched with the same
-        pushed-ordinal stored-fields point-read as
-        ``IndexSearcher.search_df``."""
-        q, size, from_, min_score = self._parse_body(body, k)
-        if "sort" in body:
-            return self._sorted_scan_df(body, q, size, from_)
-        spec = self._fastpath_spec(q)
-        if spec is not None:
-            kind, fs, terms, mode, boost = spec
-            out = (
-                fs.search_df(terms, k=size + from_, mode="and", phrase_terms=terms)
-                if kind == "phrase"
-                else fs.search_df(terms, k=size + from_, mode=mode)
-            )
-            if boost != 1.0:
-                out = out.withColumn("score", F.col("score") * F.lit(boost))
-            if min_score is not None:
-                out = out.filter(F.col("score") >= min_score)
-            return out.offset(from_) if from_ else out
-        vec = self._eval_df(q, scored=True)
-        if min_score is not None:
-            vec = vec.filter(F.col("score") >= min_score)
-        top_rows = (
-            vec.orderBy(F.desc("score"), F.asc("doc_ord"))
-            .limit(size + from_)
-            .collect()[from_:]
-        )
-        return self.s._enrich_topk(
-            [int(r["doc_ord"]) for r in top_rows],
-            {int(r["doc_ord"]): float(r["score"]) for r in top_rows},
-        )

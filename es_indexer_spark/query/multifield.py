@@ -27,6 +27,7 @@ import pandas as pd
 
 from .. import bm25
 from ..analysis import tokenize_py
+from .dsl import _Spark
 from .engine import TIER_BOOSTS, IndexSearcher
 
 
@@ -143,39 +144,22 @@ class MultiFieldSearcher:
         """``bool_prefix`` with distributed scoring: the expansions come
         from each field's dictionary read (``IndexSearcher._bool_prefix_terms``,
         the same terms as ``bool_prefix``), every field emits its FULL
-        per-segment score vector (``IndexSearcher.scores_df``), and the
-        cross-field sum + top-k is plain DataFrame algebra — no O(corpus)
-        driver state, any number of fields.
+        per-segment score vector, the DSL's Spark executor sums the fields
+        per doc in field order, and the k winners are fetched with the
+        stored-fields point read (``IndexSearcher._enrich_topk``) — no
+        O(corpus) driver state, any number of fields.
 
-        Scores can differ from the driver path by float re-association
-        (per-field partials summed by the aggregate instead of one fixed
-        interleave) — ranks identical except exact-tie permutations."""
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
+        The driver ``bool_prefix`` sums per term across fields, so scores
+        can differ from it in the last bits — ranks identical except
+        exact-tie permutations."""
         base = self.fields[0][0]
-        toks = tokenize_py(query)
-        if not toks:
-            return base.search_df([], k)
+        if not tokenize_py(query):
+            return base._enrich_topk([], {})
+        x = _Spark(base)
         parts = []
         for searcher, fboost in self.fields:
             terms, tb = searcher._bool_prefix_terms(query, fuzzy, tier_boosts)
-            parts.append(
-                searcher.scores_df(terms, term_boosts=tb)
-                .withColumn("score", F.col("score") * fboost)
-            )
-        agg = (
-            reduce(lambda a, b: a.unionByName(b), parts)
-            .groupBy("doc_ord")
-            .agg(F.sum("score").alias("score"))
-        )
-        top = agg.orderBy(F.desc("score"), F.asc("doc_ord")).limit(k)
-        return top.join(
-            base.doc_stats_df().select(
-                "doc_ord", "doc_id", "conv_id", "turn_idx", "role"
-            ),
-            "doc_ord",
-        ).select(
-            "doc_ord", "doc_id", "conv_id", "turn_idx", "role", "score"
-        ).orderBy(F.desc("score"), F.asc("doc_ord"))
+            parts.append(x.scale(x.scores(searcher, terms, term_boosts=tb), fboost))
+        docs, scores = x.top(x.sum(parts), k)
+        ords = docs.tolist()
+        return base._enrich_topk(ords, dict(zip(ords, scores.tolist())))

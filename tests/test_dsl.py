@@ -30,6 +30,10 @@ def _ids(pdf):
     return pdf["doc_id"].tolist()
 
 
+# the first two words of the index's first doc: a phrase with hits
+PHRASE = "ororco haor"
+
+
 def _scan(dsl):
     """A searcher over the DSL's index that reads the term dictionary by
     the pruned term_stats scan (the source above ``driver_max_docs``)."""
@@ -49,9 +53,9 @@ def test_match_equals_engine_search(dsl):
 
 
 def test_match_phrase_equals_engine(dsl):
-    got = dsl.search({"match_phrase": {"text": "baco cora"}}, k=10)
-    want = dsl.s.phrase_search("baco cora", k=10)
-    assert _ids(got) == _ids(want)
+    got = dsl.search({"match_phrase": {"text": PHRASE}}, k=10)
+    want = dsl.s.phrase_search(PHRASE, k=10)
+    assert len(want) and _ids(got) == _ids(want)
     np.testing.assert_allclose(got["score"], want["score"], rtol=0, atol=0)
 
 
@@ -253,7 +257,7 @@ def test_distributed_parity_on_leaves(dsl):
     for body in (
         {"match": {"text": "baco"}},
         {"match": {"text": {"query": "baco cora", "operator": "and"}}},
-        {"match_phrase": {"text": "baco cora"}},
+        {"match_phrase": {"text": PHRASE}},
         {"terms": {"role": ["user", "assistant"]}},
         {"prefix": {"text": "bac"}},
         {"fuzzy": {"text": {"value": "bacp", "boost": 3.0}}},
@@ -263,13 +267,103 @@ def test_distributed_parity_on_leaves(dsl):
     ):
         got_driver = dsl.search(body, k=10)
         got_dist = dsl.search_df(body, k=10).toPandas()
-        assert _ids(got_dist) == _ids(got_driver), body
+        assert len(got_driver) and _ids(got_dist) == _ids(got_driver), body
         np.testing.assert_allclose(
             got_dist["score"], got_driver["score"], rtol=0, atol=1e-9)
     # a wildcard leaf's short form {field: pattern} is {field: {"value": pattern}}
     short = dsl.search({"wildcard": {"text": "ba*"}}, k=10)
     assert len(short) and _ids(short) == _ids(
         dsl.search({"wildcard": {"text": {"value": "ba*"}}}, k=10))
+
+
+_FIELDS3 = ["text^2", "a", "b^3"]
+
+# every supported query type, each with a boost where ES takes one
+PARITY = {
+    "match_all": {"match_all": {"boost": 1.5}},
+    "ids": {"ids": {"values": ["conv00000005:2", "conv00000042:0", "nope"], "boost": 2.0}},
+    "term_meta": {"term": {"role": {"value": "assistant", "boost": 2.0}}},
+    "term_text": {"term": {"text": {"value": "baco", "boost": 3.0}}},
+    "terms_meta": {"terms": {"role": ["user", "system"], "boost": 2.0}},
+    "terms_text": {"terms": {"text": ["baco", "cora"], "boost": 1.5}},
+    "range": {"range": {"turn_idx": {"gte": 1, "lt": 4, "boost": 2.0}}},
+    "range_ts": {"range": {"ts": {"gte": "2023-11-17T00:13:20", "boost": 2.0}}},
+    "term_ts": {"term": {"ts": {"value": "2023-11-17T00:13:20", "boost": 2.0}}},
+    "numbers_as_strings": {"bool": {"must": [{"terms": {"turn_idx": ["1", "3"]}}],
+                                    "filter": [{"range": {"turn_idx": {"lt": "3"}}}]}},
+    "exists": {"exists": {"field": "tool", "boost": 2.0}},
+    "match_or": {"match": {"text": {"query": "baco cora", "boost": 2.0}}},
+    "match_and": {"match": {"text": {"query": "baco cora", "operator": "and",
+                                     "boost": 2.0}}},
+    "match_phrase": {"match_phrase": {"text": {"query": PHRASE, "boost": 3.0}}},
+    "phrase_prefix_1": {"match_phrase_prefix": {"text": {"query": "ba", "boost": 3.0}}},
+    "phrase_prefix_2": {"match_phrase_prefix": {"text": {"query": "ororco ha",
+                                                         "boost": 3.0}}},
+    "prefix": {"prefix": {"text": {"value": "bac", "boost": 2.0}}},
+    "fuzzy": {"fuzzy": {"text": {"value": "bacp", "boost": 2.0}}},
+    "wildcard_text": {"wildcard": {"text": {"value": "ba*o", "boost": 2.0}}},
+    "regexp_text": {"regexp": {"text": {"value": "co[a-z]*", "boost": 2.0}}},
+    "wildcard_meta": {"wildcard": {"role": {"value": "ass*", "boost": 2.0}}},
+    "regexp_meta": {"regexp": {"conv_id": {"value": "conv000000[1-3][0-9]", "boost": 2.0}}},
+    "best_fields": {"multi_match": {"query": "baco cora", "fields": _FIELDS3,
+                                    "tie_breaker": 0.3, "boost": 1.5}},
+    "most_fields": {"multi_match": {"query": "baco cora dala", "fields": _FIELDS3,
+                                    "type": "most_fields", "boost": 1.5}},
+    "bool_prefix": {"multi_match": {"query": "baco cor", "fields": _FIELDS3,
+                                    "type": "bool_prefix", "fuzziness": "AUTO",
+                                    "boost": 1.5}},
+    "dis_max": {"dis_max": {"queries": [{"match": {"text": "baco"}},
+                                        {"match": {"text": "cora"}},
+                                        {"term": {"role": "user"}}],
+                            "tie_breaker": 0.3, "boost": 2.0}},
+    "boosting": {"boosting": {"positive": {"match": {"text": "baco cora"}},
+                              "negative": {"term": {"role": "system"}},
+                              "negative_boost": 0.25, "boost": 2.0}},
+    "constant_score": {"constant_score": {"filter": {"match": {"text": "baco"}},
+                                          "boost": 3.5}},
+    "nested": {"nested": {"path": "p", "query": {"match": {"text": "baco cora"}},
+                          "boost": 2.0}},
+    "bool_should": {"bool": {"should": [
+        {"match_phrase": {"text": {"query": PHRASE, "boost": 3.0}}},
+        {"match": {"text": "cora"}}, {"match": {"text": "dala"}}]}},
+    "bool": {"bool": {
+        "must": [{"match": {"text": "baco"}}, {"prefix": {"text": "co"}}],
+        "should": [{"match": {"text": "cora"}},
+                   {"match_phrase": {"text": {"query": PHRASE, "boost": 3.0}}},
+                   {"match": {"text": "dala"}},
+                   {"fuzzy": {"text": "bacp"}}],
+        "minimum_should_match": 1,
+        "filter": [{"range": {"turn_idx": {"gte": 1}}}],
+        "must_not": [{"term": {"role": "system"}}],
+        "boost": 1.5}},
+}
+
+
+@pytest.fixture(scope="module")
+def dsl3(dsl):
+    """The fixture searcher under three text field names, and a
+    ``DslSearcher`` over the same index that runs every request on the
+    distributed executor (``driver_max_docs`` 0)."""
+    scan = _scan(dsl)
+    yield (DslSearcher(dsl.s, text_fields={"a": dsl.s, "b": dsl.s}),
+           DslSearcher(scan, text_fields={"a": scan, "b": scan}))
+    scan.close()
+
+
+@pytest.mark.parametrize("name", list(PARITY))
+def test_executors_score_bit_identically(dsl3, name):
+    """``search`` (driver executor) and ``search_df`` (Spark executor)
+    return the same doc ids with bit-identical scores, scored and in
+    filter context, and the distributed count equals the driver count."""
+    d, dist = dsl3
+    q = PARITY[name]
+    for body in (q, {"bool": {"filter": [q]}}):
+        got_driver = d.search({"query": body, "size": 1000})
+        got_dist = d.search_df({"query": body, "size": 1000}).toPandas()
+        assert len(got_driver), body
+        assert _ids(got_dist) == _ids(got_driver), body
+        np.testing.assert_array_equal(got_dist["score"], got_driver["score"])
+        assert dist.count(body) == d.count(body) == len(got_driver)
 
 
 # ------------------------------------------------------------------ errors
@@ -284,6 +378,21 @@ def test_unsupported_and_malformed(dsl):
     with pytest.raises(EsDslError):
         dsl.search({"bool": {"should": [{"match_all": {}}],
                              "minimum_should_match": "75%"}})
+    # a missing required key, or a stored field that is not a metadata
+    # field, names the leaf on both executors
+    for body in (
+        {"exists": {}},
+        {"boosting": {"positive": {"match_all": {}}}},
+        {"constant_score": {}},
+        {"nested": {}},
+        {"term": {"text": {"boost": 2}}},
+        {"match": {"text": {"boost": 2}}},
+        {"range": {"dl": {"gte": 1}}},
+        {"exists": {"field": "text"}},
+    ):
+        for run in (dsl.search, dsl.search_df):
+            with pytest.raises(EsDslError):
+                run(body)
 
 
 # ------------------------------------------------- sort / search_after (Q4)
@@ -383,7 +492,7 @@ def test_sort_source_projection_and_errors(dsl):
 def _slow_search(dsl, q, k):
     """Force the full bool-algebra evaluator (what composed trees use)."""
     import es_indexer_spark.bm25 as bm25
-    docs, sc = dsl._eval(q, scored=True)
+    docs, sc = dsl._eval(q, True, dsl._driver)
     top_docs, top_sc = bm25.topk_desc(sc, docs, k)
     return dsl.s._materialize(top_docs, top_sc)
 
@@ -392,7 +501,7 @@ def _slow_search(dsl, q, k):
     {"match": {"text": "baco cora"}},
     {"match": {"text": {"query": "baco cora", "operator": "and"}}},
     {"match": {"text": {"query": "baco", "boost": 2.5}}},
-    {"match_phrase": {"text": "baco cora"}},
+    {"match_phrase": {"text": PHRASE}},
     {"bool": {"must": [{"match": {"text": "baco cora"}}]}},
     {"nested": {"path": "p", "query": {"match": {"text": "baco cora"}}}},
 ])
@@ -400,6 +509,7 @@ def test_fastpath_identical_to_bool_evaluator(dsl, q):
     assert dsl._fastpath_spec(q) is not None
     got = dsl.search({"query": q, "size": 10})
     want = _slow_search(dsl, q, 10)
+    assert len(got)
     assert got["doc_ord"].tolist() == want["doc_ord"].tolist()
     np.testing.assert_allclose(got["score"], want["score"], rtol=0, atol=1e-12)
 
@@ -779,7 +889,7 @@ def test_dis_max_and_boosting(dsl):
                       "negative": {"term": {"role": "system"}},
                       "negative_boost": 0.25}},
     ):
-        drv = dsl._eval(body, True)
-        dist = (dsl._eval_df(body, True).orderBy("doc_ord").toPandas())
+        drv = dsl._eval(body, True, dsl._driver)
+        dist = dsl._eval(body, True, dsl._spark).orderBy("doc_ord").toPandas()
         np.testing.assert_array_equal(dist["doc_ord"].to_numpy(), drv[0])
         np.testing.assert_allclose(dist["score"].to_numpy(), drv[1], rtol=0, atol=1e-9)

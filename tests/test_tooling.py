@@ -1,8 +1,9 @@
 """Scripts and examples stay runnable: each one compiles, every
 ``es_indexer_spark`` module or name it imports exists, and
 ``scripts/scaling_run.py`` parses its arguments; the Spark daemon module
-imports without writing to stdout; the query kernel and the term-dictionary
-read each have one home; query result schemas are StructTypes."""
+imports without writing to stdout; the query kernel, the term-dictionary
+read and the DSL tree walk each have one home; query result schemas are
+StructTypes."""
 
 from __future__ import annotations
 
@@ -108,6 +109,40 @@ def test_one_term_dictionary_read():
         len(re.findall(r"(?<!def )levenshtein_within\(", p.read_text())) for p in pkg
     )
     assert calls == 1
+
+
+def test_one_dsl_evaluator():
+    """Grep and AST guard: the DSL has one tree walk, run by both
+    executors. The distributed evaluator's helpers stay gone from the
+    package, the entry module and the tests (this guard excepted), and
+    ``query/dsl.py`` compares no string with a supported query type name,
+    so a query type is dispatched only through its ``_q_<kind>`` method.
+    Aggregation types are a separate namespace (``terms`` is in both), so
+    the aggregation methods are not checked."""
+    from es_indexer_spark.query.dsl import DslSearcher
+
+    this = pathlib.Path(__file__).resolve()
+    gone = re.compile(r"_eval_df|_bool_df|_meta_vec_df|_scores_or_zero")
+    paths = [*sorted((REPO / "es_indexer_spark").rglob("*.py")),
+             REPO / "__spark_entry__.py", *sorted((REPO / "tests").rglob("*.py"))]
+    found = [
+        (str(p.relative_to(REPO)), m.group(0))
+        for p in paths if p.resolve() != this
+        for m in gone.finditer(p.read_text())
+    ]
+    assert not found, found
+
+    kinds = {n[len("_q_"):] for n in dir(DslSearcher) if n.startswith("_q_")}
+    assert {"bool", "match", "match_all", "multi_match", "terms"} <= kinds
+    path = REPO / "es_indexer_spark" / "query" / "dsl.py"
+    compares = [
+        (fn.name, node.lineno, c.value)
+        for fn in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(fn, ast.FunctionDef) and not re.search("agg|bucket|metric", fn.name)
+        for node in ast.walk(fn) if isinstance(node, ast.Compare)
+        for c in ast.walk(node) if isinstance(c, ast.Constant) and c.value in kinds
+    ]
+    assert not compares, compares
 
 
 def _literal_schemas(path: pathlib.Path):
