@@ -191,8 +191,12 @@ class _Driver:
 
     def range(self, field: str, bounds: list[tuple[str, object]], score: float) -> Vec:
         col = self._column(field)
-        mask = reduce(and_, [getattr(col, op)(self._value(col, v)) for op, v in bounds])
-        return self._where(np.asarray(mask, dtype=bool), score)
+        mask = np.asarray(pd.notna(col))  # null never matches, as in Spark
+        vals = col[mask]
+        mask[mask] = reduce(and_, [
+            np.asarray(getattr(vals, op)(self._value(col, v)), dtype=bool) for op, v in bounds
+        ])
+        return self._where(mask, score)
 
     def exists(self, field: str, score: float) -> Vec:
         return self._where(pd.notna(self._column(field)), score)

@@ -21,16 +21,22 @@ and the term boosts — and ``scoring.evaluate`` / ``scoring.count`` run it:
 
 - **driver executor** (default below ``driver_max_docs``): the kernel
   runs once over the whole corpus against the resident norms. Posting
-  chunks for the query terms are read straight through pyarrow.dataset —
-  only the query's term-bucket fragments, whose footers are read once per
-  searcher — and kept as per-term numpy arrays in an LRU cache; no Spark
-  job — millisecond latency, the analogue of ES answering a query from
-  one coordinating node. Each postings file is one row group today, so
-  the ``term`` filter runs after a bucket file is read, not as row-group
-  pruning (ROADMAP item 4(b) gives segments term-sorted row groups).
-  Valid while per-corpus norms fit the driver.
+  chunks are read straight through pyarrow.dataset, by term bucket — a
+  bucket's footers are read once per searcher — with no Spark job:
+  millisecond latency, the analogue of ES answering a query from one
+  coordinating node. While the buckets a searcher has touched fit in
+  ``_RESIDENT_POSTINGS_BYTES`` (128 MiB of uncompressed postings), each
+  is read whole on first touch and kept resident as flat numpy columns
+  (``scoring.ChunkColumns``), so a query term's chunks are an array view
+  and its files are never read again — Lucene serving postings from
+  whole mmap'd segment files. A bucket that does not fit is served by a
+  per-term LRU of ``_CACHE_MAX_TERMS`` terms fetched with a ``term``
+  filter; each postings file is one row group today, so that filter
+  runs after the file is read, not as row-group pruning (ROADMAP item
+  4(b) gives segments term-sorted row groups). Driver memory is
+  O(budget) plus the LRU. Valid while per-corpus norms fit the driver.
 - **distributed executor** (``search_df`` / ``count_df`` /
-  ``phrase_search_df`` / ``suggest_df`` / ``scores_df``): posting rows
+  ``phrase_search_df`` / ``suggest_df``): posting rows
   for the query terms are cogrouped with doc_stats by segment, and each
   Spark task runs the same kernel over its segment (= shard), emitting a
   local top-k or its full score vector; a global sort of the tiny union
@@ -211,7 +217,11 @@ class IndexSearcher:
         # tbucket -> postings fragments of self._postings_ds, grouped on
         # the first fetch; a bucket's footers are read on its first use
         self._bucket_frags: dict[int, list] | None = None
-        self._footers_read: set[int] = set()
+        self._bucket_bytes: dict[int, int] = {}
+        # tbucket -> the whole bucket, resident until close() (see
+        # _postings_map), and the footer bytes of those buckets
+        self._resident: dict[int, scoring.ChunkColumns] = {}
+        self._resident_bytes = 0
         self._df_cache: dict[str, int] = {}
         self._doc_side_df: DataFrame | None = None
         # Spark-side sources are opened ONCE per searcher, and EAGERLY (the
@@ -247,14 +257,22 @@ class IndexSearcher:
         return cols
 
     _CACHE_MAX_TERMS = 4096
+    # uncompressed postings bytes (parquet footers) of the term buckets a
+    # searcher keeps resident; buckets past it use the per-term cache. Their
+    # numpy columns take ~2.2x the footer bytes (int64 offsets, float64
+    # block maxima), so this keeps ~280 MB of postings on the driver.
+    _RESIDENT_POSTINGS_BYTES = 128 << 20
 
     def _fragments(self, buckets: list[int]) -> list:
-        """The postings fragments of the given term buckets. They come
-        from the dataset listed at open (the snapshot contract); each
-        bucket's parquet footers are read once per searcher. A bucket file
-        is written as one row group, so a scan reads the whole file and
-        the ``term`` filter runs after the read; term-sorted row groups
-        that statistics can prune are ROADMAP item 4(b)."""
+        """The postings fragments of the given term buckets, one per
+        segment holding the bucket. They come from the dataset listed at
+        open (the snapshot contract); each bucket's parquet footers are
+        read once per searcher, and their uncompressed row-group bytes are
+        the bucket's size in ``_bucket_bytes``, which decides whether
+        ``_postings_map`` keeps it resident. A bucket file is written as
+        one row group, so a scan reads the whole file and a ``term``
+        filter runs after the read; term-sorted row groups that
+        statistics can prune are ROADMAP item 4(b)."""
         if self._bucket_frags is None:
             by_bucket: dict[int, list] = {}
             for f in self._postings_ds.get_fragments():
@@ -264,40 +282,66 @@ class IndexSearcher:
         out = []
         for b in buckets:
             frags = self._bucket_frags.get(b, [])
-            if b not in self._footers_read:
+            if b not in self._bucket_bytes:
                 for f in frags:
                     f.ensure_complete_metadata()
-                self._footers_read.add(b)
+                self._bucket_bytes[b] = sum(
+                    rg.total_byte_size for f in frags for rg in f.row_groups
+                )
             out.extend(frags)
         return out
 
+    def _scan_postings(self, buckets: list[int], filt: pc.Expression | None = None):
+        """One Arrow scan of the given term buckets' fragments, sorted by
+        ``scoring.sort_chunks``."""
+        ds = self._postings_ds
+        return scoring.sort_chunks(
+            pads.FileSystemDataset(
+                self._fragments(buckets), ds.schema, ds.format, ds.filesystem
+            ).to_table(columns=self._posting_cols(), filter=filt)
+        )
+
     def _postings_map(self, terms: list[str]) -> dict[str, scoring.TermChunks]:
-        """Posting chunks PER TERM as ``scoring.TermChunks`` arrays, via a
-        per-term LRU cache (the posting-list cache every IR engine keeps
-        hot — repeated/hot query terms skip the parquet read entirely).
-        Misses are fetched in one Arrow scan of their term buckets'
-        fragments with a ``term`` filter, sorted by
-        ``scoring.sort_chunks`` and split into compact per-term copies,
-        so evicting a term frees its memory."""
+        """Posting chunks PER TERM as ``scoring.TermChunks`` arrays, from
+        two sources (the posting-list cache every IR engine keeps hot):
+
+        - resident term buckets: on its first touch a bucket is admitted
+          while the resident buckets' size plus its own (``_fragments``)
+          stays within ``_RESIDENT_POSTINGS_BYTES``. It is read whole —
+          all of its fragments, one scan, no term filter — sorted once and
+          kept as a ``scoring.ChunkColumns`` until ``close()``; a term's
+          chunks are a view cut from it, so no later query reads the
+          bucket's files again;
+        - the per-term LRU of ``_CACHE_MAX_TERMS`` terms, for buckets that
+          did not fit: misses are fetched in one scan of their buckets'
+          fragments with a ``term`` filter and split into compact per-term
+          copies, so evicting a term frees its memory.
+
+        Memory is O(budget) plus the LRU; with the budget at 0 every term
+        takes the LRU path."""
         uniq = list(dict.fromkeys(terms))
-        missing = [t for t in uniq if t not in self._chunk_cache]
+        bucket_of = {t: term_bucket(t, self.n_buckets) for t in uniq}
+        for b in sorted(set(bucket_of.values()) - self._resident.keys()):
+            self._fragments([b])  # reads its footers once: _bucket_bytes[b]
+            size = self._bucket_bytes[b]
+            if self._resident_bytes + size <= self._RESIDENT_POSTINGS_BYTES:
+                self._resident[b] = scoring.ChunkColumns(self._scan_postings([b]))
+                self._resident_bytes += size
+        cached = [t for t in uniq if bucket_of[t] not in self._resident]
+        missing = [t for t in cached if t not in self._chunk_cache]
         if missing:
-            ds = self._postings_ds
-            frags = self._fragments(
-                sorted({term_bucket(t, self.n_buckets) for t in missing})
-            )
-            tbl = pads.FileSystemDataset(
-                frags, ds.schema, ds.format, ds.filesystem
-            ).to_table(columns=self._posting_cols(), filter=pc.field("term").isin(missing))
-            got = scoring.term_chunks(scoring.sort_chunks(tbl))
+            got = scoring.term_chunks(self._scan_postings(
+                sorted({bucket_of[t] for t in missing}), pc.field("term").isin(missing)
+            ))
             for t in missing:
                 self._chunk_cache[t] = got.get(t, scoring.EMPTY_CHUNKS)
-        out = {}
-        for t in uniq:
-            got = self._chunk_cache.pop(t)  # re-insert → LRU recency order
-            self._chunk_cache[t] = got
-            out[t] = got
-        # evict only AFTER the current query's terms were touched — evicting
+        for t in cached:
+            self._chunk_cache[t] = self._chunk_cache.pop(t)  # LRU recency order
+        out = {
+            t: self._resident[b].get(t) if b in self._resident else self._chunk_cache[t]
+            for t, b in bucket_of.items()
+        }
+        # evict only AFTER the current query's terms were read — evicting
         # first could drop a hit term of this very query (KeyError) once the
         # cache is full in a long-lived searcher
         while len(self._chunk_cache) > self._CACHE_MAX_TERMS:
@@ -889,7 +933,10 @@ class IndexSearcher:
         return IndexSearcher(self.spark, self.index_dir)
 
     def close(self) -> None:
-        """Release executor-side caches (the persisted doc-side norms)."""
+        """Release executor-side caches (the persisted doc-side norms) and
+        the resident term buckets."""
+        self._resident.clear()
+        self._resident_bytes = 0
         if self._doc_side_df is not None:
             self._doc_side_df.unpersist()
             self._doc_side_df = None
@@ -990,30 +1037,6 @@ class IndexSearcher:
             .select("doc_ord", "doc_id", "conv_id", "turn_idx", "role", "score")
             .orderBy(F.desc("score"), F.asc("doc_ord"))
         )
-
-    def scores_df(
-        self,
-        query: str | list[str],
-        *,
-        mode: str = "or",
-        term_boosts: dict[str, float] | None = None,
-        expand_synonyms: bool = False,
-        phrase_terms: list[str] | None = None,
-    ) -> DataFrame:
-        """FULL matching-doc score vector (doc_ord, score) — no top-k cut.
-        The distributed building block for multi-field merges and DSL
-        leaves, where per-field or per-clause vectors must combine BEFORE
-        any heap (a doc mid-rank in every field can be top overall).
-        ``mode`` and ``phrase_terms`` as in ``search_df``. Output size is
-        bounded by the docs matching the query terms, partitioned by
-        segment."""
-        plan = self._dist_plan(
-            query, expand_synonyms=expand_synonyms, phrase_terms=phrase_terms,
-            mode=mode, term_boosts=term_boosts,
-        )
-        if plan.matches_nothing():
-            return self.spark.createDataFrame([], _SCORES)
-        return self._segment_scores(plan)
 
     def _dist_plan(
         self,

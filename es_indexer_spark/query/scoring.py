@@ -33,8 +33,10 @@ Formatted Inverted Index" (PAPERS.md) rather than a pointer-walking DAAT
 loop, because numpy rewards batch-at-a-time work.
 
 Postings reach the kernels as ``TermChunks``: one term's chunk rows as
-flat numpy arrays with per-chunk offsets, split from an Arrow table
-(``term_chunks``) — the driver's parquet fetch or one Spark task's rows.
+flat numpy arrays with per-chunk offsets, cut from a ``ChunkColumns`` —
+an Arrow table of chunk rows converted to numpy once. The cut is a view
+for the driver's resident term buckets and a compact copy in
+``term_chunks`` (the driver's per-term cache, one Spark task's rows).
 No pandas object sits between the fetch and the top-k.
 
 Every query operator runs through one kernel: ``evaluate`` (top-k, or
@@ -124,11 +126,83 @@ def _lists(col: pa.ChunkedArray, dtype) -> tuple[np.ndarray, np.ndarray]:
     )
 
 
-def _rows(data: np.ndarray, off: np.ndarray, a: int, b: int) -> tuple[np.ndarray, np.ndarray]:
-    """Compact copy of rows [a, b) of a (flat values, row offsets) column,
-    with offsets rebased to 0."""
+def _rows(
+    data: np.ndarray, off: np.ndarray, a: int, b: int, copy: bool
+) -> tuple[np.ndarray, np.ndarray]:
+    """Rows [a, b) of a (flat values, row offsets) column, with offsets
+    rebased to 0: a view of the values, or a compact copy."""
     o = off[a : b + 1]
-    return data[o[0] : o[-1]].copy(), o - o[0]
+    rows = data[o[0] : o[-1]]
+    return (rows.copy() if copy else rows), o - o[0]
+
+
+class ChunkColumns:
+    """A ``sort_chunks``-ordered posting-chunk table as flat numpy arrays,
+    converted from Arrow once (zero-copy where the Arrow type already has
+    the kernel's dtype): the per-chunk columns, and each variable-length
+    column as (flat values, row offsets). ``terms`` holds the table's
+    sorted unique terms as a fixed-width UTF-8 ``bytes_`` array and
+    ``ends`` one past each term's last row, so a term's rows are found
+    with one ``searchsorted`` and no per-term Python object is kept."""
+
+    __slots__ = (
+        "terms", "ends", "seg", "min_doc", "max_doc", "df_chunk",
+        "doc", "tf", "pos", "run_lens", "block_last", "block_max_tf", "block_min_dl",
+    )
+
+    def __init__(self, table: pa.Table):
+        runs = pc.run_end_encode(table.column("term").combine_chunks())
+        self.ends = runs.run_ends.to_numpy().astype(np.int64)
+        self.terms = np.array(
+            runs.values.cast(pa.binary()).to_numpy(zero_copy_only=False), dtype=np.bytes_
+        )
+        self.seg, self.min_doc, self.max_doc, self.df_chunk = (
+            table.column(c).to_numpy().astype(np.int64, copy=False)
+            for c in ("seg", "min_doc", "max_doc", "df_chunk")
+        )
+        self.doc = _binary(table.column("doc_bytes"))
+        self.tf = _binary(table.column("tf_bytes"))
+        has_pos = "pos_bytes" in table.column_names
+        self.pos = _binary(table.column("pos_bytes")) if has_pos else None
+        self.run_lens = _lists(table.column("run_lens"), np.int64)
+        self.block_last = _lists(table.column("block_last"), np.int64)
+        self.block_max_tf = _lists(table.column("block_max_tf"), np.float64)[0]
+        self.block_min_dl = _lists(table.column("block_min_dl"), np.float64)[0]
+        # a resident bucket's views are shared by every query: a kernel
+        # that wrote through one would corrupt later results
+        for x in (self.seg, self.min_doc, self.max_doc, self.df_chunk, *self.doc, *self.tf,
+                  *(self.pos or ()), *self.run_lens, *self.block_last, self.block_max_tf,
+                  self.block_min_dl):
+            x.flags.writeable = False
+
+    def cut(self, i: int, copy: bool = False) -> TermChunks:
+        """The ``i``-th term's rows as ``TermChunks``: views of the flat
+        arrays, or with ``copy`` compact copies that hold no reference to
+        the other terms' buffers."""
+        a, b = (int(self.ends[i - 1]) if i else 0), int(self.ends[i])
+        c = TermChunks()
+        c.seg, c.min_doc, c.max_doc, c.df_chunk = (
+            x[a:b].copy() if copy else x[a:b]
+            for x in (self.seg, self.min_doc, self.max_doc, self.df_chunk)
+        )
+        c.doc_buf, c.doc_off = _rows(*self.doc, a, b, copy)
+        c.tf_buf, c.tf_off = _rows(*self.tf, a, b, copy)
+        c.pos_buf, c.pos_off = (None, None) if self.pos is None else _rows(*self.pos, a, b, copy)
+        c.run_lens, c.run_off = _rows(*self.run_lens, a, b, copy)
+        c.block_last, c.block_off = _rows(*self.block_last, a, b, copy)
+        lo, hi = self.block_last[1][a], self.block_last[1][b]  # the block columns share offsets
+        c.block_max_tf, c.block_min_dl = (
+            x[lo:hi].copy() if copy else x[lo:hi] for x in (self.block_max_tf, self.block_min_dl)
+        )
+        return c
+
+    def get(self, term: str) -> TermChunks:
+        """``term``'s chunks as views (``EMPTY_CHUNKS`` when absent)."""
+        key = term.encode()
+        i = int(np.searchsorted(self.terms, key))
+        if i == len(self.terms) or self.terms[i] != key:
+            return EMPTY_CHUNKS
+        return self.cut(i)
 
 
 def term_chunks(table: pa.Table) -> dict[str, TermChunks]:
@@ -136,37 +210,8 @@ def term_chunks(table: pa.Table) -> dict[str, TermChunks]:
     ``TermChunks``. Columns convert to numpy once for the whole table;
     each term then gets a compact copy of its rows, so it holds no
     reference to the other terms' buffers."""
-    if table.num_rows == 0:
-        return {}
-    runs = pc.run_end_encode(table.column("term").combine_chunks())
-    ends = runs.run_ends.to_numpy().astype(np.int64)
-    starts = np.concatenate(([0], ends[:-1]))
-    seg, min_doc, max_doc, df_chunk = (
-        table.column(c).to_numpy().astype(np.int64, copy=False)
-        for c in ("seg", "min_doc", "max_doc", "df_chunk")
-    )
-    doc = _binary(table.column("doc_bytes"))
-    tf = _binary(table.column("tf_bytes"))
-    pos = _binary(table.column("pos_bytes")) if "pos_bytes" in table.column_names else None
-    run_lens = _lists(table.column("run_lens"), np.int64)
-    last = _lists(table.column("block_last"), np.int64)
-    max_tf, _ = _lists(table.column("block_max_tf"), np.float64)
-    min_dl, _ = _lists(table.column("block_min_dl"), np.float64)
-
-    out = {}
-    for term, a, b in zip(runs.values.to_pylist(), starts.tolist(), ends.tolist()):
-        c = TermChunks()
-        c.seg, c.min_doc = seg[a:b].copy(), min_doc[a:b].copy()
-        c.max_doc, c.df_chunk = max_doc[a:b].copy(), df_chunk[a:b].copy()
-        c.doc_buf, c.doc_off = _rows(*doc, a, b)
-        c.tf_buf, c.tf_off = _rows(*tf, a, b)
-        c.pos_buf, c.pos_off = _rows(*pos, a, b) if pos is not None else (None, None)
-        c.run_lens, c.run_off = _rows(*run_lens, a, b)
-        c.block_last, c.block_off = _rows(*last, a, b)
-        lo, hi = last[1][a], last[1][b]  # the block columns share offsets
-        c.block_max_tf, c.block_min_dl = max_tf[lo:hi].copy(), min_dl[lo:hi].copy()
-        out[term] = c
-    return out
+    cols = ChunkColumns(table)
+    return {t.decode(): cols.cut(i, copy=True) for i, t in enumerate(cols.terms.tolist())}
 
 
 def pandas_chunks(pdf: pd.DataFrame) -> dict[str, TermChunks]:

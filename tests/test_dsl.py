@@ -288,6 +288,7 @@ PARITY = {
     "terms_text": {"terms": {"text": ["baco", "cora"], "boost": 1.5}},
     "range": {"range": {"turn_idx": {"gte": 1, "lt": 4, "boost": 2.0}}},
     "range_ts": {"range": {"ts": {"gte": "2023-11-17T00:13:20", "boost": 2.0}}},
+    "range_nullable": {"range": {"tool": {"gte": "c", "boost": 2.0}}},
     "term_ts": {"term": {"ts": {"value": "2023-11-17T00:13:20", "boost": 2.0}}},
     "numbers_as_strings": {"bool": {"must": [{"terms": {"turn_idx": ["1", "3"]}}],
                                     "filter": [{"range": {"turn_idx": {"lt": "3"}}}]}},

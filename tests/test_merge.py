@@ -115,6 +115,67 @@ def test_partial_merge_leaving_newer_batch_ranks_like_oracle(spark, tmp_path):
     s.close()
 
 
+def test_resident_and_scanned_postings_agree(spark, tmp_path):
+    """The driver's two posting sources — whole term buckets kept
+    resident, and the per-term cache filled by term-filtered scans — give
+    equal chunks and bit-identical results at a posting budget of
+    everything, nothing and about half, on a lifecycle layout: build,
+    append, delete, then a merge that leaves a newer batch unmerged."""
+    from es_indexer_spark.index.build import term_bucket
+    from es_indexer_spark.query.scoring import TermChunks
+
+    idx = str(tmp_path / "idx")
+    build_index(spark, _corpus(spark, 0, 30), idx, n_buckets=32, n_segments=2,
+                with_positions=True)
+    for lo, hi in ((30, 40), (40, 50), (50, 60)):
+        append_batch(spark, _corpus(spark, lo, hi), idx)
+    assert delete_docs(spark, idx, ["conv00000003:1", "conv00000044:2"]) == 2
+    assert merge_segments(spark, idx, bids=[1, 2])["batches_merged"] == 2
+
+    full, none, half = (IndexSearcher(spark, idx) for _ in range(3))
+    try:
+        n = full.n_buckets
+        full._fragments(list(range(n)))
+        total = sum(full._bucket_bytes.values())
+        full._RESIDENT_POSTINGS_BYTES = 1 << 62
+        none._RESIDENT_POSTINGS_BYTES = 0
+        half._RESIDENT_POSTINGS_BYTES = total // 2
+
+        vocab = full.term_dictionary()["term"].tolist()
+        absent = "zzz_absent"
+        n_segs = max(len(f) for f in full._bucket_frags.values())
+        sparse = min(b for b, f in full._bucket_frags.items() if len(f) < n_segs)
+        buckets = {term_bucket("the", n), term_bucket(absent, n), sparse}
+        assert len(buckets) == 3
+        terms = [t for t in vocab if term_bucket(t, n) in buckets] + [absent]
+        got = [s._postings_map(terms) for s in (full, none, half)]
+        assert len(got[0]["the"]) > 1 and len(got[0][absent]) == 0
+        for t in terms:
+            for field in TermChunks.__slots__:
+                want = getattr(got[0][t], field)
+                for g in got[1:]:
+                    assert np.array_equal(getattr(g[t], field), want), (t, field)
+
+        rb = {"assistant": 2.0, "system": 0.5}
+        for q in (*QUERIES, ["cora", "dala", "the"], vocab[::37]):
+            for mode in ("or", "and"):
+                for strategy in ("exhaustive", "blockmax"):
+                    for boosts in (None, rb):
+                        res = [s.search(q, k=15, mode=mode, strategy=strategy,
+                                        role_boosts=boosts) for s in (full, none, half)]
+                        for r in res[1:]:
+                            assert r["doc_id"].tolist() == res[0]["doc_id"].tolist()
+                            np.testing.assert_array_equal(r["score"], res[0]["score"])
+        assert full._resident and not full._chunk_cache
+        assert none._resident_bytes == 0 and none._chunk_cache
+        assert half._resident and half._chunk_cache
+        assert 0 < half._resident_bytes <= total // 2
+    finally:
+        for s in (full, none, half):
+            s.close()
+    assert not full._resident and full._resident_bytes == 0
+
+
 def test_tiered_policy_groups_consecutive_same_tier():
     infos = [
         {"bid": 0, "rows": 5000, "min_ord": 0, "max_ord": 4999},

@@ -69,13 +69,16 @@ def test_spark_daemon_module_imports_silently():
 
 
 def test_one_query_kernel():
-    """Grep guard: the scoring kernels and ``TermView`` construction live
-    only in ``query/scoring.py``, which both executors call, and the
-    package builds its segment cogroup in one place — a second copy of an
-    operator's scoring logic breaks this."""
+    """Grep and AST guard: the scoring kernels and ``TermView`` and
+    ``TermChunks`` construction live only in ``query/scoring.py``, which
+    both executors call, and the package builds its segment cogroup in
+    one place — a second copy of an operator's scoring logic breaks this.
+    Besides the empty value, one function there cuts a term's chunk rows,
+    for the resident buckets, the per-term cache and the Spark tasks."""
     pkg = REPO / "es_indexer_spark"
     kernel = pkg / "query" / "scoring.py"
-    names = ("phrase_docs", "_score_gathered", "exhaustive_topk", "blockmax_topk", "TermView(")
+    names = ("phrase_docs", "_score_gathered", "exhaustive_topk", "blockmax_topk",
+             "TermView(", "TermChunks(")
     cogroups = 0
     for path in sorted(pkg.rglob("*.py")):
         src = path.read_text()
@@ -84,6 +87,14 @@ def test_one_query_kernel():
             found = [n for n in names if n in src]
             assert not found, (str(path.relative_to(REPO)), found)
     assert cogroups == 1
+    builders = {
+        fn.name
+        for fn in ast.walk(ast.parse(kernel.read_text(), str(kernel)))
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "TermChunks"
+    }
+    assert len(builders - {"_empty_chunks"}) == 1, builders
 
 
 def test_one_term_dictionary_read():
@@ -113,16 +124,17 @@ def test_one_term_dictionary_read():
 
 def test_one_dsl_evaluator():
     """Grep and AST guard: the DSL has one tree walk, run by both
-    executors. The distributed evaluator's helpers stay gone from the
-    package, the entry module and the tests (this guard excepted), and
-    ``query/dsl.py`` compares no string with a supported query type name,
-    so a query type is dispatched only through its ``_q_<kind>`` method.
+    executors. The distributed evaluator's helpers and the uncalled
+    ``IndexSearcher.scores_df`` stay gone from the package, the entry
+    module and the tests (this guard excepted), and ``query/dsl.py``
+    compares no string with a supported query type name, so a query
+    type is dispatched only through its ``_q_<kind>`` method.
     Aggregation types are a separate namespace (``terms`` is in both), so
     the aggregation methods are not checked."""
     from es_indexer_spark.query.dsl import DslSearcher
 
     this = pathlib.Path(__file__).resolve()
-    gone = re.compile(r"_eval_df|_bool_df|_meta_vec_df|_scores_or_zero")
+    gone = re.compile(r"_eval_df|_bool_df|_meta_vec_df|_scores_or_zero|scores_df")
     paths = [*sorted((REPO / "es_indexer_spark").rglob("*.py")),
              REPO / "__spark_entry__.py", *sorted((REPO / "tests").rglob("*.py"))]
     found = [
