@@ -101,15 +101,16 @@ def _ft_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(out[["doc_id", "score"]])
 
 
+def _dictionary_df(spark: SparkSession, s) -> DataFrame:
+    """(term, df, total_tf) of a searcher's term dictionary: the sums over
+    the index's per-batch dictionaries."""
+    return spark.createDataFrame(s.term_dictionary()[["term", "df", "total_tf"]])
+
+
 def _ft_term_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document frequency straight from the index's term dictionary —
     validates tokenize → shuffle-by-term → encode → term_stats."""
-    s = _index_for(spark, sf_dir)
-    return (
-        spark.read.parquet(s.term_stats_path)
-        .select("term", F.col("df").cast("long").alias("df"),
-                F.col("total_tf").cast("long").alias("total_tf"))
-    )
+    return _dictionary_df(spark, _index_for(spark, sf_dir))
 
 
 def _ft_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -539,12 +540,7 @@ _SQL_LIVE_AFTER_CHURN = f"""(
 
 def _ft_churn_term_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Term dictionary read out of the post-churn COMPACTED index."""
-    s = _churn_searcher(spark, sf_dir)
-    return (
-        spark.read.parquet(s.term_stats_path)
-        .select("term", F.col("df").cast("long").alias("df"),
-                F.col("total_tf").cast("long").alias("total_tf"))
-    )
+    return _dictionary_df(spark, _churn_searcher(spark, sf_dir))
 
 
 def _ft_churn_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -599,12 +595,7 @@ def _merged_searcher(spark: SparkSession, sf_dir: str) -> "object":
 def _ft_merged_term_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Term dictionary read out of the expunge-MERGED index: df/total_tf
     must equal the live corpus exactly (deleted docs left the postings)."""
-    s = _merged_searcher(spark, sf_dir)
-    return (
-        spark.read.parquet(s.term_stats_path)
-        .select("term", F.col("df").cast("long").alias("df"),
-                F.col("total_tf").cast("long").alias("total_tf"))
-    )
+    return _dictionary_df(spark, _merged_searcher(spark, sf_dir))
 
 
 def _ft_merged_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1204,19 +1195,6 @@ def _tp_curation(spark, sf_dir):
     return cleaning.curate(docs, bench, quality_min=0.65, sample_rate=0.5)
 
 
-def _tp_media_block_means(spark, sf_dir):
-    """Binary-column media pipeline, value-proven end to end: build real
-    binary image payloads from a closed-form pixel formula keyed by
-    doc_id, then DECODE THE BYTES (header parse + frombuffer) and
-    block-mean resize to 4×4 in numpy. The oracle computes the same
-    block means analytically from the formula without seeing a byte —
-    a hash match proves the whole encode→decode→resize round trip."""
-    from es_indexer_spark.ops import multimodal
-
-    docs = _t(spark, sf_dir, "documents")
-    return multimodal.image_block_means(multimodal.synth_formula_images(docs))
-
-
 _Q_VEC = None
 
 
@@ -1421,7 +1399,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tp_pack_stats": _tp_pack_stats,
         "tp_pii_scrub": _tp_pii_scrub,
         "tp_curation": _tp_curation,
-        "tp_media_block_means": _tp_media_block_means,
         "tp_decontaminate": _tp_decontaminate,
         "tp_embedding_dups": _tp_embedding_dups,
         "tp_embedding_dups_lsh": _tp_embedding_dups_lsh,  # membership inv.
@@ -1448,7 +1425,6 @@ def oracle_sql() -> dict[str, str]:
         conversations,
         clustering,
         dedup,
-        multimodal,
         packing,
         sampling,
         similarity,
@@ -1533,7 +1509,6 @@ def oracle_sql() -> dict[str, str]:
         "tp_curation": cleaning.sql_curate(
             _CURATE_BENCH_RATE, quality_min=0.65, sample_rate=0.5
         ),
-        "tp_media_block_means": multimodal.sql_image_block_means(),
         "tp_pii_scrub": cleaning.sql_pii_scrub(
             table=f"(select doc_id, {cleaning.sql_inject_pii()} as text from documents)"
         ),

@@ -41,10 +41,12 @@ Dataflow (all DataFrame ops; Python only in Arrow-vectorized kernels):
    + ``beginWithUuid`` resume marker analogue
    (``IndexerMetadataServiceImpl.java:478-523``). Resume skips completed
    batches.
-8. ``term_stats`` (term → df, total_tf, n_chunks) hive-partitioned by
-   capped term length, term-sorted within — the term dictionary (fuzzy
-   length bands = partition pruning, prefix scans = parquet row-group
-   range pruning).
+8. ``term_stats/batch=<b>`` (term → df, total_tf) of each batch's own
+   postings, written right after them (``write_term_stats``) and
+   hive-partitioned by capped term length, term-sorted within — the
+   batch's term dictionary (fuzzy length bands = partition pruning,
+   prefix scans = parquet row-group range pruning); readers sum it
+   across batches.
 9. validation gate (indexed count == source count; stricter than the
    reference's >=90 % at ``IndexerMetadataServiceImpl.java:651-655``) then
    atomic CURRENT swap (``catalog.publish_version``).
@@ -104,14 +106,14 @@ def term_bucket(term: str, n_buckets: int) -> int:
 def term_bucket_col(n_buckets: int, term_col: str = "term"):
     """JVM-side mirror of ``term_bucket``: Spark's ``crc32`` is the same
     CRC-32 polynomial as ``zlib.crc32`` (asserted in tests), so the bucket
-    assignment stays whole-stage-codegen'd instead of a per-row Python UDF
-    over the whole term dictionary."""
+    assignment stays whole-stage-codegen'd instead of a per-row Python
+    UDF."""
     return (F.crc32(F.encode(F.col(term_col), "UTF-8")) % n_buckets).cast("int")
 
 
 # term_stats is hive-partitioned by capped term length: fuzzy-AUTO
 # expansion (|len(term) - len(q)| <= d) becomes a PARTITION filter —
-# Catalyst never lists, opens or scans dictionary files outside the
+# the dictionary scan never opens or reads dictionary files outside the
 # length band, the columnar analogue of Lucene's FST automaton walk
 # pruning the TermsEnum (IndexerServiceIT.java:219-238 exercises
 # fuzziness AUTO). Prefix expansion gains tlen >= len(prefix) for free.
@@ -129,6 +131,62 @@ def term_len_band(qlen: int, d: int) -> tuple[int, int]:
     query of length ``qlen`` (capped — at the cap the band is a superset
     and the exact filters decide)."""
     return max(0, min(qlen - d, TLEN_CAP)), min(qlen + d, TLEN_CAP)
+
+
+# batch dictionaries of at most this many posting-chunk rows (parquet
+# footer counts, no data read) are aggregated on the driver through
+# pyarrow — ~50 ms for a micro-batch instead of a multi-stage Spark job;
+# larger batches run the Spark groupBy. Both write the same layout.
+DICT_DRIVER_MAX_ROWS = 2_000_000
+
+
+def write_term_stats(spark: SparkSession, postings_dir: str, out_dir: str) -> None:
+    """Write the term dictionary of ONE batch: (term, df, total_tf) summed
+    over the batch's posting chunks in ``postings_dir``, into ``out_dir``
+    (``term_stats/batch=<bid>``, overwritten), hive-partitioned by capped
+    term length and term-sorted within each ``tlen=K`` file. Every batch
+    owns its dictionary, Lucene's per-segment term statistics; readers
+    sum df and total_tf across the batches of their snapshot
+    (``IndexSearcher``). Build, append and merge all write through here,
+    so a write's dictionary work is O(batch)."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as papq
+
+    ds = pads.dataset(postings_dir, partitioning="hive", format="parquet")
+    n_rows = ds.count_rows()
+    if n_rows > DICT_DRIVER_MAX_ROWS:
+        (
+            spark.read.parquet(postings_dir)
+            .groupBy("term")
+            .agg(F.sum("df_chunk").alias("df"), F.sum("sum_tf").alias("total_tf"))
+            .withColumn("tlen", term_len_col())
+            # hash on tlen, not repartitionByRange (whose sampling pass
+            # re-runs the aggregation): one term-sorted file per tlen dir
+            .repartition(min(TLEN_CAP + 1, spark.sparkContext.defaultParallelism), "tlen")
+            .sortWithinPartitions("tlen", "term")
+            .write.mode("overwrite")
+            .partitionBy("tlen")
+            .parquet(out_dir)
+        )
+        return
+    shutil.rmtree(out_dir, ignore_errors=True)
+    os.makedirs(out_dir)
+    if not n_rows:
+        return
+    agg = ds.to_table(columns=["term", "df_chunk", "sum_tf"]).group_by("term").aggregate(
+        [("df_chunk", "sum"), ("sum_tf", "sum")]
+    )
+    tbl = pa.table({
+        "term": agg["term"], "df": agg["df_chunk_sum"], "total_tf": agg["sum_tf_sum"],
+    }).sort_by("term")
+    tlen = pc.min_element_wise(pc.utf8_length(tbl["term"]), TLEN_CAP).to_numpy()
+    for k in np.unique(tlen):
+        d = os.path.join(out_dir, f"tlen={k}")
+        os.makedirs(d)
+        papq.write_table(tbl.filter(tlen == k), os.path.join(d, "part-0.parquet"))
 
 
 def _encode_positions_flat(
@@ -570,7 +628,7 @@ def build_index(
     ds_meta = catalog.read_json(ds_ckpt)
     doc_stats = spark.read.parquet(doc_stats_path)
 
-    # ---- stage 2: postings, one idempotent batch at a time ----------------
+    # ---- stage 2: postings + their dictionary, one idempotent batch at a time
     postings_root = os.path.join(vdir, "postings")
     result = BuildResult(
         vdir, n_docs, ds_meta["avgdl"], ds_meta["total_tokens"]
@@ -628,6 +686,9 @@ def build_index(
             chunks=("postings", "size"), postings=("postings", "sum"),
             bytes=("bytes", "sum"),
         )
+        # the batch's own dictionary, before its checkpoint: resume skips both
+        t_dict = time.time()
+        write_term_stats(spark, batch_path, os.path.join(vdir, "term_stats", f"batch={b}"))
         turns = hi - lo  # ordinals are dense, so the slice size is exact
         segs = {
             str(int(seg)): {
@@ -647,44 +708,17 @@ def build_index(
                 "postings_emitted": int(sum(s["postings"] for s in segs.values())),
                 "bytes_compressed": int(sum(s["bytes_compressed"] for s in segs.values())),
                 "segments": segs,
-                "wall_s": round(time.time() - t0, 3),
+                "wall_s": round(t_dict - t0, 3),
+                "term_stats_s": round(time.time() - t_dict, 3),
             },
         )
         result.batches_run += 1
-
-    # ---- stage 3: term dictionary -----------------------------------------
-    ts_ckpt = os.path.join(ckpt_dir, "term_stats.json")
-    term_stats_path = os.path.join(vdir, "term_stats")
-    if not (resume and os.path.exists(ts_ckpt)):
-        t0 = time.time()
-        postings = spark.read.parquet(postings_root)
-        (
-            postings.groupBy("term")
-            .agg(
-                F.sum("df_chunk").alias("df"),
-                F.sum("sum_tf").alias("total_tf"),
-                F.count("*").alias("n_chunks"),
-                F.max(F.array_max("block_max_tf")).alias("max_tf"),
-            )
-            .withColumn("tbucket", term_bucket_col(n_buckets))
-            .withColumn("tlen", term_len_col())
-            # hash, not repartitionByRange: the range partitioner's
-            # sampling pass re-evaluates the whole dictionary aggregation
-            # (a second full postings scan per build — guide §2.4);
-            # hashing on tlen alone keeps one term-sorted file per length
-            # dir, so tlen + row-group pruning are unchanged
-            .repartition(max(1, n_buckets // 16), "tlen")
-            .sortWithinPartitions("tlen", "term")
-            .write.mode("overwrite")
-            .partitionBy("tlen")
-            .parquet(term_stats_path)
-        )
-        import pyarrow.dataset as _pads
-
-        n_terms = _pads.dataset(term_stats_path).count_rows()
-        catalog.write_json(
-            ts_ckpt, {"n_terms": n_terms, "wall_s": round(time.time() - t0, 3)}
-        )
+    # the build's term_stats stage: the batches' summed dictionary time
+    dict_s = sum(
+        catalog.read_json(os.path.join(ckpt_dir, f"batch_{b:05d}.json"))["term_stats_s"]
+        for b in range(n_batches)
+    )
+    catalog.write_json(os.path.join(ckpt_dir, "term_stats.json"), {"wall_s": round(dict_s, 3)})
 
     # ---- manifest + atomic publish ----------------------------------------
     postings_total = bytes_total = 0
@@ -698,7 +732,6 @@ def build_index(
         {
             "avgdl": ds_meta["avgdl"],
             "total_tokens": ds_meta["total_tokens"],
-            "n_terms": catalog.read_json(ts_ckpt)["n_terms"],
             "postings": postings_total,
             "bytes_compressed": bytes_total,
             # raw = 8B doc ordinal + 4B tf per posting, the uncompressed

@@ -37,10 +37,12 @@ Semantics (Lucene parity):
   the old blocks it overlaps — a conservative (≤ true) bound, and WAND
   ceilings only need ``min_dl`` to never exceed the true minimum.
   ``block_max_tf``/``block_last`` are recomputed exactly.
-- **BM25 stats**: ``n_docs``/``avgdl``/``df``/``total_tf`` are recomputed
-  from the post-merge doc_stats/postings (same publish discipline as
-  ``append_batch``), so after a full expunging merge scores equal a
-  from-scratch build over the live corpus. NOTE Lucene-parity caveat:
+- **BM25 stats**: the merged batch writes its own term dictionary
+  (``term_stats/batch=<bid>``, df/total_tf of its surviving postings)
+  beside its postings, and the victims' dictionaries leave with them, so
+  the dictionary work is O(victims); ``n_docs``/``avgdl`` are recomputed
+  from the post-merge doc_stats. After a full expunging merge scores
+  equal a from-scratch build over the live corpus. NOTE Lucene-parity caveat:
   tombstones in UNMERGED batches still count toward N/avgdl/df until a
   merge or compaction reaches them — exactly ES behaviour, where deleted
   docs affect scores until their segment is merged.
@@ -53,15 +55,17 @@ staged directories are installed, victims removed, stats republished —
 durable point or discards an unstaged one. Readers opened in the short
 install window may see duplicated postings for merged docs; merges are an
 administrative operation like compaction — open searchers older than the
-merge must ``refresh()`` (the documented snapshot-horizon contract,
+merge must ``refresh()`` (the documented snapshot contract,
 ``engine.IndexSearcher`` docstring). The listed-manifest upgrade path
 (Iceberg-style file manifests, ``catalog.py``) removes that window.
 
-At 100 TB: a merge touches ONLY its victim tier (the policy keeps tiers
-geometric, so the steady-state write amplification is O(log N) like
-Lucene's), runs as ordinary Spark jobs partitioned by ``tbucket``, and
-holds no O(corpus) driver state — the only driver arrays are the
-tombstones inside the victim ranges (Lucene's liveDocs asymptotics).
+At 100 TB: a merge rewrites ONLY its victim tier — postings, doc_stats
+and dictionary (the policy keeps tiers geometric, so the steady-state
+write amplification is O(log N) like Lucene's) — runs as ordinary Spark
+jobs partitioned by ``tbucket``, and holds no O(corpus) driver state:
+the only driver arrays are the tombstones (Lucene's liveDocs
+asymptotics). One step is still O(corpus): ``_finalize_stats``
+recomputes N/avgdl with a Spark job over all of doc_stats.
 """
 
 from __future__ import annotations
@@ -76,8 +80,9 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .. import codec
+from ..planlimits import drop_ordinals
 from . import catalog
-from .build import _enc_schema, encode_flat, merge_chunks
+from .build import _enc_schema, encode_flat, merge_chunks, write_term_stats
 
 BLOCK = codec.BLOCK_SIZE
 
@@ -293,12 +298,11 @@ def _next_merge_bid(vdir: str) -> int:
     return nxt
 
 
-def _finalize_stats(spark: SparkSession, vdir: str, manifest: dict, bid: int) -> dict:
-    """Republished global stats + term dictionary after a merge — same
-    discipline as append_batch (N/avgdl from doc_stats, df/total_tf from
-    postings), with the same current+previous dictionary retention."""
-    from ..streaming.incremental import _rebuild_term_stats
-
+def _finalize_stats(spark: SparkSession, vdir: str) -> None:
+    """Republish N/avgdl after a merge from the post-merge doc_stats. The
+    dictionary needs no republish: the merged batch wrote its own, and
+    the victims' left with them. This still scans all of doc_stats in one
+    Spark job (idempotent, so recovery can repeat it)."""
     # single-writer per index is the operating assumption (as in the
     # reference's one-indexer-per-alias deployment), but re-reading the
     # manifest here keeps an interleaved append's next_ord/n_docs bump
@@ -309,11 +313,8 @@ def _finalize_stats(spark: SparkSession, vdir: str, manifest: dict, bid: int) ->
         .agg(F.count("*").alias("n"), F.sum("dl").alias("tot"))
         .collect()[0]
     )
-    prev_ts_dir = manifest.get("term_stats_dir", "term_stats")
-    ts_dir = _rebuild_term_stats(spark, vdir, int(manifest["n_buckets"]), bid)
     n_live, tot = int(stats["n"]), int(stats["tot"] or 0)
     manifest.update({
-        "term_stats_dir": ts_dir,
         "n_docs": n_live,
         "total_tokens": tot,
         # avgdl = total/n exactly as build_index and append_batch compute
@@ -322,12 +323,10 @@ def _finalize_stats(spark: SparkSession, vdir: str, manifest: dict, bid: int) ->
         "avgdl": (tot / n_live) if n_live else 0.0,
     })
     catalog.write_json(os.path.join(vdir, "manifest.json"), manifest)
-    if prev_ts_dir != ts_dir:
-        keep = {ts_dir, prev_ts_dir}
-        for d in os.listdir(vdir):
-            if (d == "term_stats" or d.startswith("term_stats_b")) and d not in keep:
-                shutil.rmtree(os.path.join(vdir, d), ignore_errors=True)
-    return manifest
+
+
+# the per-batch subdirectories a merge stages, installs and removes
+_BATCH_DIRS = ("doc_stats", "postings", "term_stats")
 
 
 def _install_and_clean(vdir: str, intent: dict) -> None:
@@ -336,7 +335,7 @@ def _install_and_clean(vdir: str, intent: dict) -> None:
     re-enter at any point."""
     new_bid = intent["new_bid"]
     stage = os.path.join(vdir, "merge_staging", str(new_bid))
-    for sub in ("doc_stats", "postings"):
+    for sub in _BATCH_DIRS:
         src = os.path.join(stage, sub)
         dst = os.path.join(vdir, sub, f"batch={new_bid}")
         if os.path.isdir(src) and not os.path.isdir(dst):
@@ -351,7 +350,7 @@ def _install_and_clean(vdir: str, intent: dict) -> None:
             )
     _write_intent(vdir, {**intent, "state": "installed"})
     for vb in intent["victims"]:
-        for sub in ("doc_stats", "postings"):
+        for sub in _BATCH_DIRS:
             shutil.rmtree(os.path.join(vdir, sub, f"batch={vb}"),
                           ignore_errors=True)
     shutil.rmtree(stage, ignore_errors=True)
@@ -367,17 +366,26 @@ def _write_intent(vdir: str, intent: dict) -> None:
 
 
 def _rewrite_tombstones(vdir: str, expunged: np.ndarray) -> None:
-    from ..streaming.incremental import load_tombstones
+    """Drop the expunged ordinals from the tombstone store. The remaining
+    set is written as a new delta FIRST and the older deltas are removed
+    after it, so a crash at any point leaves a superset of the remaining
+    set on disk — expunged ordinals are never reused, so masking them is
+    harmless — and ``recover_merges`` repeats the rewrite."""
+    from ..streaming.incremental import (
+        _tombstone_deltas,
+        _write_tombstone_delta,
+        load_tombstones,
+    )
 
-    remaining = load_tombstones(vdir)
-    if len(expunged):
-        remaining = remaining[~np.isin(remaining, expunged)]
-    shutil.rmtree(os.path.join(vdir, "tombstones_pq"), ignore_errors=True)
-    tj = os.path.join(vdir, "tombstones.json")
-    if len(remaining):
-        catalog.write_json(tj, {"doc_ords": [int(x) for x in remaining]})
-    elif os.path.exists(tj):
-        os.remove(tj)
+    tombs = load_tombstones(vdir)
+    gone = np.isin(tombs, expunged)
+    if not gone.any():
+        return
+    older = _tombstone_deltas(vdir)
+    if not gone.all():
+        _write_tombstone_delta(vdir, tombs[~gone])
+    for i in older:
+        shutil.rmtree(os.path.join(vdir, "tombstones_pq", f"batch={i}"))
 
 
 def recover_merges(spark: SparkSession, index_dir: str) -> int:
@@ -401,20 +409,19 @@ def recover_merges(spark: SparkSession, index_dir: str) -> int:
         stage = os.path.join(vdir, "merge_staging", str(new_bid))
         installed = all(
             os.path.isdir(os.path.join(vdir, sub, f"batch={new_bid}"))
-            for sub in ("doc_stats", "postings")
+            for sub in _BATCH_DIRS
         )
         staged_ok = all(
             os.path.isdir(os.path.join(stage, sub))
             or os.path.isdir(os.path.join(vdir, sub, f"batch={new_bid}"))
-            for sub in ("doc_stats", "postings")
+            for sub in _BATCH_DIRS
         )
         if (intent.get("state") == "staged" and staged_ok) or installed:
             # staged durably (or partially installed): roll FORWARD
             _install_and_clean(vdir, intent)
-            manifest = catalog.read_json(os.path.join(vdir, "manifest.json"))
             _rewrite_tombstones(vdir, np.asarray(intent.get("expunged_ords", []),
                                                  dtype=np.int64))
-            _finalize_stats(spark, vdir, manifest, new_bid)
+            _finalize_stats(spark, vdir)
             _write_intent(vdir, {**intent, "state": "done"})
         else:
             # never fully staged: discard the attempt
@@ -500,8 +507,7 @@ def merge_segments(
         ds_dirs = [os.path.join(vdir, "doc_stats", f"batch={b}") for b in victims]
         ds = spark.read.parquet(*ds_dirs)
         if do_expunge:
-            from ..streaming.incremental import mask_tombstones
-            ds = mask_tombstones(ds, tombs_in)
+            ds = drop_ordinals(ds, tombs_in)
         (
             # cluster by doc_ord on write: the keyless repartition here
             # round-robined rows, destroying the ordinal clustering the
@@ -552,6 +558,9 @@ def merge_segments(
         merged.write.mode("overwrite").partitionBy("tbucket").parquet(
             os.path.join(stage, "postings")
         )
+        # ---- stage the merged batch's dictionary, O(merged postings) ---
+        write_term_stats(spark, os.path.join(stage, "postings"),
+                         os.path.join(stage, "term_stats"))
 
         # ---- durable intent, then install ------------------------------
         intent = {
@@ -565,7 +574,7 @@ def merge_segments(
         if do_expunge:
             _rewrite_tombstones(vdir, tombs_in)
             tombs = load_tombstones(vdir)
-        manifest = _finalize_stats(spark, vdir, manifest, new_bid)
+        _finalize_stats(spark, vdir)
         _write_intent(vdir, {**intent, "state": "done"})
         total_expunged += len(tombs_in) if do_expunge else 0
         results.append({

@@ -6,15 +6,14 @@ deduplication (exact, MinHash+LSH, SimHash, n-gram Jaccard,
 embedding-cosine), duplicate-cluster resolution (connected components +
 keep-first canonicalization), similarity search (brute-force +
 LSH-bucketed ANN), text analysis (language-ID, quality scoring, token
-counting, fingerprinting), deterministic sampling / domain mixing,
-sequence packing, and multimodal column plumbing. Everything is
-DataFrame ops + Arrow-vectorized kernels — no per-row Python.
+counting, fingerprinting), deterministic sampling / domain mixing and
+sequence packing. Everything is DataFrame ops + Arrow-vectorized
+kernels — no per-row Python.
 """
 
 from . import (  # noqa: F401
     clustering,
     dedup,
-    multimodal,
     packing,
     sampling,
     similarity,

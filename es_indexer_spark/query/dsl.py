@@ -317,9 +317,9 @@ class _Spark:
 
     def live(self) -> DataFrame:
         """The live doc_stats rows."""
-        from ..streaming.incremental import mask_tombstones
+        from ..planlimits import drop_ordinals
 
-        return mask_tombstones(self.s.doc_stats_df(), self.s.tombstones)
+        return drop_ordinals(self.s.doc_stats_df(), self.s.tombstones)
 
     def _where(self, cond, score: float) -> DataFrame:
         return self.live().filter(cond).select("doc_ord", F.lit(score).alias("score"))

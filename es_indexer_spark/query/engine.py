@@ -46,16 +46,20 @@ and the term boosts — and ``scoring.evaluate`` / ``scoring.count`` run it:
   public ``search``/``count``/``phrase_search``/``suggest`` auto-dispatch
   between executors on corpus size.
 
-The term dictionary is read one way for both executors
-(``_dictionary_slices``), and the same dispatch picks its source: the
-resident sorted arrays below ``driver_max_docs``, above it a pyarrow scan
-of term_stats pruned by its ``tlen`` partitions and term row-group
-statistics — no Spark job either way. Prefix, fuzzy, wildcard and regexp
-expansion and the global dfs are each written once over it. On the scan
-source driver memory is O(one record batch + max_expansions); driver CPU
-is O(scanned tlen/term range), so a regexp with no literal prefix scans
-the whole dictionary on the driver. Python ``re`` is the one pattern
-dialect of term expansion.
+Every batch owns its term dictionary (``term_stats/batch=<bid>``, the
+df and total_tf of its own postings); a searcher sums them across the
+batches of its postings snapshot, as Lucene sums collection statistics
+across its segment readers. The dictionary is read one way for both
+executors (``_dictionary_slices``), and the same dispatch picks its
+source: the resident sorted arrays below ``driver_max_docs``, above it a
+pyarrow scan of term_stats pruned by its ``tlen`` partitions and term
+row-group statistics, one ``tlen`` partition at a time — no Spark job
+either way. Prefix, fuzzy, wildcard and regexp expansion and the global
+dfs are each written once over it. On the scan source driver memory is
+O(one tlen partition's matching rows + max_expansions); driver CPU is
+O(scanned tlen/term range), so a regexp with no literal prefix scans the
+whole dictionary on the driver. Python ``re`` is the one pattern dialect
+of term expansion.
 """
 
 from __future__ import annotations
@@ -68,6 +72,7 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
 from pyspark import StorageLevel
@@ -113,16 +118,23 @@ _DOC_SIDE = T.StructType([
 ])
 # the top code point: a prefix's terms all sort at or below prefix + this
 _MAX_CHAR = "\U0010FFFF"
+# term_stats/batch=<bid>/tlen=<K>/*.parquet (index.build.write_term_stats),
+# typed explicitly so an index with no terms still opens
+_TERM_STATS_SCHEMA = pa.schema([
+    ("term", pa.string()), ("df", pa.int64()), ("total_tf", pa.int64()),
+    ("batch", pa.int32()), ("tlen", pa.int32()),
+])
 
 
-class SnapshotExpiredError(RuntimeError):
-    """The searcher's term-dictionary snapshot was expired by later appends.
+def _partition_key(fragment, key: str) -> int:
+    return pads.get_partition_keys(fragment.partition_expression)[key]
 
-    Postings/doc_stats snapshots stay valid indefinitely (appends only ADD
-    batch directories), but append_batch retains only the current and
-    previous term-stats dictionary (Iceberg snapshot-expiry style), so a
-    searcher older than one append horizon loses its dictionary files.
-    Call ``refresh()`` (or open a new IndexSearcher) to continue."""
+
+def _sum_by_term(tbl: pa.Table, cols: list[str]) -> pa.Table:
+    """``cols`` summed per term: the batch dictionaries' rows of one term
+    folded into one row."""
+    agg = tbl.group_by("term").aggregate([(c, "sum") for c in cols])
+    return pa.table({"term": agg["term"], **{c: agg[f"{c}_sum"] for c in cols}})
 
 
 def levenshtein_within(q: str, cands: np.ndarray, dmax: int) -> np.ndarray:
@@ -194,11 +206,19 @@ class IndexSearcher:
         self.ord_span = int(self.manifest.get("next_ord", self.manifest["n_docs"]))
         self.avgdl = float(self.manifest["avgdl"])
         self.n_buckets = int(self.manifest["n_buckets"])
-        self.term_stats_path = os.path.join(
-            vdir, self.manifest.get("term_stats_dir", "term_stats")
-        )
         self._postings_ds = pads.dataset(
             os.path.join(vdir, "postings"), partitioning="hive", format="parquet"
+        )
+        # the dictionaries of exactly the batches listed above, so the
+        # searcher's dictionary and postings are one snapshot
+        batches = {_partition_key(f, "batch") for f in self._postings_ds.get_fragments()}
+        ts = pads.dataset(
+            os.path.join(vdir, "term_stats"), schema=_TERM_STATS_SCHEMA,
+            partitioning="hive", format="parquet",
+        )
+        self._term_stats_ds = pads.FileSystemDataset(
+            [f for f in ts.get_fragments() if _partition_key(f, "batch") in batches],
+            ts.schema, ts.format, ts.filesystem,
         )
         self._doc_ds = pads.dataset(
             os.path.join(vdir, "doc_stats"), partitioning="hive", format="parquet"
@@ -210,9 +230,6 @@ class IndexSearcher:
         self._term_dict: pd.DataFrame | None = None
         # (terms sorted, df, term lengths) of the resident dictionary
         self._dict_arrays: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
-        # term_stats as a pyarrow dataset, listed on the first scan (the
-        # directory is versioned, so the listing cannot go stale)
-        self._term_stats_ds: pads.FileSystemDataset | None = None
         self._chunk_cache: dict[str, scoring.TermChunks] = {}
         # tbucket -> postings fragments of self._postings_ds, grouped on
         # the first fetch; a bucket's footers are read on its first use
@@ -231,9 +248,9 @@ class IndexSearcher:
         # files at some later moment, splicing a mid-append state into a
         # searcher whose stats and tombstones are as of open. SNAPSHOT
         # CONTRACT (Lucene point-in-time readers): appends only ADD batch
-        # dirs and write a new versioned term_stats dir, and compaction
-        # publishes a new version dir; the term dictionary of the current
-        # and previous append is kept (SnapshotExpiredError).
+        # dirs (postings, doc_stats and term_stats alike), and compaction
+        # publishes a new version dir, so a searcher stays valid across
+        # any number of appends until a merge removes its batches.
         self._postings_src: DataFrame = self.spark.read.parquet(
             os.path.join(vdir, "postings")
         )
@@ -276,8 +293,7 @@ class IndexSearcher:
         if self._bucket_frags is None:
             by_bucket: dict[int, list] = {}
             for f in self._postings_ds.get_fragments():
-                b = pads.get_partition_keys(f.partition_expression)["tbucket"]
-                by_bucket.setdefault(int(b), []).append(f)
+                by_bucket.setdefault(int(_partition_key(f, "tbucket")), []).append(f)
             self._bucket_frags = by_bucket
         out = []
         for b in buckets:
@@ -399,14 +415,12 @@ class IndexSearcher:
         return self._norms
 
     def term_dictionary(self) -> pd.DataFrame:
+        """(term, df, total_tf), term-sorted: each term's statistics summed
+        across the batch dictionaries of this searcher's snapshot."""
         if self._term_dict is None:
-            self._check_dictionary_snapshot()
+            tbl = self._term_stats_ds.to_table(columns=["term", "df", "total_tf"])
             self._term_dict = (
-                pads.dataset(self.term_stats_path, format="parquet")
-                .to_table(columns=["term", "df", "total_tf"])
-                .to_pandas()
-                .sort_values("term")
-                .reset_index(drop=True)
+                _sum_by_term(tbl, ["df", "total_tf"]).sort_by("term").to_pandas()
             )
         return self._term_dict
 
@@ -423,25 +437,9 @@ class IndexSearcher:
             )
         return self._dict_arrays
 
-    def _check_dictionary_snapshot(self) -> None:
-        """Raise SnapshotExpiredError (not a FileNotFoundError mid-scan)
-        when this searcher's term-stats directory was expired by the
-        current+previous retention of later appends. Cheap local-stat;
-        resident caches (term_dictionary already loaded) keep working."""
-        if not os.path.isdir(self.term_stats_path):
-            raise SnapshotExpiredError(
-                f"term-stats snapshot {self.term_stats_path} was expired by "
-                "later appends (retention keeps the current + previous "
-                "dictionary). Call refresh() or open a new IndexSearcher."
-            )
-
     def _term_stats_fragments(self, filt: pc.Expression | None) -> list:
-        """The term_stats files a scan with filter ``filt`` opens: the
-        ``tlen`` partitions the filter leaves."""
-        if self._term_stats_ds is None:
-            self._term_stats_ds = pads.dataset(
-                self.term_stats_path, partitioning="hive", format="parquet"
-            )
+        """The snapshot's term_stats files a scan with filter ``filt``
+        opens: those of the ``tlen`` partitions the filter leaves."""
         return list(self._term_stats_ds.get_fragments(filter=filt))
 
     def _dictionary_slices(
@@ -454,10 +452,11 @@ class IndexSearcher:
         and that lie in one of the inclusive ``(lo, hi)`` term ``ranges``
         (None: no bound). Below ``driver_max_docs`` the slices are cut
         from the resident sorted arrays with ``searchsorted``. Above it
-        they are the record batches of a pyarrow scan of term_stats: the
-        ``tlen`` filter prunes partitions and the term ranges prune row
-        groups by their min/max statistics, and the driver holds one
-        batch at a time."""
+        there is one slice per ``tlen`` partition the filter keeps: a
+        pyarrow scan of that partition across the snapshot's batch
+        dictionaries, the term ranges pruning row groups by their min/max
+        statistics, summed per term before it is yielded. Driver memory
+        is then one partition's matching rows at a time."""
         if self.n_docs <= self.driver_max_docs:
             terms, df, lens = self._dictionary()
             if ranges is None:
@@ -473,7 +472,6 @@ class IndexSearcher:
                     t, d, n = t[ok], d[ok], n[ok]
                 yield t, d, n
             return
-        self._check_dictionary_snapshot()
         conds = []
         if tlens is not None:
             conds.append(pc.field("tlen").isin(list(tlens)))
@@ -485,16 +483,21 @@ class IndexSearcher:
                 spans.append(term.isin(points))
             conds.append(reduce(operator.or_, spans))
         filt = reduce(operator.and_, conds) if conds else None
-        ds = pads.FileSystemDataset(
-            self._term_stats_fragments(filt), self._term_stats_ds.schema,
-            self._term_stats_ds.format, self._term_stats_ds.filesystem,
-        )
-        for rb in ds.to_batches(columns=["term", "df"], filter=filt):
-            t = rb.column("term")
+        ds = self._term_stats_ds
+        by_tlen: dict[int, list] = {}
+        for f in self._term_stats_fragments(filt):
+            by_tlen.setdefault(_partition_key(f, "tlen"), []).append(f)
+        for _, frags in sorted(by_tlen.items()):
+            tbl = pads.FileSystemDataset(
+                frags, ds.schema, ds.format, ds.filesystem
+            ).to_table(columns=["term", "df"], filter=filt)
+            if not tbl.num_rows:
+                continue
+            tbl = _sum_by_term(tbl, ["df"])
             yield (
-                t.to_numpy(zero_copy_only=False),
-                rb.column("df").to_numpy(),
-                pc.utf8_length(t).to_numpy(),
+                tbl["term"].to_numpy(zero_copy_only=False),
+                tbl["df"].to_numpy(),
+                pc.utf8_length(tbl["term"]).to_numpy(),
             )
 
     @staticmethod
@@ -791,9 +794,9 @@ class IndexSearcher:
         tombstone set is small (pushes to the scan), broadcast anti-join
         past ~10k so heavy churn never bloats the plan — a compacting
         rebuild remains the durable remedy."""
-        from ..streaming.incremental import mask_tombstones
+        from ..planlimits import drop_ordinals
 
-        df = mask_tombstones(self.doc_stats_df(), self.tombstones)
+        df = drop_ordinals(self.doc_stats_df(), self.tombstones)
         df = df.select("conv_id", "turn_idx", "doc_id", "role", "text")
         if cursor is not None:
             c, t = cursor

@@ -20,10 +20,12 @@ idempotent) and delete (``:453-474``). This module re-expresses those as:
   append the new one. Compaction = a fresh full build (blue/green swap),
   exactly how the reference's reindex-all works.
 
-BM25 global stats (N, avgdl, df) are recomputed from the updated
-doc_stats/postings at each publish, so scores after an append equal a
-from-scratch build over the union corpus (idf is a corpus-wide statistic;
-tested in tests/test_streaming.py).
+BM25 global stats stay exact without any corpus-wide pass: N and avgdl
+are summed into the manifest at each publish, and df/total_tf live in
+each batch's own term dictionary (``term_stats/batch=<bid>``), which
+readers sum across batches. Scores after an append therefore equal a
+from-scratch build over the union corpus (idf is a corpus-wide
+statistic; tested in tests/test_streaming.py).
 """
 
 from __future__ import annotations
@@ -35,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index import catalog
-from ..index.build import _enc_schema, _tokenize_encode, merge_chunks
+from ..index.build import _enc_schema, _tokenize_encode, merge_chunks, write_term_stats
 
 
 # epoch-derived batch ids live at EPOCH_BID_BASE + epoch_id; manual
@@ -232,9 +234,11 @@ def append_batch(
             _enc_schema(with_positions),
         )
     )
-    enc.write.mode("overwrite").partitionBy("tbucket").parquet(
-        os.path.join(postings_root, f"batch={bid}")
-    )
+    batch_postings = os.path.join(postings_root, f"batch={bid}")
+    enc.write.mode("overwrite").partitionBy("tbucket").parquet(batch_postings)
+    # the batch's own dictionary, O(batch): a replayed epoch overwrites it
+    # like its postings, and no other batch's dictionary is read or written
+    write_term_stats(spark, batch_postings, os.path.join(vdir, "term_stats", f"batch={bid}"))
 
     # global stats update is INCREMENTAL (n/total_tokens are associative
     # sums; avgdl = total/n exactly as build_index computes it): the
@@ -252,26 +256,14 @@ def append_batch(
     batch_tokens = int(pc.sum(dl_tbl.column("dl")).as_py() or 0)
     n_live = live_before + m
     total_tokens = int(manifest.get("total_tokens", 0)) + batch_tokens
-    prev_ts_dir = manifest.get("term_stats_dir", "term_stats")
-    # incremental dictionary: new batch aggregates merged into the
-    # previous dictionary — O(vocab + batch), not O(all postings)
-    ts_dir = _update_term_stats(
-        spark, vdir, n_buckets, bid, prev_ts_dir,
-        os.path.join(postings_root, f"batch={bid}"),
-    )
     # per-batch lineage metrics, same fields as the build checkpoints
     # (turns tokenized, postings emitted, bytes compressed) — read
     # streamed from the just-written batch's parquet, O(batch) not
     # O(index), no driver materialization of the postings themselves
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-
     bcols = ["df_chunk", "doc_bytes", "tf_bytes"] + (
         ["pos_bytes"] if with_positions else [])
     postings_emitted = bytes_compressed = 0
-    for rb in pads.dataset(
-        os.path.join(postings_root, f"batch={bid}"), format="parquet"
-    ).to_batches(columns=bcols):
+    for rb in pads.dataset(batch_postings, format="parquet").to_batches(columns=bcols):
         postings_emitted += pc.sum(rb.column("df_chunk")).as_py() or 0
         for c in bcols[1:]:
             bytes_compressed += pc.sum(pc.binary_length(rb.column(c))).as_py() or 0
@@ -287,7 +279,6 @@ def append_batch(
     )
     manifest.update(
         {
-            "term_stats_dir": ts_dir,
             "n_docs": n_live,
             "next_ord": n_total,
             "total_tokens": total_tokens,
@@ -295,227 +286,7 @@ def append_batch(
         }
     )
     catalog.write_json(os.path.join(vdir, "manifest.json"), manifest)
-    # term_stats retention (Iceberg snapshot-expiry analogue): keep the
-    # just-published dictionary AND the previous one — searchers opened
-    # before THIS append stay valid; anything older must refresh()
-    # within one append or re-open. Without expiry a long-running stream
-    # accumulates one full O(vocab) dictionary per micro-batch.
-    import shutil
-
-    if prev_ts_dir != ts_dir:
-        # prev == ts means THIS bid is being replayed: the manifest already
-        # points at our own dir, so the genuinely-previous dictionary is
-        # unknowable here — expire nothing and let the next clean append
-        # reclaim (deleting on replay would break searchers opened one
-        # append ago, inside the documented retention horizon)
-        keep = {ts_dir, prev_ts_dir}
-        for d in os.listdir(vdir):
-            if (d == "term_stats" or d.startswith("term_stats_b")) and d not in keep:
-                shutil.rmtree(os.path.join(vdir, d), ignore_errors=True)
     return {"appended": m, "n_docs": n_live, "batch": bid}
-
-
-def _term_stats_agg(df: DataFrame) -> DataFrame:
-    return df.groupBy("term").agg(
-        F.sum("df_chunk").alias("df"),
-        F.sum("sum_tf").alias("total_tf"),
-        F.count("*").alias("n_chunks"),
-        F.max(F.array_max("block_max_tf")).alias("max_tf"),
-    )
-
-
-def _write_term_stats(df: DataFrame, vdir: str, n_buckets: int, bid: int) -> str:
-    """Write the dictionary hive-partitioned by capped term length,
-    term-sorted within every file. Partitioning is HASH on (tlen, tbucket)
-    — not repartitionByRange: the range partitioner's sampling pass
-    evaluates the whole upstream aggregation a second time (one extra
-    Spark job per publish; for the per-micro-batch incremental merge that
-    doubled the dictionary cost — guide §2.4). hashing on tlen alone keeps ONE
-    term-sorted file per length dir (fewest files to list and re-read on
-    the next publish); tlen partition pruning and row-group min/max term
-    pruning both survive."""
-    from ..index.build import term_bucket_col, term_len_col
-
-    name = f"term_stats_b{bid:05d}"
-    (
-        df.withColumn("tbucket", term_bucket_col(n_buckets))
-        .withColumn("tlen", term_len_col())
-        .repartition(max(1, n_buckets // 16), "tlen")
-        .sortWithinPartitions("tlen", "term")
-        .write.mode("overwrite")
-        .partitionBy("tlen")
-        .parquet(os.path.join(vdir, name))
-    )
-    return name
-
-
-# dictionaries at or below this many rows (previous vocab + new batch's
-# chunk rows, both from parquet footer counts) merge DRIVER-side through
-# pyarrow/pandas — the same small-side dispatch as the query engine's
-# driver_max_docs. A micro-batch publish is then ~50 ms of columnar work
-# instead of a multi-stage Spark job over dozens of tiny files (measured
-# ~0.7-1.0 s/append at bench scale); huge vocabularies (Heaps-law growth
-# at 10^12 turns) stay on the distributed path.
-DICT_DRIVER_MAX_ROWS = 2_000_000
-
-
-def _update_term_stats_local(
-    vdir: str, n_buckets: int, bid: int, prev_dir: str, delta_dir: str,
-) -> str:
-    """Driver-side incremental dictionary merge (below
-    ``DICT_DRIVER_MAX_ROWS``): pyarrow batch aggregation + pandas merge +
-    per-tlen sorted parquet files. Bit-equal to the Spark path (integer
-    sums/maxes; asserted in tests) and writes the identical layout —
-    ``tlen=K`` hive dirs, term-sorted files, same column schema — so
-    readers and the NEXT append (either path) are none the wiser."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.dataset as pads
-    import pyarrow.parquet as papq
-
-    from ..index.build import TLEN_CAP, term_bucket
-
-    # delta aggregation over the new batch's posting chunks, columnar
-    parts = []
-    for rb in pads.dataset(delta_dir, partitioning="hive",
-                           format="parquet").to_batches(
-        columns=["term", "df_chunk", "sum_tf", "block_max_tf"]
-    ):
-        bm = rb.column("block_max_tf")
-        # list_flatten/list_value_length instead of raw .offsets/.values:
-        # safe under sliced arrays with non-zero offsets
-        import pyarrow.compute as _pc
-
-        lens = _pc.list_value_length(bm).to_numpy(zero_copy_only=False)
-        if (lens == 0).any():
-            # reduceat would silently read the NEXT chunk's first block
-            # max into this chunk's max_tf, the bound block-max pruning
-            # trusts — every written chunk holds at least one block
-            raise ValueError(
-                f"posting chunk with an empty block_max_tf list in {delta_dir}"
-            )
-        vals = _pc.list_flatten(bm).to_numpy(zero_copy_only=False)
-        offs = np.concatenate(([0], np.cumsum(lens)[:-1])).astype(np.int64)
-        parts.append(pd.DataFrame({
-            "term": rb.column("term").to_numpy(zero_copy_only=False),
-            "df": rb.column("df_chunk").to_numpy(zero_copy_only=False),
-            "total_tf": rb.column("sum_tf").to_numpy(zero_copy_only=False),
-            "max_tf": (np.maximum.reduceat(vals, offs)
-                       if len(vals) else np.zeros(0, np.int32)),
-        }))
-    delta = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
-        {"term": [], "df": [], "total_tf": [], "max_tf": []})
-    delta = delta.groupby("term", sort=False).agg(
-        df=("df", "sum"), total_tf=("total_tf", "sum"),
-        n_chunks=("df", "size"), max_tf=("max_tf", "max"),
-    ).reset_index()
-    # previous dictionary (tbucket already materialized — only genuinely
-    # NEW terms pay the crc32)
-    prev = pads.dataset(
-        os.path.join(vdir, prev_dir), partitioning="hive", format="parquet"
-    ).to_table(
-        columns=["term", "df", "total_tf", "n_chunks", "max_tf", "tbucket"]
-    ).to_pandas()
-    merged = pd.concat(
-        [prev, delta.assign(tbucket=-1)], ignore_index=True
-    ).groupby("term", sort=True).agg(
-        df=("df", "sum"), total_tf=("total_tf", "sum"),
-        n_chunks=("n_chunks", "sum"), max_tf=("max_tf", "max"),
-        tbucket=("tbucket", "max"),  # prev's value wins; -1 = new term
-    ).reset_index()
-    new_mask = merged["tbucket"].to_numpy() < 0
-    if new_mask.any():
-        merged.loc[new_mask, "tbucket"] = [
-            term_bucket(t, n_buckets) for t in merged.loc[new_mask, "term"]
-        ]
-    tlen = merged["term"].str.len().clip(upper=TLEN_CAP).to_numpy(np.int32)
-    schema = pa.schema([
-        ("term", pa.string()), ("df", pa.int64()), ("total_tf", pa.int64()),
-        ("n_chunks", pa.int64()), ("max_tf", pa.int32()),
-        ("tbucket", pa.int32()),
-    ])
-    name = f"term_stats_b{bid:05d}"
-    root = os.path.join(vdir, name)
-    os.makedirs(root, exist_ok=True)
-    for k in np.unique(tlen):
-        sub = merged[tlen == k]  # already term-sorted (groupby sort=True)
-        tbl = pa.Table.from_arrays(
-            [
-                pa.array(sub["term"].to_numpy(object), pa.string()),
-                pa.array(sub["df"].to_numpy(np.int64)),
-                pa.array(sub["total_tf"].to_numpy(np.int64)),
-                pa.array(sub["n_chunks"].to_numpy(np.int64)),
-                pa.array(sub["max_tf"].to_numpy(np.int32)),
-                pa.array(sub["tbucket"].to_numpy(np.int32)),
-            ],
-            schema=schema,
-        )
-        d = os.path.join(root, f"tlen={int(k)}")
-        os.makedirs(d, exist_ok=True)
-        papq.write_table(tbl, os.path.join(d, "part-0.parquet"))
-    return name
-
-
-def _update_term_stats(
-    spark: SparkSession, vdir: str, n_buckets: int, bid: int,
-    prev_dir: str, delta_dir: str,
-) -> str:
-    """Incremental dictionary publish for appends: aggregate ONLY the new
-    batch's postings and merge with the previous dictionary — every stat
-    is associative (df/total_tf/n_chunks are sums over chunks, max_tf is
-    a max), so the result is bit-equal to a full re-aggregation while the
-    cost drops from O(all postings ever) to O(vocab + batch). At 10^12
-    turns a full-corpus dictionary pass per micro-batch would dwarf the
-    append itself (Lucene pays O(segment dictionary) per flush for the
-    same reason). Replay-safe: append_batch's committed-epoch early
-    return fires before this, and a replay of an UNcommitted epoch reads
-    the previous dictionary (the manifest never flipped), so the delta is
-    counted exactly once. Merges/compactions still use the full
-    ``_rebuild_term_stats`` (postings shrink; subtraction is not
-    associative).
-
-    Size dispatch: small dictionaries (footer row counts, no data read)
-    merge driver-side (``_update_term_stats_local``); large ones run the
-    distributed union+groupBy below."""
-    import pyarrow.dataset as pads
-
-    prev_rows = pads.dataset(
-        os.path.join(vdir, prev_dir), partitioning="hive", format="parquet"
-    ).count_rows()
-    delta_rows = pads.dataset(
-        delta_dir, partitioning="hive", format="parquet"
-    ).count_rows()
-    if prev_rows + delta_rows <= DICT_DRIVER_MAX_ROWS:
-        return _update_term_stats_local(
-            vdir, n_buckets, bid, prev_dir, delta_dir)
-    prev = spark.read.parquet(os.path.join(vdir, prev_dir)).select(
-        "term", "df", "total_tf", "n_chunks", "max_tf"
-    )
-    delta = _term_stats_agg(spark.read.parquet(delta_dir))
-    merged = (
-        prev.unionByName(delta.select("term", "df", "total_tf", "n_chunks", "max_tf"))
-        .groupBy("term")
-        .agg(
-            F.sum("df").alias("df"),
-            F.sum("total_tf").alias("total_tf"),
-            F.sum("n_chunks").alias("n_chunks"),
-            F.max("max_tf").alias("max_tf"),
-        )
-    )
-    return _write_term_stats(merged, vdir, n_buckets, bid)
-
-
-def _rebuild_term_stats(spark: SparkSession, vdir: str, n_buckets: int, bid: int) -> str:
-    """Recompute the term dictionary into a NEW versioned directory and
-    return its name (recorded in the manifest as ``term_stats_dir``).
-    The previous directory is left in place (open searchers hold cached
-    file indexes over it — an in-place os.replace would break live
-    readers with FileNotFoundException); append_batch expires dirs older
-    than current+previous, so snapshots stay valid for ONE subsequent
-    append (refresh() within that horizon, Iceberg-expiry style) and
-    disk growth is bounded at two dictionary copies."""
-    postings = spark.read.parquet(os.path.join(vdir, "postings"))
-    return _write_term_stats(_term_stats_agg(postings), vdir, n_buckets, bid)
 
 
 def incremental_index(
@@ -622,18 +393,17 @@ def incremental_index(
 
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids: list[str]) -> int:
     """S10 doc delete: tombstone by doc_id (Lucene-style — postings stay,
-    results are masked; compaction = full rebuild/blue-green swap)."""
+    results are masked; compaction = full rebuild/blue-green swap). The
+    matched ordinals land in the ``delete_where`` store."""
     vdir = catalog.current_version_dir(index_dir)
-    ds = spark.read.parquet(os.path.join(vdir, "doc_stats"))
-    ords = [
-        int(r["doc_ord"])
-        for r in ds.filter(F.col("doc_id").isin(doc_ids)).select("doc_ord").collect()
-    ]
-    path = os.path.join(vdir, "tombstones.json")
-    cur = set(catalog.read_json(path)["doc_ords"]) if os.path.exists(path) else set()
-    cur.update(ords)
-    catalog.write_json(path, {"doc_ords": sorted(cur)})
-    return len(ords)
+    if vdir is None:
+        raise FileNotFoundError(f"no published index in {index_dir}")
+    matched = (
+        spark.read.parquet(os.path.join(vdir, "doc_stats"))
+        .filter(F.col("doc_id").isin(doc_ids))
+        .select("doc_ord")
+    )
+    return _write_tombstone_delta(vdir, matched)
 
 
 def delete_where(spark: SparkSession, index_dir: str, predicate) -> int:
@@ -642,13 +412,12 @@ def delete_where(spark: SparkSession, index_dir: str, predicate) -> int:
     through ``F.expr``) — e.g. ``F.col("conv_id").cast("long") % 7 == 0``
     or ``"role = 'tool' AND ts < timestamp'2023-01-01'"``.
 
-    Unlike ``delete_docs`` (the reference's single/small-batch delete
-    surface, which takes a Python id list), no ids ever route through the
-    driver: the matched ordinals are written executor-side as a parquet
-    tombstone delta (``tombstones_pq/batch=N``), so a delete matching an
-    O(corpus) slice is one pushed filter + one column write. Query paths
-    read the union of JSON and parquet tombstones (``load_tombstones``);
-    compaction (``rebuild_compacted``) clears both."""
+    No ids ever route through the driver: the matched ordinals are
+    written executor-side as a parquet tombstone delta
+    (``tombstones_pq/batch=N``), so a delete matching an O(corpus) slice
+    is one pushed filter + one column write. Query paths read the union
+    of the deltas (``load_tombstones``); compaction
+    (``rebuild_compacted``) starts a version with none."""
     vdir = catalog.current_version_dir(index_dir)
     if vdir is None:
         raise FileNotFoundError(f"no published index in {index_dir}")
@@ -661,58 +430,49 @@ def delete_where(spark: SparkSession, index_dir: str, predicate) -> int:
     return _write_tombstone_delta(vdir, matched)
 
 
-def _write_tombstone_delta(vdir: str, matched: DataFrame) -> int:
-    """Write a (doc_ord) DataFrame as the next executor-side parquet
-    tombstone delta (``tombstones_pq/batch=N``); returns the tombstoned
-    row count from parquet metadata — no ids ever cross the driver."""
+def _tombstone_deltas(vdir: str) -> list[int]:
+    """Ids of the tombstone deltas (``tombstones_pq/batch=N``), ascending."""
     root = os.path.join(vdir, "tombstones_pq")
-    nxt = 0
-    if os.path.isdir(root):
-        ids = [int(d.split("=", 1)[1]) for d in os.listdir(root) if d.startswith("batch=")]
-        nxt = max(ids) + 1 if ids else 0
-    out = os.path.join(root, f"batch={nxt}")
-    matched.write.mode("overwrite").parquet(out)
-    import pyarrow.dataset as pads
+    if not os.path.isdir(root):
+        return []
+    return sorted(int(d.split("=", 1)[1]) for d in os.listdir(root) if d.startswith("batch="))
 
+
+def _write_tombstone_delta(vdir: str, matched: DataFrame | np.ndarray) -> int:
+    """Write the next parquet tombstone delta (``tombstones_pq/batch=N``)
+    from a (doc_ord) DataFrame, executor-side — no ids cross the driver —
+    or from a driver-side ordinal array; returns its row count from
+    parquet metadata."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as papq
+
+    ids = _tombstone_deltas(vdir)
+    out = os.path.join(vdir, "tombstones_pq", f"batch={ids[-1] + 1 if ids else 0}")
+    if isinstance(matched, DataFrame):
+        matched.write.mode("overwrite").parquet(out)
+    else:
+        # written under a hidden name and renamed: readers never see a
+        # torn file
+        os.makedirs(out, exist_ok=True)
+        tmp = os.path.join(out, ".part-0.parquet")
+        papq.write_table(pa.table({"doc_ord": pa.array(matched, pa.int64())}), tmp)
+        os.replace(tmp, os.path.join(out, "part-0.parquet"))
     return int(pads.dataset(out, format="parquet").count_rows())
 
 
 def load_tombstones(vdir: str) -> np.ndarray:
-    """Union of the JSON tombstones (id-list deletes) and the parquet
-    tombstone deltas (predicate deletes), sorted + deduped. Driver cost is
+    """Union of the tombstone deltas, sorted + deduped. Driver cost is
     O(deleted docs) — the same asymptotics as Lucene's liveDocs bitset."""
-    parts = []
-    path = os.path.join(vdir, "tombstones.json")
-    if os.path.exists(path):
-        parts.append(np.asarray(catalog.read_json(path)["doc_ords"], dtype=np.int64))
     pq = os.path.join(vdir, "tombstones_pq")
-    if os.path.isdir(pq):
-        import pyarrow.dataset as pads
-
-        parts.append(
-            pads.dataset(pq, format="parquet")
-            .to_table(columns=["doc_ord"])["doc_ord"]
-            .to_numpy()
-            .astype(np.int64)
-        )
-    if not parts:
+    if not os.path.isdir(pq):
         return np.zeros(0, dtype=np.int64)
-    return np.unique(np.concatenate(parts))
+    import pyarrow as pa
+    import pyarrow.dataset as pads
 
-
-# kept for backward compatibility: the threshold now lives in
-# planlimits.IN_LITERAL_MAX, shared with the query engine's stored-
-# fields point-read so the plan-bloat cutoff cannot silently diverge
-from ..planlimits import IN_LITERAL_MAX as TOMBSTONE_ISIN_MAX  # noqa: E402
-
-
-def mask_tombstones(df: DataFrame, tombstones, threshold: int = TOMBSTONE_ISIN_MAX) -> DataFrame:
-    """Filter tombstoned ``doc_ord`` rows out of a doc-keyed DataFrame
-    (pushed IN-literal below the shared threshold, broadcast anti-join
-    above — see ``planlimits.mask_ordinals``)."""
-    from ..planlimits import drop_ordinals
-
-    return drop_ordinals(df, tombstones, threshold=threshold)
+    # typed explicitly: a merge that expunged every tombstone leaves no file
+    ds = pads.dataset(pq, schema=pa.schema([("doc_ord", pa.int64())]), format="parquet")
+    return np.unique(ds.to_table()["doc_ord"].to_numpy())
 
 
 def upsert_docs(spark: SparkSession, df: DataFrame, index_dir: str) -> dict:
@@ -751,20 +511,21 @@ def rebuild_compacted(spark: SparkSession, index_dir: str, **build_kwargs) -> di
     validation gate). After churn (deletes/upserts) every query path pays an
     ``isin``/mask over the tombstone set; compaction restores the clean
     state: fresh dense ordinals, BM25 stats over live docs only, empty
-    tombstones (the new version directory simply has no tombstones.json),
+    tombstones (the new version directory simply has no tombstones_pq),
     and the previous version left intact on disk for instant rollback.
 
     Distributed end to end: the live-doc scan is a Spark filter over
     doc_stats and the rebuild is the ordinary ``build_index`` dataflow —
     no driver materialization at any corpus size."""
     from ..index.build import build_index
+    from ..planlimits import drop_ordinals
 
     vdir = catalog.current_version_dir(index_dir)
     if vdir is None:
         raise FileNotFoundError(f"no published index in {index_dir}")
     manifest = catalog.read_json(os.path.join(vdir, "manifest.json"))
     tombs = load_tombstones(vdir)
-    live = mask_tombstones(spark.read.parquet(os.path.join(vdir, "doc_stats")), tombs)
+    live = drop_ordinals(spark.read.parquet(os.path.join(vdir, "doc_stats")), tombs)
     src = live.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
     res = build_index(
         spark, src, index_dir,

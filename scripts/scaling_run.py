@@ -341,7 +341,7 @@ shared JVM and single virtio disk, quantified per stage below.
 - ordinal assignment (range shuffle + counting pass + persist): {stage_eff('ordinals_s')}
 - doc_stats (dl pass + parquet write): {stage_eff('doc_stats_s')}
 - postings (tokenize→encode map, shuffle, merge, write): {stage_eff('postings_s')}
-- term_stats (groupBy-term aggregate + sorted write): {stage_eff('term_stats_s')}
+- term_stats (per-batch term aggregate + sorted write): {stage_eff('term_stats_s')}
 
 Kernel totals summed over all tasks ({' / '.join(f'local[{c}]' for c in levels)}):
 

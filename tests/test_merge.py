@@ -30,7 +30,12 @@ from es_indexer_spark.index.merge import (
 )
 from es_indexer_spark.oracle import oracle_from_spark
 from es_indexer_spark.query.engine import IndexSearcher
-from es_indexer_spark.streaming.incremental import append_batch, delete_docs, delete_where
+from es_indexer_spark.streaming.incremental import (
+    append_batch,
+    delete_docs,
+    delete_where,
+    upsert_docs,
+)
 
 
 def _corpus(spark, lo, hi, seed=21):
@@ -565,18 +570,62 @@ def _edit_distance(a: str, b: str) -> int:
     return prev[-1]
 
 
-def test_dictionary_read_same_on_every_lifecycle_step(spark, tmp_path):
-    """After each write — build, append, delete, expunging merge — both
-    term-dictionary sources (the resident arrays, and the pruned
-    term_stats scan a searcher above ``driver_max_docs`` reads) give the
-    prefix, fuzzy and wildcard expansions and the global dfs of a
-    brute-force filter over ``term_dictionary()``."""
+def _text_dictionary(vdir) -> dict:
+    """{term: (df, total_tf)} counted over the text of every doc_stats row
+    with the index analyzer: doc_stats holds exactly the docs the
+    postings hold, tombstoned-but-unexpunged ones included."""
+    from collections import Counter
+
+    import pyarrow.dataset as pads
+
+    from es_indexer_spark.analysis import tokenize_series
+
+    texts = pads.dataset(os.path.join(vdir, "doc_stats"), partitioning="hive").to_table(
+        columns=["text"]).to_pandas()["text"]
+    df, tf = Counter(), Counter()
+    for toks in tokenize_series(texts):
+        c = Counter(toks)
+        df.update(c.keys())
+        tf.update(c)
+    return {t: (df[t], tf[t]) for t in df}
+
+
+def _interrupted_merge(spark, idx, monkeypatch):
+    """An append and a delete, then a merge of every batch that crashes
+    after staging, finished by ``recover_merges``."""
+    import es_indexer_spark.index.merge as M
+
+    append_batch(spark, _corpus(spark, 16, 20), idx)
+    delete_where(spark, idx, F.col("conv_id").isin("conv00000006", "conv00000017"))
+    vdir = IndexSearcher(spark, idx).vdir
+    with monkeypatch.context() as m:
+        m.setattr(M, "_install_and_clean",
+                  lambda *a: (_ for _ in ()).throw(RuntimeError("boom")))
+        with pytest.raises(RuntimeError, match="boom"):
+            merge_segments(spark, idx, bids=[i["bid"] for i in batch_infos(vdir)])
+    assert recover_merges(spark, idx) == 1
+
+
+def test_dictionary_read_same_on_every_lifecycle_step(spark, tmp_path, monkeypatch):
+    """After each write — build, append, delete, expunging merge, upsert,
+    force merge, a merge finished by crash recovery — the summed
+    dictionary equals a count over the indexed text; both term-dictionary
+    sources (the resident arrays, and the pruned term_stats scan a
+    searcher above ``driver_max_docs`` reads) give the prefix, fuzzy and
+    wildcard expansions and the global dfs of a brute-force filter over
+    ``term_dictionary()``; and the distributed search, which takes its
+    dfs from the dictionary, ranks like the driver search, which takes
+    them from the posting chunks."""
     idx = str(tmp_path / "idx")
     steps = [
         lambda: build_index(spark, _corpus(spark, 0, 12), idx, n_buckets=8, n_segments=2),
         lambda: append_batch(spark, _corpus(spark, 12, 16), idx),
         lambda: delete_where(spark, idx, F.col("conv_id") < "conv00000004"),
         lambda: merge_segments(spark, idx, min_inputs=2),
+        lambda: upsert_docs(spark, _corpus(spark, 8, 10, seed=5).filter(
+            F.col("turn_idx") < 2), idx),
+        lambda: force_merge(spark, idx, max_segments=1),
+        lambda: _interrupted_merge(spark, idx, monkeypatch),
     ]
     cases = [  # (method, args, the predicate it expands, max_expansions)
         ("expand_prefix", ("b", 7), lambda t: t.startswith("b"), 7),
@@ -592,6 +641,8 @@ def test_dictionary_read_same_on_every_lifecycle_step(spark, tmp_path):
         scan = IndexSearcher(spark, idx)
         scan.driver_max_docs = 0
         td = resident.term_dictionary()
+        assert dict(zip(td["term"], zip(td["df"].tolist(), td["total_tf"].tolist()))) \
+            == _text_dictionary(resident.vdir)
         df = dict(zip(td["term"], td["df"].astype(int)))
         for name, args, pred, n in cases:
             want = [t for _, t in sorted((-d, t) for t, d in df.items() if pred(t))][:n]
@@ -603,5 +654,69 @@ def test_dictionary_read_same_on_every_lifecycle_step(spark, tmp_path):
         want = {t: df.get(t, 0) for t in terms}
         assert resident._global_dfs(terms) == scan._global_dfs(terms) == want
         dfs_seen.append(want["the"])
+        for q in QUERIES[:3]:
+            drv = resident.search(q, k=20)
+            dist = resident.search_df(q, k=20).toPandas()
+            assert drv["doc_id"].tolist() == dist["doc_id"].tolist(), q
+            np.testing.assert_allclose(drv["score"], dist["score"], rtol=0, atol=1e-12)
+        resident.close()
     # the writes changed the statistics the reads were checked on
     assert dfs_seen[1] > dfs_seen[0] and dfs_seen[3] < dfs_seen[2]
+
+
+def test_crash_inside_tombstone_rewrite_keeps_other_tombstones(spark, tmp_path, monkeypatch):
+    """A merge that crashes inside its tombstone rewrite, after the
+    rewrite's first file operation, must not resurrect deleted docs:
+    ``recover_merges`` finishes the merge, and every tombstone outside
+    the merged range survives."""
+    import shutil
+
+    import es_indexer_spark.index.merge as M
+    from es_indexer_spark.index import catalog
+    from es_indexer_spark.streaming.incremental import load_tombstones
+
+    idx = str(tmp_path / "idx")
+    build_index(spark, _corpus(spark, 0, 60), idx, n_buckets=8, n_segments=2)
+    append_batch(spark, _corpus(spark, 60, 66), idx)
+    append_batch(spark, _corpus(spark, 66, 72), idx)
+    delete_where(spark, idx, F.col("conv_id").isin("conv00000003", "conv00000062"))
+    vdir = catalog.current_version_dir(idx)
+    before = load_tombstones(vdir)
+    assert before.tolist() == [12, 13, 14, 15, 248, 249, 250, 251]
+
+    # let the rewrite's first file operation through, fail the next one
+    state = {"on": False, "ops": 0}
+
+    def counted(fn):
+        def op(*a, **kw):
+            if state["on"]:
+                state["ops"] += 1
+                if state["ops"] == 2:
+                    raise RuntimeError("simulated crash inside the tombstone rewrite")
+            return fn(*a, **kw)
+        return op
+
+    for mod, name in ((shutil, "rmtree"), (os, "replace"), (os, "remove"),
+                      (catalog, "write_json")):
+        monkeypatch.setattr(mod, name, counted(getattr(mod, name)))
+    rewrite = M._rewrite_tombstones
+
+    def tracked(*a):
+        state["on"] = True
+        try:
+            return rewrite(*a)
+        finally:
+            state["on"] = False
+
+    monkeypatch.setattr(M, "_rewrite_tombstones", tracked)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        merge_segments(spark, idx, min_inputs=2)  # folds the two appends
+    monkeypatch.undo()
+
+    assert recover_merges(spark, idx) == 1
+    assert load_tombstones(vdir).tolist() == [12, 13, 14, 15]
+    s = IndexSearcher(spark, idx)
+    assert len(_batch_dirs(s.vdir)) == 2
+    got = s.search(["the", "baco", "cora"], k=10_000)
+    assert not got["conv_id"].isin(["conv00000003", "conv00000062"]).any()
+    s.close()

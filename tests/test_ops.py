@@ -8,7 +8,7 @@ import duckdb
 import numpy as np
 import pytest
 
-from es_indexer_spark.ops import dedup, multimodal, similarity, textstats
+from es_indexer_spark.ops import dedup, similarity, textstats
 
 SF = "/root/testdata/sf0.001"
 
@@ -269,94 +269,6 @@ def test_lsh_ann_smoke_on_flat_embeddings(emb):
     assert len(ann) <= 10 and ann["cosine"].is_monotonic_decreasing
 
 
-def test_multimodal_plumbing(spark):
-    media = multimodal.synth_media(spark, n=60)
-    meta = multimodal.decode_media(media).toPandas()
-    assert len(meta) == 60
-    assert (meta["n_bytes"] > 24).all()
-    assert set(meta["kind"]) == {"image", "audio", "video"}
-    assert (meta.loc[meta["kind"] == "image", "sample_rate"].isna()).all()
-    feats = multimodal.extract_features(media).toPandas()
-    assert len(feats) == 60 and all(len(f) == 32 for f in feats["feature"])
-    np.testing.assert_allclose([np.sum(f) for f in feats["feature"]], 1.0, atol=1e-3)
-    frames = multimodal.sample_frames(media, every_n=8).toPandas()
-    assert (frames["frame_idx"] % 8 == 0).all()
-    # synthetic-header payloads are not a real format: decode_real's
-    # sniffer rejects them per row (surfaces as the task error a real
-    # pipeline routes to a quarantine sink)
-    with pytest.raises(Exception, match="unrecognized media format"):
-        multimodal.decode_real(media).collect()
-
-
-def test_decode_real_bmp_wav_roundtrip(spark):
-    """REAL file formats, no Pillow/ffmpeg: deterministic pixels/samples →
-    stdlib BMP/WAV encoders → REAL bytes through a binary Spark column →
-    decode_real metadata AND exact payload recovery."""
-    import pandas as pd
-
-    rows = []
-    for mid in range(6):
-        rng = np.random.default_rng(100 + mid)
-        if mid % 2 == 0:
-            w, h = 5 + mid, 7 + mid  # odd widths exercise BMP row padding
-            px = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-            rows.append((mid, multimodal.encode_bmp(px), ("image", w, h, None, 1)))
-        else:
-            n, rate = 50 + mid, 8000 * (mid % 3 + 1)
-            samples = rng.integers(-3000, 3000, size=n).astype(np.int16)
-            rows.append((mid, multimodal.encode_wav(samples, rate),
-                         ("audio", None, None, rate, n)))
-    df = spark.createDataFrame(
-        pd.DataFrame({"media_id": [r[0] for r in rows],
-                      "payload": [r[1] for r in rows]})
-    )
-    meta = multimodal.decode_real(df).toPandas().set_index("media_id")
-    for mid, payload, (kind, w, h, rate, nf) in rows:
-        m = meta.loc[mid]
-        assert m["kind"] == kind and m["n_bytes"] == len(payload)
-        if kind == "image":
-            assert (m["width"], m["height"]) == (w, h)
-        else:
-            assert (m["sample_rate"], m["n_frames"]) == (rate, nf)
-    # exact payload recovery through the byte round trip
-    rng = np.random.default_rng(100)
-    px = rng.integers(0, 256, size=(7, 5, 3), dtype=np.uint8)
-    np.testing.assert_array_equal(multimodal.decode_bmp(multimodal.encode_bmp(px)), px)
-    rng = np.random.default_rng(101)
-    samples = rng.integers(-3000, 3000, size=51).astype(np.int16)
-    back, rate = multimodal.decode_wav(multimodal.encode_wav(samples, 16000))
-    assert rate == 16000
-    np.testing.assert_array_equal(back, samples)
-    # grayscale encode replicates to RGB
-    gray = np.arange(64, dtype=np.uint8).reshape(8, 8)
-    dec = multimodal.decode_bmp(multimodal.encode_bmp(gray))
-    assert (dec[:, :, 0] == gray).all() and (dec[:, :, 1] == gray).all()
-
-
-def test_image_block_means_binary_roundtrip(spark, docs):
-    """The binary codec path proven against the analytic oracle: Spark
-    builds real payload bytes from the pixel formula, decodes THE BYTES
-    and block-mean resizes; DuckDB computes the same means from the
-    formula without ever seeing a byte."""
-    out = multimodal.image_block_means(multimodal.synth_formula_images(docs))
-    _cmp(out, multimodal.sql_image_block_means(), ["media_id", "by", "bx"])
-
-
-def test_image_block_means_known_value(spark):
-    # media_id=0 -> w=8, h=8, p[i] = (7*i) % 256; block (0,0) covers the
-    # 2x2... no: grid=4 on 8x8 -> 2x2 blocks; block (0,0) = pixels
-    # i in {0,1,8,9} -> 7*(0+1+8+9)/4 = 31.5
-    df = spark.createDataFrame([(0,)], "doc_id long")
-    got = {
-        (r["by"], r["bx"]): r["mean"]
-        for r in multimodal.image_block_means(
-            multimodal.synth_formula_images(df)
-        ).collect()
-    }
-    assert len(got) == 16
-    assert got[(0, 0)] == 7 * (0 + 1 + 8 + 9) / 4
-
-
 def test_ivf_ann_recall_on_clustered_vectors(spark):
     rng = np.random.RandomState(4)
     centers = rng.normal(size=(10, 64))
@@ -379,37 +291,6 @@ def test_ivf_assignment_deterministic(spark, emb):
     C1 = similarity.train_ivf_centroids(emb, 8)
     C2 = similarity.train_ivf_centroids(emb, 8)
     np.testing.assert_array_equal(C1, C2)
-
-
-def test_bmp_wav_roundtrip_property():
-    """Property (hypothesis): encode->decode is the identity for arbitrary
-    image dims/pixels and sample counts/rates (pure-python codecs, no
-    Spark needed)."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=40, deadline=None)
-    @given(
-        w=st.integers(1, 40), h=st.integers(1, 40), seed=st.integers(0, 2**31)
-    )
-    def bmp_case(w, h, seed):
-        rng = np.random.default_rng(seed)
-        px = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        np.testing.assert_array_equal(
-            multimodal.decode_bmp(multimodal.encode_bmp(px)), px
-        )
-
-    @settings(max_examples=40, deadline=None)
-    @given(n=st.integers(0, 500), rate=st.integers(1, 192000), seed=st.integers(0, 2**31))
-    def wav_case(n, rate, seed):
-        rng = np.random.default_rng(seed)
-        samples = rng.integers(-(2**15), 2**15, size=n).astype(np.int16)
-        back, r = multimodal.decode_wav(multimodal.encode_wav(samples, rate))
-        assert r == rate
-        np.testing.assert_array_equal(back, samples)
-
-    bmp_case()
-    wav_case()
 
 
 def test_shingling_long_doc_is_not_quadratic(spark):

@@ -84,10 +84,10 @@ def test_hash_sample_is_pure_pushed_filter(spark, sf_dir):
 def test_tombstone_mask_small_set_is_inlined_literal(spark):
     import numpy as np
 
-    from es_indexer_spark.streaming.incremental import mask_tombstones
+    from es_indexer_spark.planlimits import drop_ordinals
 
     df = spark.range(100).withColumnRenamed("id", "doc_ord")
-    plan = _plan(mask_tombstones(df, np.arange(5, dtype=np.int64)))
+    plan = _plan(drop_ordinals(df, np.arange(5, dtype=np.int64)))
     assert "LeftAnti" not in plan  # small set stays a pushed-down literal
 
 
@@ -97,11 +97,11 @@ def test_tombstone_mask_heavy_churn_is_anti_join_not_in_literal(spark):
     pushdown path."""
     import numpy as np
 
-    from es_indexer_spark.streaming.incremental import mask_tombstones
+    from es_indexer_spark.planlimits import drop_ordinals
 
     df = spark.range(100_000).withColumnRenamed("id", "doc_ord")
     tombs = np.arange(0, 100_000, 2, dtype=np.int64)  # 50k tombstones
-    out = mask_tombstones(df, tombs)
+    out = drop_ordinals(df, tombs)
     plan = _plan(out)
     assert "LeftAnti" in plan and "Broadcast" in plan
     # the giant literal never appears in the plan text

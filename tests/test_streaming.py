@@ -243,8 +243,8 @@ def test_time_travel_and_rollback_after_compaction(spark, tmp_path):
 def test_open_searcher_survives_append_and_refresh_sees_it(spark, tmp_path):
     """Snapshot contract (the round-4 review finding): a searcher opened
     BEFORE an append must keep answering from its point-in-time view —
-    appends write new batch dirs and a fresh versioned term_stats dir, so
-    nothing a cached file index references is replaced in place.
+    appends write new batch dirs, their term_stats included, so nothing
+    a cached file index references is replaced in place.
     refresh() then reopens at the current state."""
     idx = str(tmp_path / "idx")
     build_index(spark, _corpus(spark, 0, 20), idx, n_buckets=8, n_segments=2)
@@ -340,66 +340,79 @@ def test_append_batch_releases_ordinal_cache(spark, tmp_path):
 
 
 def test_term_stats_retention_and_replay_safety(spark, tmp_path):
-    """Appends expire term dictionaries older than current+previous
-    (bounded disk on a long stream), but an epoch REPLAY must expire
-    nothing — the manifest already points at the replayed dir, so the
-    genuinely-previous copy would otherwise be deleted inside the
-    documented retention horizon."""
+    """Each append writes only its own batch dictionary
+    (``term_stats/batch=<bid>``) and keeps every earlier one — no
+    dictionary expires while its batch lives — and a replay of a
+    COMMITTED epoch returns the recorded result and mutates nothing."""
     idx = str(tmp_path / "idx")
     build_index(spark, _corpus(spark, 0, 10), idx, n_buckets=8, n_segments=2)
     vdir = IndexSearcher(spark, idx).vdir
 
     def ts_dirs():
-        return sorted(
-            d for d in os.listdir(vdir)
-            if d == "term_stats" or d.startswith("term_stats_b")
-        )
+        return sorted(os.listdir(os.path.join(vdir, "term_stats")))
 
-    assert ts_dirs() == ["term_stats"]
+    assert ts_dirs() == ["batch=0"]
     append_batch(spark, _corpus(spark, 10, 11), idx, epoch_id=0)
-    assert ts_dirs() == ["term_stats", "term_stats_b10000"]  # cur + prev
     append_batch(spark, _corpus(spark, 11, 12), idx, epoch_id=1)
-    assert ts_dirs() == ["term_stats_b10000", "term_stats_b10001"]
+    assert ts_dirs() == ["batch=0", "batch=10000", "batch=10001"]
+    files = {
+        f: os.path.getmtime(os.path.join(d, f))
+        for d, _, fs in os.walk(os.path.join(vdir, "term_stats")) for f in fs
+    }
     # replay of a COMMITTED epoch: detected via its append checkpoint,
     # returns the recorded result, mutates nothing (exactly-once)
     r = append_batch(spark, _corpus(spark, 11, 12), idx, epoch_id=1)
     assert r.get("replayed") and r["appended"] == 4
-    assert ts_dirs() == ["term_stats_b10000", "term_stats_b10001"]
+    assert ts_dirs() == ["batch=0", "batch=10000", "batch=10001"]
+    assert files == {
+        f: os.path.getmtime(os.path.join(d, f))
+        for d, _, fs in os.walk(os.path.join(vdir, "term_stats")) for f in fs
+    }
     s = IndexSearcher(spark, idx)
-    assert s.term_stats_path.endswith("term_stats_b10001")
-    assert s.count(["the"]) >= 0  # dictionary readable post-retention
+    assert s.n_docs == 12 * 4
+    assert s.count(["the"]) == s._global_dfs(["the"])["the"] > 0
 
 
-def test_expired_dictionary_snapshot_raises_clear_error(spark, tmp_path):
-    """Review finding: a searcher older than one append horizon used to
-    get a raw FileNotFoundException from the lazily-executed term-stats
-    scan after retention rmtree'd its dictionary dir. It must raise
-    SnapshotExpiredError with a refresh() hint instead — and refresh()
-    must actually recover."""
-    import pytest
+def test_open_searcher_dictionary_survives_appends(spark, tmp_path):
+    """Appends never delete a dictionary, so a searcher opened before two
+    appends still answers expansions and global dfs with its open-time
+    values — from the resident arrays and from the scan alike, neither
+    read before the appends — and ``refresh()`` sees the appended
+    terms."""
+    import datetime
 
-    from es_indexer_spark.query.engine import SnapshotExpiredError
+    from es_indexer_spark.corpus import TRANSCRIPT_SCHEMA
 
     idx = str(tmp_path / "idx")
     build_index(spark, _corpus(spark, 0, 10), idx, n_buckets=8, n_segments=2)
-    old = IndexSearcher(spark, idx)
-    old.driver_max_docs = 0  # read the dictionary by scan, not resident
-    assert old.expand_prefix("turn") is not None  # dictionary alive
-    # two appends push the open searcher's dictionary out of retention
-    append_batch(spark, _corpus(spark, 10, 11), idx, epoch_id=0)
-    append_batch(spark, _corpus(spark, 11, 12), idx, epoch_id=1)
-    assert not os.path.isdir(old.term_stats_path)
-    with pytest.raises(SnapshotExpiredError, match="refresh"):
-        old.expand_fuzzy("turn")
-    with pytest.raises(SnapshotExpiredError):
-        old.expand_prefix("tu")
-    with pytest.raises(SnapshotExpiredError):
-        old.term_dictionary()
-    fresh = old.refresh()
-    fresh.driver_max_docs = 0
-    assert fresh.expand_prefix("tu") is not None
-    assert fresh.n_docs == 12 * 4
-    fresh.close()
+    terms = ["the", "baco", "zqxmark"]
+    ref = IndexSearcher(spark, idx)
+    want = (ref.expand_prefix("ba", 1000), ref.expand_fuzzy("bacu"), ref._global_dfs(terms))
+    assert want[0] and want[2]["the"] > 0 and want[2]["zqxmark"] == 0
+    resident = IndexSearcher(spark, idx)
+    scan = IndexSearcher(spark, idx)
+    scan.driver_max_docs = 0  # read the dictionary by scan, not resident
+
+    marked = spark.createDataFrame(
+        [("conv00000099", 0, "user", "zqxmark the baco", None,
+          datetime.datetime(2024, 1, 1))],
+        TRANSCRIPT_SCHEMA,
+    )
+    append_batch(spark, _corpus(spark, 10, 12).unionByName(marked), idx)
+    append_batch(spark, _corpus(spark, 12, 14), idx)
+
+    for s in (resident, scan):
+        assert (s.expand_prefix("ba", 1000), s.expand_fuzzy("bacu"),
+                s._global_dfs(terms)) == want
+        assert s.expand_prefix("zqx") == []
+    for old, max_docs in ((resident, resident.driver_max_docs), (scan, 0)):
+        fresh = old.refresh()
+        fresh.driver_max_docs = max_docs
+        assert fresh.n_docs == 14 * 4 + 1
+        assert fresh.expand_prefix("zqx") == ["zqxmark"]
+        dfs = fresh._global_dfs(terms)
+        assert dfs["zqxmark"] == 1 and dfs["the"] > want[2]["the"]
+        fresh.close()
 
 
 def test_delete_where_bulk_predicate_no_driver_ids(spark, tmp_path):
@@ -422,7 +435,6 @@ def test_delete_where_bulk_predicate_no_driver_ids(spark, tmp_path):
     n = delete_where(spark, idx, (key % 3 == 0) & (F.col("turn_idx") < 2))
     assert n == 10 * 2  # 10 of 30 convs, 2 of 4 turns each
     assert os.path.isdir(os.path.join(vdir, "tombstones_pq", "batch=0"))
-    assert not os.path.exists(os.path.join(vdir, "tombstones.json"))
 
     s1 = IndexSearcher(spark, idx)
     assert len(s1.tombstones) == 20
@@ -486,90 +498,78 @@ def test_distributed_path_snapshot_isolation_under_append(spark, tmp_path):
     ref.close()
 
 
-def test_incremental_term_stats_equals_full_rebuild(spark, tmp_path):
-    """Appends publish the dictionary incrementally (previous dict + new
-    batch aggregates); every stat is associative, so the result must be
-    EXACTLY the full re-aggregation over all postings."""
-    from es_indexer_spark.streaming.incremental import _rebuild_term_stats
+def _exact_dictionary(vdir, bid=None):
+    """{term: (df, total_tf)} aggregated over every posting chunk of the
+    index (or of batch ``bid``) — the full re-aggregation the per-batch
+    dictionaries must sum to."""
+    import pyarrow.dataset as pads
 
+    root = os.path.join(vdir, "postings") + ("" if bid is None else f"/batch={bid}")
+    agg = pads.dataset(root, partitioning="hive", format="parquet").to_table(
+        columns=["term", "df_chunk", "sum_tf"]
+    ).group_by("term").aggregate([("df_chunk", "sum"), ("sum_tf", "sum")])
+    return dict(zip(agg["term"].to_pylist(),
+                    zip(agg["df_chunk_sum"].to_pylist(), agg["sum_tf_sum"].to_pylist())))
+
+
+def _dictionary_of(s: IndexSearcher) -> dict:
+    td = s.term_dictionary()
+    return dict(zip(td["term"], zip(td["df"].tolist(), td["total_tf"].tolist())))
+
+
+def test_incremental_term_stats_equals_full_rebuild(spark, tmp_path):
+    """Every append writes only its own batch's dictionary; the searcher's
+    sum over the batches must be EXACTLY the full re-aggregation over
+    all postings, term-sorted."""
     idx = str(tmp_path / "idx")
     build_index(spark, _corpus(spark, 0, 20), idx, n_buckets=8, n_segments=2)
     for lo, hi in ((20, 26), (26, 30), (30, 41)):
         append_batch(spark, _corpus(spark, lo, hi), idx)
     s = IndexSearcher(spark, idx)
-    incr = spark.read.parquet(s.term_stats_path).select(
-        "term", "df", "total_tf", "n_chunks", "max_tf"
-    )
-    full_name = _rebuild_term_stats(spark, s.vdir, 8, 9999)
-    full = spark.read.parquet(os.path.join(s.vdir, full_name)).select(
-        "term", "df", "total_tf", "n_chunks", "max_tf"
-    )
-    a = sorted(map(tuple, incr.collect()))
-    b = sorted(map(tuple, full.collect()))
-    assert a == b and len(a) > 100
+    got = _dictionary_of(s)
+    assert got == _exact_dictionary(s.vdir) and len(got) > 100
+    assert list(s.term_dictionary()["term"]) == sorted(got)
     s.close()
 
 
 def test_dict_driver_and_spark_merge_paths_identical(spark, tmp_path, monkeypatch):
-    """The size-dispatched driver-side dictionary merge must be bit-equal
-    to the distributed union+groupBy path AND write an identical layout
-    (tlen hive dirs, same column schema), so either path can follow the
-    other across appends."""
+    """The size-dispatched dictionary writer's driver (pyarrow) and Spark
+    (groupBy) branches must write bit-equal statistics in an identical
+    layout (tlen hive dirs, term-sorted files, same column schema), so
+    the batches of one index can come from either."""
     import glob
 
     import pyarrow.dataset as pads
+    import pyarrow.parquet as papq
 
-    from es_indexer_spark.streaming import incremental as inc
+    from es_indexer_spark.index import build
 
     idx = str(tmp_path / "idx")
     build_index(spark, _corpus(spark, 0, 20), idx, n_buckets=8, n_segments=2)
-    append_batch(spark, _corpus(spark, 20, 26), idx)  # driver path (small)
-    # force the SPARK path for the next append, then a driver-path one
-    monkeypatch.setattr(inc, "DICT_DRIVER_MAX_ROWS", 0)
+    append_batch(spark, _corpus(spark, 20, 26), idx)  # driver branch (small)
+    # force the SPARK branch for the next append, then a driver one
+    monkeypatch.setattr(build, "DICT_DRIVER_MAX_ROWS", 0)
     append_batch(spark, _corpus(spark, 26, 33), idx)
-    monkeypatch.setattr(inc, "DICT_DRIVER_MAX_ROWS", 2_000_000)
+    monkeypatch.setattr(build, "DICT_DRIVER_MAX_ROWS", 2_000_000)
     append_batch(spark, _corpus(spark, 33, 41), idx)
     s = IndexSearcher(spark, idx)
-    # both paths interleaved; final dict == full re-aggregation, exactly
-    from es_indexer_spark.streaming.incremental import _rebuild_term_stats
-    incr = spark.read.parquet(s.term_stats_path).select(
-        "term", "df", "total_tf", "n_chunks", "max_tf")
-    full_name = _rebuild_term_stats(spark, s.vdir, 8, 9999)
-    full = spark.read.parquet(os.path.join(s.vdir, full_name)).select(
-        "term", "df", "total_tf", "n_chunks", "max_tf")
-    assert sorted(map(tuple, incr.collect())) == sorted(map(tuple, full.collect()))
-    # layout parity: hive tlen dirs, schema (names + types) identical
-    ds_incr = pads.dataset(s.term_stats_path, partitioning="hive",
-                           format="parquet")
-    ds_full = pads.dataset(os.path.join(s.vdir, full_name),
-                           partitioning="hive", format="parquet")
-    assert {f.name for f in ds_incr.schema} == {f.name for f in ds_full.schema}
-    for f in ds_full.schema:
-        assert ds_incr.schema.field(f.name).type == f.type, f.name
-    assert glob.glob(os.path.join(s.term_stats_path, "tlen=*"))
+    # both branches interleaved; the sum == full re-aggregation, exactly
+    assert _dictionary_of(s) == _exact_dictionary(s.vdir)
+    schemas = {}
+    for bid in (0, 1, 2, 3):
+        root = os.path.join(s.vdir, "term_stats", f"batch={bid}")
+        tbl = pads.dataset(root, partitioning="hive", format="parquet").to_table()
+        assert dict(zip(tbl["term"].to_pylist(), zip(
+            tbl["df"].to_pylist(), tbl["total_tf"].to_pylist()))) == _exact_dictionary(s.vdir, bid)
+        schemas[bid] = [(f.name, f.type) for f in tbl.schema]
+        files = glob.glob(os.path.join(root, "tlen=*", "*.parquet"))
+        assert len(files) == len({os.path.dirname(f) for f in files})  # one per tlen
+        for f in files:
+            terms = papq.read_table(f, columns=["term"])["term"].to_pylist()
+            assert terms == sorted(terms)
+    # layout parity: the Spark-written batch 2 reads like the others
+    assert schemas[2] == schemas[0] == schemas[1] == schemas[3]
     s.close()
-
-
-def test_dict_driver_merge_rejects_empty_block_list(tmp_path):
-    """A chunk with no blocks has no block maximum: the driver-side
-    dictionary merge must fail loudly instead of taking the next chunk's
-    first block max as this term's max_tf (the bound block-max pruning
-    relies on)."""
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    from es_indexer_spark.streaming.incremental import _update_term_stats_local
-
-    delta = tmp_path / "delta"
-    delta.mkdir()
-    papq.write_table(pa.table({
-        "term": ["alpha", "beta"],
-        "df_chunk": [1, 2],
-        "sum_tf": [1, 5],
-        "block_max_tf": pa.array([[], [4]], pa.list_(pa.int32())),
-    }), str(delta / "part-0.parquet"))
-    with pytest.raises(ValueError, match="empty block_max_tf"):
-        _update_term_stats_local(str(tmp_path), 8, 1, "term_stats", str(delta))
 
 
 def test_append_checkpoint_carries_lineage_metrics(spark, tmp_path):

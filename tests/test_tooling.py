@@ -2,8 +2,8 @@
 ``es_indexer_spark`` module or name it imports exists, and
 ``scripts/scaling_run.py`` parses its arguments; the Spark daemon module
 imports without writing to stdout; the query kernel, the term-dictionary
-read and the DSL tree walk each have one home; query result schemas are
-StructTypes."""
+read, the term-dictionary write and the DSL tree walk each have one
+home; query result schemas are StructTypes."""
 
 from __future__ import annotations
 
@@ -120,6 +120,47 @@ def test_one_term_dictionary_read():
         len(re.findall(r"(?<!def )levenshtein_within\(", p.read_text())) for p in pkg
     )
     assert calls == 1
+
+
+def _functions(path: pathlib.Path):
+    """(name, source) of every module-level function and method."""
+    text = path.read_text()
+    for node in ast.parse(text, str(path)).body:
+        defs = node.body if isinstance(node, ast.ClassDef) else [node]
+        for d in defs:
+            if isinstance(d, ast.FunctionDef):
+                yield d.name, ast.get_source_segment(text, d)
+
+
+def test_one_dictionary_writer():
+    """Grep and AST guard: every batch writes its own term dictionary
+    through one function, ``index.build.write_term_stats``, and build,
+    append and merge all call it. The removed global-dictionary writers,
+    their snapshot-expiry horizon, the dictionary's dropped column and
+    the JSON tombstone store stay gone from the package, the entry
+    module and the tests (this guard excepted)."""
+    this = pathlib.Path(__file__).resolve()
+    gone = re.compile(
+        r"term_stats_dir|term_stats_b|term_stats_path|SnapshotExpiredError"
+        r"|_update_term_stats|_rebuild_term_stats|n_chunks|mask_tombstones"
+        r"|tombstones\.json"
+    )
+    pkg = sorted((REPO / "es_indexer_spark").rglob("*.py"))
+    paths = [*pkg, REPO / "__spark_entry__.py", *sorted((REPO / "tests").rglob("*.py"))]
+    found = [
+        (str(p.relative_to(REPO)), m.group(0))
+        for p in paths if p.resolve() != this
+        for m in gone.finditer(p.read_text())
+    ]
+    assert not found, found
+    # the dictionary layout is term_stats/batch=<bid>/tlen=<K>: a function
+    # writing tlen partitions writes a dictionary
+    funcs = [(p.relative_to(REPO).as_posix(), n, src) for p in pkg for n, src in _functions(p)]
+    writers = [(p, n) for p, n, src in funcs
+               if re.search(r'partitionBy\("tlen"\)|tlen=\{', src)]
+    assert writers == [("es_indexer_spark/index/build.py", "write_term_stats")]
+    callers = {n for _, n, src in funcs if re.search(r"(?<!def )write_term_stats\(", src)}
+    assert callers == {"build_index", "append_batch", "merge_segments"}
 
 
 def test_one_dsl_evaluator():
