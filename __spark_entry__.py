@@ -174,7 +174,7 @@ def _ft_phrase_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ft_phrase_hits_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Segment-parallel match_phrase (cogroup path), same oracle."""
+    """Segment-parallel match_phrase (segment-task path), same oracle."""
     s = _pos_searcher(spark, sf_dir)
     return s.phrase_search_df(_PHRASE, k=1_000_000).select(
         F.col("conv_id").cast("long").alias("doc_id")
@@ -610,8 +610,8 @@ def _ft_merged_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ft_merged_bm25_topk_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed cogroup scoring over the merged single segment — the
-    packed norms densify over the expunged holes; same SQL oracle."""
+    """Distributed segment-task scoring over the merged single segment — the
+    segment's norms densify over the expunged holes; same SQL oracle."""
     s = _merged_searcher(spark, sf_dir)
     return s.search_df(BM25_TERMS, k=BM25_K).select(
         F.col("conv_id").cast("long").alias("doc_id"),
@@ -620,7 +620,7 @@ def _ft_merged_bm25_topk_distributed(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 def _ft_bm25_topk_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Segment-parallel cogroup scoring path, checked against the SAME full
+    """Segment-parallel scoring path, checked against the SAME full
     SQL BM25 oracle as the driver path (rank identity distributed == driver
     is additionally pytest-proven)."""
     s = _index_for(spark, sf_dir)

@@ -529,8 +529,8 @@ def build_index(
         # spreader (key cardinality = n_buckets * n_segments must exceed
         # task slots comfortably or hash collisions idle whole cores) AND
         # the query-time scoring parallelism: the distributed top-k
-        # cogroups by seg, so a corpus with fewer segments than cores
-        # serializes its scoring kernels. At 10^12 turns segments >>
+        # runs one task per segment slice, so a corpus with fewer
+        # segments than cores serializes its scoring kernels. At 10^12 turns segments >>
         # cores always holds; the parallelism floor below only matters
         # for corpora small enough that 1M-doc sizing would leave cores
         # idle. Round-6 sweeps (BENCH_NOTES): at 2M turns/32 cores 4 segs

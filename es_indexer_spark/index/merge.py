@@ -9,8 +9,8 @@ nor tombstone mass grows without bound. This module is that layer for the
 parquet index layout: every ``append_batch`` (streaming micro-batch or
 manual slice) leaves one ``batch=N`` directory holding one segment, and a
 long-lived stream accumulates hundreds of them — each adding a posting
-chunk per term per query, a packed-norms row, and scheduler overhead to
-the distributed scoring cogroup. ``rebuild_compacted`` (blue/green full
+chunk per term per query, a norms read, and files to open to the
+distributed scoring job's segment tasks. ``rebuild_compacted`` (blue/green full
 rebuild) stays the deep-clean path, but at 10^12 turns a full rebuild to
 fold a few thousand micro-batch segments is a non-starter; this is the
 incremental answer, sized to the small tier it touches.
@@ -26,9 +26,9 @@ Semantics (Lucene parity):
   dropped from both postings (vectorized decode → filter → re-encode)
   and doc_stats, and their ordinals leave the tombstone set. Ordinals are
   NOT renumbered — the merged segment keeps holes, which is safe because
-  an expunged doc appears in no posting list and no doc_stats row: the
-  packed norms densify over the span (``engine._doc_side``) and the
-  driver norms scatter by ordinal (``engine._load_norms``). The manifest
+  an expunged doc appears in no posting list and no doc_stats row: a
+  segment task's norms densify over the span (``engine._SegmentNorms``)
+  and the driver norms scatter by ordinal (``engine._load_norms``). The manifest
   tracks ``next_ord`` (ordinal span) separately from ``n_docs`` (live
   rows) so later appends keep allocating collision-free.
 - **block metadata** stays WAND-safe without a doc-length join: the

@@ -227,6 +227,12 @@ class _Driver:
         return a[0][keep], a[1][keep]
 
     @staticmethod
+    def drop(v: Vec, ords: np.ndarray) -> Vec:
+        """``v`` without the doc ordinals ``ords`` (tombstones)."""
+        keep = ~np.isin(v[0], ords)
+        return v[0][keep], v[1][keep]
+
+    @staticmethod
     def union(vs: list[Vec]) -> Vec:
         docs = reduce(np.union1d, [v[0] for v in vs])
         return docs, np.zeros(len(docs))
@@ -397,6 +403,13 @@ class _Spark:
     @staticmethod
     def andnot(a: DataFrame, b: DataFrame) -> DataFrame:
         return a.join(b.select("doc_ord"), "doc_ord", "left_anti")
+
+    @staticmethod
+    def drop(v: DataFrame, ords: np.ndarray) -> DataFrame:
+        """``v`` without the doc ordinals ``ords`` (tombstones)."""
+        from ..planlimits import drop_ordinals
+
+        return drop_ordinals(v, ords)
 
     def should(self, base: DataFrame | None, shoulds: list[DataFrame], msm: int) -> DataFrame:
         folded = self._folded(shoulds)

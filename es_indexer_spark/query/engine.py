@@ -36,14 +36,20 @@ and the term boosts — and ``scoring.evaluate`` / ``scoring.count`` run it:
   4(b) gives segments term-sorted row groups). Driver memory is
   O(budget) plus the LRU. Valid while per-corpus norms fit the driver.
 - **distributed executor** (``search_df`` / ``count_df`` /
-  ``phrase_search_df`` / ``suggest_df``): posting rows
-  for the query terms are cogrouped with doc_stats by segment, and each
-  Spark task runs the same kernel over its segment (= shard), emitting a
-  local top-k or its full score vector; a global sort of the tiny union
-  gathers the final top-k — Lucene's shard fan-out/merge mapped 1:1 onto
-  Spark partitions. Synonym expansion, term/role/tool boosts, phrase
-  adjacency and counts run here with no O(corpus) driver state. The
-  public ``search``/``count``/``phrase_search``/``suggest`` auto-dispatch
+  ``phrase_search_df`` / ``suggest_df``): one Spark job of segment tasks
+  with no shuffle and nothing persisted. ``spark.range`` over the
+  snapshot's segments is mapped with Arrow; each task loops over its
+  slice of segments (Lucene's leaf slices), reads with pyarrow only its
+  segment's postings files of the plan's term buckets and its segment's
+  norms from doc_stats (``_SegmentNorms``, cached in each reused Python
+  worker), runs the same kernel and emits a local top-k, its full score
+  vector or a count; a global sort of the tiny union gathers the final
+  top-k — Lucene's shard fan-out/merge. Synonym expansion,
+  term/role/tool boosts, phrase adjacency and counts run here with no
+  O(corpus) driver state. Executors read the index path with pyarrow
+  exactly as the driver does, so on a cluster the index must sit on a
+  filesystem every executor mounts. The public
+  ``search``/``count``/``phrase_search``/``suggest`` auto-dispatch
   between executors on corpus size.
 
 Every batch owns its term dictionary (``term_stats/batch=<bid>``, the
@@ -75,7 +81,6 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -105,17 +110,6 @@ _HITS = T.StructType([
     T.StructField("score", T.DoubleType()),
 ])
 _COUNT = T.StructType([T.StructField("n", T.LongType())])
-# one packed row of doc norms per segment (see IndexSearcher._doc_side)
-_DOC_SIDE = T.StructType([
-    T.StructField("seg", T.IntegerType()),
-    T.StructField("base", T.LongType()),
-    T.StructField("n_docs", T.IntegerType()),
-    T.StructField("dl_bytes", T.BinaryType()),
-    T.StructField("role_bytes", T.BinaryType()),
-    T.StructField("tool_bytes", T.BinaryType()),
-    T.StructField("role_dict", T.ArrayType(T.StringType())),
-    T.StructField("tool_dict", T.ArrayType(T.StringType())),
-])
 # the top code point: a prefix's terms all sort at or below prefix + this
 _MAX_CHAR = "\U0010FFFF"
 # term_stats/batch=<bid>/tlen=<K>/*.parquet (index.build.write_term_stats),
@@ -187,6 +181,81 @@ def _boost_lut(names, boosts: dict[str, float] | None) -> np.ndarray:
     return lut
 
 
+class _SegmentNorms:
+    """One segment's doc norms, as a distributed scoring task reads them:
+    ``dl`` (int32) and the role/tool codes (int16) over the dense ordinal
+    span starting at ``base``. The code maps are segment-local: code 0 is
+    null, code i + 1 is ``role_names[i]`` / ``tool_names[i]``, so no
+    global vocabulary pass exists. Holes left by an expunging merge
+    (index/merge.py) are densified with dl 0 and code 0; no posting
+    references them.
+
+    ``get`` serves them from an LRU of at most ``MAX_BYTES`` that lives in
+    each Python worker process and outlives its tasks while Spark reuses
+    the worker — the executor-resident analogue of Lucene's per-segment
+    norms. Its key is the segment id plus its doc_stats files with their
+    size and mtime, so a rewritten batch (a replayed append, a merge) is
+    never served stale. Without worker reuse every task reads its norms
+    afresh: correct, only slower. A worker runs one task at a time."""
+
+    MAX_BYTES = 128 << 20
+    _lru: dict[tuple, "_SegmentNorms"] = {}
+    _bytes = 0
+
+    def __init__(self, seg: int, tbl: pa.Table):
+        tbl = tbl.sort_by("doc_ord")
+        ords = tbl["doc_ord"].to_numpy()
+        if np.any(ords[1:] == ords[:-1]):  # not assert: -O
+            raise ValueError(
+                f"segment {seg} has duplicate doc ordinals — its norms would misalign"
+            )
+        self.base = int(ords[0]) if len(ords) else 0
+        pos = ords - self.base
+        span = int(pos[-1]) + 1 if len(pos) else 0
+        self.dl = np.zeros(span, dtype=np.int32)
+        self.dl[pos] = tbl["dl"].to_numpy()
+        for col in ("role", "tool"):
+            enc = tbl[col].combine_chunks().dictionary_encode()
+            if len(enc.dictionary) >= 32_767:  # int16 codes
+                raise ValueError(
+                    f"segment {seg}: {col} cardinality {len(enc.dictionary)} "
+                    "exceeds int16 codes — a bounded categorical by schema; "
+                    "widen the code dtype if that ever changes"
+                )
+            codes = np.zeros(span, dtype=np.int16)
+            codes[pos] = pc.fill_null(enc.indices, -1).to_numpy() + 1
+            setattr(self, col, codes)
+            setattr(self, col + "_names", enc.dictionary.to_pylist())
+        self.nbytes = self.dl.nbytes + self.role.nbytes + self.tool.nbytes
+
+    @classmethod
+    def get(cls, seg: int, files: tuple[str, ...]) -> "_SegmentNorms":
+        key = (seg, *((p, st.st_size, st.st_mtime_ns) for p in files for st in [os.stat(p)]))
+        norms = cls._lru.pop(key, None)
+        if norms is None:
+            norms = cls(seg, pads.dataset(list(files), format="parquet").to_table(
+                columns=["doc_ord", "dl", "role", "tool"], filter=pc.field("seg") == seg,
+            ))
+            cls._bytes += norms.nbytes
+        cls._lru[key] = norms  # most recent last
+        while cls._bytes > cls.MAX_BYTES and len(cls._lru) > 1:
+            cls._bytes -= cls._lru.pop(next(iter(cls._lru))).nbytes
+        return norms
+
+
+def _seg_range(md) -> range:
+    """The range of segment ids a doc_stats or postings file can hold,
+    from the ``seg`` statistics of its footer."""
+    ci = md.schema.names.index("seg")
+    stats = [md.row_group(i).column(ci).statistics for i in range(md.num_row_groups)
+             if md.row_group(i).num_rows]
+    if not stats:
+        return range(0)
+    if any(st is None or not st.has_min_max for st in stats):
+        raise ValueError("an index file has no seg statistics in its footer")
+    return range(min(st.min for st in stats), max(st.max for st in stats) + 1)
+
+
 class IndexSearcher:
     def __init__(self, spark: SparkSession, index_dir: str, version_dir: str | None = None):
         self.spark = spark
@@ -224,15 +293,13 @@ class IndexSearcher:
             os.path.join(vdir, "doc_stats"), partitioning="hive", format="parquet"
         )
         self._norms: dict | None = None
-        import uuid as _uuid
-
-        self._snapshot_token = _uuid.uuid4().hex  # see _doc_side
         self._term_dict: pd.DataFrame | None = None
         # (terms sorted, df, term lengths) of the resident dictionary
         self._dict_arrays: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
         self._chunk_cache: dict[str, scoring.TermChunks] = {}
         # tbucket -> postings fragments of self._postings_ds, grouped on
-        # the first fetch; a bucket's footers are read on its first use
+        # first use; a bucket's footers are read on its first driver-side
+        # fetch
         self._bucket_frags: dict[int, list] | None = None
         self._bucket_bytes: dict[int, int] = {}
         # tbucket -> the whole bucket, resident until close() (see
@@ -240,23 +307,16 @@ class IndexSearcher:
         self._resident: dict[int, scoring.ChunkColumns] = {}
         self._resident_bytes = 0
         self._df_cache: dict[str, int] = {}
-        self._doc_side_df: DataFrame | None = None
-        # Spark-side sources are opened ONCE per searcher, and EAGERLY (the
-        # analogue of Lucene's long-lived segment readers): re-reading them
-        # per query re-lists files and footers (~40% of warm distributed-
-        # query latency at 500k docs), and a lazy first use would list the
-        # files at some later moment, splicing a mid-append state into a
-        # searcher whose stats and tombstones are as of open. SNAPSHOT
-        # CONTRACT (Lucene point-in-time readers): appends only ADD batch
-        # dirs (postings, doc_stats and term_stats alike), and compaction
-        # publishes a new version dir, so a searcher stays valid across
-        # any number of appends until a merge removes its batches.
-        self._postings_src: DataFrame = self.spark.read.parquet(
-            os.path.join(vdir, "postings")
-        )
-        self._doc_stats_src: DataFrame = self.spark.read.parquet(
-            os.path.join(vdir, "doc_stats")
-        )
+        # (seg, doc_stats files) per segment (_segment_list) and the
+        # Spark view of doc_stats (doc_stats_df), both built on first use
+        # from the file listings above. SNAPSHOT CONTRACT (Lucene
+        # point-in-time readers): appends only ADD batch dirs (postings,
+        # doc_stats and term_stats alike) and compaction publishes a new
+        # version dir, so reading exactly the files listed at open keeps
+        # the searcher valid across any number of appends until a merge
+        # removes its batches; the open itself runs no Spark job.
+        self._segments: list[tuple[int, tuple[str, ...]]] | None = None
+        self._doc_stats_src: DataFrame | None = None
         # corpora larger than this auto-dispatch search/count/phrase/suggest
         # to the distributed path (driver path holds O(corpus) norms) and
         # read the term dictionary by scan, not from resident arrays
@@ -290,14 +350,9 @@ class IndexSearcher:
         one row group, so a scan reads the whole file and a ``term``
         filter runs after the read; term-sorted row groups that
         statistics can prune are ROADMAP item 4(b)."""
-        if self._bucket_frags is None:
-            by_bucket: dict[int, list] = {}
-            for f in self._postings_ds.get_fragments():
-                by_bucket.setdefault(int(_partition_key(f, "tbucket")), []).append(f)
-            self._bucket_frags = by_bucket
         out = []
         for b in buckets:
-            frags = self._bucket_frags.get(b, [])
+            frags = self._by_bucket().get(b, [])
             if b not in self._bucket_bytes:
                 for f in frags:
                     f.ensure_complete_metadata()
@@ -306,6 +361,14 @@ class IndexSearcher:
                 )
             out.extend(frags)
         return out
+
+    def _by_bucket(self) -> dict[int, list]:
+        """tbucket -> the postings fragments listed at open."""
+        if self._bucket_frags is None:
+            self._bucket_frags = {}
+            for f in self._postings_ds.get_fragments():
+                self._bucket_frags.setdefault(int(_partition_key(f, "tbucket")), []).append(f)
+        return self._bucket_frags
 
     def _scan_postings(self, buckets: list[int], filt: pc.Expression | None = None):
         """One Arrow scan of the given term buckets' fragments, sorted by
@@ -774,6 +837,14 @@ class IndexSearcher:
 
     # ------------------------------------------------------ scan/point ops
     def doc_stats_df(self) -> DataFrame:
+        """doc_stats as a Spark DataFrame over exactly the files listed at
+        open, with its ``batch`` partition column; built on first use, so
+        an open runs no Spark job and an append made after it stays
+        unseen."""
+        if self._doc_stats_src is None:
+            self._doc_stats_src = self.spark.read.option(
+                "basePath", os.path.join(self.vdir, "doc_stats")
+            ).parquet(*self._doc_ds.files)
         return self._doc_stats_src
 
     def get(self, doc_id: str) -> pd.DataFrame:
@@ -812,7 +883,7 @@ class IndexSearcher:
     # boosts, phrase, suggest, count): any query answerable at sf0.1 on the
     # driver is answerable at 10^9 docs here, with NO O(corpus) driver state
     # — global term stats come from the dictionary read (rows = query
-    # terms), everything else rides the segment cogroup.
+    # terms), everything else is read by the segment tasks.
 
     def _global_dfs(self, terms: list[str]) -> dict[str, int]:
         """Corpus-wide df per query term (idf is a global statistic): a
@@ -829,128 +900,19 @@ class IndexSearcher:
                 self._df_cache.update(zip(got.tolist(), df.tolist()))
         return {t: self._df_cache[t] for t in terms}
 
-    def _doc_side(self) -> DataFrame:
-        """Seg-partitioned, persisted doc norms for the distributed path —
-        the executor-resident analogue of Lucene's per-shard NORMS FILE:
-        ONE packed row per segment (base ordinal + int32 dl array + int16
-        role/tool code arrays as binary blobs) instead of one Arrow row
-        per document. Per-query transfer is then ~8 B/doc of packed bytes
-        with zero per-row Arrow/pandas overhead — at 10^9 docs the
-        row-per-doc layout would stream the entire norms table through
-        Python on EVERY query. The pack is paid once per searcher; the
-        persisted HashPartitioning on seg matches the cogroup's required
-        distribution, so repeated queries skip the doc-side shuffle
-        entirely. Packing relies on the build invariant that each segment
-        covers a dense doc_ord range (asserted per segment).
-
-        Role/tool values are dictionary-encoded with SEGMENT-LOCAL code
-        maps shipped inside each packed row, so building the doc side is
-        ONE corpus scan with no global vocabulary pass and no driver
-        state; the scoring kernel turns query-time boost dicts into
-        O(#codes) lookup tables from the row's own dictionaries. A
-        searcher is a point-in-time snapshot; refresh() to see appends."""
-        if self._doc_side_df is None:
-            ds = self.doc_stats_df().select("seg", "doc_ord", "dl", "role", "tool")
-
-            # unannotated: pyspark warns when it cannot infer an eval type
-            # from partial hints; bare functions get the grouped-map default
-            def pack(key, pdf):
-                pdf = pdf.sort_values("doc_ord")
-                ords = pdf["doc_ord"].to_numpy(np.int64)
-                base, n_rows = int(ords[0]), len(ords)
-                span = int(ords[-1]) - base + 1
-                if len(np.unique(ords)) != n_rows:  # not assert: -O
-                    raise ValueError(
-                        f"segment {key[0]} has duplicate doc ordinals — "
-                        "packed norms would misalign"
-                    )
-                # SEGMENT-LOCAL dictionaries: codes only need to be
-                # consistent within the packed row they ship with, so no
-                # global vocabulary pass (or driver code state) exists at
-                # all — the pack is ONE corpus scan total. Code 0 = null.
-                rc, r_uniq = pd.factorize(pdf["role"], use_na_sentinel=True)
-                tc, t_uniq = pd.factorize(pdf["tool"], use_na_sentinel=True)
-                if max(len(r_uniq), len(t_uniq)) >= 32_767:  # int16 wrap
-                    raise ValueError(
-                        f"segment {key[0]}: role/tool cardinality "
-                        f"({len(r_uniq)}/{len(t_uniq)}) exceeds int16 codes — "
-                        "these are bounded categoricals by schema; widen the "
-                        "code dtype if that ever changes"
-                    )
-                dl = pdf["dl"].to_numpy(np.int32)
-                r_codes = (rc + 1).astype("<i2")
-                t_codes = (tc + 1).astype("<i2")
-                if span != n_rows:
-                    # expunged holes (index/merge.py): densify over the
-                    # span — holes get dl 0 / code 0 (null) and are never
-                    # read, since expunged docs left the posting lists
-                    pos = ords - base
-                    d = np.zeros(span, dtype=np.int32); d[pos] = dl
-                    r = np.zeros(span, dtype="<i2"); r[pos] = r_codes
-                    t = np.zeros(span, dtype="<i2"); t[pos] = t_codes
-                    dl, r_codes, t_codes = d, r, t
-                return pd.DataFrame(
-                    [
-                        {
-                            "seg": int(key[0]),
-                            "base": base,
-                            "n_docs": n_rows,
-                            "dl_bytes": dl.astype("<i4").tobytes(),
-                            "role_bytes": r_codes.tobytes(),
-                            "tool_bytes": t_codes.tobytes(),
-                            "role_dict": [str(v) for v in r_uniq],
-                            "tool_dict": [str(v) for v in t_uniq],
-                        }
-                    ]
-                )
-
-            n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            self._doc_side_df = (
-                ds.groupBy("seg")
-                .applyInPandas(pack, _DOC_SIDE)
-                # explicit repartition: the packed rows are tiny, so AQE
-                # would coalesce the pack's shuffle to 1-2 partitions and
-                # the cached partitioning would serialize the scoring
-                # cogroup into 1-2 tasks; a user-specified repartition is
-                # AQE-exempt and keeps the scoring stage n-wide
-                .repartition(n, "seg")
-                # snapshot token: Spark's CacheManager serves a cached
-                # plan to any LATER plan with the same result — two
-                # searchers open over one index across an append/merge
-                # would silently share ONE doc-side cache (the older
-                # snapshot's), dropping the newer searcher's segments.
-                # A per-searcher literal makes the plans distinct; the
-                # scoring kernels read columns by name and ignore it.
-                .withColumn("_snap", F.lit(self._snapshot_token))
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-        return self._doc_side_df
-
     def refresh(self) -> "IndexSearcher":
         """Reopen at the CURRENT state of the index (Lucene's
-        DirectoryReader.openIfChanged): releases this searcher's
-        executor-side caches and returns a fresh point-in-time searcher
-        that sees all appends/deletes/compactions committed since this
-        one opened."""
+        DirectoryReader.openIfChanged): releases this searcher's resident
+        buckets and returns a fresh point-in-time searcher that sees all
+        appends/deletes/compactions committed since this one opened."""
         self.close()
         return IndexSearcher(self.spark, self.index_dir)
 
     def close(self) -> None:
-        """Release executor-side caches (the persisted doc-side norms) and
-        the resident term buckets."""
+        """Release the resident term buckets. Executors hold no state of
+        this searcher: their norms cache is keyed by file, not searcher."""
         self._resident.clear()
         self._resident_bytes = 0
-        if self._doc_side_df is not None:
-            self._doc_side_df.unpersist()
-            self._doc_side_df = None
-
-    def _postings_df(self, terms: list[str]) -> DataFrame:
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
-        return (
-            self._postings_src
-            .filter(F.col("tbucket").isin(buckets) & F.col("term").isin(terms))
-            .select(*self._posting_cols())
-        )
 
     def search_df(
         self,
@@ -1060,6 +1022,69 @@ class IndexSearcher:
             phrase=phrase_terms, **plan_kw,
         )
 
+    def _segment_list(self) -> list[tuple[int, tuple[str, ...]]]:
+        """(seg, doc_stats files) of every segment of the snapshot, from
+        the doc_stats files listed at open and the ``seg`` statistics of
+        their footers (``_seg_range``): no Spark job and no data read."""
+        if self._segments is None:
+            files: dict[int, list[str]] = {}
+            for f in self._doc_ds.get_fragments():
+                for seg in _seg_range(f.metadata):
+                    files.setdefault(seg, []).append(f.path)
+            self._segments = [(seg, tuple(p)) for seg, p in sorted(files.items())]
+        return self._segments
+
+    def _segment_files(
+        self, terms: Iterable[str]
+    ) -> list[tuple[int, tuple[str, ...], tuple[str, ...]]]:
+        """(seg, doc_stats files, postings files) of each segment a task
+        reads for ``terms``: the postings files are those of the terms'
+        tbucket partitions whose footer ``seg`` statistics hold the
+        segment — footers the driver path reads too, once per bucket per
+        searcher (``_fragments``). A segment with none is left out."""
+        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
+        postings = [(f.path, _seg_range(f.metadata)) for f in self._fragments(buckets)]
+        out = []
+        for seg, docs in self._segment_list():
+            files = tuple(p for p, segs in postings if seg in segs)
+            if files:
+                out.append((seg, docs, files))
+        return out
+
+    def _segment_job(
+        self,
+        terms: tuple[str, ...],
+        per_segment: Callable[[int, tuple[str, ...], dict], pa.RecordBatch],
+        schema: T.StructType,
+    ) -> DataFrame:
+        """One Spark job of segment tasks, with no shuffle: ``spark.range``
+        over the segments ``_segment_files`` keeps, mapped with Arrow, each
+        task looping over its contiguous slice of them (Lucene's leaf
+        slices — many small segments do not cost one Python task each).
+        For each segment a task reads the posting chunks of ``terms`` with
+        pyarrow and emits ``per_segment(seg, doc_stats files, chunks)``, a
+        RecordBatch of ``schema``; a segment with no such chunks emits
+        nothing."""
+        segs = self._segment_files(terms)
+        if not segs:
+            return self.spark.createDataFrame([], schema)
+        cols, want = self._posting_cols(), list(terms)
+
+        def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for rb in batches:
+                for i in rb.column("id").to_pylist():
+                    seg, docs, files = segs[i]
+                    tbl = pads.dataset(list(files), format="parquet").to_table(
+                        columns=cols,
+                        filter=(pc.field("seg") == seg) & pc.field("term").isin(want),
+                    )
+                    if tbl.num_rows:
+                        chunks = scoring.term_chunks(scoring.sort_chunks(tbl))
+                        yield per_segment(seg, docs, chunks)
+
+        n_tasks = min(len(segs), self.spark.sparkContext.defaultParallelism)
+        return self.spark.range(len(segs), numPartitions=n_tasks).mapInArrow(task, schema)
+
     def _segment_scores(
         self,
         plan: scoring.Plan,
@@ -1067,44 +1092,33 @@ class IndexSearcher:
         tool_boosts: dict[str, float] | None = None,
     ) -> DataFrame:
         """(doc_ord, score) rows of ``scoring.evaluate``, run once per
-        segment task: the plan terms' posting rows are cogrouped by
-        segment with the packed doc side, whose base ordinal, doc lengths
-        and role/tool codes each task unpacks."""
+        segment (``_segment_job``) against the segment's norms
+        (``_SegmentNorms``)."""
         rb, tb = role_boosts or {}, tool_boosts or {}
         tombstones = self.tombstones  # small; broadcast-join a DF if huge
 
-        def task(key, pq: pd.DataFrame, dq: pd.DataFrame) -> pd.DataFrame:
-            if len(pq) == 0 or len(dq) == 0:
-                return pd.DataFrame({"doc_ord": [], "score": []})
-            r0 = dq.iloc[0]
+        def score(seg: int, docs: tuple[str, ...], chunks: dict) -> pa.RecordBatch:
+            nm = _SegmentNorms.get(seg, docs)
             boost_of = None
             if rb or tb:
-                # boost dicts → O(#codes) lookup tables built from the
-                # row's SEGMENT-LOCAL dictionaries (code 0 = null → 1.0)
-                boost_of = (
-                    _boost_lut(r0["role_dict"], rb)[
-                        np.frombuffer(r0["role_bytes"], dtype="<i2")]
-                    * _boost_lut(r0["tool_dict"], tb)[
-                        np.frombuffer(r0["tool_bytes"], dtype="<i2")]
-                )
-            docs, scores = scoring.evaluate(
-                plan, scoring.pandas_chunks(pq),
-                np.frombuffer(r0["dl_bytes"], dtype="<i4").astype(np.int64),
-                dl_base=int(r0["base"]), boost_of=boost_of, deleted=tombstones,
+                # O(#codes) lookup tables from the segment-local code maps
+                boost_of = (_boost_lut(nm.role_names, rb)[nm.role]
+                            * _boost_lut(nm.tool_names, tb)[nm.tool])
+            ords, scores = scoring.evaluate(
+                plan, chunks, nm.dl, dl_base=nm.base, boost_of=boost_of, deleted=tombstones,
             )
-            return pd.DataFrame({"doc_ord": docs, "score": scores})
+            return pa.RecordBatch.from_arrays(
+                [pa.array(ords, pa.int64()), pa.array(scores, pa.float64())],
+                names=["doc_ord", "score"],
+            )
 
-        return (
-            self._postings_df(list(plan.terms)).groupBy("seg")
-            .cogroup(self._doc_side().groupBy("seg"))
-            .applyInPandas(task, _SCORES)
-        )
+        return self._segment_job(plan.terms, score, _SCORES)
 
     def count_df(self, query: str | list[str], mode: str = "or") -> int:
-        """Q7 count, distributed: ``scoring.count`` per segment over the
-        pruned posting chunks (each doc lives in exactly one segment, so
-        segment counts sum exactly; a count needs no doc side).
-        Single-term, tombstone-free counts short-cut to the term
+        """Q7 count, distributed: ``scoring.count`` per segment over its
+        posting chunks, summed on the driver (each doc lives in exactly
+        one segment, so segment counts sum exactly; a count needs no
+        norms). Single-term, tombstone-free counts short-cut to the term
         dictionary row — no postings decoded at all."""
         plan = self._dist_plan(query, mode=mode)
         if plan.matches_nothing():
@@ -1112,18 +1126,12 @@ class IndexSearcher:
         if len(plan.terms) == 1 and not len(self.tombstones):
             return plan.dfs[0]
         tombstones = self.tombstones
-        per_seg = (
-            self._postings_df(list(plan.terms))
-            .groupBy("seg")
-            .applyInPandas(
-                lambda pdf: pd.DataFrame(
-                    {"n": [scoring.count(plan, scoring.pandas_chunks(pdf), tombstones)]}
-                ),
-                _COUNT,
-            )
-        )
-        row = per_seg.agg(F.sum("n").alias("total")).collect()[0]
-        return int(row["total"] or 0)
+
+        def count(seg: int, docs: tuple[str, ...], chunks: dict) -> pa.RecordBatch:
+            n = scoring.count(plan, chunks, tombstones)
+            return pa.RecordBatch.from_arrays([pa.array([n], pa.int64())], names=["n"])
+
+        return sum(r["n"] for r in self._segment_job(plan.terms, count, _COUNT).collect())
 
     def phrase_search_df(self, phrase: str, k: int = 10) -> DataFrame:
         """Q3 match_phrase, distributed (see ``phrase_terms`` in
@@ -1142,7 +1150,7 @@ class IndexSearcher:
     ) -> DataFrame:
         """Q6 search-as-you-type, distributed scoring: the expansions come
         from the dictionary read (see the module docstring for its driver
-        bounds), scoring from the segment cogroup."""
+        bounds), scoring from the segment tasks."""
         terms, term_boosts = self._bool_prefix_terms(query, fuzzy, boosts)
         return self.search_df(
             terms, k, role_boosts=role_boosts, term_boosts=term_boosts

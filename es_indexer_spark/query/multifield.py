@@ -27,7 +27,7 @@ import pandas as pd
 
 from .. import bm25
 from ..analysis import tokenize_py
-from .dsl import _Spark
+from .dsl import _Driver, _Spark
 from .engine import TIER_BOOSTS, IndexSearcher
 
 
@@ -44,22 +44,15 @@ class MultiFieldSearcher:
         self.fields = fields
 
     # ------------------------------------------------------------- internals
-    def _sum_fields(
-        self,
-        specs: list[tuple[IndexSearcher, float, list[str], dict[str, float] | None]],
-        k: int,
-        mode: str = "or",
-        all_terms: list[str] | None = None,
-    ) -> pd.DataFrame:
-        """Exact merge: every (field, terms) spec contributes its FULL
-        matching-doc score vector (field boost × term boost × BM25), summed
-        per doc before the single global heap; tombstoned docs never enter
-        the heap."""
+    def _sum_fields(self, terms: list[str], k: int, mode: str = "or") -> pd.DataFrame:
+        """Exact merge: every field contributes its FULL matching-doc
+        score vector (field boost × BM25), summed per doc before the
+        single global heap; tombstoned docs never enter the heap."""
         base = self.fields[0][0]
-        tid = {t: i for i, t in enumerate(sorted(set(all_terms or [])))} or None
+        tid = {t: i for i, t in enumerate(sorted(set(terms)))} or None
         doc_parts, contrib_parts, pair_parts = [], [], []
-        for searcher, fboost, terms, term_boosts in specs:
-            plan, chunks = searcher._local_plan(terms, term_boosts=term_boosts)
+        for searcher, fboost in self.fields:
+            plan, chunks = searcher._local_plan(terms)
             nm = searcher._load_norms()
             for v in plan.views(chunks):  # term-sorted — fixed float summation order
                 if v.df == 0:
@@ -67,7 +60,7 @@ class MultiFieldSearcher:
                 docs, tfs = v.decode_all()
                 contrib = (
                     fboost
-                    * v.idf  # idf already carries the per-term boost
+                    * v.idf
                     * bm25.tf_norm(tfs, nm["dl"][docs].astype(np.float64), searcher.avgdl)
                 )
                 doc_parts.append(docs)
@@ -88,22 +81,37 @@ class MultiFieldSearcher:
             )
             keep = cnt == len(tid)
             uniq, scores = uniq[keep], scores[keep]
-        dead = [s.tombstones for s, _ in self.fields if len(s.tombstones)]
-        if dead:  # a doc deleted from any field index is deleted
-            keep = ~np.isin(uniq, np.concatenate(dead))
-            uniq, scores = uniq[keep], scores[keep]
+        uniq, scores = _Driver.drop((uniq, scores), self._dead())
         top_docs, top_scores = bm25.topk_desc(scores, uniq, k)
         return base._materialize(top_docs, top_scores)
+
+    def _dead(self) -> np.ndarray:
+        """The union of the fields' tombstones: a doc deleted from any
+        field index is deleted."""
+        return np.unique(np.concatenate([s.tombstones for s, _ in self.fields]))
+
+    def _bool_prefix(self, x, query: str, k: int, fuzzy: bool,
+                     tier_boosts: tuple[float, float, float]) -> tuple[np.ndarray, np.ndarray]:
+        """The ``bool_prefix`` top-k on DSL executor ``x`` (``_Driver`` or
+        ``_Spark``): per field, the query kernel's full score vector over
+        that field's expansions times the field boost, the fields summed
+        per doc in field order, the union of the fields' tombstones
+        dropped, then the top ``k``. One sequence for both executors, so
+        their scores are bit-identical."""
+        if not tokenize_py(query):
+            return np.zeros(0, np.int64), np.zeros(0, np.float64)
+        parts = []
+        for searcher, fboost in self.fields:
+            terms, tb = searcher._bool_prefix_terms(query, fuzzy, tier_boosts)
+            parts.append(x.scale(x.scores(searcher, terms, term_boosts=tb), fboost))
+        return x.top(x.drop(x.sum(parts), self._dead()), k)
 
     # ---------------------------------------------------------------- public
     def search(self, query, k: int = 10, mode: str = "or") -> pd.DataFrame:
         """Top-k over the boost-weighted sum of per-field BM25 scores.
         ``mode='and'`` requires every term to match in >=1 field (ES
         cross_fields-style operator=and)."""
-        base = self.fields[0][0]
-        terms = base.analyze_query(query)
-        specs = [(s, b, terms, None) for s, b in self.fields]
-        return self._sum_fields(specs, k, mode=mode, all_terms=terms)
+        return self._sum_fields(self.fields[0][0].analyze_query(query), k, mode=mode)
 
     def bool_prefix(
         self,
@@ -120,12 +128,9 @@ class MultiFieldSearcher:
         last token prefix-expanded (shingle fields expand to phrases), and
         suggest-analyzed fields weighted base^10/_2gram^5/_3gram^2 by the
         matched shingle's width. Exact global merge (full per-field score
-        vectors, one heap)."""
-        specs = [
-            (searcher, fboost, *searcher._bool_prefix_terms(query, fuzzy, tier_boosts))
-            for searcher, fboost in self.fields
-        ]
-        return self._sum_fields(specs, k)
+        vectors, one heap), on the DSL's driver executor."""
+        base = self.fields[0][0]
+        return base._materialize(*self._bool_prefix(_Driver(base), query, k, fuzzy, tier_boosts))
 
     def suggest(self, query: str, k: int = 10, *, fuzzy: bool = True) -> pd.DataFrame:
         """SAYT across fields — alias for ``bool_prefix`` (kept for API
@@ -141,25 +146,14 @@ class MultiFieldSearcher:
         fuzzy: bool = True,
         tier_boosts: tuple[float, float, float] = TIER_BOOSTS,
     ):
-        """``bool_prefix`` with distributed scoring: the expansions come
-        from each field's dictionary read (``IndexSearcher._bool_prefix_terms``,
-        the same terms as ``bool_prefix``), every field emits its FULL
-        per-segment score vector, the DSL's Spark executor sums the fields
-        per doc in field order, and the k winners are fetched with the
-        stored-fields point read (``IndexSearcher._enrich_topk``) — no
-        O(corpus) driver state, any number of fields.
-
-        The driver ``bool_prefix`` sums per term across fields, so scores
-        can differ from it in the last bits — ranks identical except
-        exact-tie permutations."""
+        """``bool_prefix`` with distributed scoring: the same sequence as
+        ``bool_prefix`` on the DSL's Spark executor — every field emits
+        its FULL per-segment score vector and the fields are summed per
+        doc in DataFrame algebra — then the k winners are fetched with the
+        stored-fields point read (``IndexSearcher._enrich_topk``). No
+        O(corpus) driver state, any number of fields; scores bit-identical
+        to ``bool_prefix``."""
         base = self.fields[0][0]
-        if not tokenize_py(query):
-            return base._enrich_topk([], {})
-        x = _Spark(base)
-        parts = []
-        for searcher, fboost in self.fields:
-            terms, tb = searcher._bool_prefix_terms(query, fuzzy, tier_boosts)
-            parts.append(x.scale(x.scores(searcher, terms, term_boosts=tb), fboost))
-        docs, scores = x.top(x.sum(parts), k)
+        docs, scores = self._bool_prefix(_Spark(base), query, k, fuzzy, tier_boosts)
         ords = docs.tolist()
         return base._enrich_topk(ords, dict(zip(ords, scores.tolist())))

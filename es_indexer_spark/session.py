@@ -14,7 +14,11 @@ Settings chosen for the 100 TB design point but safe locally:
   daemon starts before ``--py-files`` reach ``sys.path``, so it can only
   import this package where the exported PYTHONPATH is valid; on a
   cluster master Spark's default daemon runs unless the package is
-  installed on the executors and ``extra_conf`` sets the module.
+  installed on the executors and ``extra_conf`` sets the module;
+- distributed queries (``IndexSearcher.search_df`` and friends) run
+  segment tasks that read the index path with pyarrow, as the driver
+  does, so on a cluster the index must sit on a filesystem every
+  executor mounts at the same path.
 """
 
 from __future__ import annotations

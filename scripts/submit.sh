@@ -8,6 +8,9 @@
 # keeps Spark's default Python daemon: es_indexer_spark._sparkdaemon starts
 # before --py-files reach sys.path, so it needs the package installed on
 # the executors (then pass spark.python.daemon.module via extra_conf).
+# Distributed queries' segment tasks read the index path with pyarrow, as
+# the driver does, so on a cluster the index must sit on a filesystem
+# every executor mounts at the same path.
 #
 # Usage:
 #   scripts/submit.sh [job.py] [args...]        # default job: examples/quickstart.py

@@ -613,9 +613,10 @@ def test_dictionary_read_same_on_every_lifecycle_step(spark, tmp_path, monkeypat
     sources (the resident arrays, and the pruned term_stats scan a
     searcher above ``driver_max_docs`` reads) give the prefix, fuzzy and
     wildcard expansions and the global dfs of a brute-force filter over
-    ``term_dictionary()``; and the distributed search, which takes its
-    dfs from the dictionary, ranks like the driver search, which takes
-    them from the posting chunks."""
+    ``term_dictionary()``; and the distributed search and count, which
+    take their dfs from the dictionary, equal the driver's, which take
+    them from the posting chunks, bit for bit, with and without role and
+    tool boosts."""
     idx = str(tmp_path / "idx")
     steps = [
         lambda: build_index(spark, _corpus(spark, 0, 12), idx, n_buckets=8, n_segments=2),
@@ -654,11 +655,13 @@ def test_dictionary_read_same_on_every_lifecycle_step(spark, tmp_path, monkeypat
         want = {t: df.get(t, 0) for t in terms}
         assert resident._global_dfs(terms) == scan._global_dfs(terms) == want
         dfs_seen.append(want["the"])
-        for q in QUERIES[:3]:
-            drv = resident.search(q, k=20)
-            dist = resident.search_df(q, k=20).toPandas()
+        boosts = {"role_boosts": {"assistant": 2.0}, "tool_boosts": {"bash": 3.0}}
+        for q, kw in [*((q, {}) for q in QUERIES[:3]), (QUERIES[1], boosts)]:
+            drv = resident.search(q, k=20, **kw)
+            dist = resident.search_df(q, k=20, **kw).toPandas()
             assert drv["doc_id"].tolist() == dist["doc_id"].tolist(), q
-            np.testing.assert_allclose(drv["score"], dist["score"], rtol=0, atol=1e-12)
+            np.testing.assert_array_equal(drv["score"], dist["score"])
+            assert resident.count(q) == resident.count_df(q), q
         resident.close()
     # the writes changed the statistics the reads were checked on
     assert dfs_seen[1] > dfs_seen[0] and dfs_seen[3] < dfs_seen[2]

@@ -113,16 +113,15 @@ def test_bool_prefix_exact_merge_not_per_field_topk(multi):
 
 def test_bool_prefix_distributed_parity(multi):
     """bool_prefix_df (per-field full score vectors from the segment
-    cogroup, cross-field sum in DataFrame algebra) must rank-match the
-    driver merge; scores equal up to float re-association."""
+    tasks, cross-field sum in DataFrame algebra) runs the driver
+    bool_prefix's sequence on the Spark executor: same docs, same scores
+    bit for bit."""
     s1, s2, _, _ = multi
     m = MultiFieldSearcher([(s1, 10.0), (s2, 5.0)])
     drv = m.bool_prefix("baco co", k=10, fuzzy=True)
     dst = m.bool_prefix_df("baco co", k=10, fuzzy=True).toPandas()
     assert drv["doc_id"].tolist() == dst["doc_id"].tolist()
-    np.testing.assert_allclose(
-        drv["score"].to_numpy(), dst["score"].to_numpy(), rtol=1e-12
-    )
+    np.testing.assert_array_equal(drv["score"].to_numpy(), dst["score"].to_numpy())
 
 
 def test_deleted_docs_leave_multifield_results(spark, tmp_path):
@@ -148,6 +147,29 @@ def test_deleted_docs_leave_multifield_results(spark, tmp_path):
     assert got["doc_id"].tolist() == want["doc_id"].tolist()
     np.testing.assert_array_equal(got["score"].to_numpy(), want["score"].to_numpy())
     assert gone not in set(after.bool_prefix("baco co", k=1000)["conv_id"])
+
+
+def test_doc_deleted_from_one_field_leaves_both_executors(spark, tmp_path):
+    """A doc deleted from one field index only is deleted: neither
+    executor's bool_prefix ranks it through the other field, and both
+    still return the same docs and scores."""
+    df = synth_transcripts(spark, n_convs=50, turns_per_conv=4, seed=31)
+    dirs = [str(tmp_path / "text"), str(tmp_path / "sugg")]
+    build_index(spark, df, dirs[0], n_buckets=8, n_segments=2)
+    build_index(spark, df, dirs[1], n_buckets=8, n_segments=2, analyzer="suggest")
+
+    def searcher():
+        return MultiFieldSearcher(
+            [(IndexSearcher(spark, dirs[0]), 10.0), (IndexSearcher(spark, dirs[1]), 2.0)])
+
+    gone = searcher().bool_prefix("baco co", k=1)["doc_id"].iloc[0]
+    assert delete_where(spark, dirs[1], F.col("doc_id") == gone) == 1
+    m = searcher()
+    drv = m.bool_prefix("baco co", k=1000)
+    dst = m.bool_prefix_df("baco co", k=1000).toPandas()
+    assert gone not in set(drv["doc_id"]) and gone not in set(dst["doc_id"])
+    assert drv["doc_id"].tolist() == dst["doc_id"].tolist()
+    np.testing.assert_array_equal(drv["score"].to_numpy(), dst["score"].to_numpy())
 
 
 def test_mismatched_corpora_rejected(multi, spark, tmp_path):

@@ -25,15 +25,26 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_postings_scan_prunes_partitions_and_pushes_term_filter(searcher):
-    df = searcher._postings_df(["baco"])
-    plan = _plan(df)
-    b = term_bucket("baco", searcher.n_buckets)
-    # partition pruning: only the term's tbucket directory is read
-    assert "PartitionFilters" in plan
-    assert f"tbucket#" in plan or f"[{b}]" in plan or f"({b})" in plan
-    # predicate pushdown: the term equality reaches the parquet reader
-    assert "PushedFilters" in plan and "baco" in plan
+def test_segment_task_gets_only_its_plan_bucket_files(searcher):
+    """A distributed segment task is handed only postings files of the
+    plan terms' tbucket partitions whose footer statistics can hold its
+    segment — a strict, non-empty subset of the postings files that
+    includes every file with rows of that segment — and reads them with
+    pyarrow, with no Spark scan of the postings at all."""
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    terms = ("baco", "cora")
+    buckets = {term_bucket(t, searcher.n_buckets) for t in terms}
+    frags = [(f.path, pads.get_partition_keys(f.partition_expression)["tbucket"])
+             for f in searcher._postings_ds.get_fragments()]
+    in_buckets = {p for p, b in frags if b in buckets}
+    segs = searcher._segment_files(terms)
+    assert [seg for seg, _, _ in segs] == [0, 1]
+    for seg, _, files in segs:
+        holding = {p for p in in_buckets if seg in pq.read_table(p, columns=["seg"])["seg"].to_pylist()}
+        assert holding <= set(files) <= in_buckets, (seg, files)
+        assert 0 < len(files) < len(frags), (files, frags)
 
 
 def test_doc_stats_projection_prunes_columns(searcher):

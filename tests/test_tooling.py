@@ -71,8 +71,9 @@ def test_spark_daemon_module_imports_silently():
 def test_one_query_kernel():
     """Grep and AST guard: the scoring kernels and ``TermView`` and
     ``TermChunks`` construction live only in ``query/scoring.py``, which
-    both executors call, and the package builds its segment cogroup in
-    one place — a second copy of an operator's scoring logic breaks this.
+    both executors call, and the package builds no cogroup (segment
+    tasks read their own postings) — a second copy of an operator's
+    scoring logic breaks this.
     Besides the empty value, one function there cuts a term's chunk rows,
     for the resident buckets, the per-term cache and the Spark tasks."""
     pkg = REPO / "es_indexer_spark"
@@ -86,7 +87,7 @@ def test_one_query_kernel():
         if path != kernel:
             found = [n for n in names if n in src]
             assert not found, (str(path.relative_to(REPO)), found)
-    assert cogroups == 1
+    assert cogroups == 0
     builders = {
         fn.name
         for fn in ast.walk(ast.parse(kernel.read_text(), str(kernel)))
@@ -95,6 +96,24 @@ def test_one_query_kernel():
         if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "TermChunks"
     }
     assert len(builders - {"_empty_chunks"}) == 1, builders
+
+
+def test_no_doc_side_pack():
+    """Grep guard: the distributed executor's segment tasks read their own
+    postings and norms, so the packed and persisted doc side, its snapshot
+    token and schema, and the Spark postings source it was cogrouped with
+    stay gone from the package, the entry module and the tests (this
+    guard excepted)."""
+    this = pathlib.Path(__file__).resolve()
+    gone = re.compile(r"_doc_side|_postings_df|_postings_src|_snapshot_token|_DOC_SIDE")
+    paths = [*sorted((REPO / "es_indexer_spark").rglob("*.py")),
+             REPO / "__spark_entry__.py", *sorted((REPO / "tests").rglob("*.py"))]
+    found = [
+        (str(p.relative_to(REPO)), m.group(0))
+        for p in paths if p.resolve() != this
+        for m in gone.finditer(p.read_text())
+    ]
+    assert not found, found
 
 
 def test_one_term_dictionary_read():
