@@ -37,7 +37,8 @@ Dataflow (all DataFrame ops; Python only in Arrow-vectorized kernels):
    duplicate rows (the retry-until-success idempotence of
    ``IndexServiceImpl.java:167-221``, done the Spark way).
 7. per-batch checkpoint JSON with per-segment lineage + metrics (turns
-   tokenized, postings emitted, bytes compressed) — the ``-running`` alias
+   tokenized, postings emitted, bytes compressed) and each postings
+   file's segment set (``seg_files``) — the ``-running`` alias
    + ``beginWithUuid`` resume marker analogue
    (``IndexerMetadataServiceImpl.java:478-523``). Resume skips completed
    batches.
@@ -530,10 +531,11 @@ def build_index(
         # task slots comfortably or hash collisions idle whole cores) AND
         # the query-time scoring parallelism: the distributed top-k
         # runs one task per segment slice, so a corpus with fewer
-        # segments than cores serializes its scoring kernels. At 10^12 turns segments >>
-        # cores always holds; the parallelism floor below only matters
-        # for corpora small enough that 1M-doc sizing would leave cores
-        # idle. Round-6 sweeps (BENCH_NOTES): at 2M turns/32 cores 4 segs
+        # segments than cores serializes its scoring kernels. At 10^12
+        # turns segments >> cores always holds; the parallelism floor
+        # below only matters for corpora small enough that 1M-doc sizing
+        # would leave cores idle. Round-6 sweeps (BENCH_NOTES): at 2M
+        # turns/32 cores 4 segs
         # -> build 25 s/warm hot 0.79 s; 8 -> 17.7/0.50; 16 -> 12.5/0.48;
         # 32 -> 18.5/0.54. At 10M turns 20 segs -> 52.3/0.87 vs 32 ->
         # 57.8/1.01. Both say the sweet spot sits BELOW the core count:
@@ -667,19 +669,27 @@ def build_index(
         bin_cols = ["doc_bytes", "tf_bytes"] + (
             ["pos_bytes"] if with_positions else [])
         parts: list[pd.DataFrame] = []
-        for rb in _pads.dataset(batch_path, partitioning="hive").to_batches(
-            columns=["seg", "df_chunk"] + bin_cols
-        ):
-            nb = np.zeros(rb.num_rows, dtype=np.int64)
-            for c in bin_cols:
-                nb += _pc.binary_length(rb.column(c)).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-            parts.append(pd.DataFrame({
-                "seg": rb.column("seg").to_numpy(zero_copy_only=False),
-                "postings": rb.column("df_chunk").to_numpy(
-                    zero_copy_only=False),
-                "bytes": nb,
-            }))
+        # each file's exact segment set: the hash shuffle above puts several
+        # segments in one tbucket file, and its footer's seg min..max would
+        # hand a distributed segment task (query/engine.py) files without
+        # its rows
+        seg_files: dict[str, list[int]] = {}
+        for frag in _pads.dataset(batch_path, partitioning="hive").get_fragments():
+            file_segs: set[int] = set()
+            for rb in frag.to_batches(columns=["seg", "df_chunk"] + bin_cols):
+                nb = np.zeros(rb.num_rows, dtype=np.int64)
+                for c in bin_cols:
+                    nb += _pc.binary_length(rb.column(c)).to_numpy(
+                        zero_copy_only=False).astype(np.int64)
+                seg_col = rb.column("seg").to_numpy(zero_copy_only=False)
+                file_segs.update(np.unique(seg_col).tolist())
+                parts.append(pd.DataFrame({
+                    "seg": seg_col,
+                    "postings": rb.column("df_chunk").to_numpy(
+                        zero_copy_only=False),
+                    "bytes": nb,
+                }))
+            seg_files[os.path.relpath(frag.path, postings_root)] = sorted(file_segs)
         wpdf = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
             {"seg": [], "postings": [], "bytes": []})
         agg = wpdf.groupby("seg").agg(
@@ -708,6 +718,7 @@ def build_index(
                 "postings_emitted": int(sum(s["postings"] for s in segs.values())),
                 "bytes_compressed": int(sum(s["bytes_compressed"] for s in segs.values())),
                 "segments": segs,
+                "seg_files": seg_files,
                 "wall_s": round(t_dict - t0, 3),
                 "term_stats_s": round(time.time() - t_dict, 3),
             },

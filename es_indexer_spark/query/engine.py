@@ -39,14 +39,15 @@ and the term boosts — and ``scoring.evaluate`` / ``scoring.count`` run it:
   ``phrase_search_df`` / ``suggest_df``): one Spark job of segment tasks
   with no shuffle and nothing persisted. ``spark.range`` over the
   snapshot's segments is mapped with Arrow; each task loops over its
-  slice of segments (Lucene's leaf slices), reads with pyarrow only its
-  segment's postings files of the plan's term buckets and its segment's
-  norms from doc_stats (``_SegmentNorms``, cached in each reused Python
-  worker), runs the same kernel and emits a local top-k, its full score
-  vector or a count; a global sort of the tiny union gathers the final
-  top-k — Lucene's shard fan-out/merge. Synonym expansion,
-  term/role/tool boosts, phrase adjacency and counts run here with no
-  O(corpus) driver state. Executors read the index path with pyarrow
+  slice of segments (Lucene's leaf slices), reads with pyarrow, once
+  each, the postings files of the plan's term buckets that hold its
+  segments (a build checkpoint records each file's segment set), and
+  each segment's norms from doc_stats (``_SegmentNorms``, cached in each
+  reused Python worker), runs the same kernel per segment and emits a
+  local top-k, its full score vector or a count; a global sort of the
+  tiny union gathers the final top-k — Lucene's shard fan-out/merge.
+  Synonym expansion, term/role/tool boosts, phrase adjacency and counts
+  run here with no O(corpus) driver state. Executors read the index path with pyarrow
   exactly as the driver does, so on a cluster the index must sit on a
   filesystem every executor mounts. The public
   ``search``/``count``/``phrase_search``/``suggest`` auto-dispatch
@@ -316,6 +317,10 @@ class IndexSearcher:
         # the searcher valid across any number of appends until a merge
         # removes its batches; the open itself runs no Spark job.
         self._segments: list[tuple[int, tuple[str, ...]]] | None = None
+        # tbucket -> seg -> postings files (_bucket_segments), and the
+        # build checkpoints' file -> segments records
+        self._seg_files: dict[int, dict[int, tuple[str, ...]]] = {}
+        self._recorded_segs: dict[str, list[int]] | None = None
         self._doc_stats_src: DataFrame | None = None
         # corpora larger than this auto-dispatch search/count/phrase/suggest
         # to the distributed path (driver path holds O(corpus) norms) and
@@ -1034,19 +1039,44 @@ class IndexSearcher:
             self._segments = [(seg, tuple(p)) for seg, p in sorted(files.items())]
         return self._segments
 
+    def _bucket_segments(self, b: int) -> dict[int, tuple[str, ...]]:
+        """seg -> the postings files of term bucket ``b`` that hold rows of
+        the segment, built once per bucket per searcher from the fragments
+        listed at open. A build batch's hash shuffle puts several segments
+        in one tbucket file, so a file's segments are those its batch
+        checkpoint records (``seg_files``, index/build.py); a file no
+        checkpoint lists (an append or a merge writes one segment per
+        batch) holds the range of its footer ``seg`` statistics."""
+        got = self._seg_files.get(b)
+        if got is None:
+            if self._recorded_segs is None:
+                self._recorded_segs = {}
+                ck = os.path.join(self.vdir, "checkpoints")
+                for name in sorted(os.listdir(ck)) if os.path.isdir(ck) else ():
+                    if name.startswith("batch_"):
+                        self._recorded_segs.update(
+                            catalog.read_json(os.path.join(ck, name)).get("seg_files", {}))
+            root = os.path.join(self.vdir, "postings")
+            files: dict[int, list[str]] = {}
+            for f in self._fragments([b]):
+                segs = self._recorded_segs.get(os.path.relpath(f.path, root))
+                for seg in _seg_range(f.metadata) if segs is None else segs:
+                    files.setdefault(seg, []).append(f.path)
+            got = self._seg_files[b] = {seg: tuple(p) for seg, p in files.items()}
+        return got
+
     def _segment_files(
         self, terms: Iterable[str]
     ) -> list[tuple[int, tuple[str, ...], tuple[str, ...]]]:
         """(seg, doc_stats files, postings files) of each segment a task
-        reads for ``terms``: the postings files are those of the terms'
-        tbucket partitions whose footer ``seg`` statistics hold the
-        segment — footers the driver path reads too, once per bucket per
-        searcher (``_fragments``). A segment with none is left out."""
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
-        postings = [(f.path, _seg_range(f.metadata)) for f in self._fragments(buckets)]
+        reads for ``terms``: the terms' tbucket files that hold the
+        segment (``_bucket_segments``). A segment with none is left
+        out."""
+        maps = [self._bucket_segments(b)
+                for b in sorted({term_bucket(t, self.n_buckets) for t in terms})]
         out = []
         for seg, docs in self._segment_list():
-            files = tuple(p for p, segs in postings if seg in segs)
+            files = tuple(p for m in maps for p in m.get(seg, ()))
             if files:
                 out.append((seg, docs, files))
         return out
@@ -1061,26 +1091,36 @@ class IndexSearcher:
         over the segments ``_segment_files`` keeps, mapped with Arrow, each
         task looping over its contiguous slice of them (Lucene's leaf
         slices — many small segments do not cost one Python task each).
-        For each segment a task reads the posting chunks of ``terms`` with
-        pyarrow and emits ``per_segment(seg, doc_stats files, chunks)``, a
-        RecordBatch of ``schema``; a segment with no such chunks emits
-        nothing."""
+        A task reads the posting chunks of ``terms`` in its segments'
+        files with pyarrow, each file once however many of its segments
+        the file holds, and emits ``per_segment(seg, doc_stats files,
+        chunks)``, a RecordBatch of ``schema``, per segment; a segment
+        with no such chunks emits nothing."""
         segs = self._segment_files(terms)
         if not segs:
             return self.spark.createDataFrame([], schema)
         cols, want = self._posting_cols(), list(terms)
 
         def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for rb in batches:
-                for i in rb.column("id").to_pylist():
-                    seg, docs, files = segs[i]
-                    tbl = pads.dataset(list(files), format="parquet").to_table(
-                        columns=cols,
-                        filter=(pc.field("seg") == seg) & pc.field("term").isin(want),
-                    )
-                    if tbl.num_rows:
-                        chunks = scoring.term_chunks(scoring.sort_chunks(tbl))
-                        yield per_segment(seg, docs, chunks)
+            mine = [segs[i] for rb in batches for i in rb.column("id").to_pylist()]
+            if not mine:
+                return
+            tbl = pads.dataset(
+                sorted({p for _, _, files in mine for p in files}), format="parquet"
+            ).to_table(
+                columns=cols,
+                filter=pc.field("seg").isin([seg for seg, _, _ in mine])
+                & pc.field("term").isin(want),
+            )
+            # by segment, then in sort_chunks order within each segment
+            tbl = tbl.take(pc.sort_indices(
+                tbl, [("seg", "ascending"), ("term", "ascending"), ("min_doc", "ascending")]
+            ))
+            seg_col = tbl["seg"].to_numpy()
+            for seg, docs, _ in mine:
+                lo, hi = np.searchsorted(seg_col, [seg, seg + 1])
+                if hi > lo:
+                    yield per_segment(seg, docs, scoring.term_chunks(tbl.slice(lo, hi - lo)))
 
         n_tasks = min(len(segs), self.spark.sparkContext.defaultParallelism)
         return self.spark.range(len(segs), numPartitions=n_tasks).mapInArrow(task, schema)

@@ -53,7 +53,6 @@ from dataclasses import dataclass
 from functools import reduce
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -212,12 +211,6 @@ def term_chunks(table: pa.Table) -> dict[str, TermChunks]:
     reference to the other terms' buffers."""
     cols = ChunkColumns(table)
     return {t.decode(): cols.cut(i, copy=True) for i, t in enumerate(cols.terms.tolist())}
-
-
-def pandas_chunks(pdf: pd.DataFrame) -> dict[str, TermChunks]:
-    """``term_chunks`` of one Spark task's posting rows (one Arrow
-    conversion per task, not per term)."""
-    return term_chunks(sort_chunks(pa.Table.from_pandas(pdf, preserve_index=False)))
 
 
 class TermView:

@@ -3,13 +3,26 @@
 sf_tiny corpus (200 convs x 10 turns, seed 42), a query set covering every
 mode (single/multi-term or/and, phrase, prefix, boosts, synonyms), and the
 exhaustive-oracle outputs as exact float64 hex — the STRICT-mode golden
-the engine must stay rank-identical to across rounds."""
+the engine must stay rank-identical to across rounds.
+
+The ``multifield`` section is the reference's nested ``bool_prefix``
+query (IndexerServiceIT.java:219-238) over a std^10 + sayt^5 field pair,
+computed without the index: per field, the query's terms are expanded
+against that field's oracle vocabulary (fuzzy AUTO for all tokens but the
+last, top 50 by df; the last token's prefix expansion, top 50 by df;
+shingle tier boosts on the suggest field), the field's oracle BM25 vector
+is scaled by the field boost, and the fields are summed in field order.
+
+Run: ``python scripts/make_goldens.py`` (rewrites
+tests/goldens/queryset.json)."""
 
 from __future__ import annotations
 
 import json
 import os
 import sys
+
+import numpy as np
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -28,6 +41,71 @@ QUERYSET = [
     {"query_id": "q10", "terms": ["lu", "me"], "mode": "or", "k": 10,
      "term_boosts": {"lu": 10.0, "me": 2.0}},
 ]
+
+
+FIELD_BOOSTS = (10.0, 5.0)  # (index-analyzed field, suggest-analyzed field)
+MULTIFIELD = [
+    {"query_id": "mf01", "query": "baco co", "fuzzy": True, "k": 10},
+    {"query_id": "mf02", "query": "quiel ra", "fuzzy": True, "k": 10},
+    {"query_id": "mf03", "query": "the bac", "fuzzy": False, "k": 10},
+    {"query_id": "mf04", "query": "cora dala su", "fuzzy": True, "k": 10},
+    {"query_id": "mf05", "query": "bacu me", "fuzzy": True, "k": 10},
+]
+MAX_EXPANSIONS = 50
+TIER_BOOSTS = (10.0, 5.0, 2.0)  # suggest sub-fields: base, _2gram, _3gram
+
+
+def _edit_distance(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def _top_df(orc, cands) -> list[str]:
+    """The MAX_EXPANSIONS highest-df candidates, ties in term order."""
+    return sorted(cands, key=lambda t: (-orc.df[t], t))[:MAX_EXPANSIONS]
+
+
+def _bool_prefix_terms(orc, query: str, fuzzy: bool, suggest: bool):
+    from es_indexer_spark.analysis import tokenize_py
+
+    toks = tokenize_py(query)
+    terms: list[str] = []
+    for t in toks[:-1]:
+        if fuzzy:
+            # ES fuzziness AUTO: 0 edits below 3 chars, 1 up to 5, else 2
+            d = 0 if len(t) < 3 else (1 if len(t) <= 5 else 2)
+            terms += _top_df(orc, [c for c in orc.df if _edit_distance(t, c) <= d])
+        else:
+            terms.append(t)
+    if toks:
+        terms += _top_df(orc, [c for c in orc.df if c.startswith(toks[-1])]) or [toks[-1]]
+    terms = list(dict.fromkeys(terms))
+    boosts = {t: TIER_BOOSTS[min(t.count(" "), 2)] for t in terms} if suggest else None
+    return terms, boosts
+
+
+def _multifield_golden(oracles, q: dict) -> list[dict]:
+    from es_indexer_spark import bm25
+
+    base = oracles[0]
+    total = np.zeros(base.n_docs, dtype=np.float64)
+    hit = np.zeros(base.n_docs, dtype=bool)
+    for i, (orc, fboost) in enumerate(zip(oracles, FIELD_BOOSTS)):
+        terms, tb = _bool_prefix_terms(orc, q["query"], q["fuzzy"], suggest=i > 0)
+        ords, scores = orc.score_all(terms, term_boosts=tb)
+        idx = np.searchsorted(orc.doc_ords, ords)
+        vec = np.zeros(orc.n_docs, dtype=np.float64)
+        vec[idx] = scores
+        total = total + vec * fboost
+        hit[idx] = True
+    ords, scores = bm25.topk_desc(total[hit], base.doc_ords[hit], q["k"])
+    doc_ids = base.pdf["doc_id"].to_numpy()[np.searchsorted(base.doc_ords, ords)]
+    return [{"doc_id": d, "score_hex": float(s).hex()} for d, s in zip(doc_ids, scores)]
 
 
 def main() -> None:
@@ -57,6 +135,11 @@ def main() -> None:
                 ],
             }
         )
+    oracles = [orc, oracle_from_spark(docs, analyzer="suggest")]
+    out["multifield"] = {
+        "field_boosts": list(FIELD_BOOSTS),
+        "queries": [{**q, "golden": _multifield_golden(oracles, q)} for q in MULTIFIELD],
+    }
     path = os.path.join(REPO, "tests", "goldens", "queryset.json")
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w") as f:

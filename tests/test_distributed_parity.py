@@ -195,6 +195,30 @@ def test_auto_dispatch_transparent(searcher):
         searcher.driver_max_docs = 20_000_000
 
 
+def test_segment_files_are_exact_on_a_multi_segment_build(searcher):
+    """The build's hash shuffle writes several of its five segments into
+    one tbucket file, so a file's footer ``seg`` range can cover segments
+    it does not hold. A segment task is handed exactly the files holding
+    its segment, from the segment sets the build checkpoint records."""
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    from es_indexer_spark.query.engine import _seg_range
+
+    gaps = 0
+    for b in range(searcher.n_buckets):
+        want = {}
+        for f in searcher._postings_ds.get_fragments():
+            if pads.get_partition_keys(f.partition_expression)["tbucket"] != b:
+                continue
+            segs = set(pq.read_table(f.path, columns=["seg"])["seg"].to_pylist())
+            gaps += set(_seg_range(pq.read_metadata(f.path))) != segs
+            for seg in segs:
+                want.setdefault(seg, set()).add(f.path)
+        assert {s: set(p) for s, p in searcher._bucket_segments(b).items()} == want, b
+    assert gaps, "no file's footer range covers a segment it lacks"
+
+
 def _jobs(sc, gid: str, fn):
     """(fn(), the number of Spark jobs it ran), counted with a job group."""
     sc.setJobGroup(gid, gid)

@@ -26,11 +26,11 @@ def _plan(df) -> str:
 
 
 def test_segment_task_gets_only_its_plan_bucket_files(searcher):
-    """A distributed segment task is handed only postings files of the
-    plan terms' tbucket partitions whose footer statistics can hold its
-    segment — a strict, non-empty subset of the postings files that
-    includes every file with rows of that segment — and reads them with
-    pyarrow, with no Spark scan of the postings at all."""
+    """A distributed segment task is handed exactly the postings files of
+    the plan terms' tbucket partitions that hold rows of its segment — a
+    strict, non-empty subset of the postings files, though the build's
+    hash shuffle can write both segments into one tbucket file — and
+    reads them with pyarrow, with no Spark scan of the postings at all."""
     import pyarrow.dataset as pads
     import pyarrow.parquet as pq
 
@@ -43,7 +43,7 @@ def test_segment_task_gets_only_its_plan_bucket_files(searcher):
     assert [seg for seg, _, _ in segs] == [0, 1]
     for seg, _, files in segs:
         holding = {p for p in in_buckets if seg in pq.read_table(p, columns=["seg"])["seg"].to_pylist()}
-        assert holding <= set(files) <= in_buckets, (seg, files)
+        assert holding == set(files), (seg, files)
         assert 0 < len(files) < len(frags), (files, frags)
 
 
